@@ -23,8 +23,8 @@ object PerfProbe {
     val traceSites = sys.env.contains("GRAFT_PROBE_SITES")
     val sites = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     // per-description wall seconds beside the counts: which step OWNS the
-    // time, not just how many round-trips it makes (the IngestPhaseProbe
-    // byDesc ledger, generalized to any query)
+    // time, not just how many round-trips it makes (a per-description
+    // ledger for any query)
     val siteStart = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
     val siteNs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
     spark.sparkContext.addSparkListener(

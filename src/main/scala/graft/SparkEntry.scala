@@ -23,8 +23,8 @@ object SparkEntry {
     Lake.table(spark, dir, name)
 
   /** The late-arrival staging fixture every streaming-ingest query
-    * (q91/q92/q98 on documents, q95/q96 on embeddings) and the
-    * [[IngestPhaseProbe]] drive: three batches under `<base>/batches` —
+    * (q91/q92/q98 on documents, q95/q96 on embeddings) drives: three
+    * batches under `<base>/batches` —
     * A fully on-time (ts = id·100), B and C with every (id % 5 == 0)
     * row carrying an ancient event time (ts = id) the lateness gate
     * must route to `late/`. ONE definition: the closed-form oracles
@@ -1789,9 +1789,9 @@ object SparkEntry {
       // close the loop through the fused surface: the audited rows are
       // already in hand, so they drive the NON-gated ingest body
       // directly (lexReingestLate) — no staged-file + second streaming
-      // session round trip (the IngestPhaseProbe q98 ledger measured
-      // that machinery at ~0.25 s/run of pure overhead). The anti-join
-      // keeps the op replay-safe — a second run emits nothing.
+      // session round trip (a q98 phase ledger measured that machinery at
+      // ~0.25 s/run of pure overhead, OPTIMIZATION_r21.md). The freshness
+      // join keeps the op replay-safe — a second run emits nothing.
       // keep the loud guard the staged route had: a gate regression
       // that stops producing late rows must fail HERE by name, not
       // later as an opaque doclens diff (or not at all in a timing run)

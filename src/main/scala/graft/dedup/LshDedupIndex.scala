@@ -250,83 +250,37 @@ object LshDedupIndex {
     * the same document surface as its own near-duplicate) — both the
     * within-batch and the against-index check are narrow id-only joins.
     * Returns the appended row count.
-    *
-    * `checkPresence = false` / `checkBatchUnique = false` skip the
-    * respective guard for callers that have JUST established the property
-    * themselves (the streaming ingester's per-batch anti-join establishes
-    * absence; its input contract covers within-batch uniqueness) — each
-    * skipped guard is one fewer Spark job per batch. Skipping does not
-    * change what a violation DOES (a duplicate id still surfaces as its
-    * own near-duplicate) — only who is responsible for preventing it.
-    * `takeLock = false` is for callers ALREADY holding the directory's
-    * writer lock (the watermarked ingest gate locks the whole
-    * micro-batch); the lock is not reentrant.
     */
   def append(
       spark: SparkSession,
       dir: String,
       newDocs: DataFrame,
       idCol: String,
-      textCol: String,
-      checkPresence: Boolean = true,
-      checkBatchUnique: Boolean = true,
-      takeLock: Boolean = true): Long =
-    if (!takeLock)
-      appendImpl(spark, dir, newDocs, idCol, textCol, checkPresence,
-        checkBatchUnique)
-    else
-      graft.util.IndexLock.withLock(spark, dir, "LshDedupIndex.append") {
-        appendImpl(spark, dir, newDocs, idCol, textCol, checkPresence,
-          checkBatchUnique)
-      }
+      textCol: String): Long =
+    graft.util.IndexLock.withLock(spark, dir, "LshDedupIndex.append") {
+      recoverCommit(spark, dir)
+      val (shingleSize, bands, rowsPerBand) = loadParams(spark, dir)
+      val ids = newDocs.select(col(idCol).cast("long").as("id"))
+      require(ids.groupBy("id").count().filter(col("count") > 1).isEmpty,
+        "LshDedupIndex.append: duplicate ids within the appended batch")
+      require(readSignatures(spark, dir).select("id")
+        .join(ids, "id").isEmpty,
+        "LshDedupIndex.append: id already present in the index")
+      writeState(spark, newDocs, idCol, textCol, dir, shingleSize, bands,
+        rowsPerBand, SaveMode.Append)
+    }
 
   /** Streaming-batch append over a caller-shared signed frame
     * ([[Dedup.minhashSigned]] under this index's params,
     * localCheckpoint-ed): the per-batch fast path — no re-sign, no
-    * params read, no count job. The caller owns the guards [[append]]'s
-    * flags would run. `takeLock = false` for callers already holding the
-    * writer lock.
+    * params read, no count job. The caller holds the writer lock and
+    * owns the guards [[append]] runs (the ingest driver's freshness and
+    * one-row-per-id gate).
     */
-  private[graft] def appendSigned(
-      spark: SparkSession,
-      dir: String,
-      signed: DataFrame,
-      bands: Int,
-      rowsPerBand: Int,
-      takeLock: Boolean): Unit =
-    if (!takeLock) {
-      writeSigned(signed, dir, bands, rowsPerBand, SaveMode.Append,
-        needCount = false, repartitionByBand = false); ()
-    } else
-      graft.util.IndexLock.withLock(spark, dir, "LshDedupIndex.append") {
-        recoverCommit(spark, dir)
-        writeSigned(signed, dir, bands, rowsPerBand, SaveMode.Append,
-          needCount = false, repartitionByBand = false); ()
-      }
-
-  private def appendImpl(
-      spark: SparkSession,
-      dir: String,
-      newDocs: DataFrame,
-      idCol: String,
-      textCol: String,
-      checkPresence: Boolean,
-      checkBatchUnique: Boolean): Long = {
-    recoverCommit(spark, dir)
-    val (shingleSize, bands, rowsPerBand) = loadParams(spark, dir)
-    if (checkBatchUnique) {
-      val ids = newDocs.select(col(idCol).cast("long").as("id"))
-      require(ids.groupBy("id").count().filter(col("count") > 1).isEmpty,
-        "LshDedupIndex.append: duplicate ids within the appended batch")
-    }
-    if (checkPresence) {
-      val ids = newDocs.select(col(idCol).cast("long").as("id"))
-      require(readSignatures(spark, dir).select("id")
-        .join(ids, "id").isEmpty,
-        "LshDedupIndex.append: id already present in the index")
-    }
-    writeState(spark, newDocs, idCol, textCol, dir, shingleSize, bands,
-      rowsPerBand, SaveMode.Append)
+  private[graft] def appendSigned(dir: String, signed: DataFrame,
+      bands: Int, rowsPerBand: Int): Unit = {
+    writeSigned(signed, dir, bands, rowsPerBand, SaveMode.Append,
+      needCount = false, repartitionByBand = false); ()
   }
 
   /** Near-duplicate candidates of `newDocs` AGAINST THE INDEXED CORPUS:

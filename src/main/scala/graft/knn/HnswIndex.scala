@@ -736,11 +736,10 @@ object HnswIndex {
     // fail fast against the caller's own hold.
     // checkBatchUnique/checkPresence = false skip the respective guard
     // for callers that have JUST established the property themselves
-    // (the streaming ingester's freshness marker join establishes
-    // absence; its input contract covers within-batch uniqueness) — the
-    // [[graft.dedup.LshDedupIndex.append]] family contract: each skipped
-    // guard is one fewer Spark job per micro-batch, and skipping only
-    // moves responsibility, never what a violation does.
+    // (the streaming ingest gate establishes absence and one row per
+    // id, [[graft.streaming.Streams.ingestBatch]]): each skipped guard is
+    // one fewer Spark job per micro-batch, and skipping only moves
+    // responsibility, never what a violation does.
     if (!takeLock) appendImpl(spark, dir, newVectors, idCol, vecCol,
       checkBatchUnique, checkPresence, preParams)
     else
@@ -770,9 +769,9 @@ object HnswIndex {
       newVectors: DataFrame,
       idCol: String,
       vecCol: String,
-      checkBatchUnique: Boolean = true,
-      checkPresence: Boolean = true,
-      preParams: Option[Params] = None): Long = {
+      checkBatchUnique: Boolean,
+      checkPresence: Boolean,
+      preParams: Option[Params]): Long = {
     import spark.implicits._
     // heal a crashed reshard BEFORE reading params ([[IvfIndex]] runs
     // recoverSwap at every writer entry for the same reason): a reshard

@@ -6,8 +6,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Engine-owned persisted event-time watermark for streaming index
-  * ingest ([[Streams.lexIngestWatermarked]] /
-  * [[Streams.dedupIngestWatermarked]]) — Spark's built-in `withWatermark`
+  * ingest (the lateness gate of [[Streams.ingestBatch]], shared by all
+  * four index families) — Spark's built-in `withWatermark`
   * state does not survive `foreachBatch` index writes, so the gate's
   * high-water mark lives beside the index it protects, under
   * `<indexDir>/_ingest/`.

@@ -340,220 +340,23 @@ object Streams {
     ()
   }
 
-  /** Streaming near-dup ingestion, EXECUTED: document batches arrive as a
-    * file stream and each micro-batch is first PROBED against the
-    * persisted [[graft.dedup.LshDedupIndex]] (online near-dup flagging:
-    * candidates against everything ingested so far) and then APPENDED
-    * into it — so a later batch's probe sees every earlier batch through
-    * the index, exactly as a daily-ingest pipeline would dedup against
-    * its full corpus history. Probe-before-append keeps a batch from
-    * matching itself; within-batch duplicates are the batch-sized
-    * [[graft.dedup.Dedup.minHashLshCandidates]]'s job, not this path's.
-    *
-    * Per batch the corpus-side work is ONE signatures scan (anti-join +
-    * candidate fetch, shared) plus the band equi-join probe plus one
-    * signature pass over the batch — corpus signatures are never
-    * recomputed (the [[graft.dedup.LshDedupIndex]] scale contract).
-    * Replay semantics are exactly-once PER DOCUMENT (the
-    * [[lexIngestOnce]] contract): only not-yet-committed ids are probed
-    * and appended, so a crash replay re-emits nothing. `outDir` is owned
-    * by the call (cleared first, the [[knnEnrichOnce]] re-run
-    * rationale); returns the union of all batches' candidate rows
-    * (new_id, indexed_id, est_jaccard).
-    */
-  /** Shared driver for the file-staged micro-batch ingest family: temp
-    * checkpoint (registered for cleanup), caller-owned `outDir` cleared,
-    * one AvailableNow pass over the staged batch files, `perBatch` per
-    * micro-batch. Returns the filesystem handle for the result read.
-    */
-  private def runFileBatches(
-      spark: SparkSession,
-      batchesDir: String,
-      batchSchema: StructType,
-      outDir: String,
-      ckptPrefix: String,
-      maxFilesPerTrigger: Int)(
-      perBatch: (DataFrame, Long) => Unit): org.apache.hadoop.fs.FileSystem = {
-    val checkpoint = java.nio.file.Files.createTempDirectory(ckptPrefix)
-    graft.util.TempDirs.register(checkpoint.toString)
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // an explicit schema means a typo'd source path would become a
-    // SILENT empty stream (zero batches, empty result) — after this
-    // call has already cleared outDir of prior results. Fail loudly
-    // instead (the eventsStream missing-dir contract).
-    val src = new org.apache.hadoop.fs.Path(batchesDir)
-    require(src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(src),
-      s"runFileBatches: batches directory does not exist: $batchesDir")
-    fs.delete(outPath, true)
-    spark.readStream
-      .schema(batchSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(batchesDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        perBatch(batch.toDF(), batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpoint.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-    fs
-  }
-
-  /** The result channel of a [[runFileBatches]] run, or an empty frame
-    * of the operator's schema when no batch ever wrote it. `dropBatch`
-    * for batch-keyed channels (`<channel>/batch=<id>`), where partition
-    * discovery adds the key column.
-    */
-  private def channelOrEmpty(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: String,
-      emptySchema: StructType,
-      dropBatch: Boolean): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(p)) {
-      val df = spark.read.parquet(path)
-      if (dropBatch) df.drop("batch") else df
-    } else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
-  }
-
-  def dedupIngestOnce(
-      spark: SparkSession,
-      batchesDir: String,
-      batchSchema: StructType,
-      indexDir: String,
-      outDir: String,
-      idCol: String,
-      textCol: String,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
-    val dedupNbMemo = new MetaMemo[(Int, Int, Int)]
-    val fs = runFileBatches(spark, batchesDir, batchSchema, outDir,
-        "graft_dedup_ckpt", maxFilesPerTrigger) { (b, batchId) =>
-      val sp = b.sparkSession
-      // FRESH docs only — the ids the index does not already hold.
-      // Probe-then-append over `fresh` (not the raw batch, the
-      // [[lexIngestOnce]] pattern) makes replay EXACTLY-ONCE PER
-      // DOCUMENT: a batch replayed after a crash between the index
-      // commit and the stream checkpoint (or a whole-call rerun)
-      // re-emits NOTHING, instead of probing itself against an index
-      // that now contains it and emitting self-match rows (new_id ==
-      // indexed_id at est_jaccard 1.0) no correct run produces. In
-      // normal operation fresh == batch, so semantics are unchanged.
-      // ONE signatures scan serves the anti-join and (lazy-
-      // localCheckpoint-ed, via preSigs) the probe's candidate
-      // signature fetch; append skips both re-checks — absence was
-      // just established here, within-batch uniqueness is the input
-      // contract (ids unique corpus-wide).
-      // heal a crashed build/vacuum commit BEFORE the batch reads params
-      // or signatures (safe unlocked under the index's single-writer
-      // contract): the batch would otherwise sign under the OLD params
-      // and then appendSigned's in-lock recovery would swap the NEW
-      // tables live mid-batch, appending band rows the new params never
-      // hashed
-      graft.dedup.LshDedupIndex.recoverCommit(sp, indexDir)
-      val sigs = graft.dedup.LshDedupIndex.readSignatures(sp, indexDir)
-        .localCheckpoint(eager = false)
-      // left_anti + eager checkpoint + isEmpty measured EQUAL to the
-      // watermarked family's marker-join-plus-one-agg shape here (the
-      // r21 A/B: the agg's AQE staging costs the round-trip the fused
-      // emptiness check saves) — keep the simpler anti-join form
-      val fresh = b.join(sigs.select(col("id")),
-        b(idCol).cast("long") === sigs("id"), "left_anti")
-        .localCheckpoint()
-      if (!fresh.isEmpty) {
-        // one MinHash kernel pass per batch, one params read per LOOP
-        // (generation-keyed MetaMemo — a rebuild committing between
-        // batches swaps params and forces a reload), shared by the
-        // probe and the append — the dedupIngestBatch fast path
-        val params @ (_, bands, rpb) = dedupNbMemo.getOrLoad(
-            graft.dedup.LshDedupIndex.metaGen(sp, indexDir))(
-          graft.dedup.LshDedupIndex.loadParams(sp, indexDir))
-        val signed = graft.dedup.LshDedupIndex
-          .signBatch(fresh, idCol, textCol, params)
-        // batch-keyed Overwrite: a crash between this write and the
-        // appendSigned commit leaves the docs fresh, so the replay
-        // re-probes — an append-mode channel would then hold every row
-        // twice (the lexIngestWatermarked exactly-once contract)
-        graft.dedup.LshDedupIndex
-          .candidatesAgainst(sp, indexDir, fresh, idCol, textCol,
-            preSigs = Some(sigs), preSigned = Some(signed),
-            preParams = Some(params))
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-        graft.dedup.LshDedupIndex.appendSigned(sp, indexDir, signed,
-          bands, rpb, takeLock = true)
-      }
-    }
-    channelOrEmpty(spark, fs, outDir,
-      graft.dedup.LshDedupIndex.candidateSchema, dropBatch = true)
-  }
-
-  /** Streaming lexical-index ingestion, EXECUTED: document batches
-    * arrive as a file stream and each micro-batch is first SEARCHED
-    * against the persisted [[graft.text.Bm25Index]] (BM25 top-k of every
-    * batch document against everything ingested so far) and then
-    * APPENDED into it — a later batch's search sees every earlier batch
-    * through the index, and the corpus statistics the scores use
-    * (N, avgdl, per-term df) advance batch over batch exactly as the
-    * committed corpus grows. Search-before-append keeps a batch from
-    * matching itself.
-    *
-    * Per batch the corpus-side work is the bucket-pruned postings probe
-    * plus one tokenize pass over the batch (the [[graft.text.Bm25Index]]
-    * scale contract — postings are never re-derived). Replay semantics
-    * are exactly-once PER DOCUMENT: only not-yet-committed ids are
-    * searched and appended, so a batch replayed after a crash between
-    * the index commit and the stream checkpoint re-emits nothing instead
-    * of re-searching itself against an index that now contains it (a
-    * crash between the postings stage and the doclens commit replays
-    * cleanly — the uncommitted epoch is probe-invisible). `outDir` is
-    * owned by the call (cleared first); returns the union of all
-    * batches' search rows (query_id, id, score, rnk).
-    */
-  def lexIngestOnce(
-      spark: SparkSession,
-      batchesDir: String,
-      batchSchema: StructType,
-      indexDir: String,
-      outDir: String,
-      idCol: String,
-      textCol: String,
-      topK: Int = 10,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
-    val nbMemo = new MetaMemo[Int] // one params read per loop, not per batch
-    val fs = runFileBatches(spark, batchesDir, batchSchema, outDir,
-        "graft_lex_ckpt", maxFilesPerTrigger) { (b, batchId) =>
-      lexOnceBatch(b.sparkSession, indexDir, outDir, batchId, b,
-        idCol, textCol, topK, nbMemo)
-    }
-    channelOrEmpty(spark, fs, outDir,
-      graft.text.Bm25Index.searchSchema, dropBatch = true)
-  }
-
   /** Generation-keyed one-slot memo for index metadata that appends
     * never touch (BM25 nBuckets, LSH band params, IVF centroids/metric/
-    * codebooks): loading them once per LOOP instead of once per BATCH
-    * deletes one metadata read per micro-batch from the q9x serving
-    * floor (the q98 phase ledger's per-batch machinery).
+    * codebooks, HNSW params): loaded once per LOOP instead of once per
+    * BATCH.
     *
     * The memo is NOT unconditional, because "append-immutable" is not
     * "loop-immutable": a rebuild/rebalance can commit — or be CRASH-
-    * RECOVERED by this loop's own in-lock `recoverSwap`/`recoverCommit`
-    * — BETWEEN batches, swapping the very tables the memo caches. An
-    * unkeyed memo would then keep serving the pre-swap IVF centroids
-    * and silently file later batches' vectors into lists whose
-    * quantizer was replaced (or band LSH signatures under dead params).
-    * Each `getOrLoad` therefore revalidates against the index's commit
-    * generation (the family's `metaGen` — a filesystem-metadata
-    * fingerprint of the swap-committed tables, zero Spark jobs, read
-    * AFTER the batch's in-lock recovery): same generation → cached
-    * value; any committed swap → reload. Each loop creates its own
-    * memo; the default-argument form gives direct spec/probe callers a
-    * fresh instance per call.
+    * RECOVERED by this loop's own in-lock recovery — BETWEEN batches,
+    * swapping the very tables the memo caches. An unkeyed memo would
+    * then keep serving the pre-swap IVF centroids and silently file
+    * later batches' vectors into lists whose quantizer was replaced (or
+    * band LSH signatures under dead params). Each `getOrLoad` therefore
+    * revalidates against the index's commit generation (the family's
+    * `metaGen` — a filesystem-metadata fingerprint of the swap-committed
+    * tables, zero Spark jobs, read AFTER the batch's in-lock recovery):
+    * same generation → cached value; any committed swap → reload. Each
+    * loop creates its own memo.
     */
   private[graft] final class MetaMemo[A] {
     private val ref =
@@ -567,458 +370,284 @@ object Streams {
     }
   }
 
-  /** One micro-batch of [[lexIngestOnce]] — extracted so the late
-    * re-ingest loop ([[lexReingestLate]]) can drive a frame it already
-    * holds through the IDENTICAL body without the staged-file round
-    * trip (single-file write + stream source + checkpoint), which the
-    * q98 phase ledger showed to be pure machinery.
+  /** The event-time lateness gate of [[ingestBatch]]: `tsCol` is a LONG
+    * event-time column in any monotone unit; `lateness` is how far below
+    * the highest event time seen so far a row may still arrive.
     */
-  private def lexOnceBatch(
+  private[graft] final case class LatenessGate(tsCol: String, lateness: Long)
+
+  /** One micro-batch of persistent-index ingest: the ONE body behind
+    * every ingest entry point ([[lexIngestOnce]], [[dedupIngestOnce]],
+    * the four `*IngestWatermarked`, the three `*ReingestLate`). The
+    * family value supplies only the index calls ([[IngestFamily]]).
+    *
+    * Contract — the whole batch runs under the index's writer lock, as
+    * one maintenance op:
+    *
+    *  - RECOVERY first: a crashed build/vacuum/rebalance/reshard commit
+    *    is healed before anything reads committed state or metadata (a
+    *    batch signed under the old LSH params while the new tables swap
+    *    live would append band rows the new params never hashed).
+    *  - FRESHNESS: rows whose id the index already holds are dropped, so
+    *    a batch replayed after a crash between the index commit and the
+    *    stream checkpoint (or a whole-call rerun) re-emits nothing —
+    *    exactly-once PER DOCUMENT.
+    *  - ONE ROW PER ID: admitted rows must carry distinct ids. A batch
+    *    that repeats one fails before any channel, audit, index or
+    *    watermark write, naming the batch and one repeated id (an
+    *    at-least-once source redelivered inside the batch; dedup it
+    *    upstream). Rows whose id is already committed are not admitted,
+    *    so a replay of a committed batch passes.
+    *  - LATENESS, only with a `gate`: the watermark starts at
+    *    Long.MinValue and after every batch advances to
+    *    `max(previous, max(tsCol in batch) - lateness)`. A fresh row is
+    *    LATE iff its event time is below the watermark AS OF THE START of
+    *    its batch, or NULL (unclassifiable). Late rows are never probed
+    *    or appended; they are audited as the FULL original batch rows
+    *    under `<outDir>/late/batch=<id>`, overwritten per batch, which
+    *    makes the audit exactly-once across replays and self-contained
+    *    for [[lateRows]]. The watermark is persisted beside the index
+    *    ([[IngestWatermark]]) and written AFTER the commit, so a crash
+    *    inside the batch replays under the old watermark with the same
+    *    late verdicts.
+    *  - PROBE BEFORE APPEND: admitted rows are probed against the index
+    *    AS OF batch start (a batch never matches itself), the result
+    *    rows written batch-keyed with Overwrite to `<channel>/batch=<id>`
+    *    — a crash between that write and the append replays into the
+    *    same directory instead of duplicating it — and then appended.
+    *    The channel is `outDir` itself without a gate and
+    *    `<outDir>/<family channel>` (beside `late/`) with one.
+    *  - METADATA is read once per loop through `memo`, revalidated
+    *    against the family's commit generation after this batch's
+    *    recovery ran.
+    *
+    * End state: the committed index equals a one-shot build over
+    * base ∪ admitted — index state is per document, so append order
+    * cannot matter (the q91/q92/q95/q96 oracles pin it).
+    */
+  private[graft] def ingestBatch[M](
       sp: SparkSession,
-      indexDir: String,
-      outDir: String,
-      batchId: Long,
-      b: DataFrame,
-      idCol: String,
-      textCol: String,
-      topK: Int,
-      nbMemo: MetaMemo[Int] = new MetaMemo[Int]): Unit = {
-    // FRESH docs only — the ids the index does not already hold.
-    // Search-then-append over `fresh` (not the raw batch) keeps the
-    // "a document's search sees exactly the pre-commit index state"
-    // invariant across crash replays too: a batch already fully
-    // committed (crash after append, before the checkpoint; or a
-    // whole-call rerun) re-emits NOTHING rather than re-searching
-    // itself against an index that now contains it. ONE doclens scan
-    // per batch: the lazy-localCheckpoint-ed read serves the
-    // anti-join AND (via preDoclens) the probe's N/avgdl stats and
-    // candidate join; append skips both re-checks — absence was just
-    // established here, within-batch uniqueness is the input
-    // contract.
-    // heal a crashed build/vacuum commit BEFORE the batch reads params
-    // or doclens — see dedupIngestOnce
-    graft.text.Bm25Index.recoverCommit(sp, indexDir)
-    val dl = graft.text.Bm25Index.readDoclens(sp, indexDir)
-      .localCheckpoint(eager = false)
-    // left_anti + eager checkpoint + isEmpty — measured equal to the
-    // marker-join-plus-agg alternative, see dedupIngestOnce
-    val fresh = b.join(dl.select(col("id")),
-      b(idCol).cast("long") === dl("id"), "left_anti")
-      .localCheckpoint()
-    if (!fresh.isEmpty) {
-      // one tokenize pass per batch, one params read per LOOP
-      // (generation-keyed MetaMemo — a rebuild committing between
-      // batches swaps params and forces a reload), shared by probe
-      // and append
-      val nb = nbMemo.getOrLoad(graft.text.Bm25Index.metaGen(sp, indexDir))(
-        graft.text.Bm25Index.loadParams(sp, indexDir))
-      val rows = graft.text.Bm25Index
-        .tokenRows(fresh, idCol, textCol)
-        .localCheckpoint(eager = false)
-      // batch-keyed Overwrite — crash-replay exactly-once, see
-      // dedupIngestOnce
-      graft.text.Bm25Index
-        .searchTopK(sp, indexDir, fresh, idCol, textCol, topK,
-          preDoclens = Some(dl),
-          preQTerms = Some(graft.text.Bm25Index.tfFromRows(rows)
-            .select(col("id").as("query_id"), col("term"))),
-          preNBuckets = Some(nb))
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-      graft.text.Bm25Index.appendRows(sp, indexDir, rows, nb,
-        takeLock = true)
-    }
-  }
-
-  /** Close the late-audit loop in ONE call: recover the `late/` channel
-    * of a gated run ([[lateRows]]) and drive it through the non-gated
-    * ingest body DIRECTLY — the late rows are already in hand when
-    * `lateRows` returns, so staging them back to files and replaying
-    * them through a second streaming session (file write + stream
-    * source + checkpoint round trip) is pure machinery. The q98 phase
-    * ledger (IngestPhaseProbe, sf0.1 warm) measured that machinery at
-    * ~0.25 s of the ~3.2 s loop — the dominant cost is the ingest BODY
-    * itself (doclens anti-join, tokenize, probe, append: ~20 jobs),
-    * which both routes share by construction. Semantics are IDENTICAL
-    * to `stageBatch` + [[lexIngestOnce]] over the same rows (same
-    * per-batch body): the freshness anti-join dedups against committed
-    * state, so the call is replay-safe — a second invocation emits
-    * nothing. The staged-file route remains the right shape when the
-    * re-ingest happens in a LATER session than the gated run.
-    *
-    * `outDir` is owned by the call (cleared first); returns the search
-    * rows of the re-admitted documents (empty frame when the audit
-    * channel has no recoverable rows).
-    */
-  def lexReingestLate(
-      spark: SparkSession,
-      gatedOutDir: String,
-      indexDir: String,
-      outDir: String,
-      idCol: String,
-      textCol: String,
-      topK: Int = 10): DataFrame = {
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(outPath, true)
-    lateRows(spark, gatedOutDir).foreach { late =>
-      // the late channel unions EVERY batch's audit partition: the same
-      // id arriving late in two different micro-batches (at-least-once
-      // redelivery) is recorded twice and stays uncommitted, so the
-      // freshness anti-join alone would admit BOTH copies into one
-      // re-ingest batch. Identical rows by construction (same id, same
-      // payload) — dedup them instead of double-indexing.
-      lexOnceBatch(spark, indexDir, outDir, 0L, late.dropDuplicates(idCol),
-        idCol, textCol, topK)
-    }
-    channelOrEmpty(spark, fs, outDir,
-      graft.text.Bm25Index.searchSchema, dropBatch = true)
-  }
-
-  /** [[lexReingestLate]]'s contract on the persistent IVF family: recover
-    * the `late/` channel of a gated [[annIngestWatermarked]] run and drive
-    * it through the non-gated ingest body directly — freshness anti-join
-    * against the committed assignments, probe against the index AS OF the
-    * call (batch-keyed under `outDir`, exactly-once), then append. The
-    * anti-join makes the call replay-safe (a second invocation emits
-    * nothing), and the whole body runs under the index's writer lock —
-    * one maintenance op, like the gated micro-batch it completes.
-    *
-    * `outDir` is owned by the call (cleared first); returns the probe
-    * rows of the re-admitted vectors (empty frame when the audit channel
-    * has no recoverable rows).
-    */
-  def annReingestLate(
-      spark: SparkSession,
-      gatedOutDir: String,
-      indexDir: String,
-      outDir: String,
-      idCol: String,
-      vecCol: String,
-      k: Int = 10,
-      nProbe: Int = 4): DataFrame = {
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(outPath, true)
-    lateRows(spark, gatedOutDir).foreach { late =>
-      graft.util.IndexLock.withLock(spark, indexDir, "ann-reingest") {
-        // crashed-rebalance recovery BEFORE the committed-id read — the
-        // annIngestBatch ordering, for the same reason (a half-committed
-        // swap has no live assignments dir to read)
-        graft.knn.IvfIndex.recoverSwap(spark, indexDir)
-        val ids = graft.knn.IvfIndex.readIds(spark, indexDir)
-          .localCheckpoint(eager = false)
-        // multi-batch late unions can carry the same uncommitted id
-        // twice (at-least-once redelivery) — see lexReingestLate; a
-        // double append here would return that neighbor twice in top-k
-        val lateOnce = late.dropDuplicates(idCol)
-        val fresh = lateOnce.join(ids,
-          lateOnce(idCol).cast("long") === ids("id"), "left_anti")
-          .localCheckpoint()
-        if (!fresh.isEmpty) {
-          // ONE metadata load shared by probe and append — the
-          // annIngestBatch fast path
-          val (centroids, metric, pq) =
-            graft.knn.IvfIndex.loadIndexMeta(spark, indexDir)
-          graft.knn.IvfIndex.search(spark, indexDir, fresh, idCol, vecCol,
-              k, nProbe, preMeta = Some((centroids, metric)))
-            .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=0")
-          graft.knn.IvfIndex.appendPrepared(spark, indexDir, fresh, idCol,
-            vecCol, centroids, metric, pq)
-        }
-      }
-    }
-    channelOrEmpty(spark, fs, outDir,
-      graft.knn.IvfIndex.searchSchema, dropBatch = true)
-  }
-
-  /** [[annReingestLate]] on the sharded HNSW family: late rows of a gated
-    * [[hnswIngestWatermarked]] run anti-join against the live manifest's
-    * ids, beam-probe the graph AS OF the call, then insert via the
-    * generation-committed append. Same lock/replay contract as the IVF
-    * twin; the search channel is approximate (HNSW recall), so oracles
-    * over this call pin membership, not neighbor sets.
-    */
-  def hnswReingestLate(
-      spark: SparkSession,
-      gatedOutDir: String,
-      indexDir: String,
-      outDir: String,
-      idCol: String,
-      vecCol: String,
-      k: Int = 10,
-      efSearch: Int = 64): DataFrame = {
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(outPath, true)
-    lateRows(spark, gatedOutDir).foreach { late =>
-      graft.util.IndexLock.withLock(spark, indexDir, "hnsw-reingest") {
-        // heal a reshard that died mid-swap before reading the manifest —
-        // the hnswIngestBatch ordering
-        graft.knn.HnswIndex.recoverReshard(spark, indexDir)
-        val ids = graft.knn.HnswIndex.readIds(spark, indexDir)
-          .localCheckpoint(eager = false)
-        // redelivered late ids dedup here (see lexReingestLate); a
-        // duplicate that slipped past would still fail LOUDLY in the
-        // shard task — HnswGraph.insert rejects duplicate labels
-        val lateOnce = late.dropDuplicates(idCol)
-        val fresh = lateOnce.join(ids,
-          lateOnce(idCol).cast("long") === ids("id"), "left_anti")
-          .localCheckpoint()
-        if (!fresh.isEmpty) {
-          // ONE params load shared by probe and append; the append skips
-          // the guards the anti-join just established — the
-          // annReingestLate/hnswIngestBatch fast path
-          val params = graft.knn.HnswIndex.loadParams(spark, indexDir)
-          graft.knn.HnswIndex.search(spark, indexDir, fresh, idCol, vecCol,
-              k, efSearch, preParams = Some(params))
-            .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=0")
-          graft.knn.HnswIndex.append(spark, indexDir, fresh, idCol, vecCol,
-            takeLock = false, checkBatchUnique = false, checkPresence = false,
-            preParams = Some(params))
-        }
-      }
-    }
-    channelOrEmpty(spark, fs, outDir,
-      graft.knn.IvfIndex.searchSchema, dropBatch = true)
-  }
-
-  /** [[lexIngestOnce]] with an EVENT-TIME LATENESS GATE — the answer to
-    * out-of-order arrival that the plain ingester has no opinion on
-    * (its index appends are commutative, so reordering on-time batches
-    * is harmless; what needs a contract is data arriving AFTER the
-    * pipeline has moved on).
-    *
-    * Contract (explicit, replay-deterministic — Spark's built-in
-    * `withWatermark` state does not survive `foreachBatch` index writes,
-    * so the watermark here is engine-owned):
-    *
-    *  - `tsCol` is a LONG event-time column in any monotone unit;
-    *  - the watermark starts at Long.MinValue and after every batch
-    *    advances to `max(previous, max(tsCol in batch) - lateness)` —
-    *    late rows carry old times, so they never push it forward;
-    *  - a row is LATE iff its ts is below the watermark AS OF THE START
-    *    of its batch: it is DROPPED from the index (never searched,
-    *    never appended) and recorded under `<outDir>/late` as (id, ts),
-    *    batch-keyed and overwritten per batch (exactly-once even across
-    *    crash replays) — provably handled, auditable, re-ingestable by
-    *    an operator;
-    *  - a row with NULL event time is unclassifiable and is audited to
-    *    `late/` (ts NULL) rather than admitted — or silently dropped,
-    *    which is what a bare pair of `ts < wm` / `ts >= wm` filters
-    *    would do;
-    *  - the watermark is PERSISTED ([[IngestWatermark]]: versioned
-    *    direct-FS JSON under `<indexDir>/_ingest/`, crash-safe, zero
-    *    Spark jobs), so a crash replay of an already-seen batch re-drops
-    *    its late rows instead of admitting them against a reset
-    *    watermark; the per-document anti-join (inherited from
-    *    [[lexIngestOnce]]) independently keeps replayed COMMITTED rows
-    *    exactly-once.
-    *
-    * End-state equivalence: the committed index equals a one-shot
-    * [[graft.text.Bm25Index.build]] over base ∪ admitted rows — append
-    * order cannot matter because the index state is per-document
-    * (postings + doclens), which is what the q91 oracle pins through
-    * the doclens table.
-    *
-    * Search rows of admitted fresh docs land under `<outDir>/search`
-    * (NOT outDir itself — `late/` lives beside it) and are returned.
-    */
-  def lexIngestWatermarked(
-      spark: SparkSession,
-      batchesDir: String,
-      batchSchema: StructType,
-      indexDir: String,
-      outDir: String,
-      idCol: String,
-      textCol: String,
-      tsCol: String,
-      lateness: Long,
-      topK: Int = 10,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
-    val nbMemo = new MetaMemo[Int] // one params read per loop, not per batch
-    val fs = runFileBatches(spark, batchesDir, batchSchema, outDir,
-        "graft_lexwm_ckpt", maxFilesPerTrigger) { (b, batchId) =>
-      lexIngestBatch(b.sparkSession, indexDir, outDir, batchId,
-        b, idCol, textCol, tsCol, lateness, topK, nbMemo)
-    }
-    channelOrEmpty(spark, fs, s"$outDir/search",
-      graft.text.Bm25Index.searchSchema, dropBatch = true)
-  }
-
-  /** One micro-batch of [[lexIngestWatermarked]] — extracted so a spec
-    * can replay an in-flight batch (same batchId twice, or a crash
-    * between the search write and the index append) and assert the
-    * exactly-once contract directly. The search channel is batch-keyed
-    * (`search/batch=<id>`, Overwrite): a replayed batch overwrites its
-    * own prior rows instead of appending duplicates.
-    */
-  private[graft] def lexIngestBatch(
-      sp: SparkSession,
+      fam: IngestFamily[M],
       indexDir: String,
       outDir: String,
       batchId: Long,
       batch: DataFrame,
       idCol: String,
-      textCol: String,
-      tsCol: String,
-      lateness: Long,
-      topK: Int,
-      nbMemo: MetaMemo[Int] = new MetaMemo[Int]): Unit = {
+      gate: Option[LatenessGate],
+      memo: MetaMemo[M] = new MetaMemo[M]): Unit = {
     // lazy checkpoints: each frame is materialized by its first action
     // (the gate's one-pass agg) and reused from blocks after — eager
     // would pay one extra dedicated job per frame per batch
     val b = batch.localCheckpoint(eager = false)
-    // freshness marker-join BEFORE the lateness split (inside the gate):
-    // on a replay the watermark has already advanced past a committed
-    // batch's event times, and classifying committed rows as late would
-    // pollute the late/ audit channel — a row can only be late if the
-    // index does not already hold it
-    // LAZY val + in-thunk recovery: the frame is first forced inside the
-    // writer lock, AFTER a crashed build/vacuum swap has been healed —
-    // a frame constructed (and its file listing pinned) pre-lock could
-    // read tables a concurrent or crashed commit was mid-rename on
-    lazy val dl = graft.text.Bm25Index.readDoclens(sp, indexDir)
+    // LAZY val, first forced by the gate thunk INSIDE the writer lock and
+    // after recovery: a frame constructed (and its file listing pinned)
+    // pre-lock could read tables a crashed commit was mid-rename on
+    lazy val committed = fam.committed(sp, indexDir)
       .localCheckpoint(eager = false)
-    watermarkGatedBatch(sp, indexDir, outDir, batchId, b, {
-        graft.text.Bm25Index.recoverCommit(sp, indexDir)
-        dl.select(col("id"))
-      }, idCol, tsCol, lateness) { fresh =>
-      // ONE tokenize pass for the whole batch: the tokenRows frame feeds
-      // the probe's query-term set (preQTerms — tf rows are unique per
-      // (id, term), matching queryTerms' array_distinct) AND the index
-      // append (appendRows); params are read once per LOOP (generation-
-      // keyed MetaMemo — revalidated against the commit fingerprint
-      // AFTER this batch's in-lock recovery ran)
-      val nb = nbMemo.getOrLoad(graft.text.Bm25Index.metaGen(sp, indexDir))(
-        graft.text.Bm25Index.loadParams(sp, indexDir))
-      val rows = graft.text.Bm25Index
-        .tokenRows(fresh, idCol, textCol)
-        .localCheckpoint(eager = false)
-      sp.sparkContext.setJobDescription("graft ingest: search")
-      graft.text.Bm25Index
-        .searchTopK(sp, indexDir, fresh, idCol, textCol, topK,
-          preDoclens = Some(dl),
-          preQTerms = Some(graft.text.Bm25Index.tfFromRows(rows)
-            .select(col("id").as("query_id"), col("term"))),
-          preNBuckets = Some(nb))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/search/batch=$batchId")
+    watermarkGatedBatch(sp, indexDir, outDir, batchId, b,
+        { fam.recover(sp, indexDir); committed }, idCol, gate) { fresh =>
+      val meta = memo.getOrLoad(fam.metaGen(sp, indexDir))(
+        fam.loadMeta(sp, indexDir))
+      sp.sparkContext.setJobDescription("graft ingest: probe")
+      val (found, prepared) = fam.probe(sp, indexDir, fresh, committed, meta)
+      found.write.mode(SaveMode.Overwrite)
+        .parquet(s"${channelDir(fam, outDir, gate)}/batch=$batchId")
       sp.sparkContext.setJobDescription("graft ingest: append")
-      graft.text.Bm25Index.appendRows(sp, indexDir, rows, nb, takeLock = false)
+      fam.append(sp, indexDir, prepared, meta)
     }
   }
 
-  /** The operator-agnostic core of the event-time lateness gate — the
-    * watermark contract is engine-wide, not a property of any one index
-    * family, so [[lexIngestWatermarked]] (BM25) and
-    * [[dedupIngestWatermarked]] (LSH) share it verbatim.
+  private def channelDir(fam: IngestFamily[_], outDir: String,
+      gate: Option[LatenessGate]): String =
+    if (gate.isEmpty) outDir else s"$outDir/${fam.channel}"
+
+  /** The freshness, uniqueness and lateness gate of [[ingestBatch]],
+    * under the index's writer lock. `committedIds` (one `id` column) is
+    * BY-NAME and evaluated once inside the lock, so a family whose
+    * committed-id read needs crash recovery first can run it in the
+    * thunk without racing a live writer.
     *
-    * `b` is the whole micro-batch (the watermark advances off its max
-    * event time, index state notwithstanding — replay-deterministic);
-    * `committedIds` is the index's current id set (one `id` column) —
-    * the gate marker-joins it against the batch so freshness, the late
-    * split, the batch max event time, and both emptiness checks all
-    * come from ONE pass over the batch (a single scheduler round-trip
-    * where a naive formulation pays four: b.isEmpty, fresh.isEmpty,
-    * max(ts), plus a separate anti-join). `admit` commits the on-time
-    * fresh rows (probe + append, with `takeLock = false` — see below)
-    * and MUST write its output channel batch-keyed
-    * (`<channel>/batch=<id>`, Overwrite) so a crash replay overwrites
-    * rather than append-duplicates. Late and null-ts rows are audited
-    * under `<outDir>/late` as the FULL original batch rows (the audit
-    * channel is self-contained — [[lateRows]] re-ingests from it with
-    * no upstream replay), keyed by `batch=<id>` and OVERWRITTEN per
-    * batch: a crash replay of an in-flight batch re-derives the same
-    * late set into the same directory instead of append-duplicating it
-    * — the audit channel is exactly-once per batch. The watermark write happens AFTER
-    * the commit: a crash inside the batch replays with the old watermark
-    * (same late verdicts), and the marker join suppresses the
-    * already-committed admitted rows.
-    *
-    * The WHOLE batch — watermark read, late audit, probe + append,
-    * watermark advance — runs under the index's writer lock: the
-    * micro-batch is one maintenance op. Without it, an index `build`
-    * interleaving between this batch's append and its watermark write
-    * would have its freshly-cleared `_ingest/` state resurrected by the
-    * in-flight batch's stale watermark, silently routing the rebuilt
-    * corpus's next ingest to late/.
+    * The gate left-joins the batch against the committed ids with a
+    * presence marker, so freshness, the late split, the batch max event
+    * time, both emptiness checks and the id-uniqueness count all come
+    * from ONE aggregate over the joined batch — one scheduler round-trip
+    * where a naive formulation pays one per question. Distinct ids are
+    * counted by a per-partition set merged in the same aggregate (a
+    * `count(DISTINCT)` would add an exchange and a job); the merged set
+    * holds one micro-batch's admitted ids. Only a failing batch pays a
+    * second query, to name one repeated id. `admit` gets the admitted
+    * rows (never empty).
     */
-  private[graft] def watermarkGatedBatch(
+  private def watermarkGatedBatch(
       sp: SparkSession,
       indexDir: String,
       outDir: String,
       batchId: Long,
       b: DataFrame,
-      // BY-NAME: evaluated once INSIDE the writer lock, so a family whose
-      // committed-id read needs crash recovery first (IvfIndex.readIds
-      // after a rebalance died mid-swap) can run that recovery in the
-      // thunk without racing a live writer — constructing the frame
-      // before the lock would throw on the missing mid-swap table and
-      // the ingest could never self-heal
       committedIds: => DataFrame,
       idCol: String,
-      tsCol: String,
-      lateness: Long)(admit: DataFrame => Unit): Unit =
+      gate: Option[LatenessGate])(admit: DataFrame => Unit): Unit =
     graft.util.IndexLock.withLock(sp, indexDir, "ingest-batch") { try {
-      val wm = IngestWatermark.read(sp, indexDir)
-      val ts = col(tsCol).cast("long")
-      // left join with a presence marker instead of a left_anti: same
-      // shuffle, but the joined frame ALSO answers "is the batch empty",
-      // "is the admitted set empty" and "max event time" in one agg
+      val wm = gate.map(_ => IngestWatermark.read(sp, indexDir))
+      val id = col(idCol).cast("long")
       val marked = b
         .join(committedIds.select(col("id").cast("long").as("__cid")),
-          col(idCol).cast("long") === col("__cid"), "left")
+          id === col("__cid"), "left")
         .localCheckpoint(eager = false)
       val isFresh = col("__cid").isNull
+      val ts = gate.fold(lit(null).cast("long"))(g => col(g.tsCol).cast("long"))
+      // NULL event time is unclassifiable — late, never admitted; a bare
+      // `ts < wm` / `ts >= wm` filter pair would drop it from BOTH sides
+      val (admitted, late) = wm.fold((isFresh, lit(false))) { w =>
+        (isFresh && ts >= w, isFresh && (ts.isNull || ts < w))
+      }
       sp.sparkContext.setJobDescription("graft ingest: lateness gate")
       val stats = marked.agg(
         count(lit(1)).as("n"),
         max(ts).as("max_ts"),
-        count(when(isFresh && ts >= wm, 1)).as("n_admit"),
-        count(when(isFresh && (ts.isNull || ts < wm), 1)).as("n_late"))
+        count(when(admitted, 1)).as("n_admit"),
+        count(when(late, 1)).as("n_late"),
+        count(when(admitted, id)).as("n_admit_ids"),
+        size(collect_set(when(admitted, id))).as("n_distinct_ids"))
         .collect().head
+      if (stats.getInt(5) < stats.getLong(4)) {
+        val dup = marked.filter(admitted).groupBy(id.as("__id")).count()
+          .filter(col("count") > 1).select("__id").head().getLong(0)
+        throw new IllegalArgumentException(
+          s"ingest batch $batchId: ${stats.getLong(4)} admitted rows carry " +
+            s"only ${stats.getInt(5)} distinct ids ($idCol $dup occurs more " +
+            "than once); the batch was refused before any write")
+      }
       if (stats.getLong(0) > 0) {
-        // NULL event time is unclassifiable — audited to late/ (ts NULL),
-        // never admitted. A bare `ts < wm` / `ts >= wm` filter pair would
-        // silently drop null-ts rows from BOTH channels. A batch with NO
-        // late rows skips the (empty) audit write entirely — one fewer
-        // job per on-time batch, and still exactly-once on replay: the
+        // a batch with no late rows skips the (empty) audit write: the
         // late verdict is deterministic in (batch, pre-batch watermark),
         // so a replay that computes zero late rows computed zero the
-        // first time too — there is no stale partition to overwrite.
+        // first time too — there is no stale partition to overwrite
         if (stats.getLong(3) > 0) {
           sp.sparkContext.setJobDescription("graft ingest: late audit")
-          // the FULL original row, not just (id, ts): a self-contained
-          // audit channel is what makes [[lateRows]]-driven re-ingest
-          // possible without replaying the upstream source — the price
-          // is a payload-width write, bounded by the batch's late rows
-          marked.filter(isFresh && (ts.isNull || ts < wm))
-            .drop("__cid")
+          marked.filter(late).drop("__cid")
             .write.mode(SaveMode.Overwrite)
             .parquet(s"$outDir/late/batch=$batchId")
         }
         if (stats.getLong(2) > 0)
-          admit(marked.filter(isFresh && ts >= wm).drop("__cid")
+          admit(marked.filter(admitted).drop("__cid")
             .localCheckpoint(eager = false))
-        if (!stats.isNullAt(1)) // an all-null-ts batch advances nothing
+        // an all-null-ts batch advances nothing
+        for (g <- gate; w <- wm if !stats.isNullAt(1))
           IngestWatermark.write(sp, indexDir,
-            math.max(wm, stats.getLong(1) - lateness))
+            math.max(w, stats.getLong(1) - g.lateness))
       }
       // finally, not a trailing call: descriptions are session-global, so
       // a throw from the audit write / admit / watermark write would
       // otherwise label every later unrelated job "graft ingest: …"
     } finally sp.sparkContext.setJobDescription(null) }
 
+  /** The staged-file driver: one AvailableNow pass over `batchesDir`,
+    * every micro-batch through [[ingestBatch]] with one metadata memo
+    * for the loop. `outDir` is owned by the call (cleared first, so a
+    * rerun — whose fresh checkpoint replays every file — returns one
+    * result set); returns the union of every batch's channel rows.
+    */
+  private def ingestFiles[M](
+      spark: SparkSession,
+      fam: IngestFamily[M],
+      batchesDir: String,
+      batchSchema: StructType,
+      indexDir: String,
+      outDir: String,
+      idCol: String,
+      gate: Option[LatenessGate],
+      maxFilesPerTrigger: Int): DataFrame = {
+    val memo = new MetaMemo[M]
+    val checkpoint = java.nio.file.Files.createTempDirectory("graft_ingest_ckpt")
+    graft.util.TempDirs.register(checkpoint.toString)
+    val outPath = new org.apache.hadoop.fs.Path(outDir)
+    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // an explicit schema means a typo'd source path would become a
+    // SILENT empty stream (zero batches, empty result) — after this
+    // call has already cleared outDir of prior results. Fail loudly
+    // instead (the eventsStream missing-dir contract).
+    val src = new org.apache.hadoop.fs.Path(batchesDir)
+    require(src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(src),
+      s"ingest: batches directory does not exist: $batchesDir")
+    fs.delete(outPath, true)
+    spark.readStream
+      .schema(batchSchema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .parquet(batchesDir)
+      .writeStream
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        ingestBatch(batch.sparkSession, fam, indexDir, outDir, batchId,
+          batch.toDF(), idCol, gate, memo)
+      }
+      .option("checkpointLocation", checkpoint.toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    channelOrEmpty(spark, fs, channelDir(fam, outDir, gate), fam.channelSchema)
+  }
+
+  /** The late-audit loop in ONE call: the `late/` rows of a gated run
+    * ([[lateRows]]) go through [[ingestBatch]] directly, without a gate
+    * (they are below the watermark by definition) and without a staged-
+    * file round trip (file write, stream source, checkpoint: pure
+    * machinery — the rows are already in hand). Identical to
+    * [[stageBatch]] + the family's non-gated ingest over the same rows;
+    * freshness makes it replay-safe (a second call emits nothing). The
+    * staged route remains the right shape when the re-ingest happens in
+    * a LATER session than the gated run.
+    *
+    * The audit channel unions EVERY batch's partition: the same id
+    * arriving late in two batches (at-least-once redelivery) is recorded
+    * twice and stays uncommitted. The copies are identical rows, so they
+    * are deduplicated here rather than refused by the one-row-per-id
+    * rule. `outDir` is owned by the call (cleared first); returns the
+    * probe rows of the re-admitted rows (an empty frame when the audit
+    * channel has no recoverable rows).
+    */
+  private def reingestLate[M](
+      spark: SparkSession,
+      fam: IngestFamily[M],
+      gatedOutDir: String,
+      indexDir: String,
+      outDir: String,
+      idCol: String): DataFrame = {
+    val outPath = new org.apache.hadoop.fs.Path(outDir)
+    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(outPath, true)
+    lateRows(spark, gatedOutDir).foreach { late =>
+      ingestBatch(spark, fam, indexDir, outDir, 0L, late.dropDuplicates(idCol),
+        idCol, gate = None)
+    }
+    channelOrEmpty(spark, fs, outDir, fam.channelSchema)
+  }
+
+  /** A driver's batch-keyed result channel (`<dir>/batch=<id>`, the
+    * partition key dropped), or an empty frame of the family's schema
+    * when no batch ever wrote it.
+    */
+  private def channelOrEmpty(
+      spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem,
+      path: String,
+      emptySchema: StructType): DataFrame =
+    if (fs.exists(new org.apache.hadoop.fs.Path(path)))
+      spark.read.parquet(path).drop("batch")
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
+
   /** The late audit channel's full payload rows (every original batch
     * column; the `batch` partition key dropped) — the re-ingest surface
     * the gate's audit contract promises. Late rows carry event times
     * BELOW the index's watermark by definition, so feeding them back
     * through the gated path would route them straight back to `late/`;
-    * the loop closes through the NON-gated ingest instead
-    * ([[lexIngestOnce]] / [[dedupIngestOnce]] / the index `append`s),
-    * whose freshness anti-join still dedups against committed state.
-    * Empty (schema-less dirs included) → None, so callers distinguish
-    * "no late rows ever" from an empty frame of unknown shape.
+    * the loop closes through the NON-gated ingest instead (the
+    * `*ReingestLate` calls, [[lexIngestOnce]] / [[dedupIngestOnce]], or
+    * the index `append`s), whose freshness join still dedups against
+    * committed state. Empty (schema-less dirs included) → None, so
+    * callers distinguish "no late rows ever" from an empty frame of
+    * unknown shape.
     */
   def lateRows(spark: SparkSession, outDir: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(s"$outDir/late")
@@ -1051,18 +680,70 @@ object Streams {
     }
   }
 
-  /** [[dedupIngestOnce]] with the same event-time lateness gate as
-    * [[lexIngestWatermarked]] — late-arrival parity across the ingest
-    * family: the gate is one engine-wide contract
-    * ([[watermarkGatedBatch]]), not a per-operator behavior.
-    *
-    * Late rows (event time below the persisted watermark as of their
-    * batch's start, or NULL) are dropped from the index — never probed,
-    * never appended — and audited to `<outDir>/late` as (id, ts).
-    * Candidate rows of admitted fresh docs land under `<outDir>/cands`
-    * and are returned. End-state equivalence: the committed index equals
-    * a one-shot [[graft.dedup.LshDedupIndex.build]] over base ∪ admitted
-    * (signature state is per-document; append order cannot matter).
+  /** Streaming lexical-index ingest of staged batch files into a
+    * persisted [[graft.text.Bm25Index]], no lateness gate: every batch
+    * document is searched against everything committed so far (BM25
+    * top-k; N, avgdl and per-term df advance batch over batch), then
+    * appended — the [[ingestBatch]] contract. Returns the union of all
+    * batches' search rows (query_id, id, score, rnk) under `outDir`.
+    */
+  def lexIngestOnce(
+      spark: SparkSession,
+      batchesDir: String,
+      batchSchema: StructType,
+      indexDir: String,
+      outDir: String,
+      idCol: String,
+      textCol: String,
+      topK: Int = 10,
+      maxFilesPerTrigger: Int = 1): DataFrame =
+    ingestFiles(spark, IngestFamily.lex(idCol, textCol, topK), batchesDir,
+      batchSchema, indexDir, outDir, idCol, None, maxFilesPerTrigger)
+
+  /** Streaming near-dup ingest of staged batch files into a persisted
+    * [[graft.dedup.LshDedupIndex]], no lateness gate: every batch is
+    * probed against the whole committed corpus, then appended, so a later
+    * batch dedups against every earlier one — the [[ingestBatch]]
+    * contract. Near-dups WITHIN one batch are the batch-sized
+    * [[graft.dedup.Dedup.minHashLshCandidates]]'s job. Returns the union
+    * of all batches' candidate rows (new_id, indexed_id, est_jaccard).
+    */
+  def dedupIngestOnce(
+      spark: SparkSession,
+      batchesDir: String,
+      batchSchema: StructType,
+      indexDir: String,
+      outDir: String,
+      idCol: String,
+      textCol: String,
+      maxFilesPerTrigger: Int = 1): DataFrame =
+    ingestFiles(spark, IngestFamily.dedup(idCol, textCol), batchesDir,
+      batchSchema, indexDir, outDir, idCol, None, maxFilesPerTrigger)
+
+  /** [[lexIngestOnce]] behind the event-time lateness gate (the
+    * [[ingestBatch]] contract): late rows go to `<outDir>/late`, search
+    * rows of admitted documents to `<outDir>/search`, which is returned.
+    */
+  def lexIngestWatermarked(
+      spark: SparkSession,
+      batchesDir: String,
+      batchSchema: StructType,
+      indexDir: String,
+      outDir: String,
+      idCol: String,
+      textCol: String,
+      tsCol: String,
+      lateness: Long,
+      topK: Int = 10,
+      maxFilesPerTrigger: Int = 1): DataFrame =
+    ingestFiles(spark, IngestFamily.lex(idCol, textCol, topK), batchesDir,
+      batchSchema, indexDir, outDir, idCol,
+      Some(LatenessGate(tsCol, lateness)), maxFilesPerTrigger)
+
+  /** [[dedupIngestOnce]] behind the event-time lateness gate (the
+    * [[ingestBatch]] contract): late rows go to `<outDir>/late`,
+    * candidate rows of admitted documents to `<outDir>/cands`, which is
+    * returned.
     */
   def dedupIngestWatermarked(
       spark: SparkSession,
@@ -1074,82 +755,18 @@ object Streams {
       textCol: String,
       tsCol: String,
       lateness: Long,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
-    val nbMemo = new MetaMemo[(Int, Int, Int)]
-    val fs = runFileBatches(spark, batchesDir, batchSchema, outDir,
-        "graft_dedupwm_ckpt", maxFilesPerTrigger) { (b, batchId) =>
-      dedupIngestBatch(b.sparkSession, indexDir, outDir, batchId,
-        b, idCol, textCol, tsCol, lateness, nbMemo)
-    }
-    channelOrEmpty(spark, fs, s"$outDir/cands",
-      graft.dedup.LshDedupIndex.candidateSchema, dropBatch = true)
-  }
+      maxFilesPerTrigger: Int = 1): DataFrame =
+    ingestFiles(spark, IngestFamily.dedup(idCol, textCol), batchesDir,
+      batchSchema, indexDir, outDir, idCol,
+      Some(LatenessGate(tsCol, lateness)), maxFilesPerTrigger)
 
-  /** One micro-batch of [[dedupIngestWatermarked]] — extracted for the
-    * same crash-replay testability as [[lexIngestBatch]]; the cands
-    * channel is batch-keyed (`cands/batch=<id>`, Overwrite).
-    */
-  private[graft] def dedupIngestBatch(
-      sp: SparkSession,
-      indexDir: String,
-      outDir: String,
-      batchId: Long,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      tsCol: String,
-      lateness: Long,
-      nbMemo: MetaMemo[(Int, Int, Int)] = new MetaMemo[(Int, Int, Int)])
-      : Unit = {
-    // lazy checkpoints — see lexIngestBatch
-    val b = batch.localCheckpoint(eager = false)
-    // ONE signatures scan serves the gate's marker join and (via
-    // preSigs) the probe's candidate fetch — the dedupIngestOnce shape
-    // LAZY val + in-thunk recovery — see lexIngestBatch
-    lazy val sigs = graft.dedup.LshDedupIndex.readSignatures(sp, indexDir)
-      .localCheckpoint(eager = false)
-    watermarkGatedBatch(sp, indexDir, outDir, batchId, b, {
-        graft.dedup.LshDedupIndex.recoverCommit(sp, indexDir)
-        sigs.select(col("id"))
-      }, idCol, tsCol, lateness) { fresh =>
-      // ONE MinHash kernel pass for the whole batch: the signed frame
-      // feeds the probe (preSigned) AND the index append (appendSigned);
-      // params are read once per LOOP (generation-keyed MetaMemo —
-      // revalidated AFTER this batch's in-lock recovery ran) and shared
-      // the same way
-      val params @ (_, bands, rpb) = nbMemo.getOrLoad(
-          graft.dedup.LshDedupIndex.metaGen(sp, indexDir))(
-        graft.dedup.LshDedupIndex.loadParams(sp, indexDir))
-      val signed = graft.dedup.LshDedupIndex
-        .signBatch(fresh, idCol, textCol, params)
-      sp.sparkContext.setJobDescription("graft ingest: probe")
-      graft.dedup.LshDedupIndex
-        .candidatesAgainst(sp, indexDir, fresh, idCol, textCol,
-          preSigs = Some(sigs), preSigned = Some(signed),
-          preParams = Some(params))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/cands/batch=$batchId")
-      sp.sparkContext.setJobDescription("graft ingest: append")
-      graft.dedup.LshDedupIndex.appendSigned(sp, indexDir, signed,
-        bands, rpb, takeLock = false)
-    }
-  }
-
-  /** Watermark-gated streaming VECTOR ingest into a persistent
-    * [[graft.knn.IvfIndex]] — the third index family on the engine-wide
-    * lateness contract ([[watermarkGatedBatch]]), completing ANN-serving
-    * parity with the lexical ([[lexIngestWatermarked]]) and dedup
-    * ([[dedupIngestWatermarked]]) paths. Each micro-batch of embeddings
-    * is (1) freshness-filtered against the committed id set, (2) split
-    * on event time against the persisted watermark — late/null-ts rows
-    * are audited to `<outDir>/late`, never probed or appended — and
-    * (3) for the admitted rows: probed against the index AS OF batch
-    * start (serving results land batch-keyed under `<outDir>/search`,
-    * exactly-once on crash replay) and appended into their inverted
-    * lists. End-state equivalence: the committed assignments id set
-    * equals base ∪ admitted, and a full probe (`nProbe = nList`) over
-    * the committed index is exact — both closed-form oracle-checkable
-    * from the staging arithmetic.
+  /** Gated streaming VECTOR ingest into a persistent
+    * [[graft.knn.IvfIndex]] (the [[ingestBatch]] contract): admitted
+    * embeddings are probed against the index as of batch start (rows
+    * under `<outDir>/search`, returned) and appended into their inverted
+    * lists; late rows go to `<outDir>/late`. The committed id set equals
+    * base ∪ admitted, and a full probe (`nProbe = nList`) over the
+    * committed index is exact.
     *
     * Reference anchor: the reference builds its ANN index once and
     * serves lookups from it (DeepJoin/annIndex.py:42–51); continuous
@@ -1168,89 +785,16 @@ object Streams {
       lateness: Long,
       k: Int = 10,
       nProbe: Int = 4,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
-    val metaMemo = new MetaMemo[(Array[Array[Float]], String,
-      Option[(graft.knn.PqCodebooks, Boolean)])]
-    val fs = runFileBatches(spark, batchesDir, batchSchema, outDir,
-        "graft_annwm_ckpt", maxFilesPerTrigger) { (b, batchId) =>
-      annIngestBatch(b.sparkSession, indexDir, outDir, batchId,
-        b, idCol, vecCol, tsCol, lateness, k, nProbe, metaMemo)
-    }
-    channelOrEmpty(spark, fs, s"$outDir/search",
-      graft.knn.IvfIndex.searchSchema, dropBatch = true)
-  }
+      maxFilesPerTrigger: Int = 1): DataFrame =
+    ingestFiles(spark, IngestFamily.ann(idCol, vecCol, k, nProbe), batchesDir,
+      batchSchema, indexDir, outDir, idCol,
+      Some(LatenessGate(tsCol, lateness)), maxFilesPerTrigger)
 
-  /** One micro-batch of [[annIngestWatermarked]] — extracted for the
-    * same crash-replay testability as [[lexIngestBatch]]; the search
-    * channel is batch-keyed (`search/batch=<id>`, Overwrite).
-    */
-  private[graft] def annIngestBatch(
-      sp: SparkSession,
-      indexDir: String,
-      outDir: String,
-      batchId: Long,
-      batch: DataFrame,
-      idCol: String,
-      vecCol: String,
-      tsCol: String,
-      lateness: Long,
-      k: Int,
-      nProbe: Int,
-      metaMemo: MetaMemo[(Array[Array[Float]], String,
-        Option[(graft.knn.PqCodebooks, Boolean)])] =
-        new MetaMemo[(Array[Array[Float]], String,
-          Option[(graft.knn.PqCodebooks, Boolean)])]): Unit = {
-    // lazy checkpoints — see lexIngestBatch
-    val b = batch.localCheckpoint(eager = false)
-    watermarkGatedBatch(sp, indexDir, outDir, batchId, b, {
-        // the committed-id thunk runs INSIDE the writer lock: resolve any
-        // crashed-rebalance swap FIRST — a rebalance that died between
-        // its table renames leaves no live assignments dir, and reading
-        // it before recovery would throw on every replay, bricking the
-        // ingest instead of healing the index
-        graft.knn.IvfIndex.recoverSwap(sp, indexDir)
-        graft.knn.IvfIndex.readIds(sp, indexDir)
-          .localCheckpoint(eager = false)
-      }, idCol, tsCol, lateness) { fresh =>
-      // ONE metadata load per LOOP (generation-keyed MetaMemo —
-      // centroids/metric/PQ are append-immutable, but a rebalance can
-      // commit or be crash-recovered by THIS batch's thunk between
-      // batches, so the memo revalidates against the commit fingerprint
-      // read here, AFTER that recovery ran, and a swapped quantizer
-      // forces a reload instead of filing vectors into replaced lists)
-      // serves both the probe (preMeta) and the append (appendPrepared)
-      val (centroids, metric, pq) = metaMemo.getOrLoad(
-          graft.knn.IvfIndex.metaGen(sp, indexDir))(
-        graft.knn.IvfIndex.loadIndexMeta(sp, indexDir))
-      sp.sparkContext.setJobDescription("graft ingest: probe")
-      // probe against the index AS OF batch start (fresh ids are not yet
-      // members, so excludeSelf has nothing to exclude — kept for the
-      // re-ingest-own-output case where it does)
-      graft.knn.IvfIndex.search(sp, indexDir, fresh, idCol, vecCol, k,
-          nProbe, preMeta = Some((centroids, metric)))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/search/batch=$batchId")
-      sp.sparkContext.setJobDescription("graft ingest: append")
-      graft.knn.IvfIndex.appendPrepared(sp, indexDir, fresh, idCol, vecCol,
-        centroids, metric, pq)
-    }
-  }
-
-  /** [[annIngestWatermarked]]'s contract on the sharded
-    * [[graft.knn.HnswIndex]] — the FOURTH index family under the one
-    * engine-wide lateness gate. Per micro-batch: freshness marker-join
-    * against the live manifest's id set, late/null-ts rows audited
-    * batch-keyed, admitted vectors beam-probed against the graph AS OF
-    * batch start (`search/batch=<id>`, exactly-once on replay) and then
-    * inserted into their shards' graphs via the generation-committed
-    * append (whose manifest rename is the batch's index commit — a crash
-    * before it leaves only unreferenced g=N+1 debris, and the replayed
-    * batch still sees its docs as fresh).
-    *
-    * The committed-id end state (base ∪ admitted) and the late split are
-    * EXACT regardless of graph quality — only the search channel is
-    * approximate (HNSW recall), which is why the oracle pins membership
-    * and lateness, not neighbor sets.
+  /** [[annIngestWatermarked]] on the sharded [[graft.knn.HnswIndex]]:
+    * admitted vectors are beam-probed, then inserted into their shards'
+    * graphs by the generation-committed append (its manifest rename is
+    * the batch's index commit). Membership and the late split are exact;
+    * only the search channel is approximate (HNSW recall).
     */
   def hnswIngestWatermarked(
       spark: SparkSession,
@@ -1264,72 +808,54 @@ object Streams {
       lateness: Long,
       k: Int = 10,
       efSearch: Int = 64,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
-    // one params read per LOOP (generation-keyed MetaMemo — a reshard/
-    // rebuild committing between batches swaps params and forces a
-    // reload), shared by every batch's probe and append — the family
-    // pattern the other three ingesters already run
-    val paramsMemo = new MetaMemo[graft.knn.HnswIndex.Params]
-    val fs = runFileBatches(spark, batchesDir, batchSchema, outDir,
-        "graft_hnswwm_ckpt", maxFilesPerTrigger) { (b, batchId) =>
-      hnswIngestBatch(b.sparkSession, indexDir, outDir, batchId,
-        b, idCol, vecCol, tsCol, lateness, k, efSearch, paramsMemo)
-    }
-    channelOrEmpty(spark, fs, s"$outDir/search",
-      graft.knn.IvfIndex.searchSchema, dropBatch = true) // engine kNN shape
-  }
+      maxFilesPerTrigger: Int = 1): DataFrame =
+    ingestFiles(spark, IngestFamily.hnsw(idCol, vecCol, k, efSearch),
+      batchesDir, batchSchema, indexDir, outDir, idCol,
+      Some(LatenessGate(tsCol, lateness)), maxFilesPerTrigger)
 
-  /** One micro-batch of [[hnswIngestWatermarked]] — extracted for the
-    * same crash-replay testability as [[annIngestBatch]].
+  /** Re-ingest the late rows of a gated [[lexIngestWatermarked]] run —
+    * [[reingestLate]]; returns their search rows.
     */
-  private[graft] def hnswIngestBatch(
-      sp: SparkSession,
+  def lexReingestLate(
+      spark: SparkSession,
+      gatedOutDir: String,
       indexDir: String,
       outDir: String,
-      batchId: Long,
-      batch: DataFrame,
+      idCol: String,
+      textCol: String,
+      topK: Int = 10): DataFrame =
+    reingestLate(spark, IngestFamily.lex(idCol, textCol, topK), gatedOutDir,
+      indexDir, outDir, idCol)
+
+  /** Re-ingest the late rows of a gated [[annIngestWatermarked]] run —
+    * [[reingestLate]]; returns their probe rows.
+    */
+  def annReingestLate(
+      spark: SparkSession,
+      gatedOutDir: String,
+      indexDir: String,
+      outDir: String,
       idCol: String,
       vecCol: String,
-      tsCol: String,
-      lateness: Long,
-      k: Int,
-      efSearch: Int,
-      paramsMemo: MetaMemo[graft.knn.HnswIndex.Params] =
-        new MetaMemo[graft.knn.HnswIndex.Params]): Unit = {
-    // lazy checkpoints — see lexIngestBatch
-    val b = batch.localCheckpoint(eager = false)
-    watermarkGatedBatch(sp, indexDir, outDir, batchId, b, {
-        // the committed-id thunk runs INSIDE the writer lock (readIds
-        // reads the manifest eagerly — captured before the lock, a
-        // concurrent append/vacuum committing in between would make
-        // already-committed ids look fresh or pin the scan to deleted
-        // generation dirs; same contract as annIngestBatch). A reshard
-        // that died mid-swap heals here first, like the IVF recoverSwap
-        graft.knn.HnswIndex.recoverReshard(sp, indexDir)
-        graft.knn.HnswIndex.readIds(sp, indexDir)
-          .localCheckpoint(eager = false)
-      }, idCol, tsCol, lateness) { fresh =>
-      // ONE params load per LOOP (generation-keyed memo, revalidated
-      // against the commit fingerprint AFTER this batch's in-lock
-      // recovery ran), shared by the probe and the append; the append
-      // skips the guards the gate just established (freshness via the
-      // marker join; within-batch uniqueness is the input contract) —
-      // the annIngestBatch/lexIngestBatch fast path, two fewer jobs per
-      // batch
-      val params = paramsMemo.getOrLoad(
-          graft.knn.HnswIndex.metaGen(sp, indexDir))(
-        graft.knn.HnswIndex.loadParams(sp, indexDir))
-      sp.sparkContext.setJobDescription("graft ingest: probe")
-      graft.knn.HnswIndex.search(sp, indexDir, fresh, idCol, vecCol, k,
-          efSearch, preParams = Some(params))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/search/batch=$batchId")
-      sp.sparkContext.setJobDescription("graft ingest: append")
-      graft.knn.HnswIndex.append(sp, indexDir, fresh, idCol, vecCol,
-        takeLock = false, checkBatchUnique = false, checkPresence = false,
-        preParams = Some(params))
-    }
-  }
+      k: Int = 10,
+      nProbe: Int = 4): DataFrame =
+    reingestLate(spark, IngestFamily.ann(idCol, vecCol, k, nProbe),
+      gatedOutDir, indexDir, outDir, idCol)
+
+  /** Re-ingest the late rows of a gated [[hnswIngestWatermarked]] run —
+    * [[reingestLate]]; returns their (approximate) probe rows.
+    */
+  def hnswReingestLate(
+      spark: SparkSession,
+      gatedOutDir: String,
+      indexDir: String,
+      outDir: String,
+      idCol: String,
+      vecCol: String,
+      k: Int = 10,
+      efSearch: Int = 64): DataFrame =
+    reingestLate(spark, IngestFamily.hnsw(idCol, vecCol, k, efSearch),
+      gatedOutDir, indexDir, outDir, idCol)
 
   /** Streaming exact dedup, EXECUTED: the events file is staged TWICE
     * into the source directory, so every event genuinely arrives as a

@@ -246,83 +246,38 @@ object Bm25Index {
 
   /** Add a new batch WITHOUT touching existing state: one tokenize pass,
     * parquet-appended into the bucket partitions and `doclens/`. Ids must
-    * be unique corpus-wide. Blank documents index nothing (the
+    * be unique corpus-wide: a batch that repeats an id, or carries one the
+    * index already holds, is refused. Blank documents index nothing (the
     * [[Bm25.scoreTopK]] convention — they can never match a term) and do
     * not count toward the returned appended-row count.
-    *
-    * `checkPresence = false` skips the already-present doclens join for
-    * callers that have JUST established disjointness themselves (the
-    * streaming ingester's per-batch anti-join) — one fewer corpus-table
-    * scan per batch. `checkBatchUnique = false` likewise skips the
-    * within-batch duplicate-id aggregation (one fewer job) for callers
-    * whose input contract already guarantees unique ids per batch.
-    * `takeLock = false` is for callers ALREADY holding the directory's
-    * writer lock (the watermarked ingest gate locks the whole
-    * micro-batch); the lock is not reentrant, so a nested acquire would
-    * fail fast against the caller's own hold.
     */
   def append(
       spark: SparkSession,
       dir: String,
       newDocs: DataFrame,
       idCol: String,
-      textCol: String,
-      checkPresence: Boolean = true,
-      checkBatchUnique: Boolean = true,
-      takeLock: Boolean = true): Long =
-    if (!takeLock)
-      appendImpl(spark, dir, newDocs, idCol, textCol, checkPresence,
-        checkBatchUnique)
-    else
-      graft.util.IndexLock.withLock(spark, dir, "Bm25Index.append") {
-        appendImpl(spark, dir, newDocs, idCol, textCol, checkPresence,
-          checkBatchUnique)
-      }
+      textCol: String): Long =
+    graft.util.IndexLock.withLock(spark, dir, "Bm25Index.append") {
+      recoverCommit(spark, dir)
+      val nBuckets = loadParams(spark, dir)
+      val ids = newDocs.select(col(idCol).cast("long").as("id"))
+      require(ids.groupBy("id").count().filter(col("count") > 1).isEmpty,
+        "Bm25Index.append: duplicate ids within the appended batch")
+      require(readDoclens(spark, dir).select("id").join(ids, "id").isEmpty,
+        "Bm25Index.append: id already present in the index")
+      writeState(newDocs, idCol, textCol, dir, nBuckets, SaveMode.Append)
+    }
 
   /** Streaming-batch append over a caller-shared [[tokenRows]] frame
     * and preloaded bucket count: the per-batch fast path — no
     * re-tokenize, no params read, no count job, no clustering exchange.
-    * The caller owns the guards [[append]]'s flags would run (absence
-    * via its anti-join, within-batch uniqueness by input contract).
-    * `takeLock = false` for callers already holding the writer lock.
+    * The caller holds the writer lock and owns the guards [[append]]
+    * runs (the ingest driver's freshness and one-row-per-id gate).
     */
-  private[graft] def appendRows(
-      spark: SparkSession,
-      dir: String,
-      rows: DataFrame,
-      nBuckets: Int,
-      takeLock: Boolean): Unit =
-    if (!takeLock) {
-      writeTf(tfFromRows(rows), dlFromRows(rows), dir, nBuckets,
-        SaveMode.Append, needCount = false, repartitionByBucket = false); ()
-    } else
-      graft.util.IndexLock.withLock(spark, dir, "Bm25Index.append") {
-        recoverCommit(spark, dir)
-        writeTf(tfFromRows(rows), dlFromRows(rows), dir, nBuckets,
-          SaveMode.Append, needCount = false, repartitionByBucket = false); ()
-      }
-
-  private def appendImpl(
-      spark: SparkSession,
-      dir: String,
-      newDocs: DataFrame,
-      idCol: String,
-      textCol: String,
-      checkPresence: Boolean,
-      checkBatchUnique: Boolean): Long = {
-    recoverCommit(spark, dir)
-    val nBuckets = loadParams(spark, dir)
-    if (checkBatchUnique) {
-      val ids = newDocs.select(col(idCol).cast("long").as("id"))
-      require(ids.groupBy("id").count().filter(col("count") > 1).isEmpty,
-        "Bm25Index.append: duplicate ids within the appended batch")
-    }
-    if (checkPresence) {
-      val ids = newDocs.select(col(idCol).cast("long").as("id"))
-      require(readDoclens(spark, dir).select("id").join(ids, "id").isEmpty,
-        "Bm25Index.append: id already present in the index")
-    }
-    writeState(newDocs, idCol, textCol, dir, nBuckets, SaveMode.Append)
+  private[graft] def appendRows(dir: String, rows: DataFrame,
+      nBuckets: Int): Unit = {
+    writeTf(tfFromRows(rows), dlFromRows(rows), dir, nBuckets,
+      SaveMode.Append, needCount = false, repartitionByBucket = false); ()
   }
 
   /** BM25 top-k retrieval AGAINST THE INDEXED CORPUS — exactly

@@ -155,8 +155,10 @@ class PropertySpec extends SparkSpec {
         }
         val df = spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 2), schema)
-        graft.streaming.Streams.lexIngestBatch(spark, s"$base/index",
-          s"$base/out", b.toLong, df, "doc_id", "text", "ts", lateness, 3)
+        graft.streaming.Streams.ingestBatch(spark,
+          graft.streaming.IngestFamily.lex("doc_id", "text", topK = 3),
+          s"$base/index", s"$base/out", b.toLong, df, "doc_id",
+          Some(graft.streaming.Streams.LatenessGate("ts", lateness)))
         // simulate: committed resends are no-ops (marker join); anything
         // else classifies against the PRE-batch watermark; the watermark
         // advances off the whole batch's max event time

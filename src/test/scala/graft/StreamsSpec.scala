@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.Lake
-import graft.streaming.Streams
+import graft.streaming.{IngestFamily, Streams}
 
 class StreamsSpec extends SparkSpec {
   import spark.implicits._
@@ -548,179 +548,95 @@ class StreamsSpec extends SparkSpec {
     assert(graft.streaming.IngestWatermark.read(spark, s"$base/index") == wmBefore)
   }
 
-  test("ingest channels are exactly-once across crash replays: a batch " +
-    "killed between the search write and the index append re-derives the " +
-    "same search rows on replay instead of duplicating them") {
-    import org.apache.spark.sql.types._
-    val docs = graft.sources.Lake.table(spark, sf0001, "documents")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .filter(col("doc_id") < 30)
-    val base = Files.createTempDirectory("lexwm_replay").toString
-    graft.text.Bm25Index.build(docs, "doc_id", "text", s"$base/index")
-    val batch = docs.filter(col("doc_id") < 10)
-      .select((col("doc_id") + 1000000).as("doc_id"),
-        (col("doc_id") * 100).as("ts"), col("text"))
+  private val familyCases = Seq(
+    IngestCase("lex", "documents", "doc_id", "text",
+      IngestFamily.lex("doc_id", "text", 3),
+      (df, dir) => graft.text.Bm25Index.build(df, "doc_id", "text", dir)),
+    IngestCase("dedup", "documents", "doc_id", "text",
+      IngestFamily.dedup("doc_id", "text"),
+      (df, dir) => graft.dedup.LshDedupIndex.build(df, "doc_id", "text", dir)),
+    IngestCase("ann", "embeddings", "vec_id", "embedding",
+      IngestFamily.ann("vec_id", "embedding", 3, 4),
+      (df, dir) => graft.knn.IvfIndex.build(df, "vec_id", "embedding", dir,
+        nList = 4)),
+    IngestCase("hnsw", "embeddings", "vec_id", "embedding",
+      IngestFamily.hnsw("vec_id", "embedding", 3, 64),
+      (df, dir) => graft.knn.HnswIndex.build(df, "vec_id", "embedding", dir,
+        shards = 2)))
 
-    // ATTEMPT 1 — crash between the search-channel write and the index
-    // append: the admit callback writes the channel then dies. The gate
-    // propagates the failure; the channel now holds rows for a batch the
-    // index never committed.
-    val boom = intercept[RuntimeException] {
-      Streams.watermarkGatedBatch(spark, s"$base/index", s"$base/out", 0L,
-          batch, graft.text.Bm25Index.readDoclens(spark, s"$base/index")
-            .select(col("id")), "doc_id", "ts", 100L) { fresh =>
-        graft.text.Bm25Index
-          .searchTopK(spark, s"$base/index", fresh, "doc_id", "text", 3)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$base/out/search/batch=0")
-        throw new RuntimeException("crash before append")
+  /** The family with an append that dies after the channel write. */
+  private def crashBeforeAppend[M](f: IngestFamily[M]): IngestFamily[M] =
+    f.copy(append = (_, _, _, _) =>
+      throw new RuntimeException("crash before append"))
+
+  familyCases.foreach { c =>
+    test(s"ingest driver [${c.name}]: crash replay, full-commit replay, " +
+      "dup-in-batch") {
+      val base = Files.createTempDirectory(s"ingest_${c.name}").toString
+      val (idx, out) = (s"$base/index", s"$base/out")
+      val rows = Lake.table(spark, sf0001, c.table)
+        .select(col(c.idCol).cast("long").as(c.idCol), col(c.payload))
+        .filter(col(c.idCol) < 40).localCheckpoint()
+      c.build(rows, idx)
+      def arrivals(from: Int, offset: Long) =
+        rows.filter(col(c.idCol) >= from && col(c.idCol) < from + 10)
+          .select((col(c.idCol) + offset).as(c.idCol),
+            (col(c.idCol) * 100).as("ts"), col(c.payload))
+      val batch = arrivals(0, 1000000L)
+      val gate = Some(Streams.LatenessGate("ts", 100L))
+      def run(fam: IngestFamily[_], batchId: Long,
+          b: org.apache.spark.sql.DataFrame): Unit =
+        Streams.ingestBatch(spark, fam, idx, out, batchId, b, c.idCol, gate)
+      val channel = s"$out/${c.family.channel}"
+      def newIds() = c.family.committed(spark, idx).select("id").collect()
+        .map(_.getLong(0)).filter(_ >= 1000000).sorted.toSeq
+      def exists(p: String) = new java.io.File(p).exists()
+
+      // ATTEMPT 1 — crash between the channel write and the index append:
+      // the channel holds rows for a batch the index never committed
+      val boom = intercept[RuntimeException] {
+        run(crashBeforeAppend(c.family), 0L, batch)
       }
-    }
-    assert(boom.getMessage == "crash before append")
-    val firstAttempt = spark.read.parquet(s"$base/out/search/batch=0").count()
-    assert(firstAttempt > 0, "channel write must have landed before the crash")
-    assert(!spark.read.parquet(s"$base/index/doclens")
-      .collect().exists(_.getLong(0) >= 1000000), "append must NOT have landed")
+      assert(boom.getMessage == "crash before append")
+      val firstAttempt = spark.read.parquet(s"$channel/batch=0").count()
+      assert(firstAttempt > 0, "channel write must have landed before the crash")
+      assert(newIds().isEmpty, "append must NOT have landed")
 
-    // REPLAY — the full batch body runs again with the same batchId: the
-    // docs are still fresh (append never committed), so the probe re-runs
-    // and the batch-keyed Overwrite REPLACES the channel rows; an
-    // append-mode channel would now hold every row twice.
-    Streams.lexIngestBatch(spark, s"$base/index", s"$base/out", 0L, batch,
-      "doc_id", "text", "ts", 100L, 3)
-    val afterReplay = spark.read.parquet(s"$base/out/search").drop("batch")
-    assert(afterReplay.count() == firstAttempt,
-      "replay must overwrite, not duplicate, the search channel")
-    assert(afterReplay.count() == afterReplay.distinct().count())
-    val committed = spark.read.parquet(s"$base/index/doclens")
-      .collect().map(_.getLong(0)).filter(_ >= 1000000)
-    assert(committed.length == 10 && committed.distinct.length == 10)
+      // REPLAY — the rows are still fresh, so the probe re-runs and the
+      // batch-keyed Overwrite REPLACES the channel rows; an append-mode
+      // channel would now hold every row twice
+      run(c.family, 0L, batch)
+      val afterReplay = spark.read.parquet(channel).drop("batch")
+      assert(afterReplay.count() == firstAttempt,
+        "replay must overwrite, not duplicate, the channel")
+      assert(afterReplay.count() == afterReplay.distinct().count())
+      assert(newIds() == (1000000L until 1000010L))
 
-    // REPLAY AFTER FULL COMMIT — same batchId once more (crash after
-    // append, before the streaming checkpoint advanced): the marker join
-    // empties the admitted set, so neither channel nor index moves.
-    Streams.lexIngestBatch(spark, s"$base/index", s"$base/out", 0L, batch,
-      "doc_id", "text", "ts", 100L, 3)
-    assert(spark.read.parquet(s"$base/out/search").count() == firstAttempt)
-    assert(spark.read.parquet(s"$base/index/doclens")
-      .collect().map(_.getLong(0)).count(_ >= 1000000) == 10)
+      // REPLAY AFTER FULL COMMIT — crash after the append, before the
+      // stream checkpoint: freshness empties the admitted set, so neither
+      // the channel nor the index moves
+      run(c.family, 0L, batch)
+      assert(spark.read.parquet(channel).count() == firstAttempt)
+      assert(newIds() == (1000000L until 1000010L))
 
-    // same contract on the LSH path: full-commit replay of one batch
-    // leaves the cands channel and the signatures table unchanged
-    val dbase = Files.createTempDirectory("dedupwm_replay").toString
-    graft.dedup.LshDedupIndex.build(docs, "doc_id", "text", s"$dbase/index")
-    Streams.dedupIngestBatch(spark, s"$dbase/index", s"$dbase/out", 0L,
-      batch, "doc_id", "text", "ts", 100L)
-    val cands1 = spark.read.parquet(s"$dbase/out/cands").drop("batch").count()
-    Streams.dedupIngestBatch(spark, s"$dbase/index", s"$dbase/out", 0L,
-      batch, "doc_id", "text", "ts", 100L)
-    assert(spark.read.parquet(s"$dbase/out/cands").drop("batch").count() == cands1)
-    val sigIds = spark.read.parquet(s"$dbase/index/signatures")
-      .select("id").collect().map(_.getLong(0))
-    assert(sigIds.length == sigIds.distinct.length)
-  }
-
-  test("ANN ingest shares the engine lateness/replay contract: a batch " +
-    "killed between the search write and the IVF append re-derives the " +
-    "same rows on replay, and a full-commit replay moves nothing") {
-    val emb = graft.sources.Lake.table(spark, sf0001, "embeddings")
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .filter(col("vec_id") < 40)
-    val base = Files.createTempDirectory("annwm_replay").toString
-    graft.knn.IvfIndex.build(emb, "vec_id", "embedding", s"$base/index",
-      nList = 4)
-    val batch = emb.filter(col("vec_id") < 10)
-      .select((col("vec_id") + 1000000).as("vec_id"),
-        (col("vec_id") * 100).as("ts"), col("embedding"))
-
-    // ATTEMPT 1 — crash between the search-channel write and the append:
-    // the channel holds rows for a batch the index never committed
-    val boom = intercept[RuntimeException] {
-      Streams.watermarkGatedBatch(spark, s"$base/index", s"$base/out", 0L,
-          batch, graft.knn.IvfIndex.readIds(spark, s"$base/index"),
-          "vec_id", "ts", 100L) { fresh =>
-        graft.knn.IvfIndex.search(spark, s"$base/index", fresh, "vec_id",
-            "embedding", 3, nProbe = 4)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$base/out/search/batch=0")
-        throw new RuntimeException("crash before append")
+      // DUP IN BATCH — an on-time batch that carries one fresh id twice is
+      // refused by name before any channel, audit, index or watermark
+      // write, with the lateness gate and without it (the Once path)
+      val wm = graft.streaming.IngestWatermark.read(spark, idx)
+      val next = arrivals(10, 2000000L)
+      val dup = next.unionByName(next.filter(col(c.idCol) === 2000013L))
+      for ((outDir, g) <- Seq((out, gate), (s"$base/once", None))) {
+        val e = intercept[IllegalArgumentException] {
+          Streams.ingestBatch(spark, c.family, idx, outDir, 1L, dup, c.idCol, g)
+        }
+        assert(e.getMessage.contains("batch 1") &&
+          e.getMessage.contains("2000013"), e.getMessage)
       }
+      assert(!exists(s"$channel/batch=1") && !exists(s"$out/late") &&
+        !exists(s"$base/once"), "a refused batch must write nothing")
+      assert(newIds() == (1000000L until 1000010L))
+      assert(graft.streaming.IngestWatermark.read(spark, idx) == wm)
     }
-    assert(boom.getMessage == "crash before append")
-    val firstAttempt = spark.read.parquet(s"$base/out/search/batch=0").count()
-    assert(firstAttempt > 0, "channel write must have landed before the crash")
-    assert(!graft.knn.IvfIndex.readIds(spark, s"$base/index")
-      .collect().exists(_.getLong(0) >= 1000000),
-      "append must NOT have landed")
-
-    // REPLAY — docs still fresh, so the probe re-runs and the batch-keyed
-    // Overwrite REPLACES the channel rows; the append lands exactly once
-    Streams.annIngestBatch(spark, s"$base/index", s"$base/out", 0L, batch,
-      "vec_id", "embedding", "ts", 100L, 3, 4)
-    val afterReplay = spark.read.parquet(s"$base/out/search").drop("batch")
-    assert(afterReplay.count() == firstAttempt,
-      "replay must overwrite, not duplicate, the search channel")
-    val ids = graft.knn.IvfIndex.readIds(spark, s"$base/index")
-      .collect().map(_.getLong(0)).filter(_ >= 1000000)
-    assert(ids.length == 10 && ids.distinct.length == 10)
-
-    // REPLAY AFTER FULL COMMIT — the marker join empties the admitted
-    // set: neither channel nor index moves
-    Streams.annIngestBatch(spark, s"$base/index", s"$base/out", 0L, batch,
-      "vec_id", "embedding", "ts", 100L, 3, 4)
-    assert(spark.read.parquet(s"$base/out/search").count() == firstAttempt)
-    assert(graft.knn.IvfIndex.readIds(spark, s"$base/index")
-      .collect().map(_.getLong(0)).count(_ >= 1000000) == 10)
-  }
-
-  test("HNSW ingest shares the lateness/replay contract: crash between " +
-    "the search write and the generation commit replays exactly-once") {
-    val emb = graft.sources.Lake.table(spark, sf0001, "embeddings")
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .filter(col("vec_id") < 40)
-    val base = Files.createTempDirectory("hnswwm_replay").toString
-    graft.knn.HnswIndex.build(emb, "vec_id", "embedding", s"$base/index",
-      shards = 2)
-    val batch = emb.filter(col("vec_id") < 10)
-      .select((col("vec_id") + 1000000).as("vec_id"),
-        (col("vec_id") * 100).as("ts"), col("embedding"))
-
-    // crash between the channel write and the append: the manifest never
-    // advanced, so the batch docs are still fresh on replay
-    val boom = intercept[RuntimeException] {
-      Streams.watermarkGatedBatch(spark, s"$base/index", s"$base/out", 0L,
-          batch, graft.knn.HnswIndex.readIds(spark, s"$base/index"),
-          "vec_id", "ts", 100L) { fresh =>
-        graft.knn.HnswIndex.search(spark, s"$base/index", fresh, "vec_id",
-            "embedding", 3)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$base/out/search/batch=0")
-        throw new RuntimeException("crash before append")
-      }
-    }
-    assert(boom.getMessage == "crash before append")
-    val firstAttempt = spark.read.parquet(s"$base/out/search/batch=0").count()
-    assert(firstAttempt > 0)
-    assert(!graft.knn.HnswIndex.readIds(spark, s"$base/index")
-      .collect().exists(_.getLong(0) >= 1000000),
-      "generation commit must NOT have landed")
-
-    // replay: batch-keyed Overwrite replaces the channel; the append's
-    // manifest rename commits each doc exactly once
-    Streams.hnswIngestBatch(spark, s"$base/index", s"$base/out", 0L, batch,
-      "vec_id", "embedding", "ts", 100L, 3, 64)
-    assert(spark.read.parquet(s"$base/out/search").drop("batch").count()
-      == firstAttempt)
-    val ids = graft.knn.HnswIndex.readIds(spark, s"$base/index")
-      .collect().map(_.getLong(0)).filter(_ >= 1000000)
-    assert(ids.length == 10 && ids.distinct.length == 10)
-
-    // full-commit replay: the marker join empties the admitted set
-    Streams.hnswIngestBatch(spark, s"$base/index", s"$base/out", 0L, batch,
-      "vec_id", "embedding", "ts", 100L, 3, 64)
-    assert(spark.read.parquet(s"$base/out/search").count() == firstAttempt)
-    assert(graft.knn.HnswIndex.readIds(spark, s"$base/index")
-      .collect().map(_.getLong(0)).count(_ >= 1000000) == 10)
   }
 
   test("late audit channel is self-contained: lateRows returns the full " +
@@ -1132,18 +1048,17 @@ class StreamsSpec extends SparkSpec {
       (30 until 60).map(i => (i.toLong, Array.fill(8)(10f + 0.01f * i % 0.3f))))
       .toDF("id", "vec")
     graft.knn.IvfIndex.build(base, "id", "vec", dir, nList = 2)
-    val memo = new graft.streaming.Streams.MetaMemo[(Array[Array[Float]],
-      String, Option[(graft.knn.PqCodebooks, Boolean)])]
+    val memo = new Streams.MetaMemo[IngestFamily.IvfMeta]
+    val fam = IngestFamily.ann("id", "vec", k = 3, nProbe = 2)
+    val gate = Some(Streams.LatenessGate("ts", lateness = 10L))
     def batch(id: Long, fill: Float) =
       Seq((id, Array.fill(8)(fill), 1000L)).toDF("id", "vec", "ts")
-    graft.streaming.Streams.annIngestBatch(spark, dir, out, 0L,
-      batch(100L, 0.1f), "id", "vec", "ts", lateness = 10L, k = 3,
-      nProbe = 2, metaMemo = memo)
+    Streams.ingestBatch(spark, fam, dir, out, 0L, batch(100L, 0.1f), "id",
+      gate, memo)
     // the mid-loop maintenance op: retrains the quantizer (5 lists)
     graft.knn.IvfIndex.rebalance(spark, dir, nList = 5)
-    graft.streaming.Streams.annIngestBatch(spark, dir, out, 1L,
-      batch(200L, 9.9f), "id", "vec", "ts", lateness = 10L, k = 3,
-      nProbe = 2, metaMemo = memo)
+    Streams.ingestBatch(spark, fam, dir, out, 1L, batch(200L, 9.9f), "id",
+      gate, memo)
     // the proof: id 200's persisted cid equals the nearest-centroid
     // assignment under the LIVE (post-rebalance) centroids — a stale
     // memo would have filed it under the dead 2-list quantizer
@@ -1173,3 +1088,10 @@ class NoSetTimesFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def setTimes(p: org.apache.hadoop.fs.Path,
       mtime: Long, atime: Long): Unit = ()
 }
+
+/** One index family under the ingest driver: its source table, id and
+  * payload columns, and how to build its base index.
+  */
+private final case class IngestCase(name: String, table: String,
+    idCol: String, payload: String, family: IngestFamily[_],
+    build: (org.apache.spark.sql.DataFrame, String) => Unit)
