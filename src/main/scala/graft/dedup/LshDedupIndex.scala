@@ -87,7 +87,7 @@ object LshDedupIndex {
     // append would Overwrite tables the append is mid-commit on, silently
     // losing the append's rows
     graft.util.IndexLock.withLock(spark, dir, "LshDedupIndex.build") {
-      recoverCommit(spark, dir)
+      recover(spark, dir)
       // all three tables are STAGED and committed by one marker-protected
       // swap: sequenced live Overwrites could crash between the params
       // write and the data writes, leaving NEW banding params over OLD
@@ -100,16 +100,13 @@ object LshDedupIndex {
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/params.tmp")
       val n = writeState(spark, docs, idCol, textCol, dir, shingleSize,
         bands, rowsPerBand, SaveMode.Overwrite, tableSuffix = ".tmp")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      graft.util.StagedTables.commit(fs, dir, BuildMarker, CommitTables,
-        "LshDedupIndex.build") {
-        // fresh corpus → fresh ingest state (graft.util.IngestState
-        // contract); inside the marker window so a crash here replays
-        // the clear on recovery, and a crash BEFORE the marker rolls
-        // back to the previous index with its watermark intact
-        graft.util.IngestState.clear(spark, dir)
-      }
+      // fresh corpus → fresh ingest state (graft.util.IngestState
+      // contract); inside the marker window so a crash here replays the
+      // clear on recovery, and a crash BEFORE the marker rolls back to
+      // the previous index with its watermark intact
+      val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+      graft.util.StagedTables.commit(fs, dir, BuildMarker, BuildOp,
+        CommitTables)(_ => graft.util.IngestState.clear(spark, dir))
       n
     }
   }
@@ -258,7 +255,7 @@ object LshDedupIndex {
       idCol: String,
       textCol: String): Long =
     graft.util.IndexLock.withLock(spark, dir, "LshDedupIndex.append") {
-      recoverCommit(spark, dir)
+      recover(spark, dir)
       val (shingleSize, bands, rowsPerBand) = loadParams(spark, dir)
       val ids = newDocs.select(col(idCol).cast("long").as("id"))
       require(ids.groupBy("id").count().filter(col("count") > 1).isEmpty,
@@ -407,23 +404,23 @@ object LshDedupIndex {
 
   private val CommitTables = Seq("params", "bands", "signatures")
   private val BuildMarker = "_build_commit"
+  // the build marker's historic empty content: build is its only op
+  private val BuildOp = ""
 
   /** Crash recovery for [[build]]'s marker-protected swap AND for
     * markerless `.tmp`/`.old` debris (a crashed [[vacuum]] swap) — run
-    * at every writer entry; the streaming ingest gate calls it from its
-    * in-lock committed-set thunk like the ANN families do.
+    * at every writer entry and by the streaming ingest driver under its
+    * writer lock.
     */
-  private[graft] def recoverCommit(spark: SparkSession, dir: String): Unit = {
+  private[graft] def recover(spark: SparkSession, dir: String): Unit = {
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    graft.util.StagedTables.recover(fs, dir, BuildMarker, CommitTables,
-      "LshDedupIndex.recover") {
-      graft.util.IngestState.clear(spark, dir)
-    }
+    graft.util.StagedTables.recover(fs, dir, BuildMarker, CommitTables)(
+      _ => graft.util.IngestState.clear(spark, dir))
   }
 
   private def vacuumImpl(spark: SparkSession, dir: String, signatureFiles: Int): Long = {
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    recoverCommit(spark, dir)
+    recover(spark, dir)
 
     val sigs = readSignatures(spark, dir)
     val bands = readBands(spark, dir)
@@ -450,16 +447,7 @@ object LshDedupIndex {
     sigs.repartition(nSigFiles)
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/signatures.tmp")
 
-    def swap(table: String): Unit = {
-      val live = new Path(s"$dir/$table")
-      val old = new Path(s"$dir/$table.old")
-      val tmp = new Path(s"$dir/$table.tmp")
-      require(fs.rename(live, old), s"LshDedupIndex.vacuum: could not stage $live")
-      require(fs.rename(tmp, live), s"LshDedupIndex.vacuum: could not commit $tmp")
-      fs.delete(old, true)
-    }
-    swap("bands")
-    swap("signatures")
+    graft.util.StagedTables.swapStaged(fs, dir, Seq("bands", "signatures"))
     orphans
   }
 }

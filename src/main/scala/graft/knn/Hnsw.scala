@@ -43,10 +43,11 @@ final class HnswGraph(
   // insert over whatever the graph already holds, so restore-then-search
   // tasks (the serving path) never pay the O(N) populate — only
   // append/build tasks do, once, well under their beam work. This is the
-  // zero-Spark-job enforcement point for the streaming fast paths that
-  // skip the batch-level checkBatchUnique job: a duplicated id inside
-  // one late batch (or across a multi-batch late union) fails loudly in
-  // the task that would have corrupted the shard graph.
+  // zero-Spark-job enforcement point for the streaming fast path
+  // (HnswIndex.appendPrepared, which runs no batch-level guard jobs): a
+  // duplicated id inside one late batch (or across a multi-batch late
+  // union) fails loudly in the task that would have corrupted the shard
+  // graph.
   private var labelSet: java.util.HashSet[java.lang.Long] = null
   private def labels(): java.util.HashSet[java.lang.Long] = {
     if (labelSet == null) {

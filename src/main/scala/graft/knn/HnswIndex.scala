@@ -49,16 +49,16 @@ object HnswIndex {
   /** Build the per-shard graphs and persist them as node rows. Returns
     * the node count written.
     *
-    * Rebuild-in-place over a live index is GENERATION-STAGED and atomic:
-    * the new corpus's graphs land in the next generation directory (no
-    * live file touched), params swap and the manifest commit under the
-    * [[reshard]] marker protocol, and only then are the superseded
+    * Every build is GENERATION-STAGED and atomic ([[commitGeneration]],
+    * shared with [[reshard]]): the new corpus's graphs land in the next
+    * generation directory (g=0 in a directory with no committed
+    * manifest; no live file touched), params swap and the manifest
+    * commit under the commit marker, and only then are the superseded
     * generations deleted. A crash at any earlier point leaves the
-    * previous index fully live (readers keep resolving the old
-    * manifest); recovery at the next writer entry rolls the commit
-    * forward or back. Only a manifest-less directory takes the direct
-    * fresh-build path. Like [[append]], build assumes a single writer
-    * per index directory — ENFORCED by [[graft.util.IndexLock]]
+    * previous index (if any) fully live — readers keep resolving the old
+    * manifest — and [[recover]] at the next writer entry rolls the
+    * commit forward or back. Like [[append]], build assumes a single
+    * writer per index directory — ENFORCED by [[graft.util.IndexLock]]
     * (create-exclusive `_writer.lock`, stale-TTL broken): a second
     * maintenance writer fails fast with `HeldByOther` instead of racing
     * a swap or interleaving generations.
@@ -116,12 +116,33 @@ object HnswIndex {
       efSearch: Int = UseIndexDefault,
       shapeProbeAbove: Long = ShapeProbeAbove): Long =
     // same single-writer lock as append/vacuum: a build racing a live
-    // append would clear manifests and Overwrite nodes/ the append is
-    // mid-commit on, silently losing the append's generation
+    // append would interleave generations with it, silently losing the
+    // append's generation
     graft.util.IndexLock.withLock(candidates.sparkSession, dir,
         "HnswIndex.build") {
-      buildLocked(candidates, idCol, vecCol, dir, m, efConstruction, metric,
-        shards, seed, efSearch, shapeProbeAbove)
+      // fail BEFORE any write: an empty corpus would commit an index
+      // with no nodes over the previous one. Empty-seed bootstrap is not
+      // supported here (unlike LshDedupIndex/Bm25Index, whose explicit
+      // on-read schemas exist for the streaming create-on-first-batch
+      // path); seed with at least one vector. On the auto-shard path the
+      // emptiness check rides the shard-sizing count (count == 0 ⟺
+      // empty) — one pass over the candidate lineage instead of two; the
+      // explicit-shard path keeps the cheaper isEmpty (a single-partition
+      // take, no full count)
+      val nAuto: Option[Long] =
+        if (shards == UseAutoShards) Some(candidates.count()) else None
+      require(nAuto.map(_ > 0L).getOrElse(!candidates.isEmpty),
+        s"HnswIndex.build: empty candidate side for $dir — the previous " +
+          "index (if any) is untouched")
+      recover(candidates.sparkSession, dir)
+      // size-aware shard count (the SHARD COUNT contract above): the
+      // count job is paid on the auto path only
+      commitGeneration(dir,
+        candidates.select(col(idCol).cast("long").as("id"),
+          col(vecCol).cast("array<float>").as("vec")),
+        Params(m, metric, resolveShards(shards, nAuto.getOrElse(0L)),
+          efConstruction, seed, efSearch, None, None),
+        build = true, shapeProbeAbove)
     }
 
   /** The untuned serving beam on a catalog the shape probe did not (or
@@ -191,167 +212,106 @@ object HnswIndex {
       (n + TargetShardNodes - 1) / TargetShardNodes).toInt
   }
 
-  private def buildLocked(
-      candidates: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dir: String,
-      m: Int,
-      efConstruction: Int,
-      metric: String,
-      shards: Int,
-      seed: Int,
-      efSearch: Int,
-      shapeProbeAbove: Long): Long = {
-    val spark = candidates.sparkSession
+  /** The ONE generation writer, shared by [[build]] (fresh directory or
+    * over a live index) and [[reshard]]: every shard graph of `corpus`
+    * under `p` stages into `nodes/g=<gen+1>` — a directory with no
+    * committed manifest counts as generation −1, so a fresh build writes
+    * g=0 — without touching a live file. The written rows are counted by
+    * shard (and, for `p.efSearch` = [[UseIndexDefault]], shape-probed —
+    * the serving beam is resolved from the corpus the index will actually
+    * serve), `params.tmp` stages, and [[graft.util.StagedTables.commit]]
+    * publishes the marker (`build:<g>` on a build, bare `<g>` on a
+    * reshard), swaps params and writes the manifest — the commit point
+    * [[recover]] pivots on. A build also clears ingest state in that
+    * window: a fresh corpus must not inherit the previous corpus's
+    * high-water mark, while a reshard keeps the corpus and its watermark.
+    * The superseded shard directories retire after the commit. Returns
+    * the node count written. The caller holds the writer lock and has
+    * run [[recover]].
+    */
+  private def commitGeneration(dir: String, corpus: DataFrame, p: Params,
+      build: Boolean, shapeProbeAbove: Long = ShapeProbeAbove): Long = {
+    val spark = corpus.sparkSession
     import spark.implicits._
-    val cosine = HnswSearch.isCosine(metric)
-    // fail BEFORE the destructive steps: past this point the previous
-    // index's manifest is gone, and an empty corpus would then die on
-    // nodes/ schema inference with the directory unreadable. Empty-seed
-    // bootstrap is not supported here (unlike LshDedupIndex/Bm25Index,
-    // whose explicit on-read schemas exist for the streaming
-    // create-on-first-batch path); seed with at least one vector.
-    // On the auto-shard path the emptiness check rides the shard-sizing
-    // count (count == 0 ⟺ empty) — one pass over the candidate lineage
-    // instead of two; the explicit-shard path keeps the cheaper
-    // isEmpty (a single-partition take, no full count)
-    val nAuto: Option[Long] =
-      if (shards == UseAutoShards) Some(candidates.count()) else None
-    require(nAuto.map(_ > 0L).getOrElse(!candidates.isEmpty),
-      s"HnswIndex.build: empty candidate side for $dir — the previous " +
-        "index (if any) is untouched")
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    // heal an interrupted reshard/rebuild against the CURRENT manifest
-    // state before deciding which path this build takes
-    recoverReshardLocked(spark, fs, dir)
-    val src = candidates
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<float>").as("vec"))
-    // size-aware shard count (the SHARD COUNT contract on [[build]]):
-    // the count job is paid on the auto path only — an explicit count
-    // passes through without touching the data
-    val nShards = resolveShards(shards, nAuto.getOrElse(0L))
-    val liveState =
-      try Some(readManifest(spark, dir))
-      catch { case _: IllegalArgumentException => None }
-
-    liveState match {
-      case Some((gen, oldShards, _)) =>
-        // rebuild OVER A LIVE INDEX: generation-staged, reshard-protocol
-        // commit — the previous index stays fully live until the new
-        // manifest lands, and a crash at any point rolls back to it
-        val newGen = gen + 1
-        // anything under g=newGen is debris from a crashed attempt
-        fs.delete(new Path(s"$dir/nodes/g=$newGen"), true)
-        shardGraphFrame(src, m, efConstruction, cosine, seed, nShards, newGen)
-          .write.mode(SaveMode.Append)
-          .partitionBy("g", "shard")
-          .parquet(s"$dir/nodes")
-        // count (and, on the untuned path, shape-probe) the WRITTEN
-        // rows before staging params — the serving beam is resolved
-        // from the corpus the index will actually serve
-        val written = spark.read.option("basePath", s"$dir/nodes")
-          .parquet(s"$dir/nodes/g=$newGen")
-        val byShard = written
-          .groupBy("shard").count().as[(Int, Long)].collect()
-        val (efResolved, rcMed, rcQ25) = resolveServeEf(
-          written, byShard.map(_._2).sum, efSearch, shapeProbeAbove)
-        paramsDf(spark, m, metric, nShards, efConstruction, seed, efResolved,
-            rcMed, rcQ25)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/params.tmp")
-        // the `build:` prefix tells roll-forward recovery to ALSO clear
-        // ingest state — a fresh corpus must not inherit the previous
-        // corpus's high-water mark (reshard keeps the corpus and must
-        // keep the watermark)
-        // atomic publish (temp + rename): a torn marker would fail every
-        // later writer entry's target parse
-        graft.util.StagedTables.writeMarker(fs, dir, ReshardMarker,
-          s"build:$newGen")
-        val live = new Path(s"$dir/params")
-        val old = new Path(s"$dir/params.old")
-        val tmp = new Path(s"$dir/params.tmp")
-        require(fs.rename(live, old), s"HnswIndex.build: could not stage $live")
-        require(fs.rename(tmp, live), s"HnswIndex.build: could not commit $tmp")
-        writeManifest(spark, dir, newGen, byShard.map(_._1 -> newGen).toMap,
-          byShard.toMap)
-        graft.util.IngestState.clear(spark, dir)
-        fs.delete(old, true)
-        fs.delete(new Path(s"$dir/$ReshardMarker"), false)
-        // superseded generations are garbage once the manifest committed;
-        // best-effort (a failure leaves orphans for vacuum, never an
-        // inconsistent index)
-        oldShards.foreach { case (s, g) =>
-          try fs.delete(new Path(s"$dir/nodes/g=$g/shard=$s"), true)
-          catch { case scala.util.control.NonFatal(_) => }
-        }
-        // a rebuild supersedes EVERY old shard, so their generation
-        // parents empty out — sweep them too (vacuum would otherwise)
-        oldShards.values.toSet.filter(_ != newGen).foreach { g =>
-          try {
-            val gd = new Path(s"$dir/nodes/g=$g")
-            if (fs.exists(gd) && fs.listStatus(gd).isEmpty)
-              fs.delete(gd, true)
-          } catch { case scala.util.control.NonFatal(_) => }
-        }
-        byShard.map(_._2).sum
-
-      case None =>
-        // FRESH directory (no committed manifest — nothing to preserve):
-        // direct write, the m000000 manifest is the commit point
-        graft.util.IngestState.clear(spark, dir)
-        val mdir = new Path(s"$dir/manifest")
-        if (fs.exists(mdir)) fs.delete(mdir, true) // .inprogress debris
-        shardGraphFrame(src, m, efConstruction, cosine, seed, nShards, 0)
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("g", "shard") // immutable generation dirs; the
-          .parquet(s"$dir/nodes")    // manifest below is the commit point
-        val written = spark.read.parquet(s"$dir/nodes")
-        val byShard = written
-          .groupBy("shard").count().as[(Int, Long)].collect()
-        val (efResolved, rcMed, rcQ25) = resolveServeEf(
-          written, byShard.map(_._2).sum, efSearch, shapeProbeAbove)
-        paramsDf(spark, m, metric, nShards, efConstruction, seed, efResolved,
-            rcMed, rcQ25)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/params")
-        writeManifest(spark, dir, 0, byShard.map(_._1 -> 0).toMap,
-          byShard.toMap)
-        byShard.map(_._2).sum
+    val (gen, superseded) = liveManifest(spark, dir)
+      .map { case (g, shardGens, _) => (g, shardGens) }
+      .getOrElse((-1, Map.empty[Int, Int]))
+    val next = gen + 1
+    val staged = new Path(s"$dir/nodes/g=$next")
+    // anything already under g=<next> is debris from a crashed attempt
+    // (a stray fresh build included): staging into it un-cleared would
+    // commit duplicated node rows
+    fs.delete(staged, true)
+    shardGraphFrame(corpus, p.m, p.efConstruction,
+        HnswSearch.isCosine(p.metric), p.seed, p.shards, next)
+      .write.mode(SaveMode.Append)
+      .partitionBy("g", "shard")
+      .parquet(s"$dir/nodes")
+    // an empty reshard writes no generation directory
+    val written = if (!fs.exists(staged)) None
+      else Some(spark.read.option("basePath", s"$dir/nodes")
+        .parquet(staged.toString))
+    val byShard = written.toSeq
+      .flatMap(_.groupBy("shard").count().as[(Int, Long)].collect())
+    val n = byShard.map(_._2).sum
+    val params =
+      if (p.efSearch != UseIndexDefault) p
+      else {
+        val (ef, rcMed, rcQ25) = resolveServeEf(written.get, n,
+          shapeProbeAbove)
+        p.copy(efSearch = ef, rcMedian = rcMed, rcQ25 = rcQ25)
+      }
+    // `rc_median`/`rc_q25` are the shape probe's evidence, null when the
+    // beam was explicit, below-threshold, or pre-column legacy
+    Seq((params.m, params.metric, params.shards, params.efConstruction,
+        params.seed, params.efSearch, params.rcMedian, params.rcQ25))
+      .toDF("m", "metric", "shards", "ef_construction", "seed", "ef_search",
+        "rc_median", "rc_q25")
+      .repartition(1)
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/params.tmp")
+    graft.util.StagedTables.commit(fs, dir, CommitMarker,
+        (if (build) BuildOp else "") + next, Seq("params")) { _ =>
+      writeManifest(spark, dir, next, byShard.map(_._1 -> next).toMap,
+        byShard.toMap)
+      if (build) graft.util.IngestState.clear(spark, dir)
     }
+    retire(fs, dir, superseded)
+    n
   }
 
-  /** [[build]]'s serving-beam resolution (the SERVING BEAM contract on
-    * its scaladoc): explicit beams persist verbatim and below-threshold
-    * untuned builds keep [[DefaultServeEf]] — both unprobed (rc null);
-    * an untuned build past `shapeProbeAbove` pays one
-    * [[ShapeStats.relativeContrastStats]] pass over the just-written
-    * node rows and takes the measured beam for the classified shape.
+  /** Delete superseded (shard → generation) directories after a commit,
+    * and the generation directories that leaves empty. Best-effort: a
+    * failure leaves orphans for [[vacuum]], never an inconsistent index.
     */
-  private def resolveServeEf(written: DataFrame, n: Long, efSearch: Int,
+  private def retire(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      superseded: Map[Int, Int]): Unit =
+    try {
+      superseded.foreach { case (s, g) =>
+        fs.delete(new Path(s"$dir/nodes/g=$g/shard=$s"), true)
+      }
+      superseded.values.toSet.foreach { (g: Int) =>
+        val gd = new Path(s"$dir/nodes/g=$g")
+        if (fs.exists(gd) && fs.listStatus(gd).isEmpty) fs.delete(gd, true)
+      }
+    } catch { case scala.util.control.NonFatal(_) => }
+
+  /** An untuned [[build]]'s serving-beam resolution (the SERVING BEAM
+    * contract on its scaladoc; explicit beams persist verbatim and never
+    * reach here): below-threshold builds keep [[DefaultServeEf]]
+    * unprobed (rc null); past `shapeProbeAbove` one
+    * [[ShapeStats.relativeContrastStats]] pass over the just-written
+    * node rows takes the measured beam for the classified shape.
+    */
+  private def resolveServeEf(written: DataFrame, n: Long,
       shapeProbeAbove: Long): (Int, Option[Double], Option[Double]) =
-    if (efSearch != UseIndexDefault) (efSearch, None, None)
-    else if (n < shapeProbeAbove) (DefaultServeEf, None, None)
+    if (n < shapeProbeAbove) (DefaultServeEf, None, None)
     else {
       val rc = ShapeStats.relativeContrastStats(written, "id", "vec")
       val ef = if (rc.q25 <= ShapeStats.SpreadRcMax) BeamLaw.SpreadBaseEf
         else DefaultServeEf
       (ef, Some(rc.median), Some(rc.q25))
     }
-
-  /** The one-row params frame — single author for the column list so
-    * build's two paths and [[reshard]] cannot drift. `rc_median`/`rc_q25`
-    * are the shape probe's evidence, null when the beam was explicit,
-    * below-threshold, or pre-column legacy.
-    */
-  private def paramsDf(spark: SparkSession, m: Int, metric: String,
-      shards: Int, efConstruction: Int, seed: Int, efSearch: Int,
-      rcMedian: Option[Double], rcQ25: Option[Double]): DataFrame = {
-    import spark.implicits._
-    Seq((m, metric, shards, efConstruction, seed, efSearch, rcMedian, rcQ25))
-      .toDF("m", "metric", "shards", "ef_construction", "seed", "ef_search",
-        "rc_median", "rc_q25")
-      .repartition(1)
-  }
 
   /** The deterministic insertion-order key ([[shardGraphFrame]]'s
     * scaladoc explains why arrival must be decorrelated from the raw
@@ -420,16 +380,10 @@ object HnswIndex {
   /** Atomically publish the shard→generation map as manifest generation
     * `gen`: the JSON is written whole to a dot-prefixed temp name, then
     * renamed into place — readers either see the complete new manifest or
-    * keep resolving the previous one.
-    *
-    * The index assumes a SINGLE writer per directory (like hnswlib's
-    * in-process index — concurrent `add_items` callers must serialize).
-    * The existence check below turns the worst concurrent-append outcome
-    * from a silent last-write-wins (POSIX rename overwrites an existing
-    * dest; HDFS returns false) into a loud failure on at least one writer.
-    * It is a guard, not a lock: two appenders racing the same generation
-    * can still interleave between check and rename on POSIX — serialize
-    * writers externally.
+    * keep resolving the previous one. Writers are serialized by
+    * [[graft.util.IndexLock]]; the existence check below keeps an
+    * already-committed generation from being silently overwritten
+    * (POSIX rename replaces an existing dest; HDFS returns false).
     */
   private def writeManifest(
       spark: SparkSession, dir: String, gen: Int, shards: Map[Int, Int],
@@ -485,13 +439,9 @@ object HnswIndex {
     // opaque FileNotFoundException from listStatus
     require(fs.exists(mdir), s"HnswIndex: no committed manifest under $dir " +
       "(not an HnswIndex directory, or written by an incompatible layout)")
-    // {6,}: if the generation counter ever outgrows %06d's width the
-    // 7-digit name must still parse — a full \d{6} match would silently
-    // pin readers to the last 6-digit manifest forever
-    val pattern = "m(\\d{6,})\\.json".r
     val committed = fs.listStatus(mdir).toSeq
       .flatMap(st => st.getPath.getName match {
-        case pattern(n) => Some(n.toInt -> st.getPath)
+        case ManifestName(n) => Some(n.toInt -> st.getPath)
         case _ => None
       })
     require(committed.nonEmpty, s"HnswIndex: no committed manifest under $dir")
@@ -615,34 +565,9 @@ object HnswIndex {
         BeamLaw.doublings(
           BeamLaw.equivalentKeys(counts.values.sum, shardGens.size))
       else 0
-    // hygiene listing: same walk as vacuumImpl, count-only — orphaned
-    // (gen, shard) dirs plus superseded/torn manifests
+    // hygiene listing: vacuum's own orphan walk, count-only
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val ndir = new Path(s"$dir/nodes")
-    val genPat = "g=(\\d+)".r
-    val shardPat = "shard=(\\d+)".r
-    var orphans = 0L
-    if (fs.exists(ndir)) fs.listStatus(ndir).foreach { gSt =>
-      gSt.getPath.getName match {
-        case genPat(g) =>
-          fs.listStatus(gSt.getPath).foreach { sSt =>
-            sSt.getPath.getName match {
-              case shardPat(sh) if !shardGens.get(sh.toInt).contains(g.toInt) =>
-                orphans += 1
-              case _ => ()
-            }
-          }
-        case _ => ()
-      }
-    }
-    val mPat = "m(\\d{6,})\\.json".r
-    fs.listStatus(new Path(s"$dir/manifest")).foreach { st =>
-      st.getPath.getName match {
-        case mPat(n) if n.toInt < liveGen => orphans += 1
-        case name if name.endsWith(".inprogress") => orphans += 1
-        case _ => ()
-      }
-    }
+    val orphans = orphanPaths(fs, dir, liveGen, shardGens).size.toLong
     // which measured recall column this index's default beam was chosen
     // from (build's shape probe — see [[build]]'s SERVING BEAM contract):
     // null/null when the beam was explicit, below-threshold, or legacy
@@ -669,7 +594,7 @@ object HnswIndex {
     * for an ingest loop's per-loop params memo (the
     * [[graft.knn.IvfIndex.metaGen]] contract: appends never touch
     * params, but a build/reshard committing — or being crash-recovered
-    * by the loop's own in-lock `recoverReshard` — between batches swaps
+    * by the loop's own in-lock [[recover]] — between batches swaps
     * the table, and a memo serving the pre-swap shard count would route
     * fresh ids to shards the live manifest does not hold). Filesystem
     * metadata only, no Spark jobs.
@@ -718,35 +643,38 @@ object HnswIndex {
     * commit). Superseded generation directories are deleted best-effort
     * AFTER the commit.
     *
-    * Hyperparameters come from `params/`. Returns the appended row count.
+    * Hyperparameters come from `params/`. Duplicate labels are rejected
+    * (hnswlib `add_items` parity): a batch that repeats an id, or carries
+    * one the index already holds, is refused — a silent double-insert
+    * would persist two nodes with one external id and search would
+    * return that neighbor twice within top-k. Returns the appended row
+    * count.
     */
   def append(
       spark: SparkSession,
       dir: String,
       newVectors: DataFrame,
       idCol: String,
-      vecCol: String,
-      takeLock: Boolean = true,
-      checkBatchUnique: Boolean = true,
-      checkPresence: Boolean = true,
-      preParams: Option[Params] = None): Long =
-    // takeLock = false is for callers ALREADY holding the directory's
-    // writer lock (the watermarked ingest gate locks the whole
-    // micro-batch); the lock is not reentrant, so a nested acquire would
-    // fail fast against the caller's own hold.
-    // checkBatchUnique/checkPresence = false skip the respective guard
-    // for callers that have JUST established the property themselves
-    // (the streaming ingest gate establishes absence and one row per
-    // id, [[graft.streaming.Streams.ingestBatch]]): each skipped guard is
-    // one fewer Spark job per micro-batch, and skipping only moves
-    // responsibility, never what a violation does.
-    if (!takeLock) appendImpl(spark, dir, newVectors, idCol, vecCol,
-      checkBatchUnique, checkPresence, preParams)
-    else
-      graft.util.IndexLock.withLock(spark, dir, "HnswIndex.append") {
-        appendImpl(spark, dir, newVectors, idCol, vecCol,
-          checkBatchUnique, checkPresence, preParams)
-      }
+      vecCol: String): Long =
+    graft.util.IndexLock.withLock(spark, dir, "HnswIndex.append") {
+      // heal a crashed commit BEFORE reading params ([[IvfIndex]] runs
+      // its recovery at every writer entry for the same reason): a
+      // reshard that died after its params swap but before the manifest
+      // commit leaves params describing a shard count the live manifest
+      // does not — ids would route by the uncommitted count, silently
+      // admitting duplicate nodes
+      recover(spark, dir)
+      // pin the batch: the guards and the append must see the SAME rows
+      val batch = newVectors
+        .select(col(idCol).cast("long").as("id"),
+          col(vecCol).cast("array<float>").as("vec"))
+        .localCheckpoint(eager = false)
+      require(batch.groupBy("id").count().filter(col("count") > 1).isEmpty,
+        "HnswIndex.append: duplicate ids within the appended batch")
+      require(readIds(spark, dir).join(batch.select("id"), "id").isEmpty,
+        "HnswIndex.append: id already present in the index")
+      appendPrepared(spark, dir, batch, "id", "vec", loadParams(spark, dir))
+    }
 
   /** The committed id set (one `id` column over the live generations).
     * Package-private for the streaming ingester's freshness marker join,
@@ -763,28 +691,25 @@ object HnswIndex {
     else loadNodes(spark, dir, shardGens).select(col("id"))
   }
 
-  private def appendImpl(
+  /** [[append]]'s body against CALLER-loaded params — for per-batch
+    * callers (the streaming HNSW ingester) that load params ONCE per loop
+    * and share them with their [[search]] probe (`preParams`), the
+    * [[IvfIndex.appendPrepared]] contract. The caller holds the writer
+    * lock, loaded `params` after its own [[recover]], and owns the guards
+    * [[append]] runs (the ingest driver's freshness and one-row-per-id
+    * gate); a duplicate label that slips past them still fails loudly in
+    * the shard insert kernel ([[HnswGraph.insert]]). Returns the appended
+    * row count.
+    */
+  private[graft] def appendPrepared(
       spark: SparkSession,
       dir: String,
       newVectors: DataFrame,
       idCol: String,
       vecCol: String,
-      checkBatchUnique: Boolean,
-      checkPresence: Boolean,
-      preParams: Option[Params]): Long = {
+      params: Params): Long = {
     import spark.implicits._
-    // heal a crashed reshard BEFORE reading params ([[IvfIndex]] runs
-    // recoverSwap at every writer entry for the same reason): a reshard
-    // that died after its params swap but before the manifest commit
-    // leaves params describing a shard count the live manifest does not
-    // — loadParams would then route ids by the uncommitted count while
-    // the presence check reads the committed layout, silently admitting
-    // duplicate nodes. Idempotent, so the streaming thunk's own call is
-    // a harmless second pass. (A preParams caller owns this ordering:
-    // its params were loaded AFTER its own in-lock recovery ran.)
-    if (preParams.isEmpty) recoverReshard(spark, dir)
-    val Params(m, metric, shards, efConstruction, seed, _, _, _) =
-      preParams.getOrElse(loadParams(spark, dir))
+    val Params(m, metric, shards, efConstruction, seed, _, _, _) = params
     val cosine = HnswSearch.isCosine(metric)
     val fresh = newVectors
       .select(col(idCol).cast("long").as("id"),
@@ -801,12 +726,6 @@ object HnswIndex {
       val touched = freshByShard.keys.toArray.sorted
       if (touched.isEmpty) return 0L
       val nNew = freshByShard.values.sum
-      // duplicate labels are rejected, matching hnswlib add_items: a
-      // silent double-insert would persist two nodes with one external id
-      // and search would return that neighbor twice within top-k
-      if (checkBatchUnique)
-        require(fresh.groupBy("id").count().filter(col("count") > 1).isEmpty,
-          "HnswIndex.append: duplicate ids within the appended batch")
 
       val (gen, shardGens, oldCounts) = readManifest(spark, dir)
       val touchedLive = shardGens.view.filterKeys(touched.contains).toMap
@@ -817,12 +736,7 @@ object HnswIndex {
         .select(col("shard").cast("int"), col("pos"), col("id"),
           col("vec").cast("array<float>"),
           col("links").cast("array<array<int>>"))
-        .as[(Int, Int, Long, Array[Float], Seq[Seq[Int]])]
-      if (checkPresence)
-        require(existing.select("id")
-          .join(fresh.select("id"), "id").isEmpty,
-          "HnswIndex.append: id already present in the index")
-      val rebuilt = rebuildTouchedShards(existing.toDF(),
+      val rebuilt = rebuildTouchedShards(existing,
           fresh.select(col("shard"), col("id"), col("vec")),
           touched.toSeq, m, cosine, efConstruction, seed)
         .withColumn("g", lit(gen + 1))
@@ -852,13 +766,7 @@ object HnswIndex {
         else loadNodes(spark, dir, newShardGens)
           .groupBy("shard").count().as[(Int, Long)].collect().toMap
       writeManifest(spark, dir, gen + 1, newShardGens, newCounts)
-      // superseded generation dirs are garbage once the new manifest is
-      // committed; deletion is best-effort (a failure here leaves orphans,
-      // never an inconsistent index)
-      touchedLive.foreach { case (s, g) =>
-        try fs.delete(new Path(s"$dir/nodes/g=$g/shard=$s"), true)
-        catch { case scala.util.control.NonFatal(_) => }
-      }
+      retire(fs, dir, touchedLive)
       nNew
     } finally fresh.unpersist()
   }
@@ -1039,7 +947,11 @@ object HnswIndex {
         BeamLaw.equivalentKeys(counts.values.sum, shardGens.size))
     else efSearch
 
-  private val ReshardMarker = "_reshard_commit"
+  // the generation commit's marker — historically named for reshard,
+  // the first op to write it; `build:<g>` marks a build, bare `<g>` a
+  // reshard
+  private val CommitMarker = "_reshard_commit"
+  private val BuildOp = "build:"
 
   /** Re-shard the persisted index IN PLACE — the [[IvfIndex.rebalance]]
     * counterpart for the graph family: shard count is the scale knob
@@ -1052,17 +964,18 @@ object HnswIndex {
     * index is byte-deterministic, exactly as a fresh [[build]] of the
     * same corpus at `newShards` would be).
     *
-    * Crash-atomic via the manifest pivot: the new shards stage into
-    * generation `gen+1` (no live file touched), the new `params/`
-    * (updated shard count) stages beside the live table, and a marker
-    * file carrying the target generation brackets the params swap +
-    * manifest commit. [[recoverReshard]] — run on entry here and inside
-    * the streaming ingest's locked committed-id thunk — rolls an
-    * interrupted swap FORWARD when the manifest committed and BACK when
-    * it did not, so no crash point leaves params and manifest durably
-    * disagreeing. Search is shard-layout-blind (every shard is beamed,
-    * partials merge globally), so a search at full beam answers
-    * identically before and after. Returns the node count resharded.
+    * Crash-atomic via the manifest pivot ([[commitGeneration]], the
+    * same writer as [[build]]): the new shards stage into generation
+    * `gen+1` (no live file touched), the new `params/` (updated shard
+    * count) stages beside the live table, and a marker file carrying the
+    * target generation brackets the params swap + manifest commit.
+    * [[recover]] — run on entry here and by the streaming ingest driver
+    * under its writer lock — rolls an interrupted swap FORWARD when the
+    * manifest committed and BACK when it did not, so no crash point
+    * leaves params and manifest durably disagreeing. Search is
+    * shard-layout-blind (every shard is beamed, partials merge
+    * globally), so a search at full beam answers identically before and
+    * after. Returns the node count resharded.
     */
   def reshard(
       spark: SparkSession,
@@ -1078,117 +991,65 @@ object HnswIndex {
       newShards: Int): Long = {
     import spark.implicits._
     require(newShards > 0, s"HnswIndex.reshard: newShards must be positive, got $newShards")
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    recoverReshardLocked(spark, fs, dir)
-    val Params(m, metric, _, efConstruction, seed, efSearch, rcMed, rcQ25) =
-      loadParams(spark, dir)
-    val cosine = HnswSearch.isCosine(metric)
-    val (gen, shardGens, _) = readManifest(spark, dir)
+    recover(spark, dir)
+    val (_, shardGens, _) = readManifest(spark, dir)
     val corpus = (if (shardGens.isEmpty)
         spark.emptyDataset[(Long, Array[Float])].toDF("id", "vec")
       else loadNodes(spark, dir, shardGens).select(col("id"), col("vec")))
       .select(col("id").cast("long"), col("vec").cast("array<float>"))
-    // same deterministic recipe as buildLocked: contiguous shard rows,
-    // hash-ordered insertion
-    val rebuilt = shardGraphFrame(corpus, m, efConstruction, cosine, seed,
-      newShards, gen + 1)
-    // anything already under g=gen+1 is debris from a crashed attempt
-    // (same single-writer argument as appendImpl)
-    fs.delete(new Path(s"$dir/nodes/g=${gen + 1}"), true)
-    rebuilt.write.mode(SaveMode.Append)
-      .partitionBy("g", "shard")
-      .parquet(s"$dir/nodes")
     // ef_search and the shape evidence ride through unchanged — reshard
     // keeps the corpus, so it keeps the corpus's declared serving beam
     // and the rc measurement that chose it
-    paramsDf(spark, m, metric, newShards, efConstruction, seed, efSearch,
-        rcMed, rcQ25)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/params.tmp")
-    val byShard = (if (fs.exists(new Path(s"$dir/nodes/g=${gen + 1}")))
-        spark.read.option("basePath", s"$dir/nodes")
-          .parquet(s"$dir/nodes/g=${gen + 1}")
-          .groupBy("shard").count().as[(Int, Long)].collect().toSeq
-      else Seq.empty[(Int, Long)])
-    // the marker carries the target generation: recovery rolls FORWARD
-    // iff a manifest at (or past) it committed, BACK otherwise. Atomic
-    // publish — a torn marker would fail every later writer's parse
-    val marker = new Path(s"$dir/$ReshardMarker")
-    graft.util.StagedTables.writeMarker(fs, dir, ReshardMarker,
-      String.valueOf(gen + 1))
-    val live = new Path(s"$dir/params")
-    val old = new Path(s"$dir/params.old")
-    val tmp = new Path(s"$dir/params.tmp")
-    require(fs.rename(live, old), s"HnswIndex.reshard: could not stage $live")
-    require(fs.rename(tmp, live), s"HnswIndex.reshard: could not commit $tmp")
-    writeManifest(spark, dir, gen + 1, byShard.map(_._1 -> (gen + 1)).toMap,
-      byShard.toMap)
-    fs.delete(old, true)
-    fs.delete(marker, false)
-    // superseded generations are garbage once the manifest committed;
-    // best-effort (a failure leaves orphans for vacuum, never an
-    // inconsistent index)
-    shardGens.foreach { case (s, g) =>
-      try fs.delete(new Path(s"$dir/nodes/g=$g/shard=$s"), true)
-      catch { case scala.util.control.NonFatal(_) => }
-    }
-    byShard.map(_._2).sum
+    commitGeneration(dir, corpus,
+      loadParams(spark, dir).copy(shards = newShards), build = false)
   }
 
-  /** On-entry crash recovery for an interrupted [[reshard]] — the
-    * [[IvfIndex.recoverSwap]] counterpart, safe to call any time the
-    * caller holds the writer lock (the streaming ingest's committed-id
-    * thunk calls it before [[readIds]], so a crashed reshard heals on
-    * the next micro-batch instead of bricking the ingest). Roll
-    * FORWARD (delete debris) when the marker's target manifest
-    * committed; roll BACK (restore the old params) when it did not.
+  /** The live manifest, or None for a directory with no committed one. */
+  private def liveManifest(spark: SparkSession, dir: String)
+      : Option[(Int, Map[Int, Int], Map[Int, Long])] =
+    try Some(readManifest(spark, dir))
+    catch { case _: IllegalArgumentException => None }
+
+  /** On-entry crash recovery for an interrupted generation commit
+    * ([[build]] or [[reshard]], [[commitGeneration]]) — run by every
+    * writer entry and by the streaming ingest driver under its writer
+    * lock, so a crashed commit heals on the next micro-batch instead of
+    * bricking the ingest. The manifest is the commit point: roll FORWARD
+    * (finish the params swap; a build also replays its ingest-state
+    * clear) when the marker's target manifest committed; roll BACK
+    * (restore `params.old`) when it did not. No marker: the shared
+    * markerless rollback of params debris.
     */
-  private[graft] def recoverReshard(spark: SparkSession, dir: String): Unit = {
+  private[graft] def recover(spark: SparkSession, dir: String): Unit = {
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    recoverReshardLocked(spark, fs, dir)
-  }
-
-  private def recoverReshardLocked(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
-    val marker = new Path(s"$dir/$ReshardMarker")
-    val live = new Path(s"$dir/params")
-    val old = new Path(s"$dir/params.old")
-    val tmp = new Path(s"$dir/params.tmp")
-    graft.util.StagedTables.sweepMarkerTmp(fs, dir, ReshardMarker)
-    if (fs.exists(marker)) {
-      val raw = graft.util.StagedTables.readMarker(fs, marker)
-      // `build:<gen>` = a generation-staged rebuild ([[build]] over a
-      // live index); bare `<gen>` = a reshard. Same swap recovery; a
-      // build additionally owes the fresh corpus a cleared ingest state.
-      // Markers publish atomically, so unparseable content is real
-      // corruption — fail with a named error, not a bare
-      // NumberFormatException
-      val isBuild = raw.startsWith("build:")
-      val num = if (isBuild) raw.stripPrefix("build:") else raw
-      require(num.nonEmpty && num.forall(_.isDigit),
-        s"HnswIndex: malformed commit marker '$raw' under $dir")
-      val target = num.toInt
-      val committed =
-        try readManifest(spark, dir)._1 >= target
-        catch { case _: IllegalArgumentException => false }
-      if (committed) { // forward: the swap's leftovers are garbage
-        fs.delete(old, true)
-        fs.delete(tmp, true)
-        if (isBuild) graft.util.IngestState.clear(spark, dir)
-      } else { // back: restore the pre-reshard params
-        if (fs.exists(old)) {
-          fs.delete(live, true)
-          require(fs.rename(old, live),
-            s"HnswIndex: could not roll back params under $dir")
-        }
-        fs.delete(tmp, true)
+    graft.util.StagedTables.sweepMarkerTmp(fs, dir, CommitMarker)
+    val marker = new Path(s"$dir/$CommitMarker")
+    if (!fs.exists(marker)) {
+      graft.util.StagedTables.rollBack(fs, dir, Seq("params"))
+      return
+    }
+    val op = graft.util.StagedTables.readMarker(fs, marker)
+    // markers publish atomically, so unparseable content is real
+    // corruption — fail with a named error, not a bare
+    // NumberFormatException
+    val isBuild = op.startsWith(BuildOp)
+    val target = op.stripPrefix(BuildOp)
+    require(target.nonEmpty && target.forall(_.isDigit),
+      s"HnswIndex: malformed commit marker '$op' under $dir")
+    if (liveManifest(spark, dir).exists(_._1 >= target.toInt)) {
+      graft.util.StagedTables.swapStaged(fs, dir, Seq("params"))
+      if (isBuild) graft.util.IngestState.clear(spark, dir)
+    } else {
+      val live = new Path(s"$dir/params")
+      val old = new Path(s"$dir/params.old")
+      if (fs.exists(old)) {
+        fs.delete(live, true)
+        require(fs.rename(old, live),
+          s"HnswIndex: could not roll back params under $dir")
       }
-      fs.delete(marker, false)
-    } else
-      // markerless debris: a staging-only crash (tmp) or a completed
-      // swap's failed cleanup (old, only when live params exist) — the
-      // shared single-table rollback protocol
-      graft.util.StagedTables.rollBack(fs, dir, Seq("params"),
-        "HnswIndex.recover")
+      fs.delete(new Path(s"$dir/params.tmp"), true)
+    }
+    fs.delete(marker, false)
   }
 
   /** Garbage-collect orphaned state: generation directories not referenced
@@ -1206,48 +1067,57 @@ object HnswIndex {
     }
 
   private def vacuumImpl(spark: SparkSession, dir: String): Int = {
-    // writer entry: heal a crashed reshard first (see [[appendImpl]]) —
-    // vacuum keying off a params/manifest pair a dead reshard left
-    // disagreeing would treat the committed layout's directories as
-    // orphans
-    recoverReshard(spark, dir)
+    // writer entry: heal a crashed commit first — vacuum keying off a
+    // params/manifest pair a dead reshard left disagreeing would treat
+    // the committed layout's directories as orphans
+    recover(spark, dir)
     val (liveGen, shardGens, _) = readManifest(spark, dir)
     val ndir = new Path(s"$dir/nodes")
     val fs = ndir.getFileSystem(spark.sessionState.newHadoopConf())
-    val genPat = "g=(\\d+)".r
-    val shardPat = "shard=(\\d+)".r
-    var removed = 0
-    if (fs.exists(ndir)) fs.listStatus(ndir).foreach { gSt =>
-      gSt.getPath.getName match {
-        case genPat(g) =>
-          val gen = g.toInt
-          fs.listStatus(gSt.getPath).foreach { sSt =>
-            sSt.getPath.getName match {
-              case shardPat(sh) if !shardGens.get(sh.toInt).contains(gen) =>
-                if (fs.delete(sSt.getPath, true)) removed += 1
-              case _ => ()
-            }
-          }
-          // a generation dir emptied of shards is itself garbage
-          if (fs.listStatus(gSt.getPath).isEmpty && fs.delete(gSt.getPath, true))
-            removed += 1
-        case _ => ()
-      }
+    val removed = orphanPaths(fs, dir, liveGen, shardGens)
+      .count(fs.delete(_, true))
+    // a generation dir emptied of shards is itself garbage
+    val emptied = if (!fs.exists(ndir)) 0 else fs.listStatus(ndir).count { st =>
+      GenDir.matches(st.getPath.getName) &&
+        fs.listStatus(st.getPath).isEmpty && fs.delete(st.getPath, true)
     }
-    val mdir = new Path(s"$dir/manifest")
-    val mPat = "m(\\d{6,})\\.json".r
-    fs.listStatus(mdir).foreach { st =>
-      st.getPath.getName match {
-        case mPat(n) if n.toInt < liveGen =>
-          if (fs.delete(st.getPath, false)) removed += 1
-        // a writeManifest that crashed between create and rename leaves
-        // its temp file behind forever — crash debris this tool exists
-        // to collect (single-writer: no in-flight commit can be racing)
-        case name if name.endsWith(".inprogress") =>
-          if (fs.delete(st.getPath, false)) removed += 1
-        case _ => ()
+    removed + emptied
+  }
+
+  private val GenDir = "g=(\\d+)".r
+  private val ShardDir = "shard=(\\d+)".r
+  // {6,}: if the generation counter ever outgrows %06d's width the
+  // 7-digit name must still parse — a full \d{6} match would silently
+  // pin readers to the last 6-digit manifest forever
+  private val ManifestName = "m(\\d{6,})\\.json".r
+
+  /** The dead paths [[vacuum]] reclaims and [[staleness]] counts:
+    * (generation, shard) directories the live manifest does not
+    * reference (a crashed append's staged generation, a failed
+    * best-effort retire), superseded manifests, and the `.inprogress`
+    * temp of a [[writeManifest]] that crashed between create and rename
+    * (single-writer: no in-flight commit can be racing).
+    */
+  private def orphanPaths(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      liveGen: Int, shardGens: Map[Int, Int]): Seq[Path] = {
+    val ndir = new Path(s"$dir/nodes")
+    val shardDirs =
+      if (!fs.exists(ndir)) Nil
+      else fs.listStatus(ndir).toSeq.flatMap { gSt =>
+        gSt.getPath.getName match {
+          case GenDir(g) =>
+            fs.listStatus(gSt.getPath).toSeq.map(_.getPath).filter(_.getName match {
+              case ShardDir(sh) => !shardGens.get(sh.toInt).contains(g.toInt)
+              case _ => false
+            })
+          case _ => Nil
+        }
       }
-    }
-    removed
+    val manifests = fs.listStatus(new Path(s"$dir/manifest")).toSeq
+      .map(_.getPath).filter(_.getName match {
+        case ManifestName(n) => n.toInt < liveGen
+        case name => name.endsWith(".inprogress")
+      })
+    shardDirs ++ manifests
   }
 }

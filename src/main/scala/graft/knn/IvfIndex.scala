@@ -123,7 +123,7 @@ object IvfIndex {
     // a crashed rebalance/build must not leak staged tables into this
     // build's staging (a stale assignments.tmp would roll "forward" over
     // the fresh index at the next writer entry)
-    recoverSwap(spark, dir)
+    recover(spark, dir)
     val cosine = HnswSearch.isCosine(metric)
     // spherical kmeans trains on unit vectors, excluding raw zeros (a raw
     // zero would pull a centroid off the sphere; the distance-1.0
@@ -257,31 +257,12 @@ object IvfIndex {
     }
     val (pq, _) = graft.util.Overlap.par2(stageHeavyTables(), stageTinyTables())
 
-    // intent marker (carrying the BUILD op so crash recovery knows to
-    // also clear the stale pq table and the ingest state), then the
-    // swaps it protects — identical protocol to rebalance
+    // the BUILD op tells roll-forward recovery to also clear the stale
+    // pq table, the anchor and the ingest state ([[postSwap]])
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new Path(s"$dir/$CommitMarker")
-    // atomic publish (temp + rename): a torn marker would read as the
-    // empty REBALANCE format and recovery would skip the build's
-    // post-swap obligations
-    graft.util.StagedTables.writeMarker(fs, dir, CommitMarker,
-      if (pq.isEmpty) MarkerBuildClearPq else MarkerBuild)
-    swapStaged(fs, dir)
-    if (pq.isEmpty) fs.delete(new Path(s"$dir/pq"), true)
-    // the previous build's displacement anchor describes codebooks this
-    // build just replaced — delete it INSIDE the marker window (recovery
-    // replays the delete), so no crash point leaves the new index
-    // alarmed against a dead anchor. The fresh anchor is measured after
-    // the commit; a crash before that write leaves an anchor-less index
-    // (ratio columns null — the honest legacy state), never a stale one.
-    deleteAnchor(fs, dir)
-    // fresh corpus → fresh ingest state (graft.util.IngestState
-    // contract); inside the marker window so a crash here replays the
-    // clear on recovery instead of leaving the NEW index gated by the
-    // previous corpus's high-water mark
-    graft.util.IngestState.clear(spark, dir)
-    fs.delete(marker, false)
+    graft.util.StagedTables.commit(fs, dir, CommitMarker,
+      if (pq.isEmpty) MarkerBuildClearPq else MarkerBuild, SwappedTables)(
+      postSwap(spark, fs, dir))
     // the post-build displacement ANCHOR ([[staleness]]'s operating
     // rule): measured on the just-committed index at the staleness
     // probe's defaults and persisted beside the training-time corpus
@@ -422,7 +403,7 @@ object IvfIndex {
     // a crashed rebalance left either staged debris or a half-committed
     // swap; resolve it BEFORE appending — files landed in a table that a
     // later roll-forward replaces would be lost silently
-    recoverSwap(spark, dir)
+    recover(spark, dir)
     // pin the batch before counting: count and write must see the SAME
     // rows (a non-deterministic source re-evaluated per action would
     // otherwise return a count that differs from what landed), and the
@@ -448,7 +429,7 @@ object IvfIndex {
     * centroid/metric/PQ tables ONCE and share them between their
     * [[search]] probe (`preMeta`) and their append, instead of paying
     * the three metadata collects twice per micro-batch. The caller must
-    * already hold the writer lock and have run [[recoverSwap]] (both are
+    * already hold the writer lock and have run [[recover]] (both are
     * part of the gated-batch critical section).
     */
   private[graft] def appendPrepared(
@@ -689,9 +670,10 @@ object IvfIndex {
   private[knn] final case class AdcAnchor(disp: Double, probeQueries: Int,
       k: Int, nProbe: Int, rerank: Int, seed: Int)
 
-  /** Persist the post-build displacement anchor (tmp + atomic rename —
-    * the live table is never torn; a crash between delete and rename
-    * leaves an anchor-less index, the honest legacy state).
+  /** Persist the post-build displacement anchor (staged + swapped — the
+    * live table is never torn; the build's post-swap step already
+    * deleted the previous anchor, so a crash before the swap leaves an
+    * anchor-less index, the honest legacy state).
     */
   private def writeAnchor(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, dir: String,
@@ -703,10 +685,7 @@ object IvfIndex {
         "seed")
       .repartition(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/$AnchorTable.tmp")
-    fs.delete(new Path(s"$dir/$AnchorTable"), true)
-    require(fs.rename(new Path(s"$dir/$AnchorTable.tmp"),
-        new Path(s"$dir/$AnchorTable")),
-      s"IvfIndex: could not publish $AnchorTable under $dir")
+    graft.util.StagedTables.swapStaged(fs, dir, Seq(AnchorTable))
   }
 
   private def deleteAnchor(fs: org.apache.hadoop.fs.FileSystem,
@@ -854,17 +833,9 @@ object IvfIndex {
   // rebalance); build writes one of these so roll-forward recovery also
   // clears ingest state (and the stale pq table for a PQ-less rebuild),
   // neither of which a rebalance recovery may touch
+  private val MarkerRebalance = ""
   private val MarkerBuild = "build"
   private val MarkerBuildClearPq = "build_clear_pq"
-
-  /** Commit every staged `<table>.tmp` over its live table — rebalance
-    * never stages `pq`, a PQ-less build stages it neither; the skip and
-    * first-build cases are [[graft.util.StagedTables.swapStaged]]'s
-    * contract.
-    */
-  private def swapStaged(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Unit =
-    graft.util.StagedTables.swapStaged(fs, dir, SwappedTables, "IvfIndex")
 
   private def rebalanceImpl(
       spark: SparkSession,
@@ -875,8 +846,7 @@ object IvfIndex {
       seed: Int,
       distributedTrain: Boolean): Int = {
     import spark.implicits._
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    recoverSwap(spark, dir)
+    recover(spark, dir)
 
     val metric = loadMetric(spark, dir)
     val cosine = HnswSearch.isCosine(metric)
@@ -968,10 +938,9 @@ object IvfIndex {
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/params.tmp")
       })
 
-    // intent marker (empty = rebalance), then the swaps it protects
-    fs.create(new Path(s"$dir/$CommitMarker"), false).close()
-    swapStaged(fs, dir)
-    fs.delete(new Path(s"$dir/$CommitMarker"), false)
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    graft.util.StagedTables.commit(fs, dir, CommitMarker, MarkerRebalance,
+      SwappedTables)(postSwap(spark, fs, dir))
     centroids.length
   }
 
@@ -1068,43 +1037,33 @@ object IvfIndex {
   }
 
   /** Crash recovery for the marker-protected swap shared by [[build]]
-    * and [[rebalance]] — run on entry by every writer. Marker present =
-    * the swaps were in flight: roll each table FORWARD from whichever
-    * rename the crash interrupted ([[swapStaged]] is resume-safe), then
-    * replay the marker op's post-swap steps — a BUILD marker also clears
-    * ingest state (and, for a PQ-less rebuild, the stale pq table),
-    * which a rebalance recovery must never touch (same corpus, same
-    * watermark). No marker = staging never committed: roll BACK by
-    * deleting staged/old debris (live tables were never renamed before
-    * the marker existed).
+    * and [[rebalance]] ([[graft.util.StagedTables.recover]]) — run on
+    * entry by every writer and by the streaming ingest driver under its
+    * writer lock.
     */
-  private[graft] def recoverSwap(spark: SparkSession, dir: String): Unit = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) return
-    val marker = new Path(s"$dir/$CommitMarker")
-    graft.util.StagedTables.sweepMarkerTmp(fs, dir, CommitMarker)
-    if (fs.exists(marker)) {
-      // markers publish atomically (writeMarker), so empty = a genuine
-      // rebalance (its historic contentless format) and a read FAILURE
-      // propagates — defaulting it would roll a build forward as a
-      // rebalance, silently skipping the ingest clear / pq delete
-      val markerOp = graft.util.StagedTables.readMarker(fs, marker)
-      swapStaged(fs, dir)
-      if (markerOp.startsWith(MarkerBuild)) {
-        if (markerOp == MarkerBuildClearPq)
-          fs.delete(new Path(s"$dir/pq"), true)
-        // replay the build's in-window anchor delete: the crashed build
-        // never measured its fresh anchor, and the old one describes
-        // codebooks the swap just replaced
-        deleteAnchor(fs, dir)
-        graft.util.IngestState.clear(spark, dir)
-      }
-      fs.delete(marker, false)
-    } else
-      graft.util.StagedTables.rollBack(fs, dir, SwappedTables,
-        "IvfIndex.recover")
+  private[graft] def recover(spark: SparkSession, dir: String): Unit = {
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    graft.util.StagedTables.recover(fs, dir, CommitMarker, SwappedTables)(
+      postSwap(spark, fs, dir))
   }
+
+  /** The commit's post-swap steps by marker op, replayed by [[recover]].
+    * A BUILD clears ingest state (fresh corpus, fresh watermark) and the
+    * previous build's displacement anchor (it describes codebooks the
+    * swap just replaced; the fresh anchor is measured after the commit,
+    * so a crash before that write leaves an anchor-less index — the
+    * honest legacy state — never a stale one); a PQ-less build also
+    * deletes the live `pq/`, whose codebooks were trained on data the
+    * build replaced. A rebalance (same corpus, same watermark, kept
+    * codebooks) has none.
+    */
+  private def postSwap(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, dir: String)(op: String): Unit =
+    if (op.startsWith(MarkerBuild)) {
+      if (op == MarkerBuildClearPq) fs.delete(new Path(s"$dir/pq"), true)
+      deleteAnchor(fs, dir)
+      graft.util.IngestState.clear(spark, dir)
+    }
 
   /** The persisted PQ codebooks (and their residual flag), if this index
     * was built with `pqM > 0`. Presence of `pq/` IS the marker —

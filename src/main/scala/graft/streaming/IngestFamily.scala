@@ -15,8 +15,11 @@ import graft.text.Bm25Index
   * and lateness gate, the batch-keyed channel write and the per-loop
   * metadata memo.
   *
-  *  - `recover` heals a crashed build/vacuum/rebalance/reshard commit;
-  *    the driver runs it under the writer lock before anything reads
+  *  - `recover` is the family's one crash-recovery entry (`recover` on
+  *    each index object; BM25/LSH/IVF through
+  *    [[graft.util.StagedTables.recover]], HNSW by its manifest pivot),
+  *    healing a crashed build/vacuum/rebalance/reshard commit; the
+  *    driver runs it under the writer lock before anything reads
   *    committed state or metadata.
   *  - `committed` reads the committed table (with an `id` column) once
   *    per batch; the same frame feeds the freshness join and `probe`
@@ -50,7 +53,7 @@ private[graft] object IngestFamily {
     */
   def lex(idCol: String, textCol: String, topK: Int): IngestFamily[Int] =
     IngestFamily[Int]("search", Bm25Index.searchSchema,
-      Bm25Index.recoverCommit, Bm25Index.readDoclens,
+      Bm25Index.recover, Bm25Index.readDoclens,
       Bm25Index.metaGen, Bm25Index.loadParams,
       probe = { (sp, dir, fresh, doclens, nBuckets) =>
         // tf rows are unique per (id, term), matching the probe's
@@ -71,7 +74,7 @@ private[graft] object IngestFamily {
     */
   def dedup(idCol: String, textCol: String): IngestFamily[(Int, Int, Int)] =
     IngestFamily[(Int, Int, Int)]("cands", LshDedupIndex.candidateSchema,
-      LshDedupIndex.recoverCommit, LshDedupIndex.readSignatures,
+      LshDedupIndex.recover, LshDedupIndex.readSignatures,
       LshDedupIndex.metaGen, LshDedupIndex.loadParams,
       probe = { (sp, dir, fresh, sigs, params) =>
         val signed = LshDedupIndex.signBatch(fresh, idCol, textCol, params)
@@ -91,7 +94,7 @@ private[graft] object IngestFamily {
   def ann(idCol: String, vecCol: String, k: Int, nProbe: Int)
       : IngestFamily[IvfMeta] =
     IngestFamily[IvfMeta]("search", IvfIndex.searchSchema,
-      IvfIndex.recoverSwap, IvfIndex.readIds,
+      IvfIndex.recover, IvfIndex.readIds,
       IvfIndex.metaGen, IvfIndex.loadIndexMeta,
       probe = { case (sp, dir, fresh, _, (centroids, metric, _)) =>
         (IvfIndex.search(sp, dir, fresh, idCol, vecCol, k, nProbe,
@@ -109,13 +112,11 @@ private[graft] object IngestFamily {
   def hnsw(idCol: String, vecCol: String, k: Int, efSearch: Int)
       : IngestFamily[HnswIndex.Params] =
     IngestFamily[HnswIndex.Params]("search", IvfIndex.searchSchema,
-      HnswIndex.recoverReshard, HnswIndex.readIds,
+      HnswIndex.recover, HnswIndex.readIds,
       HnswIndex.metaGen, HnswIndex.loadParams,
       probe = (sp, dir, fresh, _, params) =>
         (HnswIndex.search(sp, dir, fresh, idCol, vecCol, k, efSearch,
           preParams = Some(params)), fresh),
       append = (sp, dir, fresh, params) =>
-        HnswIndex.append(sp, dir, fresh, idCol, vecCol, takeLock = false,
-          checkBatchUnique = false, checkPresence = false,
-          preParams = Some(params)))
+        HnswIndex.appendPrepared(sp, dir, fresh, idCol, vecCol, params))
 }

@@ -94,7 +94,7 @@ object Bm25Index {
     // append would Overwrite tables the append is mid-commit on, silently
     // losing the append's rows
     graft.util.IndexLock.withLock(spark, dir, "Bm25Index.build") {
-      recoverCommit(spark, dir)
+      recover(spark, dir)
       // all three tables are STAGED and committed by one marker-protected
       // swap: sequenced live Overwrites could crash between the params
       // write and the data writes, leaving a NEW bucket count over OLD
@@ -109,14 +109,12 @@ object Bm25Index {
         Seq(Tuple1(nBuckets)).toDF("n_buckets")
           .repartition(1)
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/params.tmp"))
+      // fresh corpus → fresh ingest state, inside the marker window so
+      // a crash here replays the clear on recovery and a crash BEFORE
+      // the marker rolls back to the previous index with its watermark
       val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-      graft.util.StagedTables.commit(fs, dir, BuildMarker, CommitTables,
-        "Bm25Index.build") {
-        // fresh corpus → fresh ingest state, inside the marker window so
-        // a crash here replays the clear on recovery and a crash BEFORE
-        // the marker rolls back to the previous index with its watermark
-        graft.util.IngestState.clear(spark, dir)
-      }
+      graft.util.StagedTables.commit(fs, dir, BuildMarker, BuildOp,
+        CommitTables)(_ => graft.util.IngestState.clear(spark, dir))
       n
     }
   }
@@ -258,7 +256,7 @@ object Bm25Index {
       idCol: String,
       textCol: String): Long =
     graft.util.IndexLock.withLock(spark, dir, "Bm25Index.append") {
-      recoverCommit(spark, dir)
+      recover(spark, dir)
       val nBuckets = loadParams(spark, dir)
       val ids = newDocs.select(col(idCol).cast("long").as("id"))
       require(ids.groupBy("id").count().filter(col("count") > 1).isEmpty,
@@ -495,23 +493,23 @@ object Bm25Index {
 
   private val CommitTables = Seq("params", "postings", "doclens")
   private val BuildMarker = "_build_commit"
+  // the build marker's historic empty content: build is its only op
+  private val BuildOp = ""
 
   /** Crash recovery for [[build]]'s marker-protected swap AND for
     * markerless `.tmp`/`.old` debris (a crashed [[vacuum]] swap) — run
-    * at every writer entry; the streaming ingest gate calls it from its
-    * in-lock committed-set thunk like the ANN families do.
+    * at every writer entry and by the streaming ingest driver under its
+    * writer lock.
     */
-  private[graft] def recoverCommit(spark: SparkSession, dir: String): Unit = {
+  private[graft] def recover(spark: SparkSession, dir: String): Unit = {
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    graft.util.StagedTables.recover(fs, dir, BuildMarker, CommitTables,
-      "Bm25Index.recover") {
-      graft.util.IngestState.clear(spark, dir)
-    }
+    graft.util.StagedTables.recover(fs, dir, BuildMarker, CommitTables)(
+      _ => graft.util.IngestState.clear(spark, dir))
   }
 
   private def vacuumImpl(spark: SparkSession, dir: String, doclenFiles: Int): Long = {
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    recoverCommit(spark, dir)
+    recover(spark, dir)
     val nBuckets = loadParams(spark, dir)
 
     val dl = readDoclens(spark, dir)
@@ -537,16 +535,7 @@ object Bm25Index {
     dl.repartition(nDlFiles)
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/doclens.tmp")
 
-    def swap(table: String): Unit = {
-      val live0 = new Path(s"$dir/$table")
-      val old = new Path(s"$dir/$table.old")
-      val tmp = new Path(s"$dir/$table.tmp")
-      require(fs.rename(live0, old), s"Bm25Index.vacuum: could not stage $live0")
-      require(fs.rename(tmp, live0), s"Bm25Index.vacuum: could not commit $tmp")
-      fs.delete(old, true)
-    }
-    swap("postings")
-    swap("doclens")
+    graft.util.StagedTables.swapStaged(fs, dir, Seq("postings", "doclens"))
     reclaimed
   }
 }

@@ -180,7 +180,7 @@ class HnswIndexSpec extends SparkSpec {
     val marker = new org.apache.hadoop.fs.Path(s"$dir/_reshard_commit")
     val out = fs.create(marker, false)
     out.write("1".getBytes("UTF-8")); out.close()
-    HnswIndex.recoverReshard(spark, dir)
+    HnswIndex.recover(spark, dir)
     assert(params == 4, "un-committed reshard must roll back to the old params")
     assert(!fs.exists(marker))
     // a REAL reshard then works and commits
@@ -241,11 +241,10 @@ class HnswIndexSpec extends SparkSpec {
 
   test("build clears stale reshard debris; later writers keep the fresh params") {
     // a reshard of the PREVIOUS index dies mid-swap, the operator
-    // recovers by rebuilding from scratch: the fresh build resets the
-    // manifest to gen 0, so the stale marker (target 1) would read as
-    // "uncommitted" to the next writer's recoverReshard, which would
-    // roll the FRESH params back to the previous index's params.old —
-    // build must clear the debris along with the stale manifests
+    // recovers by rebuilding from scratch: a stale marker (target 1)
+    // left for a later writer's recover would roll the FRESH params
+    // back to the previous index's params.old — build must heal the
+    // debris at entry, before its own commit
     val dir = tempDir("reshard_debris_build")
     HnswIndex.build(emb, "vec_id", "embedding", dir, shards = 4)
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -267,6 +266,40 @@ class HnswIndexSpec extends SparkSpec {
       "a writer after the rebuild must keep the fresh params")
     assert(HnswIndex.stats(spark, dir).collect().map(_.getLong(1)).sum ==
       emb.count() + 3L)
+  }
+
+  test("a crashed fresh build's debris is replaced, not duplicated: stray " +
+    "g=0 rows and a torn manifest temp under no committed manifest") {
+    val dir = tempDir("fresh_debris")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    // the state a fresh build leaves when it dies inside writeManifest:
+    // a full g=0 generation on disk, the manifest temp, no m000000.json
+    val crashed = tempDir("fresh_debris_src")
+    HnswIndex.build(emb, "vec_id", "embedding", crashed, shards = 4)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/nodes"))
+    require(fs.rename(new org.apache.hadoop.fs.Path(s"$crashed/nodes/g=0"),
+      new org.apache.hadoop.fs.Path(s"$dir/nodes/g=0")))
+    val torn = fs.create(new org.apache.hadoop.fs.Path(
+      s"$dir/manifest/.m000000.json.inprogress"), false)
+    torn.write("{\"shards\":".getBytes("UTF-8")); torn.close()
+
+    val n = emb.count()
+    assert(HnswIndex.build(emb, "vec_id", "embedding", dir, shards = 4) == n)
+    val manifests = new java.io.File(s"$dir/manifest").list().toSet
+    assert(manifests.filterNot(_.startsWith(".")) == Set("m000000.json") &&
+      !manifests.exists(_.endsWith(".inprogress")), s"manifests: $manifests")
+    val rows = spark.read.parquet(s"$dir/nodes")
+    assert(rows.count() == n, "stray g=0 rows were committed beside the build")
+    assert(rows.select("id").distinct().count() == n)
+    assert(HnswIndex.stats(spark, dir).collect().map(_.getLong(1)).sum == n)
+    def nodeTree(): Set[String] =
+      new java.io.File(s"$dir/nodes").listFiles().flatMap(g =>
+        Option(g.listFiles()).toSeq.flatten.map(sh => s"${g.getName}/${sh.getName}"))
+        .toSet
+    val before = nodeTree()
+    HnswIndex.vacuum(spark, dir)
+    assert(nodeTree() == before, "vacuum found orphans under nodes/")
   }
 
   test("malformed commit marker fails with a named error; marker temps " +
@@ -297,7 +330,7 @@ class HnswIndexSpec extends SparkSpec {
   }
 
   test("append on an index with a crashed reshard heals it first") {
-    // the IvfIndex recoverSwap discipline: EVERY writer entry runs
+    // the IvfIndex recover discipline: EVERY writer entry runs
     // recovery, not just reshard and the streaming thunk — without it a
     // direct append would read the dead reshard's uncommitted params
     // (shards=2 here), route new ids by the wrong count, and check
@@ -950,9 +983,10 @@ class HnswIndexSpec extends SparkSpec {
     val dirB = tempDir("fastpath_b")
     HnswIndex.build(base, "vec_id", "embedding", dirB, shards = 4)
     val params = HnswIndex.loadParams(spark, dirB)
-    HnswIndex.append(spark, dirB, batch, "vec_id", "embedding",
-      takeLock = true, checkBatchUnique = false, checkPresence = false,
-      preParams = Some(params))
+    graft.util.IndexLock.withLock(spark, dirB, "spec") {
+      HnswIndex.appendPrepared(spark, dirB, batch, "vec_id", "embedding",
+        params)
+    }
     val sB = HnswIndex.search(spark, dirB, base.limit(50), "vec_id",
       "embedding", k = 5, preParams = Some(params)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
@@ -968,16 +1002,17 @@ class HnswIndexSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") < 200)
     val dir = tempDir("dupguard")
     HnswIndex.build(base, "vec_id", "embedding", dir, shards = 4)
-    // the same id twice inside ONE batch — the case the skipped
-    // checkBatchUnique job used to reject and the gate's freshness
-    // marker join (index-vs-batch, not within-batch) never could
+    // the same id twice inside ONE batch — the case append's batch
+    // guard rejects and the gate's freshness marker join
+    // (index-vs-batch, not within-batch) never could
     val dup = emb.filter(col("vec_id") < 5)
       .select((col("vec_id") % 2 + 1000000).as("vec_id"), col("embedding"))
     val params = HnswIndex.loadParams(spark, dir)
     val e = intercept[org.apache.spark.SparkException] {
-      HnswIndex.append(spark, dir, dup, "vec_id", "embedding",
-        takeLock = true, checkBatchUnique = false, checkPresence = false,
-        preParams = Some(params))
+      graft.util.IndexLock.withLock(spark, dir, "spec") {
+        HnswIndex.appendPrepared(spark, dir, dup, "vec_id", "embedding",
+          params)
+      }
     }
     assert(e.getMessage.contains("duplicate label") ||
       Option(e.getCause).exists(_.getMessage.contains("duplicate label")),
@@ -986,9 +1021,10 @@ class HnswIndexSpec extends SparkSpec {
     // the same kernel (the reingest multi-batch-union corruption shape)
     val reins = base.filter(col("vec_id") < 3)
     val e2 = intercept[org.apache.spark.SparkException] {
-      HnswIndex.append(spark, dir, reins, "vec_id", "embedding",
-        takeLock = true, checkBatchUnique = false, checkPresence = false,
-        preParams = Some(params))
+      graft.util.IndexLock.withLock(spark, dir, "spec") {
+        HnswIndex.appendPrepared(spark, dir, reins, "vec_id", "embedding",
+          params)
+      }
     }
     assert(e2.getMessage.contains("duplicate label") ||
       Option(e2.getCause).exists(_.getMessage.contains("duplicate label")))
