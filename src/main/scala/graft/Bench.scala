@@ -1,6 +1,39 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 object Bench {
+
+  /** One timed run of query `name`: (seconds, failed). A query that
+    * throws a non-fatal error is reported failed, with the error on
+    * stderr; a fatal one (out of memory, say) ends the bench.
+    */
+  private[graft] def sample(name: String)(run: => Long): (Double, Boolean) = {
+    val t0 = System.nanoTime()
+    val failed =
+      try { run; false }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: $e")
+        true
+      }
+    ((System.nanoTime() - t0) / 1e9, failed)
+  }
+
+  /** The one-line result: per-query median seconds and their total under
+    * the keys the driver parses, plus `failed`, the queries any of whose
+    * samples threw (their seconds are time to the error, not a run).
+    */
+  private[graft] def jsonLine(results: Seq[(String, Double, Boolean)],
+      sfDir: String): String = {
+    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val total = results.map(_._2).sum
+    val failed = results.collect { case (k, _, true) => s"\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s""""failed":$failed,"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -59,19 +92,11 @@ object Bench {
     // sampled 3.84 s vs 1.1 s warm), drowning round-over-round verdicts
     // in noise — the median tracks the plan, not the compiler
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val samples = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
+      val samples = (1 to 3).map(_ => sample(name)(fn(spark, sfDir).count()))
       dropLeakedBlocks() // between queries, never between samples
-      name -> samples.sorted.apply(1)
+      (name, samples.map(_._1).sorted.apply(1), samples.exists(_._2))
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    val line = jsonLine(results, sfDir)
     // Persist the line to a file FIRST: the driver parses a tail window
     // of sbt's interleaved stdout, and Spark/sbt shutdown noise after a
     // println has left BENCH_r*.json with "parsed": null — the file is

@@ -610,9 +610,9 @@ object SparkEntry {
     }),
 
     // Persistent sharded-HNSW index (graph counterpart of q41's IVF
-    // layout): build writes the graph state as node rows, search restores
-    // each shard exactly and beams the broadcast queries — recall-gated
-    // like q45 (floor 0.8)
+    // layout): build writes the graph state as node rows plus one graph
+    // image per shard, search restores each shard exactly from its image
+    // and beams the broadcast queries — recall-gated like q45 (floor 0.8)
     "q49_hnsw_index" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
       val idxDir = graft.util.TempDirs.register(

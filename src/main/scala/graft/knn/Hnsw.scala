@@ -15,7 +15,9 @@ import scala.collection.mutable
   * Scale architecture (see [[ApproxKnn.hnswKnn]]): one graph per
   * candidate PARTITION — sharded HNSW, the standard horizontal
   * deployment. Builds are independent and memory-bounded by partition
-  * size; a graph is never serialized or shuffled.
+  * size, and a graph is never shuffled. A persisted shard
+  * ([[HnswIndex]]) is also serialized once, as its [[HnswImage]], which
+  * the shard's search task reads back whole.
   */
 final class HnswGraph(
     m: Int = 16,

@@ -9,13 +9,19 @@ import org.apache.spark.sql.functions._
 /** Persistent sharded HNSW index — the graph-ANN counterpart of
   * [[IvfIndex]]'s index-as-data layout (reference: hnswlib
   * `save_index`/`load_index`, DeepJoin/annIndex.py:42–51, a single-machine
-  * byte blob; here the graph state IS a table):
+  * byte blob; here the graph state is a table plus one blob per shard):
   *
   *  - `nodes/g=<gen>/shard=<s>/` — one parquet row per graph node:
   *    (g, shard, pos, id, vec, links: array<array<int>>), `pos` the
   *    insertion position within its shard, links holding neighbor
   *    positions per level. Generation directories are IMMUTABLE once
   *    written — append never rewrites a live file;
+  *  - `nodes/g=<gen>/shard=<s>/_graph.bin` — the shard's graph image
+  *    ([[HnswImage]]): the same nodes in `pos` order as flat arrays,
+  *    written by the task that built or rebuilt the shard's graph
+  *    (temp name, then rename). The leading `_` hides it from every
+  *    parquet read of `nodes/`, and it lives and dies with its shard
+  *    directory (staging, retire, vacuum);
   *  - `manifest/m<gen>.json` — the commit marker: which generation is
   *    live for each shard. Written whole to a temp name then renamed
   *    (atomic on HDFS/local), and readers take the highest-numbered
@@ -43,11 +49,21 @@ import org.apache.spark.sql.functions._
   * level) and runs the same [[HnswSearch]] broadcast-query beam as
   * [[ApproxKnn.hnswKnn]]; a restored index answers identically to the
   * index that was saved.
+  *
+  * Serving contract: [[search]] runs one task per live shard, and each
+  * task reads only that shard's graph image, so a request moves the
+  * broadcast queries in and the k·|Q|·S partial rows out, never the
+  * index. No search path reads node rows: a live shard whose image is
+  * missing or disagrees with the manifest count fails the search with a
+  * named `IllegalStateException`, and [[reshard]] to the same count
+  * (which reads node rows and rewrites every shard) is the repair.
+  * Node rows stay the source for [[append]], [[reshard]], [[stats]] and
+  * [[readIds]].
   */
 object HnswIndex {
 
-  /** Build the per-shard graphs and persist them as node rows. Returns
-    * the node count written.
+  /** Build the per-shard graphs and persist them as node rows plus one
+    * graph image per shard. Returns the node count written.
     *
     * Every build is GENERATION-STAGED and atomic ([[commitGeneration]],
     * shared with [[reshard]]): the new corpus's graphs land in the next
@@ -244,7 +260,7 @@ object HnswIndex {
     // commit duplicated node rows
     fs.delete(staged, true)
     shardGraphFrame(corpus, p.m, p.efConstruction,
-        HnswSearch.isCosine(p.metric), p.seed, p.shards, next)
+        HnswSearch.isCosine(p.metric), p.seed, p.shards, dir, next)
       .write.mode(SaveMode.Append)
       .partitionBy("g", "shard")
       .parquet(s"$dir/nodes")
@@ -326,7 +342,8 @@ object HnswIndex {
   /** The deterministic shard-graph frame shared by [[build]] and
     * [[reshard]]: shard by id hash, one builder per shard seeing its
     * rows contiguously in HASH-of-id order — byte-identical graphs
-    * regardless of source layout.
+    * regardless of source layout. Each task also publishes its shards'
+    * graph images under `nodes/g=<gen>` ([[persistShard]]).
     *
     * Why hash order and not id order (the pre-r19 recipe): HNSW graph
     * quality is sensitive to insertion order when id order correlates
@@ -344,9 +361,12 @@ object HnswIndex {
     * staying fully deterministic; ties fall back to the id.
     */
   private def shardGraphFrame(src: DataFrame, m: Int, efConstruction: Int,
-      cosine: Boolean, seed: Int, shards: Int, gen: Int): DataFrame = {
+      cosine: Boolean, seed: Int, shards: Int, dir: String, gen: Int)
+      : DataFrame = {
     val spark = src.sparkSession
     import spark.implicits._
+    val conf = hadoopConf(spark)
+    val genDir = s"$dir/nodes/g=$gen"
     src
       .withColumn("shard", pmod(xxhash64(col("id")), lit(shards)).cast("int"))
       .withColumn("__ins", insertOrderCol(col("id")))
@@ -365,9 +385,7 @@ object HnswIndex {
         it.toSeq.groupBy(_._3).iterator.flatMap { case (shard, rows) =>
           val g = new HnswGraph(m, efConstruction, cosine, seed)
           rows.foreach { case (id, vec, _) => g.insert(id, vec) }
-          g.nodes.iterator.zipWithIndex.map { case ((id, vec, links), pos) =>
-            (shard, pos, id, vec, links)
-          }
+          persistShard(conf.value.value, genDir, shard, g)
         }
       }
       .toDF("shard", "pos", "id", "vec", "links")
@@ -376,6 +394,29 @@ object HnswIndex {
       // no second shuffle; the partitionBy("g","shard") writer emits one
       // file per live (g, shard) from its own task
   }
+
+  /** The task-side tail of both shard-graph writers ([[shardGraphFrame]]
+    * and [[rebuildTouchedShards]]): publish `g`'s [[HnswImage]] into its
+    * shard directory under `genDir`, then emit its node rows in `pos`
+    * order. The image and the rows come from the same snapshot, so they
+    * cannot disagree.
+    */
+  private def persistShard(conf: org.apache.hadoop.conf.Configuration,
+      genDir: String, shard: Int, g: HnswGraph)
+      : Iterator[(Int, Int, Long, Array[Float], Seq[Seq[Int]])] = {
+    val nodes = g.nodes
+    HnswImage.write(conf, new Path(s"$genDir/shard=$shard"), nodes)
+    nodes.iterator.zipWithIndex.map { case ((id, vec, links), pos) =>
+      (shard, pos, id, vec, links)
+    }
+  }
+
+  /** The session's Hadoop configuration, broadcast for the tasks that
+    * read or write graph images.
+    */
+  private def hadoopConf(spark: SparkSession) =
+    spark.sparkContext.broadcast(
+      new org.apache.spark.SerializableWritable(spark.sessionState.newHadoopConf()))
 
   /** Atomically publish the shard→generation map as manifest generation
     * `gen`: the JSON is written whole to a dot-prefixed temp name, then
@@ -430,7 +471,7 @@ object HnswIndex {
     * goes inert rather than guessing); it self-heals at the next append,
     * build, or reshard.
     */
-  private def readManifest(spark: SparkSession, dir: String)
+  private[graft] def readManifest(spark: SparkSession, dir: String)
       : (Int, Map[Int, Int], Map[Int, Long]) = {
     val mdir = new Path(s"$dir/manifest")
     val fs = mdir.getFileSystem(spark.sessionState.newHadoopConf())
@@ -738,7 +779,8 @@ object HnswIndex {
           col("links").cast("array<array<int>>"))
       val rebuilt = rebuildTouchedShards(existing,
           fresh.select(col("shard"), col("id"), col("vec")),
-          touched.toSeq, m, cosine, efConstruction, seed)
+          touched.toSeq, m, cosine, efConstruction, seed,
+          s"$dir/nodes/g=${gen + 1}")
         .withColumn("g", lit(gen + 1))
       val fs = new Path(s"$dir/nodes").getFileSystem(
         spark.sessionState.newHadoopConf())
@@ -776,7 +818,7 @@ object HnswIndex {
     * (insert order = hash-of-id, the [[shardGraphFrame]] decorrelation
     * rule, marked `pos = -1`) union into a single frame,
     * PERFECT-placed one shard per task via [[graft.util.ShardSlots]]
-    * (the same contract the build and search stages use — a cogroup on
+    * (the same contract the build stage uses — a cogroup on
     * `groupByKey(shard)` hash-collided shard keys exactly like the bare
     * `repartition(col("shard"))` the r16 fix removed elsewhere: with S
     * touched shards into the shuffle's partitions, ~1/e of the rebuild
@@ -787,6 +829,8 @@ object HnswIndex {
     * its own task with NO second shuffle (the cogroup shape paid one).
     * Per-shard output is byte-identical to the cogroup it replaces:
     * same restore order, same insert order, same zipWithIndex `pos`.
+    * Each task also publishes its rebuilt shards' graph images under
+    * `genDir` ([[persistShard]]).
     */
   private[graft] def rebuildTouchedShards(
       existing: DataFrame,
@@ -795,9 +839,11 @@ object HnswIndex {
       m: Int,
       cosine: Boolean,
       efConstruction: Int,
-      seed: Int): DataFrame = {
+      seed: Int,
+      genDir: String): DataFrame = {
     val spark = existing.sparkSession
     import spark.implicits._
+    val conf = hadoopConf(spark)
     existing
       .select(col("shard"), col("pos"), col("id"), col("vec"), col("links"))
       .unionByName(fresh.select(col("shard"), lit(-1).as("pos"), col("id"),
@@ -820,20 +866,23 @@ object HnswIndex {
             efConstruction, seed)
           news.sortBy(r => (r._6, r._3)).foreach { case (_, _, id, vec, _, _) =>
             g.insert(id, vec) }
-          g.nodes.iterator.zipWithIndex.map { case ((id, vec, links), pos) =>
-            (shard, pos, id, vec, links)
-          }
+          persistShard(conf.value.value, genDir, shard, g)
         }
       }
       .toDF("shard", "pos", "id", "vec", "links")
   }
 
-  /** Probe the persisted index: every shard's graph is restored in place
-    * (one pass over `nodes/`, no re-insertion), the broadcast query set
-    * beams through it, and per-shard top-k partials merge in one ranking
-    * window — the [[ApproxKnn.hnswKnn]] execution over restored state.
-    * `m` and the metric come from the persisted `params/`, never from the
-    * caller.
+  /** Probe the persisted index: one task per live shard reads that
+    * shard's graph image, restores the graph exactly (no re-insertion),
+    * beams the broadcast query set through it, and only the per-shard
+    * top-k partials reach the one ranking-window merge — the
+    * [[ApproxKnn.hnswKnn]] execution over restored state. No node row is
+    * read or shuffled. `m` and the metric come from the persisted
+    * `params/`, never from the caller. A live shard without a readable
+    * image, or whose image disagrees with the manifest count, fails the
+    * search with an `IllegalStateException` naming the shard and the
+    * repair ([[reshard]] to the same count); there is no node-row
+    * fallback.
     *
     * Beam law: a positive `efSearch` is the beam at gate-tier scale —
     * past [[BeamLaw.HoldKeys]] EQUIVALENT keys it is widened by the
@@ -889,32 +938,46 @@ object HnswIndex {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         IvfIndex.searchSchema)
-    // PERFECT shard placement (graft.util.ShardSlots) — one restored
-    // graph per task: a bare repartition(col("shard")) hash-collides
-    // shard keys, measured on the 200k-key grid tier as 18 non-empty
-    // beam tasks out of 32 with 40–437 s spreads (a doubled task beams
-    // every query through TWO graphs while a third of the cores idle).
-    // The groupBy below still tolerates multi-shard partitions, so the
-    // slot mapping is a pure balance hint.
-    val liveShards = shardGens.keys.toSeq.sorted
-    val partials = loadNodes(spark, dir, shardGens)
-      .withColumn("__slot",
-        graft.util.ShardSlots.slotCol(col("shard"), liveShards))
-      .repartition(liveShards.size, col("__slot"))
-      .sortWithinPartitions("shard", "pos")
-      .select(col("shard"), col("id"), col("vec").cast("array<float>"),
-        col("links").cast("array<array<int>>"))
-      .as[(Int, Long, Array[Float], Seq[Seq[Int]])]
-      .mapPartitions { it =>
-        it.toSeq.groupBy(_._1).iterator.flatMap { case (_, rows) =>
-          val g = HnswGraph.restore(m, cosine,
-            rows.map { case (_, id, vec, links) => (id, vec, links) })
-          HnswSearch.beamAll(g, bc.value, kL, efS, ex)
-        }
+    // one task per live shard, each reading only its own image
+    val images = shardGens.toSeq.sorted
+      .map { case (shard, gen) => (shard, gen, counts.get(shard)) }
+    val conf = hadoopConf(spark)
+    val shards = params.shards
+    val partials = spark.sparkContext.parallelize(images, images.size)
+      .flatMap { case (shard, gen, want) =>
+        val nodes = readImage(conf.value.value, dir, shard, gen, want, shards)
+        HnswSearch.beamAll(HnswGraph.restore(m, cosine, nodes), bc.value,
+          kL, efS, ex)
       }
       .toDF("query_id", "neighbor_id", "dist")
 
     HnswSearch.topKMerge(partials, k)
+  }
+
+  /** One live shard's nodes, from its graph image: the image must exist,
+    * decode, and hold the manifest's count for the shard (`want`, absent
+    * on a legacy counts-less manifest). Anything else is an
+    * `IllegalStateException` that names the shard and the repair:
+    * [[reshard]] to the same count rewrites every shard and its image.
+    */
+  private def readImage(conf: org.apache.hadoop.conf.Configuration,
+      dir: String, shard: Int, gen: Int, want: Option[Long], shards: Int)
+      : IndexedSeq[HnswImage.Node] = {
+    val file = new Path(s"$dir/nodes/g=$gen/shard=$shard/${HnswImage.FileName}")
+    def fail(problem: String) = throw new IllegalStateException(
+      s"HnswIndex: live shard $shard (g=$gen) of $dir $problem; search " +
+        s"reads shards only from their graph images — " +
+        s"HnswIndex.reshard(spark, dir, $shards) rewrites every shard")
+    val nodes =
+      try HnswImage.read(conf, file)
+      catch {
+        case _: java.io.FileNotFoundException => fail(s"has no graph image $file")
+        case e: java.io.IOException => fail(s"has an unreadable graph image: $e")
+        case e: IllegalStateException => fail(s"has a ${e.getMessage}")
+      }
+    want.filter(_ != nodes.length).foreach(w =>
+      fail(s"has a graph image of ${nodes.length} nodes, but the manifest counts $w"))
+    nodes
   }
 
   /** [[search]]/[[staleness]]'s "use the persisted serving beam"

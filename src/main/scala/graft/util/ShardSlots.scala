@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * returning (the old performance), never wrong results. ShardSlotsSpec
   * pins the contract end to end — `repartition(n, slot)` must yield one
   * distinct `spark_partition_id` per shard — so a contract change fails
-  * loudly in `sbt test` instead of silently regressing the beam stage.
+  * loudly in `sbt test` instead of silently regressing the build stages.
   */
 object ShardSlots {
 

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.knn.{HnswGraph, HnswIndex, KnnJoin}
+import org.apache.hadoop.fs.Path
+
+import graft.knn.{HnswGraph, HnswImage, HnswIndex, KnnJoin}
 import graft.sources.Lake
 
 class HnswIndexSpec extends SparkSpec {
@@ -23,6 +25,114 @@ class HnswIndexSpec extends SparkSpec {
       val q = Array.fill(16)(rnd.nextGaussian().toFloat)
       assert(restored.search(q, 5, 32) == g.search(q, 5, 32))
     }
+  }
+
+  /** One shard's committed node rows in `pos` order. */
+  private def shardRows(dir: String, shard: Int, gen: Int)
+      : Seq[(Long, Array[Float], Seq[Seq[Int]])] = {
+    import spark.implicits._
+    spark.read.parquet(s"$dir/nodes/g=$gen/shard=$shard").orderBy("pos")
+      .select(col("id"), col("vec").cast("array<float>"),
+        col("links").cast("array<array<int>>"))
+      .as[(Long, Array[Float], Seq[Seq[Int]])].collect().toSeq
+  }
+
+  private def imagePath(dir: String, shard: Int, gen: Int): Path =
+    new Path(s"$dir/nodes/g=$gen/shard=$shard/${HnswImage.FileName}")
+
+  test("graph images: after a build, an append and a reshard every live " +
+    "shard's image equals its node rows, and search equals the node-row " +
+    "oracle") {
+    import spark.implicits._
+    val dir = tempDir("images")
+    val conf = spark.sessionState.newHadoopConf()
+    val queries = emb.filter(col("vec_id") < 440).orderBy("vec_id").limit(40)
+      .select(col("vec_id").cast("long"), col("embedding").cast("array<float>"))
+      .as[(Long, Array[Float])].collect().toSeq
+    val qDf = queries.toDF("vec_id", "embedding")
+    val (k, ef) = (5, 16)
+    // the serving path before graph images: node rows in pos order →
+    // HnswGraph.restore → the per-shard beam (k + 1, self dropped) → the
+    // global (dist, neighbor_id) top-k merge
+    def oracle(): Set[(Long, Long, Double, Int)] = {
+      val params = HnswIndex.loadParams(spark, dir)
+      val (_, shardGens, _) = HnswIndex.readManifest(spark, dir)
+      shardGens.toSeq.flatMap { case (s, g) =>
+        val graph = HnswGraph.restore(params.m, cosine = false, shardRows(dir, s, g))
+        queries.flatMap { case (qid, qv) =>
+          graph.search(qv, k + 1, math.max(ef, k + 1)).filter(_._1 != qid)
+            .take(k).map { case (nid, d) => (qid, nid, d) }
+        }
+      }.groupBy(_._1).values.flatMap(_.sortBy(r => (r._3, r._2)).take(k)
+        .zipWithIndex.map { case ((q, nid, d), i) => (q, nid, d, i + 1) })
+        .toSet
+    }
+    def check(stage: String): Unit = {
+      val (_, shardGens, counts) = HnswIndex.readManifest(spark, dir)
+      shardGens.foreach { case (s, g) =>
+        val image = HnswImage.read(conf, imagePath(dir, s, g))
+        val rows = shardRows(dir, s, g)
+        assert(image.length == rows.length && counts(s) == rows.length,
+          s"$stage: shard $s image/rows/manifest counts disagree")
+        image.zip(rows).foreach { case ((id, vec, links), (rid, rvec, rlinks)) =>
+          assert(id == rid && vec.sameElements(rvec) && links == rlinks,
+            s"$stage: shard $s image node $id differs from its row")
+        }
+      }
+      val got = HnswIndex.search(spark, dir, qDf, "vec_id", "embedding", k,
+          efSearch = ef, efAutoScale = false)
+        .select("query_id", "neighbor_id", "dist", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      assert(got.length == queries.length * k)
+      assert(got.toSet == oracle(), s"$stage: search differs from the node-row oracle")
+    }
+    HnswIndex.build(emb.filter(col("vec_id") < 300), "vec_id", "embedding",
+      dir, shards = 4)
+    check("build")
+    HnswIndex.append(spark, dir,
+      emb.filter(col("vec_id") >= 300 && col("vec_id") < 440),
+      "vec_id", "embedding")
+    check("append")
+    HnswIndex.reshard(spark, dir, 3)
+    check("reshard")
+  }
+
+  test("search fails loudly, naming the shard and the repair, when a live " +
+    "shard's image is short, torn or missing") {
+    val dir = tempDir("badimage")
+    HnswIndex.build(emb, "vec_id", "embedding", dir, shards = 4)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(dir).getFileSystem(conf)
+    val (_, shardGens, counts) = HnswIndex.readManifest(spark, dir)
+    val (s, g) = shardGens.min
+    val image = imagePath(dir, s, g)
+    def probe() = HnswIndex.search(spark, dir, emb.limit(5), "vec_id",
+      "embedding", k = 3).collect()
+    def searchError(): String = {
+      val e = intercept[Exception](probe())
+      val named = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case ise: IllegalStateException => ise.getMessage }
+        .getOrElse(fail(s"expected a named IllegalStateException, got $e"))
+      assert(named.contains(s"live shard $s (g=$g)") &&
+        named.contains("HnswIndex.reshard(spark, dir, 4)"), named)
+      named
+    }
+    def overwrite(bytes: Array[Byte]): Unit = {
+      val out = fs.create(image, true)
+      try out.write(bytes) finally out.close()
+    }
+    val nodes = HnswImage.read(conf, image)
+    overwrite(HnswImage.encode(nodes.init))
+    assert(searchError().contains(
+      s"image of ${nodes.length - 1} nodes, but the manifest counts ${counts(s)}"))
+    val bytes = HnswImage.encode(nodes)
+    overwrite(bytes.take(bytes.length / 2))
+    assert(searchError().contains("truncated"))
+    fs.delete(image, false)
+    assert(searchError().contains("has no graph image"))
+    // the named repair restores serving
+    HnswIndex.reshard(spark, dir, 4)
+    assert(probe().length == 15)
   }
 
   test("persisted index: well-formed search, recall floor, repeat-search identity") {
@@ -105,7 +215,7 @@ class HnswIndexSpec extends SparkSpec {
     val touched = (0 until shards).toSeq
     val rebuilt = HnswIndex.rebuildTouchedShards(existing,
       fresh.select("shard", "id", "vec"), touched, m = 16, cosine = false,
-      efConstruction = 100, seed = 42)
+      efConstruction = 100, seed = 42, genDir = tempDir("slotappend_images"))
     // the ShardSlots contract end to end on the APPEND path: every
     // touched shard rebuilds alone in its own task — the cogroup shape
     // this replaced idled ~1/e of the tasks on Murmur3 collisions

@@ -7,7 +7,7 @@ import graft.util.ShardSlots
 /** Pins the Spark partitioning contract ShardSlots relies on: the slot
   * values must land one shard per partition under `repartition(n, col)`.
   * If a future Spark changed HashPartitioning's hash/seed, THIS fails
-  * loudly — the production consumers (HnswIndex build/search) only lose
+  * loudly — the production consumers (HnswIndex build/append) only lose
   * balance, never correctness (they group by shard inside partitions).
   */
 class ShardSlotsSpec extends SparkSpec {
