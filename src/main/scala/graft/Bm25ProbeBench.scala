@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Isolated per-batch BM25 probe cost — the r20→r21 regression suspect
   * (q98 +20%: the stats-trailer union vs the two-collect probe). Builds
-  * one sf-sized index, then times `Bm25Index.searchTopK` alone for a
-  * 25-doc query batch (the q91/q98 per-batch shape: preDoclens +
-  * preQTerms + preNBuckets supplied, exactly the ingest loop's call),
+  * one sf-sized index, then times the BM25 probe alone for a 25-doc
+  * query batch (the q91/q98 per-batch shape: `Bm25Index.probe` over an
+  * opened snapshot, the batch's checkpointed doclens frame and its
+  * tokenRows-derived query terms, exactly the ingest loop's call),
   * with job counts, so probe-shape changes are measured in isolation
   * instead of through an 11 s end-to-end run.
   */
@@ -65,17 +66,14 @@ object Bm25ProbeBench {
     for (i <- 1 to 6) {
       val dl = text.Bm25Index.readDoclens(spark, dir)
         .localCheckpoint(eager = false)
-      val nb = text.Bm25Index.loadParams(spark, dir)
+      val snap = text.Bm25Index.open(spark, dir)
       val rows = text.Bm25Index.tokenRows(batch, "doc_id", "text")
         .localCheckpoint(eager = false)
       val j0 = drained()
       val t0 = System.nanoTime()
-      val res = text.Bm25Index.searchTopK(spark, dir, batch, "doc_id", "text",
-        topK = 3,
-        preDoclens = Some(dl),
-        preQTerms = Some(text.Bm25Index.tfFromRows(rows)
-          .select(col("id").as("query_id"), col("term"))),
-        preNBuckets = Some(nb))
+      val res = text.Bm25Index.probe(spark, snap,
+        text.Bm25Index.tfFromRows(rows)
+          .select(col("id").as("query_id"), col("term")), dl, topK = 3)
       val n = res.count()
       println(f"probe run$i ${(System.nanoTime() - t0) / 1e9}%.3f s " +
         s"jobs=${drained() - j0} rows=$n")

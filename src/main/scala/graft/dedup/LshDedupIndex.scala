@@ -61,8 +61,8 @@ object LshDedupIndex {
   /** The committed-membership table: (id, sig), one row per indexed
     * document. Exposed (package-private) so per-batch callers — the
     * streaming ingester's freshness anti-join — can read it ONCE and
-    * reuse the frame across the probe via [[candidatesAgainst]]'s
-    * `preSigs` hook instead of re-scanning per consumer.
+    * reuse the frame for the [[probe]]'s signature fetch instead of
+    * re-scanning per consumer.
     */
   private[graft] def readSignatures(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(signaturesSchema).parquet(s"$dir/signatures")
@@ -153,8 +153,8 @@ object LshDedupIndex {
   /** The write half of [[writeState]], callable with a caller-shared
     * `signed` frame (one [[Dedup.minhashSigned]] kernel pass,
     * localCheckpoint-ed) — a streaming micro-batch signs its batch ONCE
-    * and both its probe ([[candidatesAgainst]] `preSigned`) and its
-    * append reuse the materialized signatures, instead of running the
+    * and both its [[probe]] and its append reuse the materialized
+    * signatures, instead of running the
     * MinHash kernel over the text twice. Write order is the append
     * crash-safety protocol (bands stage first, the signatures write is
     * the commit point). `needCount = false` skips the count job for
@@ -198,33 +198,29 @@ object LshDedupIndex {
     if (needCount) signed.count() else -1L
   }
 
-  /** (shingleSize, bands, rowsPerBand). Package-private so a per-batch
-    * caller loads params ONCE for both its [[candidatesAgainst]] probe
-    * (`preParams`) and its [[appendSigned]] append (via the shared
-    * [[signBatch]] kernel pass).
-    */
-  private[graft] def loadParams(spark: SparkSession, dir: String): (Int, Int, Int) = {
-    val rows = spark.read.parquet(s"$dir/params")
-      .select("shingle_size", "bands", "rows_per_band").collect()
-    require(rows.length == 1, s"LshDedupIndex: malformed params under $dir")
-    (rows.head.getInt(0), rows.head.getInt(1), rows.head.getInt(2))
-  }
+  /** The signature scheme the index was built under: the `params/` row. */
+  private[graft] final case class Params(shingleSize: Int, bands: Int,
+      rowsPerBand: Int)
 
-  /** Commit-generation fingerprint of `params/` — the revalidation key
-    * for an ingest loop's per-loop params memo (see
-    * [[graft.knn.IvfIndex.metaGen]] for the failure this prevents: a
-    * rebuild committing between batches swaps the banding the memo
-    * caches, and stale band params would hash signatures no committed
-    * row was banded under). Filesystem metadata only, no Spark jobs.
-    */
-  private[graft] def metaGen(spark: SparkSession, dir: String): Long =
-    graft.util.StagedTables.metaFingerprint(
-      new Path(dir).getFileSystem(spark.sessionState.newHadoopConf()),
-      dir, Seq("params"))
+  private[graft] type Snapshot = graft.util.Snapshot[Params]
 
-  /** Sign a batch under `params` ([[loadParams]]) — the one MinHash kernel
-    * pass a streaming micro-batch shares between its probe (`preSigned`)
-    * and its append ([[appendSigned]]); localCheckpoint-ed EAGERLY on
+  private val memo = new graft.util.MetaMemo[Params](Seq("params"))
+
+  /** The snapshot [[probe]] and [[appendSigned]] consume: the params
+    * come from a generation-keyed [[graft.util.MetaMemo]] (one one-row
+    * collect on a miss, none on a hit; a build commit is a miss).
+    */
+  private[graft] def open(spark: SparkSession, dir: String): Snapshot =
+    memo.open(spark, dir) {
+      val rows = spark.read.parquet(s"$dir/params")
+        .select("shingle_size", "bands", "rows_per_band").collect()
+      require(rows.length == 1, s"LshDedupIndex: malformed params under $dir")
+      Params(rows.head.getInt(0), rows.head.getInt(1), rows.head.getInt(2))
+    }
+
+  /** Sign a batch under the index's params — the one MinHash kernel
+    * pass a streaming micro-batch shares between its [[probe]] and its
+    * append ([[appendSigned]]); localCheckpoint-ed EAGERLY on
     * purpose: the first consumer is the probe plan, which references
     * the signed frame TWICE (band explode + signature fetch), and a
     * not-yet-materialized lazy checkpoint referenced twice inside one
@@ -235,11 +231,9 @@ object LshDedupIndex {
     * BM25 tokenRows path.)
     */
   private[graft] def signBatch(docs: DataFrame, idCol: String,
-      textCol: String, params: (Int, Int, Int)): DataFrame = {
-    val (shingleSize, bands, rowsPerBand) = params
-    Dedup.minhashSigned(docs, idCol, textCol, shingleSize,
-      bands * rowsPerBand).localCheckpoint()
-  }
+      textCol: String, params: Params): DataFrame =
+    Dedup.minhashSigned(docs, idCol, textCol, params.shingleSize,
+      params.bands * params.rowsPerBand).localCheckpoint()
 
   /** Add a new batch WITHOUT touching existing state: one signature pass
     * over the batch, parquet-appended into `signatures/` and the band
@@ -256,7 +250,7 @@ object LshDedupIndex {
       textCol: String): Long =
     graft.util.IndexLock.withLock(spark, dir, "LshDedupIndex.append") {
       recover(spark, dir)
-      val (shingleSize, bands, rowsPerBand) = loadParams(spark, dir)
+      val Params(shingleSize, bands, rowsPerBand) = open(spark, dir).meta
       val ids = newDocs.select(col(idCol).cast("long").as("id"))
       require(ids.groupBy("id").count().filter(col("count") > 1).isEmpty,
         "LshDedupIndex.append: duplicate ids within the appended batch")
@@ -268,16 +262,14 @@ object LshDedupIndex {
     }
 
   /** Streaming-batch append over a caller-shared signed frame
-    * ([[Dedup.minhashSigned]] under this index's params,
-    * localCheckpoint-ed): the per-batch fast path — no re-sign, no
-    * params read, no count job. The caller holds the writer lock and
-    * owns the guards [[append]] runs (the ingest driver's freshness and
-    * one-row-per-id gate).
+    * ([[signBatch]] under the snapshot's params): the per-batch fast
+    * path — no re-sign, no params read, no count job. The caller holds
+    * the writer lock and owns the guards [[append]] runs (the ingest
+    * driver's freshness and one-row-per-id gate).
     */
-  private[graft] def appendSigned(dir: String, signed: DataFrame,
-      bands: Int, rowsPerBand: Int): Unit = {
-    writeSigned(signed, dir, bands, rowsPerBand, SaveMode.Append,
-      needCount = false, repartitionByBand = false); ()
+  private[graft] def appendSigned(snap: Snapshot, signed: DataFrame): Unit = {
+    writeSigned(signed, snap.dir, snap.meta.bands, snap.meta.rowsPerBand,
+      SaveMode.Append, needCount = false, repartitionByBand = false); ()
   }
 
   /** Near-duplicate candidates of `newDocs` AGAINST THE INDEXED CORPUS:
@@ -298,10 +290,8 @@ object LshDedupIndex {
     * drops from 1-(1-j^r)^bands to 1-(1-j^r)^probeBands — exact
     * duplicates (j=1) are still always found. 0 = probe all bands.
     *
-    * `preSigs`: a pre-read `signatures/` frame to reuse for the candidate
-    * signature fetch (per-batch callers that already scanned it for a
-    * freshness anti-join pass it lazy-localCheckpoint-ed — one corpus
-    * scan per batch instead of two). None = read from the index.
+    * A thin wrapper: it opens `dir`, signs `newDocs` once ([[signBatch]])
+    * and probes with the committed `signatures/` table ([[probe]]).
     */
   def candidatesAgainst(
       spark: SparkSession,
@@ -309,31 +299,38 @@ object LshDedupIndex {
       newDocs: DataFrame,
       idCol: String,
       textCol: String,
-      probeBands: Int = 0,
-      preSigs: Option[DataFrame] = None,
-      preSigned: Option[DataFrame] = None,
-      preParams: Option[(Int, Int, Int)] = None): DataFrame = {
-    val (shingleSize, bands, rowsPerBand) =
-      preParams.getOrElse(loadParams(spark, dir))
+      probeBands: Int = 0): DataFrame = {
+    val snap = open(spark, dir)
+    probe(spark, snap, signBatch(newDocs, idCol, textCol, snap.meta),
+      readSignatures(spark, dir), probeBands)
+  }
+
+  /** [[candidatesAgainst]]'s body over an opened snapshot. `signed` is
+    * the probe side's (id, sig) frame ([[signBatch]] under the snapshot's
+    * params), referenced by both the band explode and the signature
+    * fetch — a streaming micro-batch signs once and its index append
+    * ([[appendSigned]]) reuses the same materialized signatures. `sigs`
+    * is the committed (id, sig) frame ([[readSignatures]]) for the
+    * candidate signature fetch, so a batch that already read it for its
+    * freshness join scans the corpus table once.
+    */
+  private[graft] def probe(
+      spark: SparkSession,
+      snap: Snapshot,
+      signed: DataFrame,
+      sigs: DataFrame,
+      probeBands: Int = 0): DataFrame = {
+    val Params(_, bands, rowsPerBand) = snap.meta
     val numHashes = bands * rowsPerBand
     require(probeBands >= 0 && probeBands <= bands,
       s"LshDedupIndex: probeBands must be in [0, $bands], got $probeBands")
     val nProbe = if (probeBands == 0) bands else probeBands
-    // one kernel pass over the (batch-sized) probe side: referenced by
-    // both the band explode and the signature fetch below — or shared
-    // wider via preSigned: a streaming micro-batch signs once and this
-    // probe AND its index append ([[writeSigned]]) reuse the same
-    // materialized signatures (must be [[Dedup.minhashSigned]] output
-    // under THIS index's params)
-    val signed = preSigned.getOrElse(
-      Dedup.minhashSigned(newDocs, idCol, textCol, shingleSize,
-        numHashes).localCheckpoint())
     val newBanded = signed
       .select(col("id").as("new_id"),
         explode(Dedup.bandStructs(col("sig"), nProbe, rowsPerBand)).as("bk"))
       .select(col("new_id"), col("bk.band").as("band"),
         col("bk.band_hash").as("band_hash"))
-    val idx = readBands(spark, dir)
+    val idx = readBands(spark, snap.dir)
       .filter(col("band") < nProbe) // static partition filter (no-op at full probe)
       .select(col("band"), col("band_hash"), col("id").as("indexed_id"))
     val pairs = newBanded
@@ -342,7 +339,7 @@ object LshDedupIndex {
       .select("new_id", "indexed_id")
       .dropDuplicates("new_id", "indexed_id")
     val newSigs = signed.select(col("id").as("new_id"), col("sig").as("sig_new"))
-    val idxSigs = preSigs.getOrElse(readSignatures(spark, dir))
+    val idxSigs = sigs
       .select(col("id").as("indexed_id"), col("sig").as("sig_idx"))
     pairs
       .join(newSigs, "new_id")

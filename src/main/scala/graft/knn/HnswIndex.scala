@@ -572,9 +572,10 @@ object HnswIndex {
     *    pre-column legacy — the probe never ran, so there is no
     *    evidence to report.
     *
-    * Cost: the manifest JSON, two directory listings, and one one-row
-    * params collect (the row's only Spark job — the price of reporting
-    * the beam the index will actually serve instead of an argument).
+    * Cost: the manifest JSON, two directory listings, and the params
+    * through [[open]]: one one-row collect when the params memo misses
+    * (the row's only Spark job — the price of reporting the beam the
+    * index will actually serve instead of an argument), none on a hit.
     *
     * CONCURRENCY: deliberately lock-free and recovery-free — a health
     * probe must never contend with (or heal under) a live writer. The
@@ -590,7 +591,7 @@ object HnswIndex {
       baseEf: Int = UseIndexDefault): DataFrame = {
     import spark.implicits._
     val (liveGen, shardGens, counts) = readManifest(spark, dir)
-    val params = loadParams(spark, dir)
+    val params = open(spark, dir).meta
     val resolvedBaseEf =
       if (baseEf == UseIndexDefault) params.efSearch else baseEf
     val complete = counts.keySet == shardGens.keySet && shardGens.nonEmpty
@@ -631,21 +632,21 @@ object HnswIndex {
       efConstruction: Int, seed: Int, efSearch: Int,
       rcMedian: Option[Double], rcQ25: Option[Double])
 
-  /** Commit-generation fingerprint of `params/` — the revalidation key
-    * for an ingest loop's per-loop params memo (the
-    * [[graft.knn.IvfIndex.metaGen]] contract: appends never touch
-    * params, but a build/reshard committing — or being crash-recovered
-    * by the loop's own in-lock [[recover]] — between batches swaps
-    * the table, and a memo serving the pre-swap shard count would route
-    * fresh ids to shards the live manifest does not hold). Filesystem
-    * metadata only, no Spark jobs.
-    */
-  private[graft] def metaGen(spark: SparkSession, dir: String): Long =
-    graft.util.StagedTables.metaFingerprint(
-      new Path(dir).getFileSystem(spark.sessionState.newHadoopConf()),
-      dir, Seq("params"))
+  private[graft] type Snapshot = graft.util.Snapshot[Params]
 
-  private[graft] def loadParams(spark: SparkSession, dir: String): Params = {
+  private val memo = new graft.util.MetaMemo[Params](Seq("params"))
+
+  /** The snapshot [[probe]] and [[appendPrepared]] consume: the params
+    * come from a generation-keyed [[graft.util.MetaMemo]] (one one-row
+    * collect on a miss, none on a hit — a serving loop probing one
+    * directory pays it once; a build or [[reshard]] commit is a miss).
+    * The live manifest is not part of the snapshot: appends publish a
+    * new one, so every probe and append reads it (JSON, no Spark job).
+    */
+  private[graft] def open(spark: SparkSession, dir: String): Snapshot =
+    memo.open(spark, dir)(loadParams(spark, dir))
+
+  private def loadParams(spark: SparkSession, dir: String): Params = {
     val raw = spark.read.parquet(s"$dir/params")
     val df = Seq[(String, org.apache.spark.sql.Column)](
         "ef_search" -> lit(DefaultServeEf).cast("int"),
@@ -714,7 +715,7 @@ object HnswIndex {
         "HnswIndex.append: duplicate ids within the appended batch")
       require(readIds(spark, dir).join(batch.select("id"), "id").isEmpty,
         "HnswIndex.append: id already present in the index")
-      appendPrepared(spark, dir, batch, "id", "vec", loadParams(spark, dir))
+      appendPrepared(spark, open(spark, dir), batch, "id", "vec")
     }
 
   /** The committed id set (one `id` column over the live generations).
@@ -732,11 +733,11 @@ object HnswIndex {
     else loadNodes(spark, dir, shardGens).select(col("id"))
   }
 
-  /** [[append]]'s body against CALLER-loaded params — for per-batch
-    * callers (the streaming HNSW ingester) that load params ONCE per loop
-    * and share them with their [[search]] probe (`preParams`), the
+  /** [[append]]'s body against an opened snapshot — for per-batch
+    * callers (the streaming HNSW ingester) that share one snapshot
+    * between their [[probe]] and their append, the
     * [[IvfIndex.appendPrepared]] contract. The caller holds the writer
-    * lock, loaded `params` after its own [[recover]], and owns the guards
+    * lock, opened the snapshot after its own [[recover]], and owns the guards
     * [[append]] runs (the ingest driver's freshness and one-row-per-id
     * gate); a duplicate label that slips past them still fails loudly in
     * the shard insert kernel ([[HnswGraph.insert]]). Returns the appended
@@ -744,13 +745,13 @@ object HnswIndex {
     */
   private[graft] def appendPrepared(
       spark: SparkSession,
-      dir: String,
+      snap: Snapshot,
       newVectors: DataFrame,
       idCol: String,
-      vecCol: String,
-      params: Params): Long = {
+      vecCol: String): Long = {
     import spark.implicits._
-    val Params(m, metric, shards, efConstruction, seed, _, _, _) = params
+    val dir = snap.dir
+    val Params(m, metric, shards, efConstruction, seed, _, _, _) = snap.meta
     val cosine = HnswSearch.isCosine(metric)
     val fresh = newVectors
       .select(col(idCol).cast("long").as("id"),
@@ -898,6 +899,8 @@ object HnswIndex {
     * knob; `efSearch <= 0` (full beam, rank-exact) passes through
     * unscaled; a legacy counts-less manifest leaves the law inert (raw
     * knob) until the next append/build/reshard heals it.
+    *
+    * A thin wrapper: it opens `dir` and runs [[probe]].
     */
   def search(
       spark: SparkSession,
@@ -908,14 +911,23 @@ object HnswIndex {
       k: Int,
       efSearch: Int = UseIndexDefault,
       excludeSelf: Boolean = true,
-      efAutoScale: Boolean = true,
-      preParams: Option[Params] = None): DataFrame = {
+      efAutoScale: Boolean = true): DataFrame =
+    probe(spark, open(spark, dir), queries, idCol, vecCol, k, efSearch,
+      excludeSelf, efAutoScale)
+
+  /** [[search]]'s body over an opened snapshot. */
+  private[graft] def probe(
+      spark: SparkSession,
+      snap: Snapshot,
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      efSearch: Int = UseIndexDefault,
+      excludeSelf: Boolean = true,
+      efAutoScale: Boolean = true): DataFrame = {
     import spark.implicits._
-    // preParams: caller-loaded params — a per-batch caller (the streaming
-    // HNSW ingester) loads them once per LOOP (generation-keyed memo)
-    // and shares them between its probe and its append, the
-    // [[IvfIndex.search]] preMeta contract
-    val params = preParams.getOrElse(loadParams(spark, dir))
+    val (dir, params) = (snap.dir, snap.meta)
     val (m, metric, efDefault) = (params.m, params.metric, params.efSearch)
     val cosine = HnswSearch.isCosine(metric)
     val bc = spark.sparkContext.broadcast(
@@ -1064,7 +1076,7 @@ object HnswIndex {
     // keeps the corpus, so it keeps the corpus's declared serving beam
     // and the rc measurement that chose it
     commitGeneration(dir, corpus,
-      loadParams(spark, dir).copy(shards = newShards), build = false)
+      open(spark, dir).meta.copy(shards = newShards), build = false)
   }
 
   /** The live manifest, or None for a directory with no committed one. */

@@ -271,10 +271,11 @@ object IvfIndex {
     // required the operator to have kept this number themselves
     pq.foreach { p =>
       // the build holds every piece of metadata the probe needs — no
-      // re-reads of the tables it just wrote
-      measureAdcDisplacement(spark, dir, nAtTrain,
-        AnchorProbeQueries, AnchorK, AnchorNProbe, AnchorRerank, AnchorSeed,
-        pre = Some((centroids, metric, Some(p))))
+      // re-reads of the tables it just wrote (and no memo: gen unused)
+      val snap = graft.util.Snapshot(dir, 0L,
+        new Meta(centroids, metric, dir, Some(Some(p))))
+      measureAdcDisplacement(spark, snap, nAtTrain,
+        AnchorProbeQueries, AnchorK, AnchorNProbe, AnchorRerank, AnchorSeed)
         .foreach(d => writeAnchor(spark, fs, dir, d))
     }
     centroids.length
@@ -419,56 +420,54 @@ object IvfIndex {
       require(readIds(spark, dir).join(batch.select("id"), "id").isEmpty,
         "IvfIndex.append: id already present in the index")
     }
-    appendPrepared(spark, dir, batch, "id", "vec",
-      loadCentroids(spark, dir), loadMetric(spark, dir), loadPq(spark, dir))
+    appendPrepared(spark, open(spark, dir), batch, "id", "vec")
     n
   }
 
-  /** [[append]]'s assign-and-write body against CALLER-loaded metadata —
-    * for per-batch callers (the streaming ANN ingester) that load the
-    * centroid/metric/PQ tables ONCE and share them between their
-    * [[search]] probe (`preMeta`) and their append, instead of paying
-    * the three metadata collects twice per micro-batch. The caller must
-    * already hold the writer lock and have run [[recover]] (both are
-    * part of the gated-batch critical section).
+  /** [[append]]'s assign-and-write body against an opened snapshot —
+    * for per-batch callers (the streaming ANN ingester) that share one
+    * snapshot between their [[probe]] and their append. The caller must
+    * already hold the writer lock and have run [[recover]] before
+    * opening (both are part of the gated-batch critical section).
     */
   private[graft] def appendPrepared(
       spark: SparkSession,
-      dir: String,
+      snap: Snapshot,
       newVectors: DataFrame,
       idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Float]],
-      metric: String,
-      pq: Option[(PqCodebooks, Boolean)]): Unit = {
-    val bc = spark.sparkContext.broadcast(centroids)
-    writeAssignments(newVectors, idCol, vecCol, dir, bc,
-      HnswSearch.isCosine(metric), pq, SaveMode.Append,
+      vecCol: String): Unit = {
+    val bc = spark.sparkContext.broadcast(snap.meta.centroids)
+    writeAssignments(newVectors, idCol, vecCol, snap.dir, bc,
+      HnswSearch.isCosine(snap.meta.metric), snap.meta.pq(spark), SaveMode.Append,
       new org.apache.spark.sql.graft.CentroidKernel(bc))
   }
 
-  /** (centroids, metric, pq) in one load — see [[appendPrepared]]. */
-  private[graft] def loadIndexMeta(spark: SparkSession, dir: String)
-      : (Array[Array[Float]], String, Option[(PqCodebooks, Boolean)]) =
-    (loadCentroids(spark, dir), loadMetric(spark, dir), loadPq(spark, dir))
-
-  /** Commit-generation fingerprint of the [[loadIndexMeta]] tables — the
-    * key an ingest loop's per-loop metadata memo revalidates against
-    * each batch ([[graft.streaming.Streams.MetaMemo]]): a [[build]] or
-    * [[rebalance]] committing (or being crash-recovered) BETWEEN batches
-    * swaps centroids/params/pq, and a memo that kept serving the
-    * pre-swap centroids would probe and append against lists whose
-    * quantizer was replaced — wrong list membership, silently degraded
-    * search. Filesystem metadata only (one listing per table, no Spark
-    * jobs), so revalidation costs nothing against the per-batch metadata
-    * read the memo deletes. `assignments/` is deliberately NOT part of
-    * the key — appends grow it every batch, and the memo'd tables are
-    * exactly the ones appends never touch.
+  /** The quantizer of `dir`: centroids and metric, read when the
+    * snapshot opens, and the PQ codebooks (`Some(None)`: none), read on
+    * first use — a plain probe pays no codebook collect.
     */
-  private[graft] def metaGen(spark: SparkSession, dir: String): Long =
-    graft.util.StagedTables.metaFingerprint(
-      new Path(dir).getFileSystem(spark.sessionState.newHadoopConf()),
-      dir, Seq("centroids", "params", "pq"))
+  private[graft] final class Meta(val centroids: Array[Array[Float]],
+      val metric: String, dir: String,
+      private var pqRead: Option[Option[(PqCodebooks, Boolean)]]) {
+    def pq(spark: SparkSession): Option[(PqCodebooks, Boolean)] = synchronized {
+      if (pqRead.isEmpty) pqRead = Some(loadPq(spark, dir))
+      pqRead.get
+    }
+  }
+
+  private[graft] type Snapshot = graft.util.Snapshot[Meta]
+
+  // `assignments/` stays out of the key: appends grow it every batch
+  private val memo = new graft.util.MetaMemo[Meta](Seq("centroids", "params", "pq"))
+
+  /** The snapshot [[probe]] and [[appendPrepared]] consume: centroids
+    * and metric come from a generation-keyed [[graft.util.MetaMemo]]
+    * (two collects on a miss, none on a hit; a [[build]] or
+    * [[rebalance]] commit is a miss).
+    */
+  private[graft] def open(spark: SparkSession, dir: String): Snapshot =
+    memo.open(spark, dir)(
+      new Meta(loadCentroids(spark, dir), loadMetric(spark, dir), dir, None))
 
   /** The committed id set (one `id` column, column-pruned scan — no
     * vector I/O). Package-private for the streaming ingester's freshness
@@ -580,14 +579,8 @@ object IvfIndex {
     }
     val disp: Option[Double] =
       if (!hasPq || nRows == 0) None
-      else {
-        // ONE metadata load shared by both probe searches (3 driver
-        // collects instead of 6 — the probe is fixed-cost-dominated at
-        // spec scale)
-        val (c, m, pqMeta) = loadIndexMeta(spark, dir)
-        measureAdcDisplacement(spark, dir, nRows, probeQueries, k,
-          nProbe, rerank, seed, Some((c, m, pqMeta)))
-      }
+      else measureAdcDisplacement(spark, open(spark, dir), nRows,
+        probeQueries, k, nProbe, rerank, seed)
     // the persisted post-build anchor ([[buildLocked]]'s final step):
     // ratio/alarm only when the live probe ran the SAME protocol the
     // anchor was measured under — a 128-query nProbe-16 displacement
@@ -617,23 +610,17 @@ object IvfIndex {
     */
   private def measureAdcDisplacement(
       spark: SparkSession,
-      dir: String,
+      snap: Snapshot,
       nRows: Long,
       probeQueries: Int,
       k: Int,
       nProbe: Int,
       rerank: Int,
-      seed: Int,
-      pre: Option[(Array[Array[Float]], String,
-        Option[(PqCodebooks, Boolean)])] = None): Option[Double] = {
-    // caller-loaded metadata (staleness / the post-build anchor, which
-    // holds everything in hand) shared by BOTH searches
-    val preMeta = pre.map { case (c, m, _) => (c, m) }
-    val prePq = pre.flatMap(_._3)
+      seed: Int): Option[Double] = {
     // deterministic member sample as the probe query set: the
     // seeded id-hash draws uniformly across list directories (a
     // bare limit() would sample whichever lists list first)
-    val sample = spark.read.parquet(s"$dir/assignments")
+    val sample = spark.read.parquet(s"${snap.dir}/assignments")
       .select(col("id"), col("vec"))
       .filter(pmod(xxhash64(col("id"), lit(seed)), lit(math.max(1L, nRows)))
         < lit(math.min(nRows, probeQueries * 2L)))
@@ -645,9 +632,9 @@ object IvfIndex {
     // equal row-for-row to the former two-search join (same queries,
     // same nProbe → identical shortlist and windows), at half the
     // probe/scan/ADC compute and one fewer probed-cid collect
-    val both = search(spark, dir, sample, "id", "vec",
+    val both = probe(spark, snap, sample, "id", "vec",
       k = k, nProbe = nProbe, usePq = true, rerank = math.max(1, rerank),
-      preMeta = preMeta, prePq = prePq, keepAdcRank = true)
+      keepAdcRank = true)
     val joined = both
       .agg(avg(abs(col("__adc_rank") - col("rank"))).as("d"))
       .collect()(0)
@@ -848,10 +835,11 @@ object IvfIndex {
     import spark.implicits._
     recover(spark, dir)
 
-    val metric = loadMetric(spark, dir)
+    val snap = open(spark, dir)
+    val metric = snap.meta.metric
     val cosine = HnswSearch.isCosine(metric)
-    val pq = loadPq(spark, dir)
-    val k0 = loadCentroids(spark, dir).length
+    val pq = snap.meta.pq(spark)
+    val k0 = snap.meta.centroids.length
 
     // the persisted lists are the corpus; cid is dropped — it is the old
     // quantizer's opinion, about to be re-derived
@@ -1125,7 +1113,8 @@ object IvfIndex {
     * and the scan of `assignments/` carries a `cid IN (...)` partition
     * filter — only the probed lists' files are read. The metric comes
     * from the persisted `params/`, never from the caller. Output contract
-    * matches [[KnnJoin]]: (query_id, neighbor_id, dist, rank).
+    * matches [[KnnJoin]]: (query_id, neighbor_id, dist, rank). A thin
+    * wrapper: it opens `dir` and runs [[probe]].
     */
   def search(
       spark: SparkSession,
@@ -1137,19 +1126,32 @@ object IvfIndex {
       nProbe: Int = 4,
       excludeSelf: Boolean = true,
       usePq: Boolean = false,
+      rerank: Int = 4): DataFrame =
+    probe(spark, open(spark, dir), queries, idCol, vecCol, k, nProbe,
+      excludeSelf, usePq, rerank)
+
+  /** [[search]]'s body over an opened snapshot. `keepAdcRank` carries
+    * the PQ shortlist's ADC rank as `__adc_rank` beside the exact rank
+    * ([[measureAdcDisplacement]]).
+    */
+  private[graft] def probe(
+      spark: SparkSession,
+      snap: Snapshot,
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      nProbe: Int = 4,
+      excludeSelf: Boolean = true,
+      usePq: Boolean = false,
       rerank: Int = 4,
-      preMeta: Option[(Array[Array[Float]], String)] = None,
-      prePq: Option[(PqCodebooks, Boolean)] = None,
       keepAdcRank: Boolean = false): DataFrame = {
     import spark.implicits._
     require(nProbe > 0, s"IvfIndex.search: nProbe must be positive, got $nProbe")
     require(!keepAdcRank || rerank > 0,
       "IvfIndex.search: keepAdcRank needs the PQ rerank path (rerank > 0)")
-    // preMeta: caller-loaded (centroids, metric) — a per-batch caller
-    // (the streaming ANN ingester) loads the metadata ONCE via
-    // [[loadIndexMeta]] and shares it between probe and append
-    val (centroids, metric) = preMeta.getOrElse(
-      (loadCentroids(spark, dir), loadMetric(spark, dir)))
+    val (dir, centroids, metric) =
+      (snap.dir, snap.meta.centroids, snap.meta.metric)
     val cosine = HnswSearch.isCosine(metric)
     // probe-cid selection via the native codegen expression (broadcast
     // codebook, no boxed Seq[Float] per query row)
@@ -1216,9 +1218,7 @@ object IvfIndex {
       // neighbors' vectors for exact distances (narrow id join against
       // the probed lists), which also restores the zero-vector-queries-
       // score-1.0 cosine convention that raw ADC cannot express.
-      // prePq: caller-loaded codebooks (the staleness probe's two
-      // searches and the post-build anchor measurement share ONE load)
-      val (pq, residual) = prePq.orElse(loadPq(spark, dir)).getOrElse(
+      val (pq, residual) = snap.meta.pq(spark).getOrElse(
         throw new IllegalArgumentException(
           s"IvfIndex.search(usePq = true): no pq/ codebooks under $dir — " +
             "build the index with pqM > 0"))

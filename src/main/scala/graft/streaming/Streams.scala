@@ -228,26 +228,18 @@ object Streams {
     val outPath = new org.apache.hadoop.fs.Path(outDir)
     val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(outPath, true)
-    // one (centroids, metric) load per LOOP, not per batch — the
-    // generation-keyed MetaMemo contract the ingest family runs: an
-    // index maintenance op committing between batches swaps the memo'd
-    // tables and forces a reload; plain appends (the shared-state case
-    // this serving loop documents) keep the cached copy
-    val metaMemo = new MetaMemo[(Array[Array[Float]], String)]
+    // IvfIndex.search opens the index per batch: its generation-keyed
+    // metadata memo reads (centroids, metric) once per loop, and again
+    // only after a maintenance op commits between batches
     spark.readStream
       .schema(querySchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(queriesDir)
       .writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val sp = batch.sparkSession
-        val meta = metaMemo.getOrLoad(graft.knn.IvfIndex.metaGen(sp, indexDir)) {
-          val (c, m, _) = graft.knn.IvfIndex.loadIndexMeta(sp, indexDir)
-          (c, m)
-        }
         graft.knn.IvfIndex
-          .search(sp, indexDir, batch.toDF(), idCol, vecCol,
-            k, nProbe, preMeta = Some(meta))
+          .search(batch.sparkSession, indexDir, batch.toDF(), idCol, vecCol,
+            k, nProbe)
           .write.mode("append").parquet(outDir)
         ()
       }
@@ -340,36 +332,6 @@ object Streams {
     ()
   }
 
-  /** Generation-keyed one-slot memo for index metadata that appends
-    * never touch (BM25 nBuckets, LSH band params, IVF centroids/metric/
-    * codebooks, HNSW params): loaded once per LOOP instead of once per
-    * BATCH.
-    *
-    * The memo is NOT unconditional, because "append-immutable" is not
-    * "loop-immutable": a rebuild/rebalance can commit — or be CRASH-
-    * RECOVERED by this loop's own in-lock recovery — BETWEEN batches,
-    * swapping the very tables the memo caches. An unkeyed memo would
-    * then keep serving the pre-swap IVF centroids and silently file
-    * later batches' vectors into lists whose quantizer was replaced (or
-    * band LSH signatures under dead params). Each `getOrLoad` therefore
-    * revalidates against the index's commit generation (the family's
-    * `metaGen` — a filesystem-metadata fingerprint of the swap-committed
-    * tables, zero Spark jobs, read AFTER the batch's in-lock recovery):
-    * same generation → cached value; any committed swap → reload. Each
-    * loop creates its own memo.
-    */
-  private[graft] final class MetaMemo[A] {
-    private val ref =
-      new java.util.concurrent.atomic.AtomicReference[Option[(Long, A)]](None)
-    def getOrLoad(gen: Long)(load: => A): A = ref.get match {
-      case Some((g, v)) if g == gen => v
-      case _ =>
-        val v = load
-        ref.set(Some((gen, v)))
-        v
-    }
-  }
-
   /** The event-time lateness gate of [[ingestBatch]]: `tsCol` is a LONG
     * event-time column in any monotone unit; `lateness` is how far below
     * the highest event time seen so far a row may still arrive.
@@ -417,24 +379,24 @@ object Streams {
     *    same directory instead of duplicating it — and then appended.
     *    The channel is `outDir` itself without a gate and
     *    `<outDir>/<family channel>` (beside `late/`) with one.
-    *  - METADATA is read once per loop through `memo`, revalidated
-    *    against the family's commit generation after this batch's
-    *    recovery ran.
+    *  - METADATA comes from the family's `open`, called after this
+    *    batch's recovery ran: its memo serves the snapshot's metadata
+    *    while the commit generation holds, so a loop reads it once and
+    *    again only after a commit that swapped it.
     *
     * End state: the committed index equals a one-shot build over
     * base ∪ admitted — index state is per document, so append order
     * cannot matter (the q91/q92/q95/q96 oracles pin it).
     */
-  private[graft] def ingestBatch[M](
+  private[graft] def ingestBatch[S](
       sp: SparkSession,
-      fam: IngestFamily[M],
+      fam: IngestFamily[S],
       indexDir: String,
       outDir: String,
       batchId: Long,
       batch: DataFrame,
       idCol: String,
-      gate: Option[LatenessGate],
-      memo: MetaMemo[M] = new MetaMemo[M]): Unit = {
+      gate: Option[LatenessGate]): Unit = {
     // lazy checkpoints: each frame is materialized by its first action
     // (the gate's one-pass agg) and reused from blocks after — eager
     // would pay one extra dedicated job per frame per batch
@@ -446,14 +408,13 @@ object Streams {
       .localCheckpoint(eager = false)
     watermarkGatedBatch(sp, indexDir, outDir, batchId, b,
         { fam.recover(sp, indexDir); committed }, idCol, gate) { fresh =>
-      val meta = memo.getOrLoad(fam.metaGen(sp, indexDir))(
-        fam.loadMeta(sp, indexDir))
+      val snap = fam.open(sp, indexDir)
       sp.sparkContext.setJobDescription("graft ingest: probe")
-      val (found, prepared) = fam.probe(sp, indexDir, fresh, committed, meta)
+      val (found, prepared) = fam.probe(sp, snap, fresh, committed)
       found.write.mode(SaveMode.Overwrite)
         .parquet(s"${channelDir(fam, outDir, gate)}/batch=$batchId")
       sp.sparkContext.setJobDescription("graft ingest: append")
-      fam.append(sp, indexDir, prepared, meta)
+      fam.append(sp, snap, prepared)
     }
   }
 
@@ -543,14 +504,13 @@ object Streams {
     } finally sp.sparkContext.setJobDescription(null) }
 
   /** The staged-file driver: one AvailableNow pass over `batchesDir`,
-    * every micro-batch through [[ingestBatch]] with one metadata memo
-    * for the loop. `outDir` is owned by the call (cleared first, so a
+    * every micro-batch through [[ingestBatch]]. `outDir` is owned by the call (cleared first, so a
     * rerun — whose fresh checkpoint replays every file — returns one
     * result set); returns the union of every batch's channel rows.
     */
-  private def ingestFiles[M](
+  private def ingestFiles[S](
       spark: SparkSession,
-      fam: IngestFamily[M],
+      fam: IngestFamily[S],
       batchesDir: String,
       batchSchema: StructType,
       indexDir: String,
@@ -558,7 +518,6 @@ object Streams {
       idCol: String,
       gate: Option[LatenessGate],
       maxFilesPerTrigger: Int): DataFrame = {
-    val memo = new MetaMemo[M]
     val checkpoint = java.nio.file.Files.createTempDirectory("graft_ingest_ckpt")
     graft.util.TempDirs.register(checkpoint.toString)
     val outPath = new org.apache.hadoop.fs.Path(outDir)
@@ -579,7 +538,7 @@ object Streams {
       .writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         ingestBatch(batch.sparkSession, fam, indexDir, outDir, batchId,
-          batch.toDF(), idCol, gate, memo)
+          batch.toDF(), idCol, gate)
       }
       .option("checkpointLocation", checkpoint.toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -606,9 +565,9 @@ object Streams {
     * probe rows of the re-admitted rows (an empty frame when the audit
     * channel has no recoverable rows).
     */
-  private def reingestLate[M](
+  private def reingestLate[S](
       spark: SparkSession,
-      fam: IngestFamily[M],
+      fam: IngestFamily[S],
       gatedOutDir: String,
       indexDir: String,
       outDir: String,

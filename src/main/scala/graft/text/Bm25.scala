@@ -98,9 +98,7 @@ object Bm25 {
       k1: Double, b: Double): DataFrame = {
     require(topK > 0, s"bm25: topK must be positive, got $topK")
     require(k1 >= 0 && b >= 0 && b <= 1, s"bm25: bad k1/b ($k1, $b)")
-    val core = contribCore(col("n_docs"), col("avgdl"), k1, b)
-    val contrib =
-      if (qterms.columns.contains("qw")) col("qw") * core else core
+    val contrib = contribCore(col("n_docs"), col("avgdl"), k1, b)
     rankTail(
       tf.join(dfreq, "term")                 // same term-keyed exchange
         .join(broadcast(qterms), "term")     // bounded query set
@@ -126,12 +124,7 @@ object Bm25 {
       broadcastQ: Boolean = true): DataFrame = {
     require(topK > 0, s"bm25: topK must be positive, got $topK")
     require(k1 >= 0 && b >= 0 && b <= 1, s"bm25: bad k1/b ($k1, $b)")
-    val core = contribCore(lit(nDocs), lit(avgdl), k1, b)
-    // same optional weighted-query (`qw`) contract as [[scoreFrom]] —
-    // the "identical by construction" claim has to hold for BOTH query
-    // shapes, not just the unweighted one
-    val contrib =
-      if (qterms.columns.contains("qw")) col("qw") * core else core
+    val contrib = contribCore(lit(nDocs), lit(avgdl), k1, b)
     // broadcastQ = false is the LARGE-query-side shape
     // (Bm25Index.searchTopK's over-cap fallback): qterms shuffles on
     // term into tfdf's existing term partitioning instead of being

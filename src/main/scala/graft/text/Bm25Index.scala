@@ -125,9 +125,9 @@ object Bm25Index {
     * any corpus size). The ONE text scan whose output feeds every
     * index-state consumer: the postings write ([[tfFromRows]] explode),
     * the doclens write ([[dlFromRows]] array sum — no shuffle either),
-    * and (via [[searchTopK]]'s `preQTerms`) the probe's query-term set.
-    * A streaming micro-batch computes this once, lazy-localCheckpoint-ed,
-    * and both its search and its append reuse it.
+    * and the probe's query-term set ([[probe]]'s `queryTerms`). A streaming
+    * micro-batch computes this once, lazy-localCheckpoint-ed, and both
+    * its probe and its append reuse it.
     */
   private[graft] def tokenRows(docs: DataFrame, idCol: String,
       textCol: String): DataFrame =
@@ -208,27 +208,23 @@ object Bm25Index {
     if (needCount) dl.count() else -1L
   }
 
-  /** The index's bucket count. Package-private so a per-batch caller can
-    * load params ONCE and hand them to both [[searchTopK]] (`preNBuckets`)
-    * and [[writeTf]], instead of paying the params collect twice per
-    * micro-batch.
-    */
-  private[graft] def loadParams(spark: SparkSession, dir: String): Int = {
-    val rows = spark.read.parquet(s"$dir/params").select("n_buckets").collect()
-    require(rows.length == 1, s"Bm25Index: malformed params under $dir")
-    rows.head.getInt(0)
-  }
+  /** The index's partitioning scheme: the `params/` row. */
+  private[graft] final case class Params(nBuckets: Int)
 
-  /** Commit-generation fingerprint of `params/` — the revalidation key
-    * for an ingest loop's per-loop params memo (see
-    * [[graft.knn.IvfIndex.metaGen]] for the failure this prevents: a
-    * rebuild committing between batches swaps the table the memo
-    * caches). Filesystem metadata only, no Spark jobs.
+  private[graft] type Snapshot = graft.util.Snapshot[Params]
+
+  private val memo = new graft.util.MetaMemo[Params](Seq("params"))
+
+  /** The snapshot [[probe]] and [[appendRows]] consume: the params come
+    * from a generation-keyed [[graft.util.MetaMemo]] (one one-row
+    * collect on a miss, none on a hit; a build commit is a miss).
     */
-  private[graft] def metaGen(spark: SparkSession, dir: String): Long =
-    graft.util.StagedTables.metaFingerprint(
-      new Path(dir).getFileSystem(spark.sessionState.newHadoopConf()),
-      dir, Seq("params"))
+  private[graft] def open(spark: SparkSession, dir: String): Snapshot =
+    memo.open(spark, dir) {
+      val rows = spark.read.parquet(s"$dir/params").select("n_buckets").collect()
+      require(rows.length == 1, s"Bm25Index: malformed params under $dir")
+      Params(rows.head.getInt(0))
+    }
 
   private def readPostings(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(postingsSchema).parquet(s"$dir/postings")
@@ -236,8 +232,8 @@ object Bm25Index {
   /** The committed-membership table: (id, th, dl). Exposed
     * (package-private) so per-batch callers — the streaming ingester's
     * freshness anti-join — can read it ONCE, lazy-localCheckpoint it, and
-    * hand the same frame to [[searchTopK]]'s `preDoclens` hook instead of
-    * re-scanning the corpus table per consumer.
+    * hand the same frame to [[probe]] instead of re-scanning the corpus
+    * table per consumer.
     */
   private[graft] def readDoclens(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(doclensSchema).parquet(s"$dir/doclens")
@@ -257,7 +253,7 @@ object Bm25Index {
       textCol: String): Long =
     graft.util.IndexLock.withLock(spark, dir, "Bm25Index.append") {
       recover(spark, dir)
-      val nBuckets = loadParams(spark, dir)
+      val nBuckets = open(spark, dir).meta.nBuckets
       val ids = newDocs.select(col(idCol).cast("long").as("id"))
       require(ids.groupBy("id").count().filter(col("count") > 1).isEmpty,
         "Bm25Index.append: duplicate ids within the appended batch")
@@ -267,14 +263,13 @@ object Bm25Index {
     }
 
   /** Streaming-batch append over a caller-shared [[tokenRows]] frame
-    * and preloaded bucket count: the per-batch fast path — no
-    * re-tokenize, no params read, no count job, no clustering exchange.
-    * The caller holds the writer lock and owns the guards [[append]]
-    * runs (the ingest driver's freshness and one-row-per-id gate).
+    * and an opened snapshot: the per-batch fast path — no re-tokenize,
+    * no params read, no count job, no clustering exchange. The caller
+    * holds the writer lock and owns the guards [[append]] runs (the
+    * ingest driver's freshness and one-row-per-id gate).
     */
-  private[graft] def appendRows(dir: String, rows: DataFrame,
-      nBuckets: Int): Unit = {
-    writeTf(tfFromRows(rows), dlFromRows(rows), dir, nBuckets,
+  private[graft] def appendRows(snap: Snapshot, rows: DataFrame): Unit = {
+    writeTf(tfFromRows(rows), dlFromRows(rows), snap.dir, snap.meta.nBuckets,
       SaveMode.Append, needCount = false, repartitionByBucket = false); ()
   }
 
@@ -299,12 +294,8 @@ object Bm25Index {
     * table and erases every uncommitted epoch; the ranking window
     * partitions per query.
     *
-    * `preDoclens`: a pre-read `doclens/` frame (from [[readDoclens]],
-    * ideally lazy-localCheckpoint-ed) to reuse for BOTH the N/avgdl
-    * stats aggregation and the candidate join — per-batch callers that
-    * already scanned doclens for a freshness anti-join pass it so the
-    * corpus table is scanned once per batch, not three times. None =
-    * read from the index.
+    * A thin wrapper: it opens `dir` and probes it with the queries'
+    * distinct terms and the committed `doclens/` table ([[probe]]).
     */
   def searchTopK(
       spark: SparkSession,
@@ -315,32 +306,38 @@ object Bm25Index {
       topK: Int = 10,
       k1: Double = 1.2,
       b: Double = 0.75,
-      preDoclens: Option[DataFrame] = None,
-      preQTerms: Option[DataFrame] = None,
-      preNBuckets: Option[Int] = None,
+      maxDriverQueryTerms: Int = 100000): DataFrame =
+    probe(spark, open(spark, dir), Bm25.queryTerms(queries, qIdCol, qTextCol),
+      readDoclens(spark, dir), topK, k1, b, maxDriverQueryTerms)
+
+  /** [[searchTopK]]'s body over an opened snapshot. `queryTerms` is the
+    * (query_id, term) set, one row per distinct term of each query — a
+    * streaming micro-batch derives it from the [[tokenRows]] pass its
+    * append reuses (tf rows are unique per (id, term)). `dl` is the
+    * committed (id, th, dl) frame ([[readDoclens]], ideally
+    * lazy-localCheckpoint-ed), used for BOTH the N/avgdl stats and the
+    * candidate join, so a batch that already read it for its freshness
+    * join scans the corpus table once.
+    */
+  private[graft] def probe(
+      spark: SparkSession,
+      snap: Snapshot,
+      queryTerms: DataFrame,
+      dl: DataFrame,
+      topK: Int = 10,
+      k1: Double = 1.2,
+      b: Double = 0.75,
       maxDriverQueryTerms: Int = 100000): DataFrame = {
     require(maxDriverQueryTerms > 0,
       "Bm25Index.searchTopK: maxDriverQueryTerms must be positive")
-    val nBuckets = preNBuckets.getOrElse(loadParams(spark, dir))
-    // preQTerms: a caller-supplied (query_id, term[, qw]) frame — a
-    // streaming micro-batch that already tokenized the batch for its
-    // index append ([[tokenRows]] → [[tfFromRows]]) derives the
-    // query-term set from the same checkpointed pass (tf rows are
-    // unique per (id, term), matching queryTerms' per-document
-    // distinctness) instead of re-tokenizing the text
-    preQTerms.foreach { q =>
-      require(q.columns.contains("query_id") && q.columns.contains("term"),
-        "Bm25Index.searchTopK: preQTerms needs (query_id, term) columns")
-    }
-    val qterms0 = preQTerms.getOrElse(
-      Bm25.queryTerms(queries, qIdCol, qTextCol))
+    val (dir, nBuckets) = (snap.dir, snap.meta.nBuckets)
     // lazy checkpoint: the limit-probe below consumes one evaluation,
     // and the over-cap fallback consumes THREE more (bucket distinct,
     // left-semi prune, scoring join) — without it a corpus-sized query
     // frame would pay its tokenization four times; the serving path
     // pays one batch-sized cache it would have paid as a broadcast
     // anyway
-    val qtWithBucket = qterms0
+    val qtWithBucket = queryTerms
       .withColumn("__bucket", pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
       .localCheckpoint(eager = false)
     // ONE BOUNDED driver collect serves the bucket set (the static
@@ -377,7 +374,6 @@ object Bm25Index {
     // which q98 pays per micro-batch (the r20 verdict's q98 +20%
     // regression). Two overlapped actions keep the executeTake shape
     // and hide the stats round-trip behind it.
-    val dl = preDoclens.getOrElse(readDoclens(spark, dir))
     val statsFut = java.util.concurrent.CompletableFuture.supplyAsync { () =>
       dl.agg(count(lit(1)).cast("double").as("__n_docs"),
         avg("dl").as("__avgdl")).collect().head
@@ -413,17 +409,17 @@ object Bm25Index {
     // a left-semi join in the over-cap fallback.
     val (pruned, qterms, broadcastQ) =
       if (fitsDriver) {
-        // row layout: qterms0 cols ++ (__bucket)
+        // row layout: queryTerms cols ++ (__bucket)
         val buckets = qtCollected.map(r => r.getLong(r.length - 1)).distinct
         val q = {
           import scala.jdk.CollectionConverters._
           spark.createDataFrame(
             qtCollected.map(r => org.apache.spark.sql.Row(r.toSeq.dropRight(1): _*))
               .toList.asJava,
-            qterms0.schema)
+            queryTerms.schema)
         }
         val termSet = qtCollected.map(_.getString(
-          qterms0.schema.fieldIndex("term"))).toSet
+          queryTerms.schema.fieldIndex("term"))).toSet
         (readPostings(spark, dir)
           .filter(col("bucket").isin(buckets.toSeq: _*))
           .filter(col("term").isInCollection(termSet)), q, true)
@@ -510,7 +506,7 @@ object Bm25Index {
   private def vacuumImpl(spark: SparkSession, dir: String, doclenFiles: Int): Long = {
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
     recover(spark, dir)
-    val nBuckets = loadParams(spark, dir)
+    val nBuckets = open(spark, dir).meta.nBuckets
 
     val dl = readDoclens(spark, dir)
     val postings = readPostings(spark, dir)

@@ -158,8 +158,8 @@ object StagedTables {
   }
 
   /** Commit-generation fingerprint of a set of swap-committed metadata
-    * tables — the cache key that lets a long-running reader (an ingest
-    * loop's per-loop metadata memo) detect that a marker-protected swap
+    * tables — the cache key that lets a long-running reader (a family's
+    * [[MetaMemo]] behind its `open`) detect that a marker-protected swap
     * replaced a table between its reads. Folds every direct entry's
     * (name, length, modification time) of each table directory plus the
     * directory's own mtime: a swap renames a freshly-staged `<t>.tmp`

@@ -47,17 +47,6 @@ class Bm25IndexSpec extends SparkSpec {
     val viaCollect = rows(Bm25Index.searchTopK(spark, dir, corpusQ,
       "qid", "text", topK = 5))
     assert(viaFallback == viaCollect && viaFallback.nonEmpty)
-    // weighted (qw) queries flow through the fallback's non-broadcast
-    // scoring join too
-    import spark.implicits._
-    val terms = queries.select(col("qid").cast("long").as("query_id"),
-        explode(split(trim(lower(col("text"))), "\\s+")).as("term"))
-      .distinct().withColumn("qw", lit(2.0))
-    val wFall = rows(Bm25Index.searchTopK(spark, dir, queries, "qid", "text",
-      preQTerms = Some(terms), maxDriverQueryTerms = 1))
-    val wColl = rows(Bm25Index.searchTopK(spark, dir, queries, "qid", "text",
-      preQTerms = Some(terms)))
-    assert(wFall == wColl && wFall.nonEmpty)
     intercept[IllegalArgumentException] {
       Bm25Index.searchTopK(spark, dir, queries, "qid", "text",
         maxDriverQueryTerms = 0)
@@ -79,37 +68,6 @@ class Bm25IndexSpec extends SparkSpec {
     val uncapped = rows(Bm25Index.searchTopK(spark, dir, queries, "qid",
       "text", maxDriverQueryTerms = Int.MaxValue))
     assert(uncapped == reference)
-  }
-
-  test("weighted preQTerms (qw) scale contributions — the scoreFrom contract") {
-    val dir = tempDir("qw")
-    Bm25Index.build(docs, "doc_id", "text", dir)
-    import spark.implicits._
-    val qt = Bm25Index.searchTopK(spark, dir, queries, "qid", "text") // warm
-    assert(qt.count() > 0)
-    // qw = 1.0 on every term ≡ the unweighted query — the probe path
-    // must honor the optional qw column exactly like the one-shot
-    // scoreFrom does (it silently ignoring qw would return unweighted
-    // scores for a weighted RM3-style rescoring query)
-    val terms = queries.select(col("qid").cast("long").as("query_id"),
-        explode(split(trim(lower(col("text"))), "\\s+")).as("term"))
-      .distinct()
-    val unweighted = rows(Bm25Index.searchTopK(spark, dir, queries,
-      "qid", "text", preQTerms = Some(terms)))
-    val unit = rows(Bm25Index.searchTopK(spark, dir, queries,
-      "qid", "text", preQTerms = Some(terms.withColumn("qw", lit(1.0)))))
-    assert(unit == unweighted && unit.nonEmpty)
-    // qw = 2.0 doubles every contribution: scores double (to the shared
-    // 4-dp round), ranks unchanged
-    val doubled = Bm25Index.searchTopK(spark, dir, queries,
-        "qid", "text", preQTerms = Some(terms.withColumn("qw", lit(2.0))))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val base = unweighted.map { case (q, id, s, r) => (q, id) -> (s, r) }.toMap
-    doubled.foreach { case (q, id, s, r) =>
-      val (s0, r0) = base((q, id))
-      assert(math.abs(s - 2 * s0) < 2e-4 && r == r0,
-        s"qw=2 must double the score for ($q,$id): got $s vs 2*$s0")
-    }
   }
 
   test("append ≡ rebuild: identical probe results, id guards enforced") {

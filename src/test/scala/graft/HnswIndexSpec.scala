@@ -55,7 +55,7 @@ class HnswIndexSpec extends SparkSpec {
     // HnswGraph.restore → the per-shard beam (k + 1, self dropped) → the
     // global (dist, neighbor_id) top-k merge
     def oracle(): Set[(Long, Long, Double, Int)] = {
-      val params = HnswIndex.loadParams(spark, dir)
+      val params = HnswIndex.open(spark, dir).meta
       val (_, shardGens, _) = HnswIndex.readManifest(spark, dir)
       shardGens.toSeq.flatMap { case (s, g) =>
         val graph = HnswGraph.restore(params.m, cosine = false, shardRows(dir, s, g))
@@ -1087,18 +1087,17 @@ class HnswIndexSpec extends SparkSpec {
     val sA = HnswIndex.search(spark, dirA, base.limit(50), "vec_id",
       "embedding", k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    // fast path: caller-loaded params, guards skipped (the streaming
-    // ingester's contract — freshness established by its marker join,
-    // within-batch uniqueness by input contract)
+    // fast path: one opened snapshot shared by append and probe, guards
+    // skipped (the streaming ingester's contract — freshness established
+    // by its marker join, within-batch uniqueness by input contract)
     val dirB = tempDir("fastpath_b")
     HnswIndex.build(base, "vec_id", "embedding", dirB, shards = 4)
-    val params = HnswIndex.loadParams(spark, dirB)
+    val snap = HnswIndex.open(spark, dirB)
     graft.util.IndexLock.withLock(spark, dirB, "spec") {
-      HnswIndex.appendPrepared(spark, dirB, batch, "vec_id", "embedding",
-        params)
+      HnswIndex.appendPrepared(spark, snap, batch, "vec_id", "embedding")
     }
-    val sB = HnswIndex.search(spark, dirB, base.limit(50), "vec_id",
-      "embedding", k = 5, preParams = Some(params)).collect()
+    val sB = HnswIndex.probe(spark, HnswIndex.open(spark, dirB), base.limit(50),
+      "vec_id", "embedding", k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     assert(sA == sB, "fast-path append/search must answer identically")
     // committed id sets agree too (the append filed the same nodes)
@@ -1117,11 +1116,10 @@ class HnswIndexSpec extends SparkSpec {
     // (index-vs-batch, not within-batch) never could
     val dup = emb.filter(col("vec_id") < 5)
       .select((col("vec_id") % 2 + 1000000).as("vec_id"), col("embedding"))
-    val params = HnswIndex.loadParams(spark, dir)
+    val snap = HnswIndex.open(spark, dir)
     val e = intercept[org.apache.spark.SparkException] {
       graft.util.IndexLock.withLock(spark, dir, "spec") {
-        HnswIndex.appendPrepared(spark, dir, dup, "vec_id", "embedding",
-          params)
+        HnswIndex.appendPrepared(spark, snap, dup, "vec_id", "embedding")
       }
     }
     assert(e.getMessage.contains("duplicate label") ||
@@ -1132,8 +1130,7 @@ class HnswIndexSpec extends SparkSpec {
     val reins = base.filter(col("vec_id") < 3)
     val e2 = intercept[org.apache.spark.SparkException] {
       graft.util.IndexLock.withLock(spark, dir, "spec") {
-        HnswIndex.appendPrepared(spark, dir, reins, "vec_id", "embedding",
-          params)
+        HnswIndex.appendPrepared(spark, snap, reins, "vec_id", "embedding")
       }
     }
     assert(e2.getMessage.contains("duplicate label") ||

@@ -246,7 +246,7 @@ class LshDedupIndexSpec extends SparkSpec {
     // vacuum's entry recovery must finish the BUILD
     LshDedupIndex.vacuum(spark, dir)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_build_commit")))
-    assert(LshDedupIndex.loadParams(spark, dir) == ((3, 8, 2)),
+    assert(LshDedupIndex.open(spark, dir).meta == LshDedupIndex.Params(3, 8, 2),
       "staged params not live after recovery")
     assert(graft.streaming.IngestWatermark.read(spark, dir) == Long.MinValue,
       "previous corpus's watermark survived the rolled-forward build")
@@ -265,7 +265,7 @@ class LshDedupIndexSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/params.tmp")))
     assert(graft.streaming.IngestWatermark.read(spark, dir) == 77L,
       "rollback cleared the live corpus's watermark")
-    assert(LshDedupIndex.loadParams(spark, dir) == ((3, 8, 2)))
+    assert(LshDedupIndex.open(spark, dir).meta == LshDedupIndex.Params(3, 8, 2))
   }
 
   test("vacuum recovers a crashed swap on entry") {

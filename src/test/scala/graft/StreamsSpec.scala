@@ -283,8 +283,9 @@ class StreamsSpec extends SparkSpec {
       StructField("text", StringType)))
     Streams.dedupIngestOnce(spark, s"$base/batches", schema,
       s"$base/index", s"$base/out", "doc_id", "text").count()
-    assert(graft.dedup.LshDedupIndex.loadParams(spark, s"$base/index") ==
-      ((3, 8, 2)), "crashed build not rolled forward before the batch")
+    assert(graft.dedup.LshDedupIndex.open(spark, s"$base/index").meta ==
+      graft.dedup.LshDedupIndex.Params(3, 8, 2),
+      "crashed build not rolled forward before the batch")
     // end state ≡ one-shot build over (new corpus ∪ batch) at new params
     val dirAll = Files.createTempDirectory("dedup_heal_all").toString
     graft.dedup.LshDedupIndex.build(corpus2.unionByName(batch),
@@ -565,8 +566,8 @@ class StreamsSpec extends SparkSpec {
         shards = 2)))
 
   /** The family with an append that dies after the channel write. */
-  private def crashBeforeAppend[M](f: IngestFamily[M]): IngestFamily[M] =
-    f.copy(append = (_, _, _, _) =>
+  private def crashBeforeAppend[S](f: IngestFamily[S]): IngestFamily[S] =
+    f.copy(append = (_, _, _) =>
       throw new RuntimeException("crash before append"))
 
   familyCases.foreach { c =>
@@ -1003,38 +1004,17 @@ class StreamsSpec extends SparkSpec {
     "generation (a rebuild/rebalance committed between batches) forces " +
     "a reload instead of serving the pre-swap metadata") {
     var loads = 0
-    val memo = new graft.streaming.Streams.MetaMemo[Int]
-    assert(memo.getOrLoad(10L) { loads += 1; 7 } == 7)
-    assert(memo.getOrLoad(10L) { loads += 1; 99 } == 7)
+    val memo = new graft.util.MetaMemo[Int](Seq("params"))
+    assert(memo.getOrLoad("file:/idx", 10L) { loads += 1; 7 } == 7)
+    assert(memo.getOrLoad("file:/idx", 10L) { loads += 1; 99 } == 7)
     assert(loads == 1, "metadata loaded more than once per generation")
     // the swap: a new fingerprint invalidates the slot
-    assert(memo.getOrLoad(11L) { loads += 1; 42 } == 42)
-    assert(memo.getOrLoad(11L) { loads += 1; 99 } == 42)
+    assert(memo.getOrLoad("file:/idx", 11L) { loads += 1; 42 } == 42)
+    assert(memo.getOrLoad("file:/idx", 11L) { loads += 1; 99 } == 42)
     assert(loads == 2, "post-swap metadata not reloaded exactly once")
-  }
-
-  test("IvfIndex.metaGen: stable across appends, changed by a rebalance " +
-    "commit — the revalidation key that keeps a mid-loop rebalance from " +
-    "leaving later batches probing with replaced centroids") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("metagen_ivf").toString
-    val vecs = (0 until 60)
-      .map(i => (i.toLong, Array.fill(4)(i.toFloat / 60)))
-      .toDF("id", "vec")
-    graft.knn.IvfIndex.build(vecs, "id", "vec", dir, nList = 2)
-    val g0 = graft.knn.IvfIndex.metaGen(spark, dir)
-    assert(g0 == graft.knn.IvfIndex.metaGen(spark, dir),
-      "fingerprint not deterministic")
-    // appends grow assignments/ only — the memo'd tables are untouched
-    graft.knn.IvfIndex.append(spark, dir,
-      Seq((100L, Array(0.9f, 0.9f, 0.9f, 0.9f))).toDF("id", "vec"),
-      "id", "vec")
-    assert(graft.knn.IvfIndex.metaGen(spark, dir) == g0,
-      "append must not invalidate the metadata memo")
-    // a rebalance swaps centroids+params: the fingerprint MUST move
-    graft.knn.IvfIndex.rebalance(spark, dir, nList = 5)
-    val g1 = graft.knn.IvfIndex.metaGen(spark, dir)
-    assert(g1 != g0, "rebalance commit did not change the fingerprint")
+    // another directory at the same generation is another index
+    assert(memo.getOrLoad("file:/other", 11L) { loads += 1; 5 } == 5)
+    assert(loads == 3, "a second directory was served the first one's metadata")
   }
 
   test("annIngestBatch after a mid-loop rebalance: the shared memo " +
@@ -1048,17 +1028,16 @@ class StreamsSpec extends SparkSpec {
       (30 until 60).map(i => (i.toLong, Array.fill(8)(10f + 0.01f * i % 0.3f))))
       .toDF("id", "vec")
     graft.knn.IvfIndex.build(base, "id", "vec", dir, nList = 2)
-    val memo = new Streams.MetaMemo[IngestFamily.IvfMeta]
     val fam = IngestFamily.ann("id", "vec", k = 3, nProbe = 2)
     val gate = Some(Streams.LatenessGate("ts", lateness = 10L))
     def batch(id: Long, fill: Float) =
       Seq((id, Array.fill(8)(fill), 1000L)).toDF("id", "vec", "ts")
     Streams.ingestBatch(spark, fam, dir, out, 0L, batch(100L, 0.1f), "id",
-      gate, memo)
+      gate)
     // the mid-loop maintenance op: retrains the quantizer (5 lists)
     graft.knn.IvfIndex.rebalance(spark, dir, nList = 5)
     Streams.ingestBatch(spark, fam, dir, out, 1L, batch(200L, 9.9f), "id",
-      gate, memo)
+      gate)
     // the proof: id 200's persisted cid equals the nearest-centroid
     // assignment under the LIVE (post-rebalance) centroids — a stale
     // memo would have filed it under the dead 2-list quantizer
