@@ -610,8 +610,8 @@ object SparkEntry {
     }),
 
     // Persistent sharded-HNSW index (graph counterpart of q41's IVF
-    // layout): build writes the graph state as node rows plus one graph
-    // image per shard, search restores each shard exactly from its image
+    // layout): build writes each shard's graph as one graph image,
+    // search restores each shard exactly from its image
     // and beams the broadcast queries — recall-gated like q45 (floor 0.8)
     "q49_hnsw_index" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
@@ -1738,7 +1738,7 @@ object SparkEntry {
 
     // HNSW re-shard parity with the IVF rebalance (q90): build sharded,
     // re-shard IN PLACE to a different shard count (per-shard graphs
-    // rebuilt from persisted node rows under the writer lock), then
+    // rebuilt from the persisted shard images under the writer lock), then
     // search at FULL beam — every shard's whole graph is explored, so
     // the merged top-k must equal brute-force kNN over the corpus no
     // matter how reshard re-filed the nodes. The corpus/query cut is

@@ -16,8 +16,8 @@ import scala.collection.mutable
   * candidate PARTITION — sharded HNSW, the standard horizontal
   * deployment. Builds are independent and memory-bounded by partition
   * size, and a graph is never shuffled. A persisted shard
-  * ([[HnswIndex]]) is also serialized once, as its [[HnswImage]], which
-  * the shard's search task reads back whole.
+  * ([[HnswIndex]]) is stored once, as its [[HnswImage]], which the
+  * shard's search or append task reads back whole.
   */
 final class HnswGraph(
     m: Int = 16,

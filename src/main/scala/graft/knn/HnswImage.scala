@@ -7,10 +7,10 @@ import scala.collection.immutable.ArraySeq
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-/** The binary graph image of one persisted [[HnswIndex]] shard: the
-  * [[HnswGraph.nodes]] snapshot as flat arrays, so a search task restores
-  * its shard from one bulk read instead of scanning and decoding node
-  * rows. Little-endian, in this order:
+/** The binary graph image of one persisted [[HnswIndex]] shard, and the
+  * shard's only stored form: the [[HnswGraph.nodes]] snapshot as flat
+  * arrays, so a task restores its shard from one bulk read.
+  * Little-endian, in this order:
   *
   *  - header: magic `HNSW`, format version, node count `n`, vector
   *    dimension `dim` (int each);
@@ -21,16 +21,16 @@ import org.apache.hadoop.fs.Path
   *    then level order, `L` the sum of the level counts;
   *  - links `int[offsets(L)]` (neighbor positions).
   *
-  * Nodes are stored in insertion (`pos`) order, the order
-  * [[HnswGraph.restore]] expects.
+  * Nodes are stored in insertion order, the order [[HnswGraph.restore]]
+  * expects. The header and the ids come first, so [[readIds]] reads
+  * only them.
   */
 private[graft] object HnswImage {
 
   type Node = (Long, Array[Float], Seq[Seq[Int]])
 
-  /** The image's file name inside its shard directory. The leading `_`
-    * keeps it out of every parquet read of `nodes/` (Spark skips hidden
-    * files), so node-row readers see exactly the rows.
+  /** The image's file name inside its shard directory; the name is kept
+    * for on-disk compatibility.
     */
   val FileName = "_graph.bin"
 
@@ -65,16 +65,9 @@ private[graft] object HnswImage {
     * trailing bytes fail with an `IllegalStateException`.
     */
   def decode(bytes: Array[Byte]): IndexedSeq[Node] = {
-    def corrupt(what: String) =
-      throw new IllegalStateException(s"corrupt graph image: $what")
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     try {
-      if (buf.getInt() != Magic) corrupt("bad magic")
-      val version = buf.getInt()
-      if (version != Version) corrupt(s"format version $version")
-      val n = buf.getInt()
-      val dim = buf.getInt()
-      if (n < 0 || dim < 0) corrupt(s"n=$n, dim=$dim")
+      val (n, dim) = header(buf)
       if (buf.remaining < 8L * n + 4L * n * dim + 4L * n)
         corrupt(s"truncated: $n nodes of dimension $dim do not fit")
       val ids = new Array[Long](n)
@@ -109,6 +102,20 @@ private[graft] object HnswImage {
     } catch { case _: BufferUnderflowException => corrupt("truncated") }
   }
 
+  private def corrupt(what: String) =
+    throw new IllegalStateException(s"corrupt graph image: $what")
+
+  /** Check the header at `buf`'s position and return its (n, dim). */
+  private def header(buf: ByteBuffer): (Int, Int) = {
+    if (buf.getInt() != Magic) corrupt("bad magic")
+    val version = buf.getInt()
+    if (version != Version) corrupt(s"format version $version")
+    val n = buf.getInt()
+    val dim = buf.getInt()
+    if (n < 0 || dim < 0) corrupt(s"n=$n, dim=$dim")
+    (n, dim)
+  }
+
   /** Publish `nodes`' image into `shardDir`: written whole under a
     * unique hidden temp name, then renamed, so a failed or retried task
     * attempt never leaves a torn image. Two attempts of one task build
@@ -136,5 +143,23 @@ private[graft] object HnswImage {
     val in = fs.open(file)
     try in.readFully(bytes) finally in.close()
     decode(bytes)
+  }
+
+  /** The image's ids alone: the header and the `long[n]` block, never
+    * the vectors or the links. The rest of the image is not checked.
+    */
+  def readIds(conf: Configuration, file: Path): IndexedSeq[Long] = {
+    val in = file.getFileSystem(conf).open(file)
+    try {
+      val head = new Array[Byte](HeaderBytes)
+      in.readFully(head)
+      val (n, _) = header(ByteBuffer.wrap(head).order(ByteOrder.LITTLE_ENDIAN))
+      val block = new Array[Byte](8 * n)
+      in.readFully(block)
+      val ids = new Array[Long](n)
+      ByteBuffer.wrap(block).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().get(ids)
+      ArraySeq.unsafeWrapArray(ids)
+    } catch { case _: java.io.EOFException => corrupt("truncated") }
+    finally in.close()
   }
 }

@@ -9,24 +9,20 @@ import org.apache.spark.sql.functions._
 /** Persistent sharded HNSW index — the graph-ANN counterpart of
   * [[IvfIndex]]'s index-as-data layout (reference: hnswlib
   * `save_index`/`load_index`, DeepJoin/annIndex.py:42–51, a single-machine
-  * byte blob; here the graph state is a table plus one blob per shard):
+  * byte blob; here one blob per shard):
   *
-  *  - `nodes/g=<gen>/shard=<s>/` — one parquet row per graph node:
-  *    (g, shard, pos, id, vec, links: array<array<int>>), `pos` the
-  *    insertion position within its shard, links holding neighbor
-  *    positions per level. Generation directories are IMMUTABLE once
-  *    written — append never rewrites a live file;
-  *  - `nodes/g=<gen>/shard=<s>/_graph.bin` — the shard's graph image
-  *    ([[HnswImage]]): the same nodes in `pos` order as flat arrays,
-  *    written by the task that built or rebuilt the shard's graph
-  *    (temp name, then rename). The leading `_` hides it from every
-  *    parquet read of `nodes/`, and it lives and dies with its shard
-  *    directory (staging, retire, vacuum);
+  *  - `nodes/g=<gen>/shard=<s>/_graph.bin` — the shard: its graph image
+  *    ([[HnswImage]]), every node's id, vector and links per level in
+  *    insertion order, written by the task that built or rebuilt the
+  *    shard's graph (temp name, then rename). Generation directories
+  *    are IMMUTABLE once committed — append writes touched shards into
+  *    the next generation and never rewrites a live file; a shard
+  *    directory lives and dies whole (staging, retire, vacuum);
   *  - `manifest/m<gen>.json` — the commit marker: which generation is
-  *    live for each shard. Written whole to a temp name then renamed
-  *    (atomic on HDFS/local), and readers take the highest-numbered
-  *    manifest — so a crash anywhere in append leaves the previous
-  *    manifest pointing at fully-intact state, and orphaned
+  *    live for each shard, and its node count. Written whole to a temp
+  *    name then renamed (atomic on HDFS/local), and readers take the
+  *    highest-numbered manifest — so a crash anywhere in append leaves
+  *    the previous manifest pointing at fully-intact state, and orphaned
   *    new-generation files are simply never referenced;
   *  - `params/` — one row (m, metric, shards, ef_construction,
   *    ef_search, rc_median, rc_q25): the hyperparameters the graphs
@@ -44,26 +40,24 @@ import org.apache.spark.sql.functions._
   * order within a shard is ascending HASH-of-id (a seeded chain distinct
   * from the shard hash — see [[shardGraphFrame]] for the measured reason
   * arrival must be decorrelated from raw id order) — so the persisted
-  * index is byte-deterministic for a given dataset. Search restores each shard's
-  * graph EXACTLY ([[HnswGraph.restore]] — adjacency, entry point, top
-  * level) and runs the same [[HnswSearch]] broadcast-query beam as
-  * [[ApproxKnn.hnswKnn]]; a restored index answers identically to the
-  * index that was saved.
+  * index is byte-deterministic for a given dataset. Every reader
+  * restores a shard's graph EXACTLY from its image ([[HnswGraph.restore]]
+  * — adjacency, entry point, top level); search runs the same
+  * [[HnswSearch]] broadcast-query beam as [[ApproxKnn.hnswKnn]], so a
+  * restored index answers identically to the index that was saved.
   *
   * Serving contract: [[search]] runs one task per live shard, and each
   * task reads only that shard's graph image, so a request moves the
   * broadcast queries in and the k·|Q|·S partial rows out, never the
-  * index. No search path reads node rows: a live shard whose image is
-  * missing or disagrees with the manifest count fails the search with a
-  * named `IllegalStateException`, and [[reshard]] to the same count
-  * (which reads node rows and rewrites every shard) is the repair.
-  * Node rows stay the source for [[append]], [[reshard]], [[stats]] and
-  * [[readIds]].
+  * index. A live shard whose image is missing, unreadable or disagrees
+  * with the manifest count fails every reader with a named
+  * `IllegalStateException`: the image is the shard's only stored form,
+  * so the repair is a [[build]] from the source corpus.
   */
 object HnswIndex {
 
-  /** Build the per-shard graphs and persist them as node rows plus one
-    * graph image per shard. Returns the node count written.
+  /** Build the per-shard graphs and persist each as its graph image.
+    * Returns the node count written.
     *
     * Every build is GENERATION-STAGED and atomic ([[commitGeneration]],
     * shared with [[reshard]]): the new corpus's graphs land in the next
@@ -85,7 +79,7 @@ object HnswIndex {
     * escalation gate took in r19 ([[graft.pipeline.SemLinkGrid]]):
     * past [[ShapeProbeAbove]] nodes, one
     * [[ShapeStats.relativeContrastStats]] pass over the just-written
-    * node rows (the exact corpus the index will serve; no re-read of
+    * images (the exact corpus the index will serve; no re-read of
     * the caller's upstream lineage) classifies the catalog, and a
     * spread shape (q25 ≤ [[ShapeStats.SpreadRcMax]]) gets the measured
     * [[BeamLaw.SpreadBaseEf]] while a clustered one keeps
@@ -232,18 +226,19 @@ object HnswIndex {
     * over a live index) and [[reshard]]: every shard graph of `corpus`
     * under `p` stages into `nodes/g=<gen+1>` — a directory with no
     * committed manifest counts as generation −1, so a fresh build writes
-    * g=0 — without touching a live file. The written rows are counted by
-    * shard (and, for `p.efSearch` = [[UseIndexDefault]], shape-probed —
-    * the serving beam is resolved from the corpus the index will actually
-    * serve), `params.tmp` stages, and [[graft.util.StagedTables.commit]]
-    * publishes the marker (`build:<g>` on a build, bare `<g>` on a
-    * reshard), swaps params and writes the manifest — the commit point
-    * [[recover]] pivots on. A build also clears ingest state in that
-    * window: a fresh corpus must not inherit the previous corpus's
-    * high-water mark, while a reshard keeps the corpus and its watermark.
-    * The superseded shard directories retire after the commit. Returns
-    * the node count written. The caller holds the writer lock and has
-    * run [[recover]].
+    * g=0 — without touching a live file. Each build task returns its
+    * shard's node count, collected as the manifest counts (for
+    * `p.efSearch` = [[UseIndexDefault]] the staged images are also
+    * shape-probed — the serving beam is resolved from the corpus the
+    * index will actually serve), `params.tmp` stages, and
+    * [[graft.util.StagedTables.commit]] publishes the marker
+    * (`build:<g>` on a build, bare `<g>` on a reshard), swaps params and
+    * writes the manifest — the commit point [[recover]] pivots on. A
+    * build also clears ingest state in that window: a fresh corpus must
+    * not inherit the previous corpus's high-water mark, while a reshard
+    * keeps the corpus and its watermark. The superseded shard directories
+    * retire after the commit. Returns the node count written. The caller
+    * holds the writer lock and has run [[recover]].
     */
   private def commitGeneration(dir: String, corpus: DataFrame, p: Params,
       build: Boolean, shapeProbeAbove: Long = ShapeProbeAbove): Long = {
@@ -254,28 +249,21 @@ object HnswIndex {
       .map { case (g, shardGens, _) => (g, shardGens) }
       .getOrElse((-1, Map.empty[Int, Int]))
     val next = gen + 1
-    val staged = new Path(s"$dir/nodes/g=$next")
     // anything already under g=<next> is debris from a crashed attempt
-    // (a stray fresh build included): staging into it un-cleared would
-    // commit duplicated node rows
-    fs.delete(staged, true)
-    shardGraphFrame(corpus, p.m, p.efConstruction,
+    // (a stray fresh build included): HnswImage.write keeps an image it
+    // finds in place, so staging into it un-cleared could commit the
+    // debris instead of this corpus's graph
+    fs.delete(new Path(s"$dir/nodes/g=$next"), true)
+    val counts = shardGraphFrame(corpus, p.m, p.efConstruction,
         HnswSearch.isCosine(p.metric), p.seed, p.shards, dir, next)
-      .write.mode(SaveMode.Append)
-      .partitionBy("g", "shard")
-      .parquet(s"$dir/nodes")
-    // an empty reshard writes no generation directory
-    val written = if (!fs.exists(staged)) None
-      else Some(spark.read.option("basePath", s"$dir/nodes")
-        .parquet(staged.toString))
-    val byShard = written.toSeq
-      .flatMap(_.groupBy("shard").count().as[(Int, Long)].collect())
-    val n = byShard.map(_._2).sum
+      .as[(Int, Long)].collect().toMap
+    val staged = counts.map { case (s, _) => s -> next }
+    val n = counts.values.sum
     val params =
       if (p.efSearch != UseIndexDefault) p
       else {
-        val (ef, rcMed, rcQ25) = resolveServeEf(written.get, n,
-          shapeProbeAbove)
+        val (ef, rcMed, rcQ25) = resolveServeEf(
+          loadNodes(spark, dir, staged, counts), n, shapeProbeAbove)
         p.copy(efSearch = ef, rcMedian = rcMed, rcQ25 = rcQ25)
       }
     // `rc_median`/`rc_q25` are the shape probe's evidence, null when the
@@ -288,8 +276,7 @@ object HnswIndex {
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/params.tmp")
     graft.util.StagedTables.commit(fs, dir, CommitMarker,
         (if (build) BuildOp else "") + next, Seq("params")) { _ =>
-      writeManifest(spark, dir, next, byShard.map(_._1 -> next).toMap,
-        byShard.toMap)
+      writeManifest(spark, dir, next, staged, counts)
       if (build) graft.util.IngestState.clear(spark, dir)
     }
     retire(fs, dir, superseded)
@@ -317,7 +304,7 @@ object HnswIndex {
     * reach here): below-threshold builds keep [[DefaultServeEf]]
     * unprobed (rc null); past `shapeProbeAbove` one
     * [[ShapeStats.relativeContrastStats]] pass over the just-written
-    * node rows takes the measured beam for the classified shape.
+    * images takes the measured beam for the classified shape.
     */
   private def resolveServeEf(written: DataFrame, n: Long,
       shapeProbeAbove: Long): (Int, Option[Double], Option[Double]) =
@@ -342,8 +329,9 @@ object HnswIndex {
   /** The deterministic shard-graph frame shared by [[build]] and
     * [[reshard]]: shard by id hash, one builder per shard seeing its
     * rows contiguously in HASH-of-id order — byte-identical graphs
-    * regardless of source layout. Each task also publishes its shards'
-    * graph images under `nodes/g=<gen>` ([[persistShard]]).
+    * regardless of source layout. Each task publishes its shards' graph
+    * images under `nodes/g=<gen>` ([[persistShard]]) and returns one
+    * (shard, n) row per shard.
     *
     * Why hash order and not id order (the pre-r19 recipe): HNSW graph
     * quality is sensitive to insertion order when id order correlates
@@ -382,33 +370,24 @@ object HnswIndex {
       .select("id", "vec", "shard")
       .as[(Long, Array[Float], Int)]
       .mapPartitions { it =>
-        it.toSeq.groupBy(_._3).iterator.flatMap { case (shard, rows) =>
+        it.toSeq.groupBy(_._3).iterator.map { case (shard, rows) =>
           val g = new HnswGraph(m, efConstruction, cosine, seed)
           rows.foreach { case (id, vec, _) => g.insert(id, vec) }
           persistShard(conf.value.value, genDir, shard, g)
         }
       }
-      .toDF("shard", "pos", "id", "vec", "links")
-      .withColumn("g", lit(gen))
-      // one shard per partition already (the slot repartition above) —
-      // no second shuffle; the partitionBy("g","shard") writer emits one
-      // file per live (g, shard) from its own task
+      .toDF("shard", "n")
   }
 
   /** The task-side tail of both shard-graph writers ([[shardGraphFrame]]
     * and [[rebuildTouchedShards]]): publish `g`'s [[HnswImage]] into its
-    * shard directory under `genDir`, then emit its node rows in `pos`
-    * order. The image and the rows come from the same snapshot, so they
-    * cannot disagree.
+    * shard directory under `genDir` and return (shard, node count).
     */
   private def persistShard(conf: org.apache.hadoop.conf.Configuration,
-      genDir: String, shard: Int, g: HnswGraph)
-      : Iterator[(Int, Int, Long, Array[Float], Seq[Seq[Int]])] = {
+      genDir: String, shard: Int, g: HnswGraph): (Int, Long) = {
     val nodes = g.nodes
     HnswImage.write(conf, new Path(s"$genDir/shard=$shard"), nodes)
-    nodes.iterator.zipWithIndex.map { case ((id, vec, links), pos) =>
-      (shard, pos, id, vec, links)
-    }
+    (shard, nodes.length.toLong)
   }
 
   /** The session's Hadoop configuration, broadcast for the tasks that
@@ -505,29 +484,53 @@ object HnswIndex {
     (gen, shards.toMap, counts.toMap)
   }
 
-  /** The live node rows per the manifest — exactly the committed
-    * generation directory of each shard; orphans from a crashed append
-    * are never listed.
+  /** The live nodes per the manifest, (shard, id, vec): one task per
+    * shard reads exactly the image of its committed generation
+    * ([[readImage]]); orphans from a crashed writer are never read.
     */
   private def loadNodes(spark: SparkSession, dir: String,
-      shardGens: Map[Int, Int]): DataFrame = {
-    val paths = shardGens.toSeq.sorted
-      .map { case (s, g) => s"$dir/nodes/g=$g/shard=$s" }
-    spark.read.option("basePath", s"$dir/nodes").parquet(paths: _*)
+      shardGens: Map[Int, Int], counts: Map[Int, Long]): DataFrame = {
+    import spark.implicits._
+    eachImage(spark, dir, shardGens, counts)(HnswImage.read)
+      .flatMap { case (shard, nodes) =>
+        nodes.iterator.map { case (id, vec, _) => (shard, id, vec) } }
+      .toDF("shard", "id", "vec")
+  }
+
+  /** Each live shard's node count, read from its image's header and id
+    * block ([[HnswImage.readIds]]), never its vectors or links.
+    */
+  private def shardCounts(spark: SparkSession, dir: String,
+      shardGens: Map[Int, Int], counts: Map[Int, Long])
+      : org.apache.spark.rdd.RDD[(Int, Long)] =
+    eachImage(spark, dir, shardGens, counts)(HnswImage.readIds)
+      .map { case (shard, ids) => (shard, ids.length.toLong) }
+
+  /** One task per live shard, each reading that shard's image with
+    * `read` (the whole image, or its ids alone) through [[readImage]].
+    */
+  private def eachImage[T](spark: SparkSession, dir: String,
+      shardGens: Map[Int, Int], counts: Map[Int, Long])(
+      read: (org.apache.hadoop.conf.Configuration, Path) => IndexedSeq[T])
+      : org.apache.spark.rdd.RDD[(Int, IndexedSeq[T])] = {
+    val conf = hadoopConf(spark)
+    val shards = shardGens.toSeq.sorted
+      .map { case (shard, gen) => (shard, gen, counts.get(shard)) }
+    spark.sparkContext.parallelize(shards, math.max(1, shards.size))
+      .map { case (shard, gen, want) =>
+        shard -> readImage(conf.value.value, dir, shard, gen, want)(read) }
   }
 
   /** Per-shard occupancy of the LIVE generation: (shard, n_nodes) — the
     * balance diagnostic of the [[graft.knn.IvfIndex.stats]] family (query
     * latency follows the largest shard's graph, and appended batches land
     * whole shards, so drifted ingest skews here first). Reads only the
-    * partition columns of the manifest's shard paths.
+    * header and id block of each live shard's image.
     */
   def stats(spark: SparkSession, dir: String): DataFrame = {
-    val (_, shardGens, _) = readManifest(spark, dir)
-    loadNodes(spark, dir, shardGens)
-      .groupBy("shard")
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n_nodes"))
+    import spark.implicits._
+    val (_, shardGens, counts) = readManifest(spark, dir)
+    shardCounts(spark, dir, shardGens, counts).toDF("shard", "n_nodes")
   }
 
   /** One-row health surface — the [[IvfIndex.staleness]] counterpart for
@@ -669,21 +672,20 @@ object HnswIndex {
 
   /** Append new vectors WITHOUT rebuilding the whole index: each new
     * vector routes to its deterministic shard, the affected shards'
-    * graphs are restored and the new elements inserted incrementally
-    * (hnswlib `add_items` semantics — graph insertion is order-dependent,
-    * so an appended index is a valid HNSW over the union but not
-    * byte-identical to a from-scratch build), and ONLY those shards are
-    * rewritten — untouched shards' files are not read or written.
+    * graphs are restored from their images and the new elements
+    * inserted incrementally (hnswlib `add_items` semantics — graph
+    * insertion is order-dependent, so an appended index is a valid HNSW
+    * over the union but not byte-identical to a from-scratch build), and
+    * ONLY those shards are rewritten — untouched shards' images are not
+    * read or written.
     *
     * Crash-atomic: the rebuilt shards land in a NEW generation directory
-    * (plain parquet append — no live file is touched), and the append
-    * commits by publishing a new manifest (atomic rename). A failure at
-    * any earlier point leaves the previous manifest resolving the
-    * previous, fully-intact generation; files a crashed attempt staged
-    * under the next generation are cleared before the retry stages its
-    * own (they would otherwise combine into duplicated node rows at the
-    * commit). Superseded generation directories are deleted best-effort
-    * AFTER the commit.
+    * (no live file is touched), and the append commits by publishing a
+    * new manifest (atomic rename). A failure at any earlier point leaves
+    * the previous manifest resolving the previous, fully-intact
+    * generation; files a crashed attempt staged under the next
+    * generation are cleared before the retry stages its own. Superseded
+    * generation directories are deleted best-effort AFTER the commit.
     *
     * Hyperparameters come from `params/`. Duplicate labels are rejected
     * (hnswlib `add_items` parity): a batch that repeats an id, or carries
@@ -718,19 +720,16 @@ object HnswIndex {
       appendPrepared(spark, open(spark, dir), batch, "id", "vec")
     }
 
-  /** The committed id set (one `id` column over the live generations).
-    * Package-private for the streaming ingester's freshness marker join,
-    * mirroring [[IvfIndex.readIds]].
+  /** The committed id set (one `id` column over the live generations),
+    * read from each live image's header and id block only — no vector
+    * or link is decoded. Package-private for the streaming ingester's
+    * freshness marker join, mirroring [[IvfIndex.readIds]].
     */
   private[graft] def readIds(spark: SparkSession, dir: String): DataFrame = {
-    val (_, shardGens, _) = readManifest(spark, dir)
-    if (shardGens.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType))))
-    else loadNodes(spark, dir, shardGens).select(col("id"))
+    import spark.implicits._
+    val (_, shardGens, counts) = readManifest(spark, dir)
+    eachImage(spark, dir, shardGens, counts)(HnswImage.readIds)
+      .flatMap(_._2).toDF("id")
   }
 
   /** [[append]]'s body against an opened snapshot — for per-batch
@@ -751,139 +750,104 @@ object HnswIndex {
       vecCol: String): Long = {
     import spark.implicits._
     val dir = snap.dir
-    val Params(m, metric, shards, efConstruction, seed, _, _, _) = snap.meta
-    val cosine = HnswSearch.isCosine(metric)
     val fresh = newVectors
       .select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<float>").as("vec"))
-      .withColumn("shard", pmod(xxhash64(col("id")), lit(shards)).cast("int"))
+      .withColumn("shard",
+        pmod(xxhash64(col("id")), lit(snap.meta.shards)).cast("int"))
       .cache()
     try {
-      // ONE agg over the cached batch serves the touched-shard set, the
-      // appended-row count, AND the manifest's incremental count update
-      // (this replaces the former separate distinct + count jobs — two
-      // fewer scheduler round-trips per streaming micro-batch)
+      // ONE agg over the cached batch serves the touched-shard set and
+      // the appended-row count
       val freshByShard = fresh.groupBy("shard").count()
         .as[(Int, Long)].collect().toMap
-      val touched = freshByShard.keys.toArray.sorted
+      val touched = freshByShard.keys.toSeq.sorted
       if (touched.isEmpty) return 0L
-      val nNew = freshByShard.values.sum
 
       val (gen, shardGens, oldCounts) = readManifest(spark, dir)
-      val touchedLive = shardGens.view.filterKeys(touched.contains).toMap
-      val existing = (if (touchedLive.isEmpty)
-          spark.emptyDataset[(Int, Int, Long, Array[Float], Seq[Seq[Int]])].toDF(
-            "shard", "pos", "id", "vec", "links")
-        else loadNodes(spark, dir, touchedLive))
-        .select(col("shard").cast("int"), col("pos"), col("id"),
-          col("vec").cast("array<float>"),
-          col("links").cast("array<array<int>>"))
-      val rebuilt = rebuildTouchedShards(existing,
-          fresh.select(col("shard"), col("id"), col("vec")),
-          touched.toSeq, m, cosine, efConstruction, seed,
-          s"$dir/nodes/g=${gen + 1}")
-        .withColumn("g", lit(gen + 1))
       val fs = new Path(s"$dir/nodes").getFileSystem(
         spark.sessionState.newHadoopConf())
       // the live manifest resolves gen, so anything already under
       // g=gen+1 is debris from an append that crashed BEFORE its commit:
-      // staging into it un-cleared would append a second copy of every
-      // rebuilt row and the manifest below would commit the duplicates
-      // (single-writer assumption, as documented on this method)
+      // HnswImage.write keeps an image it finds in place, so staging into
+      // it un-cleared could commit the debris instead of the rebuilt
+      // shard (single-writer assumption, as documented on this method)
       fs.delete(new Path(s"$dir/nodes/g=${gen + 1}"), true)
-      // the rebuilt shards land in generation gen+1: plain append, no
-      // live file rewritten — the manifest rename below is the commit
-      rebuilt.write.mode(SaveMode.Append)
-        .partitionBy("g", "shard")
-        .parquet(s"$dir/nodes")
-      val newShardGens = shardGens ++ touched.map(_ -> (gen + 1))
-      // counts update incrementally (append never deletes: new count =
-      // old + fresh per touched shard). A legacy counts-less manifest
-      // heals ONCE here with a partition-column-only count over the new
-      // live layout (the staged g=gen+1 dirs are durable at this point;
-      // the manifest rename below is still the only commit)
-      val newCounts: Map[Int, Long] =
-        if (oldCounts.keySet == shardGens.keySet)
-          oldCounts ++ touched.map(s =>
-            s -> (oldCounts.getOrElse(s, 0L) + freshByShard.getOrElse(s, 0L)))
-        else loadNodes(spark, dir, newShardGens)
-          .groupBy("shard").count().as[(Int, Long)].collect().toMap
-      writeManifest(spark, dir, gen + 1, newShardGens, newCounts)
-      retire(fs, dir, touchedLive)
-      nNew
+      val rebuilt = rebuildTouchedShards(fresh, touched, dir, shardGens,
+          oldCounts, gen + 1, snap.meta)
+        .as[(Int, Long)].collect().toMap
+      // a rebuilt shard's count is its new image's; the others keep
+      // theirs. A legacy counts-less manifest heals ONCE here with a
+      // header read of the untouched images
+      val kept =
+        if (oldCounts.keySet == shardGens.keySet) oldCounts
+        else shardCounts(spark, dir, shardGens -- touched, Map.empty)
+          .collect().toMap
+      writeManifest(spark, dir, gen + 1,
+        shardGens ++ touched.map(_ -> (gen + 1)), kept ++ rebuilt)
+      retire(fs, dir, shardGens.filter { case (s, _) => rebuilt.contains(s) })
+      freshByShard.values.sum
     } finally fresh.unpersist()
   }
 
   /** [[append]]'s touched-shard rebuild as ONE slot-placed partition
-    * pass: existing nodes (restore order = `pos`) and fresh rows
-    * (insert order = hash-of-id, the [[shardGraphFrame]] decorrelation
-    * rule, marked `pos = -1`) union into a single frame,
+    * pass over the fresh rows (shard, id, vec) alone: they are
     * PERFECT-placed one shard per task via [[graft.util.ShardSlots]]
-    * (the same contract the build stage uses — a cogroup on
-    * `groupByKey(shard)` hash-collided shard keys exactly like the bare
-    * `repartition(col("shard"))` the r16 fix removed elsewhere: with S
-    * touched shards into the shuffle's partitions, ~1/e of the rebuild
-    * tasks idled while others restored+inserted two whole graphs), and
-    * each task restores its graph and replays the inserts. Output is
-    * already one shard per partition, so the caller's
-    * `partitionBy("g","shard")` writer emits one file per shard from
-    * its own task with NO second shuffle (the cogroup shape paid one).
-    * Per-shard output is byte-identical to the cogroup it replaces:
-    * same restore order, same insert order, same zipWithIndex `pos`.
-    * Each task also publishes its rebuilt shards' graph images under
-    * `genDir` ([[persistShard]]).
+    * (the same contract the build stage uses — a bare
+    * `repartition(col("shard"))` hash-collides shard keys, so ~1/e of
+    * the rebuild tasks idled while others rebuilt two whole graphs).
+    * Each task restores its shard from the live image of `shardGens`
+    * (checked against `counts`), or starts an empty graph for a shard
+    * the index does not hold yet, inserts the fresh rows in
+    * hash-of-id order (the [[shardGraphFrame]] decorrelation rule),
+    * publishes the graph's image under generation `next`
+    * ([[persistShard]]) and returns (shard, node count).
     */
   private[graft] def rebuildTouchedShards(
-      existing: DataFrame,
       fresh: DataFrame,
       touched: Seq[Int],
-      m: Int,
-      cosine: Boolean,
-      efConstruction: Int,
-      seed: Int,
-      genDir: String): DataFrame = {
-    val spark = existing.sparkSession
+      dir: String,
+      shardGens: Map[Int, Int],
+      counts: Map[Int, Long],
+      next: Int,
+      p: Params): DataFrame = {
+    val spark = fresh.sparkSession
     import spark.implicits._
     val conf = hadoopConf(spark)
-    existing
-      .select(col("shard"), col("pos"), col("id"), col("vec"), col("links"))
-      .unionByName(fresh.select(col("shard"), lit(-1).as("pos"), col("id"),
-        col("vec"), lit(null).cast("array<array<int>>").as("links")))
+    val Params(m, metric, _, efConstruction, seed, _, _, _) = p
+    val cosine = HnswSearch.isCosine(metric)
+    val genDir = s"$dir/nodes/g=$next"
+    fresh
       .withColumn("__ins", insertOrderCol(col("id")))
       .withColumn("__slot",
         graft.util.ShardSlots.slotCol(col("shard"), touched))
       .repartition(touched.size, col("__slot"))
-      .select("shard", "pos", "id", "vec", "links", "__ins")
-      .as[(Int, Int, Long, Array[Float], Seq[Seq[Int]], Long)]
+      .select("shard", "id", "vec", "__ins")
+      .as[(Int, Long, Array[Float], Long)]
       .mapPartitions { it =>
-        it.toSeq.groupBy(_._1).iterator.flatMap { case (shard, rows) =>
-          // pos >= 0 marks a persisted node (links ride along); -1 a
-          // fresh insert — links may legitimately be empty, never null,
-          // so the marker is positional, not the links column
-          val (olds, news) = rows.partition(_._2 >= 0)
-          val g = HnswGraph.restore(m, cosine,
-            olds.sortBy(_._2).map { case (_, _, id, vec, links, _) =>
-              (id, vec, links) },
-            efConstruction, seed)
-          news.sortBy(r => (r._6, r._3)).foreach { case (_, _, id, vec, _, _) =>
+        it.toSeq.groupBy(_._1).iterator.map { case (shard, rows) =>
+          val live = shardGens.get(shard).fold(IndexedSeq.empty[HnswImage.Node])(
+            gen => readImage(conf.value.value, dir, shard, gen,
+              counts.get(shard))(HnswImage.read))
+          val g = HnswGraph.restore(m, cosine, live, efConstruction, seed)
+          rows.sortBy(r => (r._4, r._2)).foreach { case (_, id, vec, _) =>
             g.insert(id, vec) }
           persistShard(conf.value.value, genDir, shard, g)
         }
       }
-      .toDF("shard", "pos", "id", "vec", "links")
+      .toDF("shard", "n")
   }
 
   /** Probe the persisted index: one task per live shard reads that
     * shard's graph image, restores the graph exactly (no re-insertion),
     * beams the broadcast query set through it, and only the per-shard
     * top-k partials reach the one ranking-window merge — the
-    * [[ApproxKnn.hnswKnn]] execution over restored state. No node row is
-    * read or shuffled. `m` and the metric come from the persisted
+    * [[ApproxKnn.hnswKnn]] execution over restored state. The index is
+    * never shuffled. `m` and the metric come from the persisted
     * `params/`, never from the caller. A live shard without a readable
     * image, or whose image disagrees with the manifest count, fails the
     * search with an `IllegalStateException` naming the shard and the
-    * repair ([[reshard]] to the same count); there is no node-row
-    * fallback.
+    * repair ([[readImage]]).
     *
     * Beam law: a positive `efSearch` is the beam at gate-tier scale —
     * past [[BeamLaw.HoldKeys]] EQUIVALENT keys it is widened by the
@@ -942,22 +906,16 @@ object HnswIndex {
     val (_, shardGens, counts) = readManifest(spark, dir)
     val (kL, efS, ex) =
       (k, effectiveEf(baseEf, efAutoScale, shardGens, counts), excludeSelf)
-    // an empty manifest (reachable: readIds special-cases it, and the
-    // streaming gate probes BEFORE the first append) has no neighbors —
-    // an empty correctly-shaped frame, not a zero-path parquet read
-    // dying on schema inference before the bootstrap append ever runs
+    // an empty manifest (reachable: the streaming gate probes BEFORE the
+    // first append) has no neighbors — an empty frame of the search
+    // schema, with no job
     if (shardGens.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         IvfIndex.searchSchema)
     // one task per live shard, each reading only its own image
-    val images = shardGens.toSeq.sorted
-      .map { case (shard, gen) => (shard, gen, counts.get(shard)) }
-    val conf = hadoopConf(spark)
-    val shards = params.shards
-    val partials = spark.sparkContext.parallelize(images, images.size)
-      .flatMap { case (shard, gen, want) =>
-        val nodes = readImage(conf.value.value, dir, shard, gen, want, shards)
+    val partials = eachImage(spark, dir, shardGens, counts)(HnswImage.read)
+      .flatMap { case (_, nodes) =>
         HnswSearch.beamAll(HnswGraph.restore(m, cosine, nodes), bc.value,
           kL, efS, ex)
       }
@@ -966,22 +924,24 @@ object HnswIndex {
     HnswSearch.topKMerge(partials, k)
   }
 
-  /** One live shard's nodes, from its graph image: the image must exist,
-    * decode, and hold the manifest's count for the shard (`want`, absent
-    * on a legacy counts-less manifest). Anything else is an
-    * `IllegalStateException` that names the shard and the repair:
-    * [[reshard]] to the same count rewrites every shard and its image.
+  /** One live shard's image, read by `read` (the whole image, or its
+    * ids alone): the image must exist, decode, and hold the manifest's
+    * count for the shard (`want`, absent on a legacy counts-less
+    * manifest). Anything else is an `IllegalStateException` that names
+    * the shard and the repair: the image is the shard's only stored
+    * form, so the index is rebuilt from its source with [[build]].
     */
-  private def readImage(conf: org.apache.hadoop.conf.Configuration,
-      dir: String, shard: Int, gen: Int, want: Option[Long], shards: Int)
-      : IndexedSeq[HnswImage.Node] = {
+  private def readImage[T](conf: org.apache.hadoop.conf.Configuration,
+      dir: String, shard: Int, gen: Int, want: Option[Long])(
+      read: (org.apache.hadoop.conf.Configuration, Path) => IndexedSeq[T])
+      : IndexedSeq[T] = {
     val file = new Path(s"$dir/nodes/g=$gen/shard=$shard/${HnswImage.FileName}")
     def fail(problem: String) = throw new IllegalStateException(
-      s"HnswIndex: live shard $shard (g=$gen) of $dir $problem; search " +
-        s"reads shards only from their graph images — " +
-        s"HnswIndex.reshard(spark, dir, $shards) rewrites every shard")
+      s"HnswIndex: live shard $shard (g=$gen) of $dir $problem; a shard " +
+        "is stored only as its graph image — rebuild the index from its " +
+        "source with HnswIndex.build")
     val nodes =
-      try HnswImage.read(conf, file)
+      try read(conf, file)
       catch {
         case _: java.io.FileNotFoundException => fail(s"has no graph image $file")
         case e: java.io.IOException => fail(s"has an unreadable graph image: $e")
@@ -1033,8 +993,9 @@ object HnswIndex {
     * (per-shard graph size bounds both build memory and probe latency),
     * and an index whose corpus 10×-ed past its build-time sizing needs
     * the knob turnable without a from-scratch rebuild of the caller's
-    * pipeline. Every live node row is re-assigned by the deterministic
-    * id hash under `newShards` and each new shard's graph is rebuilt
+    * pipeline. Every live node, read from the shard images, is
+    * re-assigned by the deterministic id hash under `newShards` and each
+    * new shard's graph is rebuilt
     * with the build recipe (hash-ordered insertion — the resharded
     * index is byte-deterministic, exactly as a fresh [[build]] of the
     * same corpus at `newShards` would be).
@@ -1064,14 +1025,10 @@ object HnswIndex {
       spark: SparkSession,
       dir: String,
       newShards: Int): Long = {
-    import spark.implicits._
     require(newShards > 0, s"HnswIndex.reshard: newShards must be positive, got $newShards")
     recover(spark, dir)
-    val (_, shardGens, _) = readManifest(spark, dir)
-    val corpus = (if (shardGens.isEmpty)
-        spark.emptyDataset[(Long, Array[Float])].toDF("id", "vec")
-      else loadNodes(spark, dir, shardGens).select(col("id"), col("vec")))
-      .select(col("id").cast("long"), col("vec").cast("array<float>"))
+    val (_, shardGens, counts) = readManifest(spark, dir)
+    val corpus = loadNodes(spark, dir, shardGens, counts).select("id", "vec")
     // ef_search and the shape evidence ride through unchanged — reshard
     // keeps the corpus, so it keeps the corpus's declared serving beam
     // and the rc measurement that chose it

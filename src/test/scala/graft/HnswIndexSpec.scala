@@ -27,38 +27,50 @@ class HnswIndexSpec extends SparkSpec {
     }
   }
 
-  /** One shard's committed node rows in `pos` order. */
-  private def shardRows(dir: String, shard: Int, gen: Int)
-      : Seq[(Long, Array[Float], Seq[Seq[Int]])] = {
-    import spark.implicits._
-    spark.read.parquet(s"$dir/nodes/g=$gen/shard=$shard").orderBy("pos")
-      .select(col("id"), col("vec").cast("array<float>"),
-        col("links").cast("array<array<int>>"))
-      .as[(Long, Array[Float], Seq[Seq[Int]])].collect().toSeq
-  }
-
   private def imagePath(dir: String, shard: Int, gen: Int): Path =
     new Path(s"$dir/nodes/g=$gen/shard=$shard/${HnswImage.FileName}")
 
-  test("graph images: after a build, an append and a reshard every live " +
-    "shard's image equals its node rows, and search equals the node-row " +
-    "oracle") {
+  private def fsOf(dir: String) =
+    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+
+  private def imageBytes(dir: String, shard: Int, gen: Int): Array[Byte] = {
+    val in = fsOf(dir).open(imagePath(dir, shard, gen))
+    try in.readAllBytes() finally in.close()
+  }
+
+  /** Copy every live shard directory of `dir` into generation `gen` —
+    * the debris a writer that crashed after staging `gen` leaves behind.
+    */
+  private def stageDebris(dir: String, gen: Int): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = fsOf(dir)
+    HnswIndex.readManifest(spark, dir)._2.foreach { case (s, g) =>
+      require(org.apache.hadoop.fs.FileUtil.copy(fs,
+        new Path(s"$dir/nodes/g=$g/shard=$s"), fs,
+        new Path(s"$dir/nodes/g=$gen/shard=$s"), false, conf))
+    }
+  }
+
+  test("graph images: one file per live shard, matching readIds, counts and " +
+    "search") {
     import spark.implicits._
     val dir = tempDir("images")
     val conf = spark.sessionState.newHadoopConf()
+    val fs = fsOf(dir)
     val queries = emb.filter(col("vec_id") < 440).orderBy("vec_id").limit(40)
       .select(col("vec_id").cast("long"), col("embedding").cast("array<float>"))
       .as[(Long, Array[Float])].collect().toSeq
     val qDf = queries.toDF("vec_id", "embedding")
     val (k, ef) = (5, 16)
-    // the serving path before graph images: node rows in pos order →
-    // HnswGraph.restore → the per-shard beam (k + 1, self dropped) → the
-    // global (dist, neighbor_id) top-k merge
+    // the serving path spelled out: each live image → HnswGraph.restore
+    // → the per-shard beam (k + 1, self dropped) → the global
+    // (dist, neighbor_id) top-k merge
     def oracle(): Set[(Long, Long, Double, Int)] = {
       val params = HnswIndex.open(spark, dir).meta
       val (_, shardGens, _) = HnswIndex.readManifest(spark, dir)
       shardGens.toSeq.flatMap { case (s, g) =>
-        val graph = HnswGraph.restore(params.m, cosine = false, shardRows(dir, s, g))
+        val graph = HnswGraph.restore(params.m, cosine = false,
+          HnswImage.read(conf, imagePath(dir, s, g)))
         queries.flatMap { case (qid, qv) =>
           graph.search(qv, k + 1, math.max(ef, k + 1)).filter(_._1 != qid)
             .take(k).map { case (nid, d) => (qid, nid, d) }
@@ -69,22 +81,36 @@ class HnswIndexSpec extends SparkSpec {
     }
     def check(stage: String): Unit = {
       val (_, shardGens, counts) = HnswIndex.readManifest(spark, dir)
+      val shards = HnswIndex.open(spark, dir).meta.shards
+      // readIds, split by the routing hash into each shard's ids
+      val idsByShard = HnswIndex.readIds(spark, dir)
+        .select(col("id"), pmod(xxhash64(col("id")), lit(shards)).cast("int"))
+        .as[(Long, Int)].collect().groupBy(_._2)
+        .map { case (s, ids) => s -> ids.map(_._1).sorted.toSeq }
+      assert(idsByShard.keySet == shardGens.keySet, s"$stage: readIds shards")
       shardGens.foreach { case (s, g) =>
+        // the image is the whole shard: no other file beside it
+        assert(fs.listStatus(new Path(s"$dir/nodes/g=$g/shard=$s")).toSeq
+          .map(_.getPath.getName) == Seq(HnswImage.FileName),
+          s"$stage: shard $s holds more than its image")
         val image = HnswImage.read(conf, imagePath(dir, s, g))
-        val rows = shardRows(dir, s, g)
-        assert(image.length == rows.length && counts(s) == rows.length,
-          s"$stage: shard $s image/rows/manifest counts disagree")
-        image.zip(rows).foreach { case ((id, vec, links), (rid, rvec, rlinks)) =>
-          assert(id == rid && vec.sameElements(rvec) && links == rlinks,
-            s"$stage: shard $s image node $id differs from its row")
-        }
+        assert(image.length == counts(s),
+          s"$stage: shard $s image and manifest counts disagree")
+        assert(image.map(_._1).sorted == idsByShard(s),
+          s"$stage: shard $s image ids differ from its readIds")
+      }
+      // no node-row table, live or superseded, anywhere under nodes/
+      val files = fs.listFiles(new Path(s"$dir/nodes"), true)
+      while (files.hasNext) {
+        val f = files.next().getPath
+        assert(f.getName == HnswImage.FileName, s"$stage: stray file $f")
       }
       val got = HnswIndex.search(spark, dir, qDf, "vec_id", "embedding", k,
           efSearch = ef, efAutoScale = false)
         .select("query_id", "neighbor_id", "dist", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       assert(got.length == queries.length * k)
-      assert(got.toSet == oracle(), s"$stage: search differs from the node-row oracle")
+      assert(got.toSet == oracle(), s"$stage: search differs from the image oracle")
     }
     HnswIndex.build(emb.filter(col("vec_id") < 300), "vec_id", "embedding",
       dir, shards = 4)
@@ -114,7 +140,7 @@ class HnswIndexSpec extends SparkSpec {
         .collectFirst { case ise: IllegalStateException => ise.getMessage }
         .getOrElse(fail(s"expected a named IllegalStateException, got $e"))
       assert(named.contains(s"live shard $s (g=$g)") &&
-        named.contains("HnswIndex.reshard(spark, dir, 4)"), named)
+        named.contains("HnswIndex.build"), named)
       named
     }
     def overwrite(bytes: Array[Byte]): Unit = {
@@ -130,8 +156,9 @@ class HnswIndexSpec extends SparkSpec {
     assert(searchError().contains("truncated"))
     fs.delete(image, false)
     assert(searchError().contains("has no graph image"))
-    // the named repair restores serving
-    HnswIndex.reshard(spark, dir, 4)
+    // the image is the shard's only stored form, so the named repair is
+    // a build from the source corpus, and it restores serving
+    HnswIndex.build(emb, "vec_id", "embedding", dir, shards = 4)
     assert(probe().length == 15)
   }
 
@@ -206,16 +233,13 @@ class HnswIndexSpec extends SparkSpec {
       // REVERSED arrival order: the rebuild must re-sort inserts by id,
       // so persisted state stays arrival-order-independent
       .orderBy(desc("id"))
-    // a fresh build persists one generation — the documented node
-    // layout reads back directly (shard/g are partition columns)
-    val existing = spark.read.parquet(s"$dir/nodes")
-      .select(col("shard").cast("int"), col("pos"), col("id"),
-        col("vec").cast("array<float>"),
-        col("links").cast("array<array<int>>"))
     val touched = (0 until shards).toSeq
-    val rebuilt = HnswIndex.rebuildTouchedShards(existing,
-      fresh.select("shard", "id", "vec"), touched, m = 16, cosine = false,
-      efConstruction = 100, seed = 42, genDir = tempDir("slotappend_images"))
+    // the rebuild stages into the next generation, uncommitted: the
+    // append below clears it as crash debris
+    val (gen, shardGens, counts) = HnswIndex.readManifest(spark, dir)
+    val rebuilt = HnswIndex.rebuildTouchedShards(
+      fresh.select("shard", "id", "vec"), touched, dir, shardGens, counts,
+      gen + 1, HnswIndex.open(spark, dir).meta)
     // the ShardSlots contract end to end on the APPEND path: every
     // touched shard rebuilds alone in its own task — the cogroup shape
     // this replaced idled ~1/e of the tasks on Murmur3 collisions
@@ -257,15 +281,20 @@ class HnswIndexSpec extends SparkSpec {
     assert(fullBeam(dir) == before,
       "full-beam search changed across reshard")
     // the resharded index IS a fresh build at the new shard count: same
-    // deterministic recipe → node-row-identical (the byte-determinism
-    // contract extended to reshard)
+    // deterministic recipe → byte-identical graph images (the
+    // byte-determinism contract extended to reshard)
     val fresh = tempDir("reshard_fresh")
     HnswIndex.build(emb, "vec_id", "embedding", fresh, shards = 3)
-    def nodeRows(d: String) = spark.read
-      .option("basePath", s"$d/nodes").parquet(s"$d/nodes")
-      .select("shard", "pos", "id", "vec", "links")
-      .collect().map(_.toString).sorted.toSeq
-    assert(nodeRows(dir) == nodeRows(fresh))
+    def images(d: String): Map[Int, Array[Byte]] =
+      HnswIndex.readManifest(spark, d)._2.map { case (s, g) =>
+        s -> imageBytes(d, s, g) }
+    val (resharded, built) = (images(dir), images(fresh))
+    assert(resharded.keySet == (0 until 3).toSet &&
+      resharded.keySet == built.keySet)
+    resharded.foreach { case (s, bytes) =>
+      assert(java.util.Arrays.equals(bytes, built(s)),
+        s"shard $s: resharded image differs from a fresh build's")
+    }
     // params carry the new count; a later append routes by it
     HnswIndex.append(spark, dir,
       emb.select((col("vec_id") + 1000000).as("vec_id"), col("embedding")),
@@ -399,9 +428,9 @@ class HnswIndexSpec extends SparkSpec {
     val manifests = new java.io.File(s"$dir/manifest").list().toSet
     assert(manifests.filterNot(_.startsWith(".")) == Set("m000000.json") &&
       !manifests.exists(_.endsWith(".inprogress")), s"manifests: $manifests")
-    val rows = spark.read.parquet(s"$dir/nodes")
-    assert(rows.count() == n, "stray g=0 rows were committed beside the build")
-    assert(rows.select("id").distinct().count() == n)
+    val ids = HnswIndex.readIds(spark, dir).collect().map(_.getLong(0))
+    assert(ids.length == n, "stray g=0 nodes were committed beside the build")
+    assert(ids.distinct.length == n)
     assert(HnswIndex.stats(spark, dir).collect().map(_.getLong(1)).sum == n)
     def nodeTree(): Set[String] =
       new java.io.File(s"$dir/nodes").listFiles().flatMap(g =>
@@ -541,15 +570,12 @@ class HnswIndexSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") < 300)
     val extra = emb.filter(col("vec_id") >= 300 && col("vec_id") < 400)
     HnswIndex.build(base, "vec_id", "embedding", dir, shards = 8)
-    val before = spark.read.parquet(s"$dir/nodes")
-      .groupBy("shard").count().collect()
+    def statsCounts() = HnswIndex.stats(spark, dir).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val before = statsCounts()
     val n = HnswIndex.append(spark, dir, extra, "vec_id", "embedding")
     assert(n == extra.count())
-    val after = spark.read.parquet(s"$dir/nodes")
-      .groupBy("shard").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(after.values.sum == before.values.sum + n)
+    assert(statsCounts().values.sum == before.values.sum + n)
     // every persisted node row is intact and searchable: appended ids are
     // reachable with perfect self-recall at the ef used for the beam
     val got = HnswIndex.search(spark, dir, extra, "vec_id", "embedding",
@@ -577,6 +603,31 @@ class HnswIndexSpec extends SparkSpec {
     }.sum
     val recall = hits.toDouble / (exact.size * 5)
     assert(recall > 0.8, s"post-append recall@5 too low: $recall")
+
+    // a three-row batch routes to at most three of the eight shards; the
+    // others are neither read into a new generation nor rewritten: same
+    // generation, same image bytes and modification time
+    val small = emb.filter(col("vec_id") >= 400 && col("vec_id") < 403)
+    val routed = small
+      .select(pmod(xxhash64(col("vec_id").cast("long")), lit(8)).cast("int"))
+      .distinct().collect().map(_.getInt(0)).toSet
+    assert(routed.nonEmpty && routed.size <= 3)
+    val (gen0, gens0, _) = HnswIndex.readManifest(spark, dir)
+    val fs = fsOf(dir)
+    def image(s: Int, g: Int) = (imageBytes(dir, s, g).toSeq,
+      fs.getFileStatus(imagePath(dir, s, g)).getModificationTime)
+    val images0 = gens0.map { case (s, g) => s -> image(s, g) }
+    assert(HnswIndex.append(spark, dir, small, "vec_id", "embedding") == 3L)
+    val (_, gens1, _) = HnswIndex.readManifest(spark, dir)
+    assert(gens1.keySet == gens0.keySet)
+    gens1.foreach { case (s, g) =>
+      if (routed(s)) assert(g == gen0 + 1, s"touched shard $s not rewritten")
+      else {
+        assert(g == gens0(s), s"untouched shard $s moved to g=$g")
+        assert(image(s, g) == images0(s), s"untouched shard $s was rewritten")
+      }
+    }
+    assert(statsCounts().values.sum == before.values.sum + n + 3L)
   }
 
   test("append is manifest-committed: an orphaned generation from a crashed append is invisible") {
@@ -588,13 +639,9 @@ class HnswIndexSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     val before = results()
     // simulate an append that crashed after staging its new generation but
-    // BEFORE the manifest rename: duplicate every live node into g=99.
+    // BEFORE the manifest rename: copy every live shard into g=99.
     // If search read it, every neighbor would appear twice and ranks shift.
-    val live = spark.read.parquet(s"$dir/nodes").drop("g")
-    val staged = spark.createDataFrame(live.collectAsList(), live.schema)
-      .withColumn("g", lit(99))
-    staged.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("g", "shard").parquet(s"$dir/nodes")
+    stageDebris(dir, 99)
     assert(results() == before,
       "orphaned uncommitted generation leaked into search results")
   }
@@ -606,16 +653,12 @@ class HnswIndexSpec extends SparkSpec {
     val rest = emb.filter(col("vec_id") >= 200 && col("vec_id") < 260)
     HnswIndex.build(base, "vec_id", "embedding", dirCrash, shards = 4)
     HnswIndex.build(base, "vec_id", "embedding", dirClean, shards = 4)
-    // simulate attempt #1 crashing AFTER staging rows into g=1 but BEFORE
-    // the manifest commit: plausible node rows sit in the exact directory
-    // the retry will stage into
-    val live = spark.read.parquet(s"$dirCrash/nodes").drop("g")
-    spark.createDataFrame(live.collectAsList(), live.schema)
-      .withColumn("g", lit(1))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("g", "shard").parquet(s"$dirCrash/nodes")
-    // the retry must clear the debris first — otherwise the commit would
-    // publish every rebuilt shard's rows twice
+    // simulate attempt #1 crashing AFTER staging images into g=1 but
+    // BEFORE the manifest commit: plausible shard images sit in the exact
+    // directory the retry will stage into
+    stageDebris(dirCrash, 1)
+    // the retry must clear the debris first — otherwise the commit could
+    // publish a stale image in place of a rebuilt shard
     HnswIndex.append(spark, dirCrash, rest, "vec_id", "embedding")
     HnswIndex.append(spark, dirClean, rest, "vec_id", "embedding")
     val q = emb.filter(col("vec_id") < 260).limit(60)
@@ -657,11 +700,7 @@ class HnswIndexSpec extends SparkSpec {
         "embedding", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     // crash-sim: a staged generation with no manifest commit
-    val live = spark.read.parquet(s"$dir/nodes").drop("g")
-    spark.createDataFrame(live.collectAsList(), live.schema)
-      .withColumn("g", lit(77))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("g", "shard").parquet(s"$dir/nodes")
+    stageDebris(dir, 77)
     // a committed append leaves a superseded manifest m000000 behind too
     HnswIndex.append(spark, dir, extra, "vec_id", "embedding")
     val before = results()
@@ -1075,8 +1114,8 @@ class HnswIndexSpec extends SparkSpec {
       == DefaultShards, "spec-scale auto build must keep the old default")
   }
 
-  test("per-batch fast path: preParams search and guard-skipped append " +
-      "are state- and result-identical to the default path") {
+  test("per-batch fast path: probe over open and appendPrepared match " +
+      "search and append") {
     val base = emb.filter(col("vec_id") < 400)
     val batch = emb.filter(col("vec_id") >= 400 && col("vec_id") < 450)
       .select((col("vec_id") + 1000000).as("vec_id"), col("embedding"))
