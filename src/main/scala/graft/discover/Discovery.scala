@@ -37,10 +37,13 @@ object Discovery {
     (least(a, b), greatest(a, b))
 
   /** Symmetric ground-truth expansion: both directions of every GT row
-    * (join_discoverer.py:392–397).
+    * (join_discoverer.py:392–397), distinct. The pairs are placed by
+    * query, so the distinct and any per-query aggregate or window over
+    * the result share one exchange.
     */
   def symmetrizeGroundTruth(gt: DataFrame, qCol: String, cCol: String): DataFrame =
     gt.select(col(qCol).as("query"), col(cCol).as("candidate"))
       .union(gt.select(col(cCol).as("query"), col(qCol).as("candidate")))
+      .repartition(col("query"))
       .distinct()
 }

@@ -1,6 +1,6 @@
 package graft.discover
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -59,30 +59,11 @@ object Eval {
         count(when(col("__t").isNull, lit(1))).as("fp"))
       .withColumn("fn", lit(nTruth) - col("tp")))
 
-  /** [[microPrf1Counted]] over a PRE-JOINED frame — the repeated-cells
-    * fast path one step further: the SemLink grid left-joins its ONE
-    * kMax kNN result against the truth relation ONCE (`__t` non-null on
-    * a truth hit) and every (k, threshold) cell reduces to a conditional
-    * aggregate over that checkpointed frame, instead of re-shipping the
-    * cell's discovered rows through a per-cell join. The caller
-    * guarantees `marked` rows are DISTINCT per (query, candidate) after
-    * its cell filter (kNN output is unique per pair by construction —
-    * ranking windows emit one row per neighbor). Identical output to
-    * [[microPrf1Counted]] by construction (same counts, shared
-    * [[prfColumns]] arithmetic).
-    */
-  def microPrf1Marked(marked: DataFrame, nTruth: Long): DataFrame =
-    prfColumns(marked
-      .agg(
-        count(when(col("__t").isNotNull, lit(1))).as("tp"),
-        count(when(col("__t").isNull, lit(1))).as("fp"))
-      .withColumn("fn", lit(nTruth) - col("tp")))
-
   /** The one shared P/R/F1 arithmetic over a (tp, fp, fn) frame — eps in
-    * denominators, round to 4 — so the full-outer and counted paths
+    * denominators, round to 4 — so the full-outer, counted and grid paths
     * cannot drift.
     */
-  private def prfColumns(counts: DataFrame): DataFrame =
+  private[graft] def prfColumns(counts: DataFrame): DataFrame =
     counts
       .withColumn("precision",
         round(col("tp") / (col("tp") + col("fp") + lit(Eps)), 4))
@@ -153,36 +134,16 @@ object Eval {
       truth: DataFrame,  // (query, candidate)
       k: Int,
       zeroWhenNoTruth: Boolean = false,
-      retrievedOnly: Boolean = false,
-      // repeated-cells hooks (the SemLink grid calls this once per k
-      // against ONE truth relation): `truthIsDistinct` skips the
-      // defensive distinct when the caller already deduplicated, and
-      // `preRelCounts` reuses a per-query relevant-count frame computed
-      // once instead of re-aggregating the (possibly huge) truth per k
-      truthIsDistinct: Boolean = false,
-      preRelCounts: Option[DataFrame] = None,
-      // repeated-cells hook: a caller that already left-joined its
-      // ranked rows against the truth relation (`__t` non-null on a
-      // hit — the [[microPrf1Marked]] frame) passes it here and the
-      // per-k DCG becomes a filter + aggregate over that one join
-      // instead of a fresh join per k; `ranked`/`truth` still supply
-      // the relevant-count side (via preRelCounts) and the query
-      // universe semantics
-      preMarked: Option[DataFrame] = None): DataFrame = {
-    val t =
-      if (truthIsDistinct) truth.select("query", "candidate")
-      else truth.select("query", "candidate").distinct()
-    val relCounts = preRelCounts.getOrElse(
-      t.groupBy("query").agg(count(lit(1)).as("n_relevant")))
+      retrievedOnly: Boolean = false): DataFrame = {
+    val t = truth.select("query", "candidate").distinct()
+    val relCounts = t.groupBy("query").agg(count(lit(1)).as("n_relevant"))
 
-    val dcg = preMarked.getOrElse(
-      ranked
-        .filter(col("rank") <= k)
-        .join(t.withColumn("__t", lit(1)), Seq("query", "candidate"), "left"))
+    val dcg = ranked
       .filter(col("rank") <= k)
+      .join(t.withColumn("__t", lit(1)), Seq("query", "candidate"), "left")
       .groupBy("query")
-      .agg(sum(when(col("__t").isNotNull,
-        lit(1.0) / log2(col("rank") + lit(1.0))).otherwise(lit(0.0))).as("dcg"))
+      .agg(sum(when(col("__t").isNotNull, gain(col("rank")))
+        .otherwise(lit(0.0))).as("dcg"))
 
     // the query universe (default): truth queries the retrieval
     // returned NOTHING for are kept (dcg is built from `ranked`, so
@@ -196,13 +157,7 @@ object Eval {
       if (retrievedOnly) { if (zeroWhenNoTruth) "left" else "inner" }
       else { if (zeroWhenNoTruth) "full" else "right" }
     val perQuery = dcg.join(relCounts, Seq("query"), joinType)
-      .withColumn("idcg",
-        // Σ_{i=1..min(k, n_relevant)} 1/log2(i+1), n_relevant ≥ 1 by construction
-        when(col("n_relevant").isNull, lit(0.0)).otherwise(
-          aggregate(
-            sequence(lit(1), least(lit(k), col("n_relevant").cast("int"))),
-            lit(0.0),
-            (acc, i) => acc + lit(1.0) / log2(i.cast("double") + lit(1.0)))))
+      .withColumn("idcg", idcg(lit(k), col("n_relevant")))
       .withColumn("ndcg_q",
         when(col("idcg") > 0,
           coalesce(col("dcg"), lit(0.0)) / col("idcg")).otherwise(lit(0.0)))
@@ -211,4 +166,22 @@ object Eval {
       count(lit(1)).as("n_queries"),
       round(avg("ndcg_q"), 4).as("ndcg"))
   }
+
+  /** The discounted gain of a relevant hit at 1-based `rank`:
+    * 1/log2(rank+1) (the reference's 1/log2(i+2) over 0-based i).
+    */
+  private[graft] def gain(rank: Column): Column =
+    lit(1.0) / log2(rank + lit(1.0))
+
+  /** IDCG@k of a query with `nRelevant` relevant candidates:
+    * Σ_{i=1..min(k, nRelevant)} 1/log2(i+1), summed in rank order; 0 for a
+    * query outside the truth relation (`nRelevant` null). Shared by
+    * [[ndcgAtK]] and the SemLink grid, whose `k` is a column.
+    */
+  private[graft] def idcg(k: Column, nRelevant: Column): Column =
+    when(nRelevant.isNull, lit(0.0)).otherwise(
+      aggregate(
+        sequence(lit(1), least(k, nRelevant.cast("int"))),
+        lit(0.0),
+        (acc, i) => acc + gain(i.cast("double"))))
 }

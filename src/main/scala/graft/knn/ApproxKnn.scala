@@ -318,7 +318,24 @@ object ApproxKnn {
     // all-null frame now fails broadcastKnn's loud empty-query require
     // instead of an opaque empty-union error
     val qs = queries.filter(col(idCol).isNotNull)
-    val n = qs.count()
+    blockKnnCounted(qs, qs.count(), candidates, idCol, vecCol, k, metric,
+      blockSize, excludeSelf)
+  }
+
+  /** [[blockKnn]] for a caller that already counted its queries: `qs`
+    * holds no null id and `n` is its row count (the SemLink grid's
+    * escalation gate counts the same frame).
+    */
+  private[graft] def blockKnnCounted(
+      qs: DataFrame,
+      n: Long,
+      candidates: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      metric: String,
+      blockSize: Int,
+      excludeSelf: Boolean): DataFrame = {
     val nBlocks = math.max(1L, (n + blockSize - 1) / blockSize).toInt
     if (nBlocks == 1)
       return KnnJoin.broadcastKnn(qs, candidates, idCol, vecCol, k,

@@ -1,6 +1,9 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.discover.{Discovery, Eval}
@@ -14,9 +17,11 @@ import graft.sources.Lake
   * NDCG@k per cell against a ground-truth pair relation.
   *
   * The reference recomputes the FAISS search for every threshold although
-  * distances depend only on k (join_discoverer.py:485–498) — here the kNN
-  * Dataset is computed ONCE per k (for the max k, then filtered by rank)
-  * and cached; thresholds are pure filters over it (SURVEY.md §4.1).
+  * distances depend only on k (join_discoverer.py:485–498), and scores
+  * each cell separately (:454–518). Here the kNN runs ONCE, at the max k,
+  * and one conditional aggregate over it scores every (k, threshold) cell
+  * and every k's NDCG, collected in one action (SURVEY.md §4.1): the
+  * grid's Spark jobs do not grow with the number of cells.
   */
 object SemLinkGrid {
 
@@ -175,9 +180,10 @@ object SemLinkGrid {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** One grid cell: the discovered (query, candidate, dist) pairs and the
-    * one-row metrics frame (k, threshold, tp, fp, fn, precision, recall,
-    * f1, ndcg).
+  /** One grid cell: the discovered (query, candidate, dist) pairs (lazy:
+    * evaluated only when used) and the one-row metrics frame (k,
+    * threshold, tp, fp, fn, precision, recall, f1, ndcg, engine), a
+    * driver-local frame over the collected grid.
     */
   final case class GridCell(k: Int, threshold: Double,
       discovered: DataFrame, metrics: DataFrame)
@@ -240,8 +246,8 @@ object SemLinkGrid {
       math.max(base, graft.knn.BeamLaw.SpreadBaseEf)
     else base
 
-  /** The shared grid plumbing: one kNN pass at max(k), cached; every
-    * (k, threshold) cell is a pure filter over it.
+  /** The lake pipeline's grid: profile → serialize → embed, then
+    * [[gridCellsFromCatalog]].
     */
   def gridCells(
       spark: SparkSession,
@@ -270,6 +276,15 @@ object SemLinkGrid {
     * (the q89 oracle path, where the kNN + per-cell A8/A9 math is
     * replayed in SQL over stored vectors) is another. `groundTruth` is a
     * two-column (q, c) key-grain pair relation, symmetrized here.
+    *
+    * One kNN pass at max(k), then ONE aggregate scores every cell
+    * (tp/fp/fn, P/R/F1 through [[Eval.prfColumns]]) and every k's NDCG
+    * (the [[Eval.ndcgAtK]] semantics through the shared [[Eval.idcg]]),
+    * collected once. On an exact catalog of one broadcast block the call
+    * runs the same seven Spark jobs whatever the number of cells: the
+    * catalog count, the broadcast kNN's query collect, the kNN merge's
+    * exchange, the truth's exchange and broadcast, and the aggregate's
+    * exchange and result.
     */
   def gridCellsFromCatalog(
       catalog: DataFrame, // (key, vec) + anything else, pruned here
@@ -289,127 +304,116 @@ object SemLinkGrid {
     // after the expensive profiling already ran
     require(ks.nonEmpty && thresholds.nonEmpty,
       "gridCellsFromCatalog: ks and thresholds must be non-empty")
+    val spark = catalog.sparkSession
     // lazy localCheckpoints, not cache(): blocks release with the frames
     // (the SemLink.knnPairs rule — cache() pins them for the session)
     val embedded = catalog.select("key", "vec")
       .localCheckpoint(eager = false)
 
-    // THE scale weight of the grid is not the kNN — it is the truth
-    // relation: a pair-grain ground truth over same-group keys grows
-    // QUADRATICALLY in group size (a 10-label 20k-key probe catalog
-    // symmetrizes to 40M pairs), and every metric joins against it.
-    // Three measures keep that weight paid ONCE, not once per cell:
-    //  - metrics run in LONG-ID space: truth keys hash through the same
-    //    xxhash64 the kNN uses internally, so the 6 truth-side
-    //    aggregations below ship 16-byte pairs instead of string pairs
-    //    (collision odds across a catalog are ~n²/2^65 — negligible,
-    //    and the kNN side already accepts them by construction);
-    //  - symmetrize + distinct runs once, and the result is checkpointed
-    //    PRE-PARTITIONED on the (query, candidate) join key, so the
-    //    per-cell joins reshuffle only the (small) discovered side;
-    //  - per-cell P/R/F1 uses fn = |truth| − tp (microPrf1Counted): a
-    //    left join over the discovered side, never a per-cell
-    //    full-outer that re-ships the whole truth relation.
-    // symmetric GT (join_discoverer.py:392–397): output (query, candidate)
-    // cast-to-string BEFORE hashing (both here and in gridKnnIds): the
-    // pre-hash code joined raw values, where Spark's comparison
-    // coercion matched a long-typed truth column against string catalog
-    // keys — xxhash64(5L) != xxhash64("5") would turn that tolerated
-    // mixed-type call into silent all-miss metrics
+    // Metrics run in LONG-ID space: truth keys hash through the same
+    // xxhash64 the kNN uses, cast to string BEFORE hashing (both here and
+    // in gridKnnIds) — a long-typed truth column against string catalog
+    // keys would otherwise hash 5L and "5" apart into silent all-miss
+    // metrics. The symmetric truth is placed by query, so its per-query
+    // relevant counts (an aggregate and a window) add no exchange.
     val truth = Discovery.symmetrizeGroundTruth(
-        groundTruth.toDF("q", "c").select(
-          xxhash64(col("q").cast("string")).as("q"),
-          xxhash64(col("c").cast("string")).as("c")),
-        "q", "c")
-      // hash placement is the right call HERE (vs the ShardSlots slot
-      // mapping the shard-keyed sites use): the key space is the full
-      // (query, candidate) pair domain — cardinality >> partitions, so
-      // collisions average out and per-task load is row-bounded, not
-      // graph-bounded
-      .repartition(col("query"), col("candidate"))
-      .localCheckpoint(eager = false)
-    val nTruth = truth.count() // one action: materializes the checkpoint
-    // relevant-per-query counts are k-independent — aggregate once and
-    // keep them driver-small (one row per query key)
-    val relCounts = truth.groupBy("query")
-      .agg(count(lit(1)).as("n_relevant"))
-      .localCheckpoint(eager = false)
+      groundTruth.toDF("q", "c").select(
+        xxhash64(col("q").cast("string")).as("q"),
+        xxhash64(col("c").cast("string")).as("c")),
+      "q", "c")
+    val relCounts = truth.groupBy("query").agg(count(lit(1)).as("relevant"))
 
-    val kMax = ks.max
-    // ONE kNN pass at kMax; every (k, t) cell is a pure filter over it.
-    // Metrics consume the LONG-ID core; only the user-facing discovered
-    // frames pay the id → key map-back (two broadcast joins, per cell,
-    // evaluated only if the caller uses them)
-    val (coreKnn, keys, eng) = gridKnnIds(embedded, kMax,
+    // ONE kNN pass at kMax; every (k, t) cell is a filter over it. Only
+    // the user-facing discovered frames pay the id → key map-back.
+    val (coreKnn, keys, eng) = gridKnnIds(embedded, ks.max,
       annAbove = annAbove, nList = nList, nProbe = nProbe,
       hnswAbove = hnswAbove, efSearch = efSearch,
       efAutoScale = efAutoScale, shapeAutoScale = shapeAutoScale,
       scratchDir = scratchDir)
     val knn = coreKnn.localCheckpoint(eager = false)
-    knn.count() // materialize once
 
-    // ONE left join of the kMax kNN against the (pre-partitioned,
-    // checkpointed) truth relation, checkpointed: every (k, threshold)
-    // cell's tp/fp AND every per-k DCG reduce to conditional aggregates
-    // over this frame — |cells| + |ks| truth-side joins collapse to one
-    // (the reference default sweep is 12 cells; each join re-shipped
-    // the cell's discovered rows into the truth partitioning). kNN rows
-    // are unique per (query, candidate) by construction — every engine
-    // emits one row per neighbor through a ranking window or
-    // disjoint-list scan — so the cell filters below preserve the
-    // distinctness microPrf1 semantics require.
-    val knnMarked = knn
-      .select(col("query_id").as("query"),
-        col("neighbor_id").as("candidate"), col("dist"), col("rank"))
-      .join(truth.select(col("query"), col("candidate"))
-        .withColumn("__t", lit(1)), Seq("query", "candidate"), "left")
-      .localCheckpoint(eager = false)
-
-    // NDCG depends only on k — compute and MATERIALIZE it once per k
-    // (a lazy per-cell frame would re-run the join+aggregate for every
-    // (k, threshold) cell, |thresholds|× redundant scans); it is one
-    // scalar per k, so the collect is driver-trivial
-    val ndcgByK: Map[Int, Option[Double]] = ks.distinct.map { k =>
-      val row = Eval.ndcgAtK(
-        knn.filter(col("rank") <= k)
-          .select(col("query_id").as("query"),
-            col("neighbor_id").as("candidate"), col("rank")),
-        truth, k, truthIsDistinct = true, preRelCounts = Some(relCounts),
-        preMarked = Some(knnMarked))
-        .select("ndcg").collect().head
-      k -> (if (row.isNullAt(0)) None else Some(row.getDouble(0)))
-    }.toMap
+    // Every cell's tp/fp and every k's NDCG in ONE conditional aggregate
+    // over three row kinds, grouped by cell:
+    //  - each kNN row inside a cell's rank cut (rank ≤ k) counts toward
+    //    tp/fp when it also passes the threshold, and a truth hit adds
+    //    its NDCG share gain(rank) / idcg(k, |relevant|);
+    //  - each truth query adds its relevant count to every cell, which
+    //    gives fn = |truth| − tp and the NDCG mean's query count (truth
+    //    queries the kNN missed score 0, as in Eval.ndcgAtK);
+    //  - each cell adds one empty row, so a cell with no kNN row and no
+    //    truth still has its all-zero metrics row.
+    // kNN rows are unique per (query, candidate) — every engine emits one
+    // row per neighbor — so the counts keep microPrf1's set semantics.
+    // The cells are a literal array exploded per row, not a joined
+    // table: broadcasting even a local table costs a Spark job.
+    val cells = array((for (k <- ks.distinct; t <- thresholds.distinct)
+      yield struct(lit(k).as("k"), lit(t).as("threshold"))): _*)
+    val cell = explode(cells).as("cell")
+    val relevantOf = Window.partitionBy("query")
+    val marked = knn
+      .select(col("query_id").as("query"), col("neighbor_id").as("candidate"),
+        col("dist"), col("rank"))
+      .join(truth.withColumn("relevant", count(lit(1)).over(relevantOf)),
+        Seq("query", "candidate"), "left")
+    val hit = col("relevant").isNotNull
+    val knnRows = marked
+      .select(cell, col("dist"), col("rank"), col("relevant"))
+      .select("cell.*", "dist", "rank", "relevant")
+      .filter(col("rank") <= col("k"))
+      .select(col("k"), col("threshold"),
+        (sqrt(col("dist")) <= col("threshold")).as("found"), hit.as("hit"),
+        when(hit, Eval.gain(col("rank")) / Eval.idcg(col("k"), col("relevant")))
+          .as("share"))
+    val truthRows = relCounts.select(cell, col("relevant"))
+      .select("cell.*", "relevant")
+    val emptyRows = spark.range(1).select(cell).select("cell.*")
+    val counts = knnRows
+      .unionByName(truthRows, allowMissingColumns = true)
+      .unionByName(emptyRows, allowMissingColumns = true)
+      .groupBy("k", "threshold")
+      .agg(
+        count(when(col("found") && col("hit"), lit(1))).as("tp"),
+        count(when(col("found") && !col("hit"), lit(1))).as("fp"),
+        coalesce(sum("relevant"), lit(0L)).as("n_truth"),
+        count("relevant").as("n_queries"),
+        coalesce(sum("share"), lit(0.0)).as("dcg"))
+      .withColumn("fn", col("n_truth") - col("tp"))
+    // the ENGINE that produced the kNN rides on every metrics row: the
+    // escalation gate switches exact → ANN with only a WARN log as the
+    // signal otherwise, and a downstream metrics consumer must be able
+    // to tell exact from ANN-derived precision/recall without scraping
+    // logs (the oracle paths pin the column per strategy)
+    val grid = Eval.prfColumns(counts)
+      .withColumn("ndcg", when(col("n_queries") > 0,
+        round(col("dcg") / col("n_queries"), 4)))
+      .withColumn("engine", lit(eng.engine))
+      .select("k", "threshold", "tp", "fp", "fn",
+        "precision", "recall", "f1", "ndcg", "engine")
+    val rows = grid.collect()
+      .map(r => (r.getInt(0), r.getDouble(1)) -> r).toMap
 
     for (k <- ks; t <- thresholds) yield {
-      val topK = knn.filter(col("rank") <= k)
-      val discoveredIds = Discovery.thresholdFilter(topK, "dist", t)
+      val discovered = Discovery.thresholdFilter(knn.filter(col("rank") <= k), "dist", t)
         .select(col("query_id").as("query"), col("neighbor_id").as("candidate"),
           col("dist"))
-      val discovered = discoveredIds
         .join(broadcast(keys.select(col("id").as("query"),
           col("key").as("__qkey"))), Seq("query"))
         .join(broadcast(keys.select(col("id").as("candidate"),
           col("key").as("__ckey"))), Seq("candidate"))
         .select(col("__qkey").as("query"), col("__ckey").as("candidate"),
           col("dist"))
-      val prf = Eval.microPrf1Marked(
-        Discovery.thresholdFilter(knnMarked.filter(col("rank") <= k),
-          "dist", t), nTruth)
-      // the ENGINE that produced the kNN rides on every metrics row:
-      // the escalation gate switches exact → ANN with only a WARN log
-      // as the signal otherwise, and a downstream metrics consumer must
-      // be able to tell exact from ANN-derived precision/recall without
-      // scraping logs (the oracle paths pin the column per strategy)
-      val metrics = prf
-        .withColumn("ndcg",
-          ndcgByK(k).map(lit(_)).getOrElse(lit(null)).cast("double"))
-        .withColumn("k", lit(k))
-        .withColumn("threshold", lit(t))
-        .withColumn("engine", lit(eng.engine))
-        .select("k", "threshold", "tp", "fp", "fn",
-          "precision", "recall", "f1", "ndcg", "engine")
-      GridCell(k, t, discovered, metrics)
+      GridCell(k, t, discovered,
+        spark.createDataFrame(java.util.List.of(rows((k, t))), grid.schema))
     }
+  }
+
+  /** The collected grid of `cells`, one metrics row per cell, as one
+    * driver-local frame: actions on it run no Spark job.
+    */
+  private def collectedGrid(cells: Seq[GridCell]): DataFrame = {
+    val first = cells.head.metrics
+    first.sparkSession.createDataFrame(
+      cells.flatMap(_.metrics.collect()).asJava, first.schema)
   }
 
   /** The grid's single kNN pass on the broadcast + partial-top-k scale
@@ -519,14 +523,15 @@ object SemLinkGrid {
       .withColumn("id", xxhash64(col("key").cast("string")))
       .select("id", "key", "vec")
     val keys = withId.select("id", "key")
-    // one catalog count serves the gates and the auto-nList rule
-    // (column-pruned id scan; skipped entirely when the caller opted
-    // out of BOTH gates with MaxValue). annAbove = MaxValue is the
-    // documented force-exact opt-out and overrides the HNSW tier too —
-    // a caller who pinned exactness must never be silently re-escalated
-    // by a new default.
+    // one catalog count serves the gates, the auto-nList rule and the
+    // exact path's block sizing (xxhash64 ids are never null, so it is
+    // also blockKnn's query count). It counts the physical rows in one
+    // job; Dataset.count is a two-stage aggregate, two jobs under AQE.
+    // annAbove = MaxValue is the documented force-exact opt-out and
+    // overrides the HNSW tier too — a caller who pinned exactness must
+    // never be silently re-escalated by a new default.
     val gated = annAbove != Long.MaxValue
-    val n = if (gated) withId.count() else 0L
+    val n = embedded.queryExecution.toRdd.count()
     if (gated && n > annAbove && hnswAbove != Long.MaxValue && n > hnswAbove) {
       // the SHAPE probe (the r19 maturation of the ShapeStats operating
       // rule from a documented diagnostic into gate behavior, the same
@@ -598,8 +603,8 @@ object SemLinkGrid {
         keys, GridEngine("ivf", efSearch, efSearch,
           nList = Some(lists), nProbe = Some(probe)))
     } else
-      (graft.knn.ApproxKnn.blockKnn(withId, withId, "id", "vec", kMax,
-        KnnJoin.MetricL2Sq, blockSize = blockSize, excludeSelf = true),
+      (graft.knn.ApproxKnn.blockKnnCounted(withId, n, withId, "id", "vec",
+        kMax, KnnJoin.MetricL2Sq, blockSize, excludeSelf = true),
         keys, GridEngine("exact", efSearch, efSearch))
   }
 
@@ -618,8 +623,8 @@ object SemLinkGrid {
     (lists, probe)
   }
 
-  /** One grid cell row per (k, threshold):
-    * (k, threshold, tp, fp, fn, precision, recall, f1, ndcg).
+  /** The collected grid, one row per (k, threshold): (k, threshold, tp,
+    * fp, fn, precision, recall, f1, ndcg, engine), as a driver-local frame.
     */
   def evaluationGrid(
       spark: SparkSession,
@@ -629,10 +634,11 @@ object SemLinkGrid {
       thresholds: Seq[Double] = Seq(0.1, 0.2, 0.3, 0.4),
       embedder: Embedder = HashEmbedder(),
       tables: Seq[String] = Lake.lakeTables): DataFrame =
-    gridCells(spark, dir, groundTruth, ks, thresholds, embedder, tables)
-      .map(_.metrics).reduce(_.unionByName(_))
+    collectedGrid(
+      gridCells(spark, dir, groundTruth, ks, thresholds, embedder, tables))
 
-  /** [[evaluationGrid]] over a pre-embedded (key, vec) catalog.
+  /** [[evaluationGrid]] over a pre-embedded (key, vec) catalog, as a
+    * driver-local frame.
     * `annAbove` / `nList` / `nProbe` / `hnswAbove` / `efSearch`: the
     * [[gridKnn]] compute gates — a catalog past `annAbove` keys routes
     * the single kNN pass through an ANN engine instead of exact blocked
@@ -665,10 +671,9 @@ object SemLinkGrid {
       efAutoScale: Boolean = true,
       shapeAutoScale: Boolean = true,
       scratchDir: Option[String] = None): DataFrame =
-    gridCellsFromCatalog(catalog, groundTruth, ks, thresholds,
-        annAbove, nList, nProbe, hnswAbove, efSearch, efAutoScale,
-        shapeAutoScale, scratchDir)
-      .map(_.metrics).reduce(_.unionByName(_))
+    collectedGrid(gridCellsFromCatalog(catalog, groundTruth, ks, thresholds,
+      annAbove, nList, nProbe, hnswAbove, efSearch, efAutoScale,
+      shapeAutoScale, scratchDir))
 
   /** Reference-parity export (join_discoverer.py:491–517): one CSV of
     * discovered joinable pairs per cell (`pairs_k<k>_t<t>`, JoinablePair
@@ -693,7 +698,7 @@ object SemLinkGrid {
       graft.sources.Formats.csvSink(pairs,
         s"$outDir/pairs_k${cell.k}_t${cell.threshold}", singleFile = true)
     }
-    val grid = cells.map(_.metrics).reduce(_.unionByName(_))
+    val grid = collectedGrid(cells)
     graft.sources.Formats.csvSink(grid, s"$outDir/evaluation_results",
       singleFile = true)
     grid

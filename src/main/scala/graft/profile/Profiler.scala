@@ -7,9 +7,10 @@ import org.apache.spark.sql.types._
 import graft.sources.Lake
 
 /** Column profiling — the reference's core aggregation
-  * (SchemaExtraction/extract_schema.py:40–77), re-expressed as a single
-  * melt + two hash aggregations so it scales to arbitrarily wide tables and
-  * arbitrarily many rows (the reference is per-column pandas loops).
+  * (SchemaExtraction/extract_schema.py:40–77), re-expressed as one melt
+  * and two hash aggregations for the WHOLE lake (the reference is
+  * per-column pandas loops): the plan's job, stage and exchange counts do
+  * not grow with the number of tables or columns.
   *
   * Output grain: one row per (table, column) with
   *   inferred_type ∈ {integer, float, datetime, string}
@@ -31,19 +32,6 @@ object Profiler {
     case FloatType | DoubleType | _: DecimalType       => "float"
     case TimestampType | TimestampNTZType | DateType   => "datetime"
     case _                                             => "string"
-  }
-
-  /** Long-form melt: one row per (column, value, rid). One narrow pass —
-    * no shuffle until the downstream aggregations.
-    */
-  private def melt(df: DataFrame): DataFrame = {
-    val fields = df.schema.fields
-    df.withColumn("__rid", monotonically_increasing_id())
-      .select(
-        col("__rid"),
-        explode(array(fields.map(f =>
-          struct(lit(f.name).as("column"), qcol(f.name).cast("string").as("value"))): _*)).as("kv"))
-      .select(col("__rid"), col("kv.column").as("column"), col("kv.value").as("value"))
   }
 
   /** Backtick-quoted column reference: `col(name)` PARSES its argument
@@ -91,45 +79,97 @@ object Profiler {
         col("e.min_len"), col("e.max_len"), col("e.avg_len"))
   }
 
-  /** Full profile including values_sample (first-seen distinct order) and
-    * most_common_values (top-K by frequency, ties broken by value asc).
-    *
-    * Both samples come from ONE partial-top-k aggregation pass over the
-    * distinct-value counts ([[graft.functions.AggExpressions.boundedTopK]]):
-    * each task keeps a k-sized buffer per column and the final merge sees
-    * only |partitions| × |columns| such buffers. A ranking window here
-    * (`Window.partitionBy("column")`) would route every distinct value of a
-    * column through a single reducer — O(N) rows in one task for a
-    * near-unique column, the profiler's scale-killer at 100 TB.
-    */
+  /** Full profile of one table: the one-table case of [[profileTables]]. */
   def profileTable(
       df: DataFrame,
       tableName: String,
       sampleSize: Int = 30,
+      topK: Int = 20): DataFrame =
+    profileTables(Seq(tableName -> df), sampleSize, topK)
+
+  /** Full profile of many tables in ONE melted plan: every table's rows
+    * become `(cid, value, __rid)` rows, where `cid` is the column's int
+    * ordinal across all tables (an int key keeps the post-shuffle hash
+    * aggregates cheap; `(table, column)` strings made them the hottest
+    * executor frame), and the union feeds two aggregations:
+    *
+    *  - `groupBy(cid, value)` → `cnt` and `first_rid` (map-side partial
+    *    aggregation, so the shuffle carries distinct values, not rows);
+    *  - `groupBy(cid)` derives every output column from those counts:
+    *    `row_count = Σcnt`, `num_values = Σcnt` over non-null values,
+    *    min/max length over the distinct values, `avg_len =
+    *    round(Σcnt·len / num_values, 2)` (bit-equal to `round(avg(len),
+    *    2)`: both divide the same exact integer sum by the same count),
+    *    and both samples from ONE partial-top-k pass
+    *    ([[graft.functions.AggExpressions.boundedTopK]]): each task keeps
+    *    a k-sized buffer per column, where a ranking window would route
+    *    every distinct value of a column through one reducer.
+    *
+    * A driver-side schema catalog `(cid, table, column, inferred_type)`
+    * is left-joined last to restore the names, so a zero-row table still
+    * profiles (counts 0, lengths and samples null). A column with no
+    * non-null value keeps `null` samples, not empty arrays. `__rid` is
+    * per table, so first-seen order compares rows of one table only.
+    */
+  private[graft] def profileTables(
+      tables: Seq[(String, DataFrame)],
+      sampleSize: Int = 30,
       topK: Int = 20): DataFrame = {
     import graft.functions.AggExpressions.boundedTopK
-    val stats = profileStats(df, tableName)
+    require(tables.nonEmpty, "profileTables: no tables")
+    val spark = tables.head._2.sparkSession
+    val columns = for ((t, df) <- tables; f <- df.schema.fields) yield (t, f)
+    val catalog = spark.createDataFrame(columns.zipWithIndex.map {
+        case ((t, f), cid) => (cid, t, f.name, inferType(f.dataType))
+      }).toDF("cid", "table", "column", "inferred_type")
 
-    val valueCounts = melt(df)
-      .filter(col("value").isNotNull)
-      .groupBy("column", "value")
+    val firstCid = tables.scanLeft(0)(_ + _._2.schema.length)
+    val melted = tables.zip(firstCid).map { case ((_, df), base) =>
+      df.withColumn("__rid", monotonically_increasing_id())
+        .select(col("__rid"), explode(array(df.schema.fields.zipWithIndex.map {
+          case (f, i) =>
+            struct(lit(base + i).as("cid"), qcol(f.name).cast("string").as("value"))
+        }: _*)).as("kv"))
+        .select(col("kv.cid"), col("kv.value"), col("__rid"))
+    }.reduce(_.union(_))
+
+    val valueCounts = melted
+      .groupBy("cid", "value")
       .agg(count(lit(1)).as("cnt"), min("__rid").as("first_rid"))
 
+    val present = col("value").isNotNull
+    val len = length(col("value"))
     // first-seen order = (first_rid ASC, value ASC); top-by-frequency =
-    // (cnt DESC, value ASC) ≡ (-cnt ASC, value ASC)
-    val samples = valueCounts
-      .groupBy("column")
+    // (cnt DESC, value ASC) ≡ (-cnt ASC, value ASC); null values are
+    // skipped by boundedTopK
+    val stats = valueCounts
+      .groupBy("cid")
       .agg(
+        sum("cnt").as("row_count"),
+        sum(when(present, col("cnt")).otherwise(lit(0L))).as("num_values"),
+        min(len).cast(LongType).as("min_len"),
+        max(len).cast(LongType).as("max_len"),
+        sum(col("cnt") * len).as("len_sum"),
         boundedTopK(col("first_rid"), col("value"), sampleSize)
           .as("values_sample"),
         boundedTopK(-col("cnt"), col("value"), topK)
           .as("most_common_values"))
 
-    stats
-      .join(samples, Seq("column"), "left")
-      .select("table", "column", "inferred_type", "row_count", "num_values",
-        "nulls", "min_len", "max_len", "avg_len", "values_sample",
-        "most_common_values")
+    val nonNull = col("num_values") > 0
+    catalog
+      .join(broadcast(stats), Seq("cid"), "left")
+      .withColumn("row_count", coalesce(col("row_count"), lit(0L)))
+      .withColumn("num_values", coalesce(col("num_values"), lit(0L)))
+      .select(
+        col("table"), col("column"), col("inferred_type"), col("row_count"),
+        col("num_values"), (col("row_count") - col("num_values")).as("nulls"),
+        col("min_len"), col("max_len"),
+        // the guard keeps ANSI mode's divide-by-zero off all-null columns
+        round(when(nonNull,
+          col("len_sum").cast(DoubleType) / col("num_values").cast(DoubleType)),
+          2).as("avg_len"),
+        when(nonNull, col("values_sample")).as("values_sample"),
+        when(nonNull, col("most_common_values")).as("most_common_values"))
   }
 
   /** A4: head-rows sample as records (`sample_rows` in the reference's
@@ -154,11 +194,11 @@ object Profiler {
       .map { case (t, df) => profileStats(df, t) }
       .reduce(_.unionByName(_))
 
-  /** Profile every table of the lake with samples (the SemLink input). */
+  /** Profile every table of the lake with samples (the SemLink input),
+    * in one [[profileTables]] plan.
+    */
   def profileLake(spark: SparkSession, dir: String,
       tables: Seq[String] = Lake.lakeTables,
       sampleSize: Int = 30, topK: Int = 20): DataFrame =
-    Lake.tables(spark, dir, tables)
-      .map { case (t, df) => profileTable(df, t, sampleSize, topK) }
-      .reduce(_.unionByName(_))
+    profileTables(Lake.tables(spark, dir, tables), sampleSize, topK)
 }

@@ -61,6 +61,23 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("Window"))
   }
 
+  test("profileLake: one plan shape for 1, 3 and 7 tables") {
+    // the melted lake plan: its aggregates and exchanges (hence its jobs)
+    // do not grow with the table count. (AQE's toString repeats the tree
+    // as "Initial Plan" — cut it off.)
+    def shape(n: Int): (Int, Int) = {
+      val df = Profiler.profileLake(spark, sf0001, graft.sources.Lake.lakeTables.take(n))
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head.linesIterator.toSeq
+      (plan.count(_.contains("Aggregate")), plan.count(_.contains("Exchange")))
+    }
+    val shapes = Seq(1, 3, 7).map(n => n -> shape(n))
+    assert(shapes.head._2._1 > 0 && shapes.head._2._2 > 0)
+    assert(shapes.map(_._2).distinct.size == 1,
+      s"(aggregates, exchanges) by table count: $shapes")
+  }
+
   test("microPrf1 evaluates the discovered input exactly once") {
     val df = SparkEntry.queries("q13_knn_eval_prf")(spark, sf0001)
     df.collect()

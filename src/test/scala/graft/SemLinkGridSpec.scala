@@ -137,6 +137,64 @@ class SemLinkGridSpec extends SparkSpec {
       "pairs_k10_t1.4 content drifted from the golden export")
   }
 
+  test("collected grid equals the per-cell reference (microPrf1Counted + " +
+    "ndcgAtK), a cell below every distance included") {
+    import graft.discover.{Discovery, Eval}
+    import graft.embed.HashEmbedder
+    import graft.functions.TextFns
+    import graft.pipeline.SemLink
+    import graft.profile.Profiler
+    val catalog = SemLink.columnTexts(Profiler.profileLake(spark, sf0001))
+      .withColumn("vec", HashEmbedder().embedColumn(col("text")))
+      .select("key", "vec").cache()
+    val keyGt = gt.select(
+      TextFns.columnKey(col("query_table"), col("query_column")).as("q"),
+      TextFns.columnKey(col("candidate_table"), col("candidate_column")).as("c"))
+    val truth = Discovery.symmetrizeGroundTruth(keyGt, "q", "c").cache()
+    val nTruth = truth.count()
+    val ks = Seq(5, 10)
+    val knn = SemLinkGrid.gridKnn(catalog, ks.max)
+      .select(col("query_id").as("query"), col("neighbor_id").as("candidate"),
+        col("dist"), col("rank")).cache()
+    val closest = math.sqrt(knn.agg(min("dist")).head.getDouble(0))
+    assert(closest > 0)
+    val thresholds = Seq(closest / 2, 0.8, 1.1, 1.4)
+
+    val cells = SemLinkGrid.gridCellsFromCatalog(catalog, keyGt, ks, thresholds)
+    assert(cells.map(c => (c.k, c.threshold)) ==
+      (for (k <- ks; t <- thresholds) yield (k, t)))
+    cells.foreach { cell =>
+      val topK = knn.filter(col("rank") <= cell.k)
+      val found = Discovery.thresholdFilter(topK, "dist", cell.threshold)
+      val prf = Eval.microPrf1Counted(found, truth, nTruth).head
+      val ndcg = Eval.ndcgAtK(topK, truth, cell.k).head
+      assert(cell.metrics.isLocal, "metrics must be a driver-local frame")
+      val got = cell.metrics.collect()
+      assert(got.length == 1)
+      val r = got.head
+      val at = s"cell (${cell.k}, ${cell.threshold})"
+      Seq("tp", "fp", "fn").foreach(c =>
+        assert(r.getAs[Long](c) == prf.getAs[Long](c), s"$at $c"))
+      Seq("precision", "recall", "f1").foreach(c =>
+        assert(r.getAs[Double](c) == prf.getAs[Double](c), s"$at $c"))
+      assert(r.getAs[Double]("ndcg") == ndcg.getAs[Double]("ndcg"), s"$at ndcg")
+      assert(r.getAs[String]("engine") == "exact")
+      assert(cell.discovered.collect().toSet ==
+        found.select("query", "candidate", "dist").collect().toSet, s"$at pairs")
+    }
+    // the threshold below every distance discovers nothing, and its row
+    // is still there with the whole truth as fn
+    cells.filter(_.threshold == closest / 2).foreach { cell =>
+      val r = cell.metrics.head()
+      assert(r.getAs[Long]("tp") == 0 && r.getAs[Long]("fp") == 0 &&
+        r.getAs[Long]("fn") == nTruth)
+    }
+    // the evaluation grid is the same rows, collected into one local frame
+    val grid = SemLinkGrid.evaluationGridFromCatalog(catalog, keyGt, ks, thresholds)
+    assert(grid.isLocal)
+    assert(grid.collect().toSeq == cells.map(_.metrics.head()))
+  }
+
   test("gridKnn size gate: forced block path ≡ single-broadcast path (no full-catalog collect)") {
     // 60 catalog keys; blockSize=7 forces the multi-block escalation the
     // gate exists for (each block collects ≤ 7 query rows to the driver),
