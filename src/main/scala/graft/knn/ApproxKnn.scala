@@ -921,17 +921,27 @@ private[knn] object HnswSearch {
   }
 
   /** Beam every query through one shard's graph: per-query top-k partials
-    * with self-exclusion (search k+1, drop self, keep k).
+    * with self-exclusion (search k+1, drop self, keep k), emitted from
+    * the kernel's ranked result arrays, which the next query reuses.
     */
   def beamAll(g: HnswGraph, queries: Array[(Long, Array[Float])], k: Int,
-      efSearch: Int, excludeSelf: Boolean): Iterator[(Long, Long, Double)] =
+      efSearch: Int, excludeSelf: Boolean): Iterator[(Long, Long, Double)] = {
+    val want = k + (if (excludeSelf) 1 else 0)
+    val ids = new Array[Long](math.max(0, math.min(want, g.size)))
+    val dists = new Array[Double](ids.length)
     queries.iterator.flatMap { case (qid, qv) =>
-      g.search(qv, k + (if (excludeSelf) 1 else 0), math.max(efSearch, k + 1))
-        .iterator
-        .filter { case (nid, _) => !(excludeSelf && nid == qid) }
-        .take(k)
-        .map { case (nid, d) => (qid, nid, d) }
+      val r = g.searchInto(qv, want, math.max(efSearch, k + 1), ids, dists)
+      var kept = 0
+      var i = 0
+      while (i < r && kept < k) {
+        if (!(excludeSelf && ids(i) == qid)) {
+          ids(kept) = ids(i); dists(kept) = dists(i); kept += 1
+        }
+        i += 1
+      }
+      Iterator.tabulate(kept)(j => (qid, ids(j), dists(j)))
     }
+  }
 
   /** Merge per-shard/per-block partials into the global per-query top-k:
     * (query_id, neighbor_id, dist, rank), rank 1-based ascending by

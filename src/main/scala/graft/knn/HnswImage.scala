@@ -8,8 +8,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 /** The binary graph image of one persisted [[HnswIndex]] shard, and the
-  * shard's only stored form: the [[HnswGraph.nodes]] snapshot as flat
-  * arrays, so a task restores its shard from one bulk read.
+  * shard's only stored form: the [[HnswGraph]]'s nodes as flat arrays,
+  * so a task restores its shard from one bulk read.
   * Little-endian, in this order:
   *
   *  - header: magic `HNSW`, format version, node count `n`, vector
@@ -27,7 +27,15 @@ import org.apache.hadoop.fs.Path
   */
 private[graft] object HnswImage {
 
-  type Node = (Long, Array[Float], Seq[Seq[Int]])
+  /** A decoded image: the file's arrays, checked ([[decode]]); `levels`
+    * holds each node's level count.
+    */
+  final class Shard(val ids: Array[Long], val dim: Int, val vecs: Array[Float],
+      val levels: Array[Int], val offsets: Array[Int], val links: Array[Int]) {
+    def size: Int = ids.length
+    def vector(i: Int): Array[Float] =
+      java.util.Arrays.copyOfRange(vecs, i * dim, (i + 1) * dim)
+  }
 
   /** The image's file name inside its shard directory; the name is kept
     * for on-disk compatibility.
@@ -38,33 +46,39 @@ private[graft] object HnswImage {
   private val Version = 1
   private val HeaderBytes = 16
 
-  def encode(nodes: IndexedSeq[Node]): Array[Byte] = {
-    val n = nodes.length
-    val dim = if (n == 0) 0 else nodes(0)._2.length
-    require(nodes.forall(_._2.length == dim),
-      "HnswImage: the vectors of one shard must share one dimension")
-    val lists = nodes.iterator.map(_._3.length).sum
-    val links = nodes.iterator.flatMap(_._3).map(_.length).sum
+  /** `g`'s image, written from its arrays. */
+  def encode(g: HnswGraph): Array[Byte] = {
+    val n = g.size
+    val dim = g.dimension
+    var lists = 0L
+    var links = 0L
+    for (i <- 0 until n; l <- 0 until g.levelCount(i)) {
+      lists += 1; links += g.linkCount(i, l)
+    }
     val size = HeaderBytes + 8L * n + 4L * n * dim + 4L * n +
       4L * (lists + 1) + 4L * links
     require(size <= Int.MaxValue, s"HnswImage: a $size-byte shard image " +
       "exceeds one array; use more shards")
     val buf = ByteBuffer.allocate(size.toInt).order(ByteOrder.LITTLE_ENDIAN)
     buf.putInt(Magic).putInt(Version).putInt(n).putInt(dim)
-    nodes.foreach(nd => buf.putLong(nd._1))
-    nodes.foreach(nd => nd._2.foreach(buf.putFloat))
-    nodes.foreach(nd => buf.putInt(nd._3.length))
+    for (i <- 0 until n) buf.putLong(g.id(i))
+    for (i <- 0 until n; j <- 0 until dim) buf.putFloat(g.vector(i, j))
+    for (i <- 0 until n) buf.putInt(g.levelCount(i))
     var off = 0
     buf.putInt(off)
-    nodes.foreach(_._3.foreach { l => off += l.length; buf.putInt(off) })
-    nodes.foreach(_._3.foreach(_.foreach(buf.putInt)))
+    for (i <- 0 until n; l <- 0 until g.levelCount(i)) {
+      off += g.linkCount(i, l); buf.putInt(off)
+    }
+    for (i <- 0 until n; l <- 0 until g.levelCount(i); j <- 0 until g.linkCount(i, l))
+      buf.putInt(g.link(i, l, j))
     buf.array()
   }
 
-  /** Decode an [[encode]]d image; a wrong header, a truncated body or
-    * trailing bytes fail with an `IllegalStateException`.
+  /** Decode an [[encode]]d image. A wrong header, a truncated body,
+    * trailing bytes, or a link to a node outside the image or without
+    * the link's level fail with an `IllegalStateException`.
     */
-  def decode(bytes: Array[Byte]): IndexedSeq[Node] = {
+  def decode(bytes: Array[Byte]): Shard = {
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     try {
       val (n, dim) = header(buf)
@@ -73,8 +87,8 @@ private[graft] object HnswImage {
       val ids = new Array[Long](n)
       buf.asLongBuffer().get(ids)
       buf.position(buf.position() + 8 * n)
-      val fb = buf.asFloatBuffer()
-      val vecs = Array.fill(n) { val v = new Array[Float](dim); fb.get(v); v }
+      val vecs = new Array[Float](n * dim)
+      buf.asFloatBuffer().get(vecs)
       buf.position(buf.position() + 4 * n * dim)
       val ib = buf.asIntBuffer()
       val levels = new Array[Int](n)
@@ -91,14 +105,24 @@ private[graft] object HnswImage {
       val links = new Array[Int](offsets.last)
       ib.get(links)
       var k = 0
-      ArraySeq.unsafeWrapArray(Array.tabulate(n) { i =>
-        val ls = Array.tabulate(levels(i)) { j =>
-          ArraySeq.unsafeWrapArray(
-            java.util.Arrays.copyOfRange(links, offsets(k + j), offsets(k + j + 1)))
+      var i = 0
+      while (i < n) {
+        var l = 0
+        while (l < levels(i)) {
+          var j = offsets(k)
+          while (j < offsets(k + 1)) {
+            val t = links(j)
+            if (t < 0 || t >= n) corrupt(s"node $i links to node $t at " +
+              s"level $l, outside the image's $n nodes")
+            if (levels(t) <= l) corrupt(s"node $i links to node $t at " +
+              s"level $l, above that node's top level ${levels(t) - 1}")
+            j += 1
+          }
+          k += 1; l += 1
         }
-        k += levels(i)
-        (ids(i), vecs(i), ArraySeq.unsafeWrapArray(ls): Seq[Seq[Int]])
-      })
+        i += 1
+      }
+      new Shard(ids, dim, vecs, levels, offsets, links)
     } catch { case _: BufferUnderflowException => corrupt("truncated") }
   }
 
@@ -116,18 +140,17 @@ private[graft] object HnswImage {
     (n, dim)
   }
 
-  /** Publish `nodes`' image into `shardDir`: written whole under a
+  /** Publish `g`'s image into `shardDir`: written whole under a
     * unique hidden temp name, then renamed, so a failed or retried task
     * attempt never leaves a torn image. Two attempts of one task build
     * the same graph, so an image another attempt already published is
     * kept.
     */
-  def write(conf: Configuration, shardDir: Path, nodes: IndexedSeq[Node])
-      : Unit = {
+  def write(conf: Configuration, shardDir: Path, g: HnswGraph): Unit = {
     val fs = shardDir.getFileSystem(conf)
     val tmp = new Path(shardDir, s"$FileName.${java.util.UUID.randomUUID()}.tmp")
     val out = fs.create(tmp, true)
-    try out.write(encode(nodes)) finally out.close()
+    try out.write(encode(g)) finally out.close()
     val dest = new Path(shardDir, FileName)
     if (!fs.rename(tmp, dest)) {
       fs.delete(tmp, false)
@@ -137,7 +160,7 @@ private[graft] object HnswImage {
   }
 
   /** Read and decode the image at `file` in one bulk read. */
-  def read(conf: Configuration, file: Path): IndexedSeq[Node] = {
+  def read(conf: Configuration, file: Path): Shard = {
     val fs = file.getFileSystem(conf)
     val bytes = new Array[Byte](fs.getFileStatus(file).getLen.toInt)
     val in = fs.open(file)

@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * from the shard hash — see [[shardGraphFrame]] for the measured reason
   * arrival must be decorrelated from raw id order) — so the persisted
   * index is byte-deterministic for a given dataset. Every reader
-  * restores a shard's graph EXACTLY from its image ([[HnswGraph.restore]]
+  * restores a shard's graph EXACTLY from its image ([[HnswGraph.fromImage]]
   * — adjacency, entry point, top level); search runs the same
   * [[HnswSearch]] broadcast-query beam as [[ApproxKnn.hnswKnn]], so a
   * restored index answers identically to the index that was saved.
@@ -385,9 +385,8 @@ object HnswIndex {
     */
   private def persistShard(conf: org.apache.hadoop.conf.Configuration,
       genDir: String, shard: Int, g: HnswGraph): (Int, Long) = {
-    val nodes = g.nodes
-    HnswImage.write(conf, new Path(s"$genDir/shard=$shard"), nodes)
-    (shard, nodes.length.toLong)
+    HnswImage.write(conf, new Path(s"$genDir/shard=$shard"), g)
+    (shard, g.size.toLong)
   }
 
   /** The session's Hadoop configuration, broadcast for the tasks that
@@ -491,9 +490,9 @@ object HnswIndex {
   private def loadNodes(spark: SparkSession, dir: String,
       shardGens: Map[Int, Int], counts: Map[Int, Long]): DataFrame = {
     import spark.implicits._
-    eachImage(spark, dir, shardGens, counts)(HnswImage.read)
-      .flatMap { case (shard, nodes) =>
-        nodes.iterator.map { case (id, vec, _) => (shard, id, vec) } }
+    eachImage(spark, dir, shardGens, counts)(HnswImage.read)(_.size)
+      .flatMap { case (shard, img) =>
+        Iterator.tabulate(img.size)(i => (shard, img.ids(i), img.vector(i))) }
       .toDF("shard", "id", "vec")
   }
 
@@ -503,7 +502,7 @@ object HnswIndex {
   private def shardCounts(spark: SparkSession, dir: String,
       shardGens: Map[Int, Int], counts: Map[Int, Long])
       : org.apache.spark.rdd.RDD[(Int, Long)] =
-    eachImage(spark, dir, shardGens, counts)(HnswImage.readIds)
+    eachImage(spark, dir, shardGens, counts)(HnswImage.readIds)(_.length)
       .map { case (shard, ids) => (shard, ids.length.toLong) }
 
   /** One task per live shard, each reading that shard's image with
@@ -511,14 +510,14 @@ object HnswIndex {
     */
   private def eachImage[T](spark: SparkSession, dir: String,
       shardGens: Map[Int, Int], counts: Map[Int, Long])(
-      read: (org.apache.hadoop.conf.Configuration, Path) => IndexedSeq[T])
-      : org.apache.spark.rdd.RDD[(Int, IndexedSeq[T])] = {
+      read: (org.apache.hadoop.conf.Configuration, Path) => T)(size: T => Int)
+      : org.apache.spark.rdd.RDD[(Int, T)] = {
     val conf = hadoopConf(spark)
     val shards = shardGens.toSeq.sorted
       .map { case (shard, gen) => (shard, gen, counts.get(shard)) }
     spark.sparkContext.parallelize(shards, math.max(1, shards.size))
       .map { case (shard, gen, want) =>
-        shard -> readImage(conf.value.value, dir, shard, gen, want)(read) }
+        shard -> readImage(conf.value.value, dir, shard, gen, want)(read)(size) }
   }
 
   /** Per-shard occupancy of the LIVE generation: (shard, n_nodes) — the
@@ -728,7 +727,7 @@ object HnswIndex {
   private[graft] def readIds(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (_, shardGens, counts) = readManifest(spark, dir)
-    eachImage(spark, dir, shardGens, counts)(HnswImage.readIds)
+    eachImage(spark, dir, shardGens, counts)(HnswImage.readIds)(_.length)
       .flatMap(_._2).toDF("id")
   }
 
@@ -826,10 +825,12 @@ object HnswIndex {
       .as[(Int, Long, Array[Float], Long)]
       .mapPartitions { it =>
         it.toSeq.groupBy(_._1).iterator.map { case (shard, rows) =>
-          val live = shardGens.get(shard).fold(IndexedSeq.empty[HnswImage.Node])(
-            gen => readImage(conf.value.value, dir, shard, gen,
-              counts.get(shard))(HnswImage.read))
-          val g = HnswGraph.restore(m, cosine, live, efConstruction, seed)
+          val g = shardGens.get(shard).fold(
+            new HnswGraph(m, efConstruction, cosine, seed)) { gen =>
+            HnswGraph.fromImage(m, cosine, readImage(conf.value.value, dir,
+              shard, gen, counts.get(shard))(HnswImage.read)(_.size),
+              efConstruction, seed)
+          }
           rows.sortBy(r => (r._4, r._2)).foreach { case (_, id, vec, _) =>
             g.insert(id, vec) }
           persistShard(conf.value.value, genDir, shard, g)
@@ -914,9 +915,9 @@ object HnswIndex {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         IvfIndex.searchSchema)
     // one task per live shard, each reading only its own image
-    val partials = eachImage(spark, dir, shardGens, counts)(HnswImage.read)
-      .flatMap { case (_, nodes) =>
-        HnswSearch.beamAll(HnswGraph.restore(m, cosine, nodes), bc.value,
+    val partials = eachImage(spark, dir, shardGens, counts)(HnswImage.read)(_.size)
+      .flatMap { case (_, img) =>
+        HnswSearch.beamAll(HnswGraph.fromImage(m, cosine, img), bc.value,
           kL, efS, ex)
       }
       .toDF("query_id", "neighbor_id", "dist")
@@ -933,8 +934,8 @@ object HnswIndex {
     */
   private def readImage[T](conf: org.apache.hadoop.conf.Configuration,
       dir: String, shard: Int, gen: Int, want: Option[Long])(
-      read: (org.apache.hadoop.conf.Configuration, Path) => IndexedSeq[T])
-      : IndexedSeq[T] = {
+      read: (org.apache.hadoop.conf.Configuration, Path) => T)(size: T => Int)
+      : T = {
     val file = new Path(s"$dir/nodes/g=$gen/shard=$shard/${HnswImage.FileName}")
     def fail(problem: String) = throw new IllegalStateException(
       s"HnswIndex: live shard $shard (g=$gen) of $dir $problem; a shard " +
@@ -947,8 +948,8 @@ object HnswIndex {
         case e: java.io.IOException => fail(s"has an unreadable graph image: $e")
         case e: IllegalStateException => fail(s"has a ${e.getMessage}")
       }
-    want.filter(_ != nodes.length).foreach(w =>
-      fail(s"has a graph image of ${nodes.length} nodes, but the manifest counts $w"))
+    want.filter(_ != size(nodes)).foreach(w =>
+      fail(s"has a graph image of ${size(nodes)} nodes, but the manifest counts $w"))
     nodes
   }
 

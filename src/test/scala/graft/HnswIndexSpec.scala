@@ -27,6 +27,56 @@ class HnswIndexSpec extends SparkSpec {
     }
   }
 
+  test("concurrent searches of one graph match its sequential results") {
+    val rnd = new scala.util.Random(11)
+    val g = new HnswGraph(m = 8, efConstruction = 32)
+    (0 until 500).foreach(i => g.insert(i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat)))
+    val qs = IndexedSeq.fill(200)(Array.fill(16)(rnd.nextGaussian().toFloat))
+    def ef(i: Int) = 8 + (i % 5) * 60
+    val want = qs.indices.map(i => g.search(qs(i), 10, ef(i)))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val runs = (0 until 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[(Int, Seq[(Long, Double)])]] {
+          def call() = (0 until 3 * qs.length).map { j =>
+            val i = (j + 50 * t) % qs.length
+            i -> g.search(qs(i), 10, ef(i))
+          }
+        })
+      }
+      runs.foreach(_.get().foreach { case (i, got) =>
+        assert(got == want(i), s"query $i") })
+    } finally pool.shutdown()
+  }
+
+  test("image decode rejects a link outside the image and a link above its " +
+    "target's top level") {
+    val rnd = new scala.util.Random(5)
+    val g = new HnswGraph(m = 4, efConstruction = 16)
+    (0 until 200).foreach(i => g.insert(i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
+    val bytes = HnswImage.encode(g)
+    val img = HnswImage.decode(bytes)
+    val n = img.size
+    val linksAt = 16 + 8 * n + 4 * n * img.dim + 4 * n + 4 * img.offsets.length
+    def decodeError(slot: Int, target: Int): String = {
+      val b = bytes.clone()
+      java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putInt(linksAt + 4 * slot, target)
+      val msg = intercept[IllegalStateException](HnswImage.decode(b)).getMessage
+      assert(msg.startsWith("corrupt graph image: "), msg)
+      msg
+    }
+    assert(decodeError(0, n).contains(s"links to node $n at level 0, outside"))
+    assert(decodeError(0, -1).contains("links to node -1 at level 0, outside"))
+    // the first non-empty level-1 list, pointed at a node with level 0 only
+    val firstList = img.levels.scanLeft(0)(_ + _)
+    val node = (0 until n).find(i => img.levels(i) >= 2 &&
+      img.offsets(firstList(i) + 2) > img.offsets(firstList(i) + 1)).get
+    val flat = img.levels.indexWhere(_ == 1)
+    assert(decodeError(img.offsets(firstList(node) + 1), flat)
+      .contains(s"links to node $flat at level 1, above that node's top level 0"))
+  }
+
   private def imagePath(dir: String, shard: Int, gen: Int): Path =
     new Path(s"$dir/nodes/g=$gen/shard=$shard/${HnswImage.FileName}")
 
@@ -69,7 +119,7 @@ class HnswIndexSpec extends SparkSpec {
       val params = HnswIndex.open(spark, dir).meta
       val (_, shardGens, _) = HnswIndex.readManifest(spark, dir)
       shardGens.toSeq.flatMap { case (s, g) =>
-        val graph = HnswGraph.restore(params.m, cosine = false,
+        val graph = HnswGraph.fromImage(params.m, cosine = false,
           HnswImage.read(conf, imagePath(dir, s, g)))
         queries.flatMap { case (qid, qv) =>
           graph.search(qv, k + 1, math.max(ef, k + 1)).filter(_._1 != qid)
@@ -94,9 +144,9 @@ class HnswIndexSpec extends SparkSpec {
           .map(_.getPath.getName) == Seq(HnswImage.FileName),
           s"$stage: shard $s holds more than its image")
         val image = HnswImage.read(conf, imagePath(dir, s, g))
-        assert(image.length == counts(s),
+        assert(image.size == counts(s),
           s"$stage: shard $s image and manifest counts disagree")
-        assert(image.map(_._1).sorted == idsByShard(s),
+        assert(image.ids.toSeq.sorted == idsByShard(s),
           s"$stage: shard $s image ids differ from its readIds")
       }
       // no node-row table, live or superseded, anywhere under nodes/
@@ -147,11 +197,13 @@ class HnswIndexSpec extends SparkSpec {
       val out = fs.create(image, true)
       try out.write(bytes) finally out.close()
     }
-    val nodes = HnswImage.read(conf, image)
-    overwrite(HnswImage.encode(nodes.init))
+    val bytes = imageBytes(dir, s, g)
+    val img = HnswImage.read(conf, image)
+    val short = new HnswGraph()
+    (0 until img.size - 1).foreach(i => short.insert(img.ids(i), img.vector(i)))
+    overwrite(HnswImage.encode(short))
     assert(searchError().contains(
-      s"image of ${nodes.length - 1} nodes, but the manifest counts ${counts(s)}"))
-    val bytes = HnswImage.encode(nodes)
+      s"image of ${img.size - 1} nodes, but the manifest counts ${counts(s)}"))
     overwrite(bytes.take(bytes.length / 2))
     assert(searchError().contains("truncated"))
     fs.delete(image, false)
