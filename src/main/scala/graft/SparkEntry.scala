@@ -2009,7 +2009,8 @@ object SparkEntry {
   // `engine` mirrors the grid's new escalation-provenance column: the
   // oracle pins WHICH kNN engine produced each cell's metrics, not just
   // the numbers (q89 exact, q93/q94 ivf at full probe, q100 hnsw at
-  // full beam — all rank-exact, so the numeric cells are shared)
+  // full beam — all equal to brute force on this catalog, so the
+  // numeric cells are shared)
   private def gridCellSql(k: Int, t: Double, engine: String): String =
     s"""SELECT CAST($k AS INTEGER) AS k, CAST($t AS DOUBLE) AS threshold,
        | '$engine' AS engine,

@@ -335,18 +335,27 @@ object ApproxKnn {
       k: Int,
       metric: String,
       blockSize: Int,
-      excludeSelf: Boolean): DataFrame = {
+      excludeSelf: Boolean): DataFrame =
+    unionChunked(queryBlocks(qs, n, idCol, blockSize, "blockKnn").map(
+      KnnJoin.broadcastKnn(_, candidates, idCol, vecCol, k, metric,
+        excludeSelf)))
+
+  /** The non-empty id blocks of `qs` (no null id, `n` rows) at about
+    * `blockSize` rows each, cut by [[idBlockBounds]]. One block is `qs`
+    * itself, with no job.
+    */
+  private def queryBlocks(qs: DataFrame, n: Long, idCol: String,
+      blockSize: Int, what: String): Seq[DataFrame] = {
     val nBlocks = math.max(1L, (n + blockSize - 1) / blockSize).toInt
-    if (nBlocks == 1)
-      return KnnJoin.broadcastKnn(qs, candidates, idCol, vecCol, k,
-        metric, excludeSelf)
+    if (nBlocks == 1) return Seq(qs)
     val bounds = idBlockBounds(qs, idCol, nBlocks)
     // Quantile rank error can leave an edge block with NO ids once it
     // approaches the block width (large n × coarse relErr) — and
-    // broadcastKnn treats an empty query side as caller error. One scan
-    // finds which blocks actually hold ids (block index of an id = how
-    // many cuts are ≤ it); empty blocks are skipped, which is exact: an
-    // empty block contributes no queries, hence no result rows.
+    // broadcastKnn and HnswIndex.search treat an empty query side as
+    // caller error. One scan finds which blocks actually hold ids (block
+    // index of an id = how many cuts are ≤ it); empty blocks are skipped,
+    // which is exact: an empty block contributes no queries, hence no
+    // result rows.
     //
     // The presence predicate and idBlock's per-block filters MUST
     // evaluate the same comparison over the same RAW column: block index
@@ -355,22 +364,20 @@ object ApproxKnn {
     // disagree with the raw comparison there (a negative fractional id
     // truncates toward zero under cast("long")), marking a block present
     // that idBlock then empties — re-triggering the empty-query
-    // broadcastKnn failure this scan exists to prevent.
+    // failure this scan exists to prevent.
     val cuts = bounds.flatMap(_._1)
     val cutArr = array(cuts.map(lit(_)): _*)
     val present = qs
       .select(size(filter(cutArr, c => col(idCol) >= c)).as("b"))
       .groupBy("b").count().collect().map(_.getInt(0)).toSet
-    val parts = bounds.zipWithIndex.collect {
-      case ((lo, hi), i) if present(i) =>
-        KnnJoin.broadcastKnn(idBlock(qs, idCol, lo, hi), candidates,
-          idCol, vecCol, k, metric, excludeSelf)
+    val blocks = bounds.zipWithIndex.collect {
+      case ((lo, hi), i) if present(i) => idBlock(qs, idCol, lo, hi)
     }
-    // n > 0 puts every surviving id in exactly one block, so parts is
+    // n > 0 puts every surviving id in exactly one block, so blocks is
     // provably non-empty — this is a guard against that invariant
     // breaking, not a reachable path (pqBlockKnn's contract)
-    require(parts.nonEmpty, "blockKnn: no non-empty query blocks")
-    unionChunked(parts)
+    require(blocks.nonEmpty, s"$what: no non-empty query blocks")
+    blocks
   }
 
   /** Union many per-block top-k results with a bounded-lineage
@@ -712,19 +719,20 @@ object ApproxKnn {
     HnswSearch.topKMerge(exact, k)
   }
 
-  /** Graph-based ANN: sharded HNSW (the reference's hnswlib contract,
-    * DeepJoin/annIndex.py:12–40, distributed the standard way). Each
-    * candidate PARTITION builds an independent [[HnswGraph]] in one
-    * `mapPartitions` pass — graphs are memory-bounded by partition size
-    * and never serialized or shuffled — the broadcast query set beams
-    * through every shard (`efSearch`), and the per-shard top-k partials
-    * merge in one ranking window, exactly the broadcastKnn shuffle shape.
-    * Per-shard search is sublinear in partition size, so total query work
-    * scales with `partitions · ef · log n_p` instead of N.
-    *
-    * Deterministic (seeded levels, index-tie-broken heaps, same contract
-    * as the other strategies): (query_id, neighbor_id, dist, rank).
+  /** [[hnswBlockKnn]]'s scratch-dir placement guard, factored out so the
+    * message is spec-testable without a non-local cluster: the DEFAULT
+    * (owned) scratch dir is a driver-local temp path, which executors on
+    * any non-local master cannot read — the build would scatter graph
+    * files across machine-local disks and the search would restore
+    * nothing. Refuse loudly instead.
     */
+  private[graft] def requireLocalScratch(master: String, owned: Boolean): Unit =
+    require(!owned || master.startsWith("local"),
+      s"hnswBlockKnn: the default scratchDir is DRIVER-LOCAL temp space, " +
+        s"which executors under master '$master' cannot read — pass a " +
+        "shared-filesystem scratchDir (hdfs:/s3a:/...) on non-local " +
+        "deployments")
+
   /** HNSW kNN for the case where the QUERY side is too large to
     * broadcast at once — the flagship grid's self-kNN, where queries ==
     * candidates == the whole catalog. [[hnswKnn]] rebuilds its
@@ -748,25 +756,11 @@ object ApproxKnn {
     * of the full-fan-out design — grow shards past executor memory and
     * the `shards·ef` fan-out term takes over.
     *
-    * `efSearch <= 0` means full beam (ef = candidate count, capped at
-    * Int.MaxValue): every shard's whole connected graph is explored and
-    * the merged top-k equals brute force — the oracle form (the q97
-    * convention).
+    * `efSearch <= 0` means full beam (ef = each shard's node count): every
+    * node reachable in a shard's graph is explored — the q97 convention.
+    * A node that an insert left unreachable is still missed, so even the
+    * full beam is not guaranteed to equal brute force.
     */
-  /** [[hnswBlockKnn]]'s scratch-dir placement guard, factored out so the
-    * message is spec-testable without a non-local cluster: the DEFAULT
-    * (owned) scratch dir is a driver-local temp path, which executors on
-    * any non-local master cannot read — the build would scatter graph
-    * files across machine-local disks and the search would restore
-    * nothing. Refuse loudly instead.
-    */
-  private[graft] def requireLocalScratch(master: String, owned: Boolean): Unit =
-    require(!owned || master.startsWith("local"),
-      s"hnswBlockKnn: the default scratchDir is DRIVER-LOCAL temp space, " +
-        s"which executors under master '$master' cannot read — pass a " +
-        "shared-filesystem scratchDir (hdfs:/s3a:/...) on non-local " +
-        "deployments")
-
   def hnswBlockKnn(
       queries: DataFrame,
       candidates: DataFrame,
@@ -831,38 +825,32 @@ object ApproxKnn {
     HnswIndex.build(candidates, idCol, vecCol, dir, m = m,
       efConstruction = efConstruction, metric = metric, shards = shards,
       seed = seed, efSearch = HnswIndex.DefaultServeEf)
-    val ef =
-      if (efSearch > 0) efSearch
-      else math.min(candidates.count(), Int.MaxValue.toLong).toInt
     // null-id queries are dropped once, up front — the blockKnn contract
     val qs = queries.filter(col(idCol).isNotNull)
-    val n = qs.count()
-    val nBlocks = math.max(1L, (n + queryBlockSize - 1) / queryBlockSize).toInt
-    // efAutoScale = false: this is a RAW primitive — the resolved `ef`
-    // is the caller's knob verbatim (the grid gate applies
-    // graft.knn.BeamLaw BEFORE calling here; letting the scratch
-    // index's search scale it again would double-apply the law)
-    if (nBlocks == 1)
-      return finish(HnswIndex.search(spark, dir, qs, idCol, vecCol, k, ef,
-        excludeSelf, efAutoScale = false))
-    val bounds = idBlockBounds(qs, idCol, nBlocks)
-    // same presence scan as blockKnn: quantile rank error can empty an
-    // edge block, and HnswIndex.search treats an empty query side as
-    // caller error — see the blockKnn comment for the raw-column rule
-    val cuts = bounds.flatMap(_._1)
-    val cutArr = array(cuts.map(lit(_)): _*)
-    val present = qs
-      .select(size(filter(cutArr, c => col(idCol) >= c)).as("b"))
-      .groupBy("b").count().collect().map(_.getInt(0)).toSet
-    val parts = bounds.zipWithIndex.collect {
-      case ((lo, hi), i) if present(i) =>
-        HnswIndex.search(spark, dir, idBlock(qs, idCol, lo, hi), idCol,
-          vecCol, k, ef, excludeSelf, efAutoScale = false)
-    }
-    require(parts.nonEmpty, "hnswBlockKnn: no non-empty query blocks")
-    finish(unionChunked(parts))
+    // efAutoScale = false: this is a RAW primitive — `efSearch` is the
+    // caller's knob verbatim (the grid gate applies graft.knn.BeamLaw
+    // BEFORE calling here; letting the scratch index's search scale it
+    // again would double-apply the law)
+    finish(unionChunked(
+      queryBlocks(qs, qs.count(), idCol, queryBlockSize, "hnswBlockKnn").map(
+        HnswIndex.search(spark, dir, _, idCol, vecCol, k, efSearch,
+          excludeSelf, efAutoScale = false))))
   }
 
+  /** Graph-based ANN: sharded HNSW (the reference's hnswlib contract,
+    * DeepJoin/annIndex.py:12–40, distributed the standard way). Each
+    * candidate PARTITION builds an independent [[HnswGraph]] in one
+    * `mapPartitions` pass — graphs are memory-bounded by partition size
+    * and never serialized or shuffled — the broadcast query set beams
+    * through every shard (`efSearch`), and the per-shard top-k partials
+    * merge in one ranking window, exactly the broadcastKnn shuffle shape.
+    * Per-shard search is sublinear in partition size, so total query work
+    * scales with `partitions · ef · log n_p` instead of N. `efSearch <= 0`
+    * is the full beam of each partition's graph.
+    *
+    * Deterministic (seeded levels, index-tie-broken heaps, same contract
+    * as the other strategies): (query_id, neighbor_id, dist, rank).
+    */
   def hnswKnn(
       queries: DataFrame,
       candidates: DataFrame,
@@ -923,14 +911,18 @@ private[knn] object HnswSearch {
   /** Beam every query through one shard's graph: per-query top-k partials
     * with self-exclusion (search k+1, drop self, keep k), emitted from
     * the kernel's ranked result arrays, which the next query reuses.
+    * The beam is `max(efSearch, k + 1)`; `efSearch <= 0` is the full
+    * beam, the shard's node count. This is the one place every HNSW
+    * caller's beam is resolved.
     */
   def beamAll(g: HnswGraph, queries: Array[(Long, Array[Float])], k: Int,
       efSearch: Int, excludeSelf: Boolean): Iterator[(Long, Long, Double)] = {
     val want = k + (if (excludeSelf) 1 else 0)
+    val ef = math.max(if (efSearch > 0) efSearch else g.size, k + 1)
     val ids = new Array[Long](math.max(0, math.min(want, g.size)))
     val dists = new Array[Double](ids.length)
     queries.iterator.flatMap { case (qid, qv) =>
-      val r = g.searchInto(qv, want, math.max(efSearch, k + 1), ids, dists)
+      val r = g.searchInto(qv, want, ef, ids, dists)
       var kept = 0
       var i = 0
       while (i < r && kept < k) {
@@ -947,25 +939,12 @@ private[knn] object HnswSearch {
     * (query_id, neighbor_id, dist, rank), rank 1-based ascending by
     * (dist, neighbor_id) — every kNN strategy's one merge.
     *
-    * Deliberately a ranking WINDOW, not a bounded top-k aggregate —
-    * MEASURED, round 16, on the 200k-key grid tier (64M partial rows
-    * through this merge; all three numbers from the ONE experiment
-    * session — the committed SCALE_r16_default_gate records this same
-    * window plan at 72.5 s in a separate session on the shared host,
-    * so the claim is the within-session 1.42×/1.56× loss, not the
-    * absolutes): window
-    * 102.5 s end to end; a TypedImperativeAggregate top-k buffer
-    * (BoundedTopK's shape on (dist, id) pairs) 145.8 s on the default
-    * ObjectHashAggregate sort-fallback and 160.2 s with the fallback
-    * threshold raised to pure hash. The window's per-partition sort is
-    * whole-stage-codegen'd UnsafeRow radix sort + a streaming
-    * row_number; the object aggregate pays interpreted per-row
-    * `eval`, generic buffers and serde on every map-side row, and k·N
-    * buffer inserts cost more than N·log N radix comparisons at these
-    * k. A bounded aggregate only wins when per-group row counts are
-    * UNBOUNDED (the profiler's near-unique-column case — BoundedTopK's
-    * A2); here every shard emits exactly k rows per query, so the sort
-    * input is already top-k-bounded and the window is the faster plan.
+    * A ranking window, not a bounded top-k aggregate: every partial is
+    * already top-k-bounded per query, so the window's codegen'd sort
+    * beats an object aggregate's per-row buffers: the aggregate ran
+    * 1.42–1.56× slower on the 200k-key grid tier, whose window plan
+    * SCALE_r16_default_gate records. A bounded aggregate wins only when
+    * per-group row counts are unbounded.
     */
   def topKMerge(partials: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(asc("dist"), asc("neighbor_id"))

@@ -81,13 +81,13 @@ object BeamLaw {
   /** `base` up to [[HoldKeys]] keys, then one doubling per
     * [[DoublePerKeys]]× keys — the boundary is INCLUSIVE (exactly
     * HoldKeys·5^d keys stays at d doublings). `base <= 0` (the
-    * rank-exact full-beam sentinel) is returned untouched — exactness
-    * needs no scaling. The shift is clamped at 24 doublings (past any
+    * full-beam sentinel) is returned untouched — the full beam needs no
+    * scaling. The shift is clamped at 24 doublings (past any
     * representable catalog — Long.MaxValue needs 19) and the widened
     * beam SATURATES at Int.MaxValue: a large base under many doublings
     * must clip to the widest representable beam, never wrap negative —
-    * a negative ef is the full-beam rank-exact sentinel downstream, so
-    * an Int overflow here would silently flip ANN to exact at extreme
+    * a negative ef is the full-beam sentinel downstream, so
+    * an Int overflow here would silently flip ANN to full beam at extreme
     * scale (unreachable for realistic base/corpus pairs, guarded
     * anyway).
     *

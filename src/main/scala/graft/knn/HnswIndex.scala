@@ -177,27 +177,12 @@ object HnswIndex {
   val UseAutoShards: Int = 0
 
   /** The per-shard node ceiling [[resolveShards]] maintains on the auto
-    * path: 10⁶ keys over the grid tier's 32 shards — the per-shard
-    * graph size behind every committed 10⁶-tier recall row. Larger
-    * shards shed measured recall at the law'd beam (62.5k-node shards:
-    * 0.9037 clustered / 0.6476 spread vs 0.9949/0.9578 at this
-    * ceiling — SCALE_r19_hnsw_index_shape_*_16shards.json); smaller
-    * shards only add merge fan-in.
-    *
-    * Interaction with [[BeamLaw]]: the law was calibrated on the
-    * grid's fixed 32 shards where per-shard graphs grow with the
-    * corpus; on the auto path per-shard size saturates at this ceiling
-    * instead, so a total-N-keyed law kept doubling the beam past 10⁶
-    * keys with no per-shard coverage need. Measured at 5·10⁶ keys /
-    * 160 auto shards (SCALE_r21_beamlaw_{clustered,spread}): the
-    * saturated per-shard beam (one doubling — the 10⁶-anchor level)
-    * serves anchor-level recall or better (0.9953 clustered vs the
-    * anchor's 0.9949; 0.9856 spread vs 0.9578 — extra shards add
-    * independent chances to surface the true neighbor), and the second
-    * total-N doubling bought ≤ 0.01 recall for 2× beam compute. [[search]]'s untuned
-    * beam therefore keys on [[BeamLaw.equivalentKeys]] (per-shard
-    * coverage under the calibration geometry): on this auto path the
-    * law caps at one doubling however far the corpus grows.
+    * path: 10⁶ keys over the grid tier's 32 shards, the shard size behind
+    * every committed 10⁶-tier recall row. Larger shards lose recall at
+    * the same beam (SCALE_r19_hnsw_index_shape_*_16shards); smaller ones
+    * only add merge fan-in. Because auto-sized shards stop growing here,
+    * [[search]]'s beam law keys on [[BeamLaw.equivalentKeys]] (see
+    * [[effectiveEf]]).
     */
   val TargetShardNodes: Long = 31250L
 
@@ -860,10 +845,10 @@ object HnswIndex {
     * stop the doublings where the measured need stops
     * (SCALE_r21_beamlaw_*) — from the manifest's counts and shard map,
     * state this method already reads, zero extra jobs on the serving
-    * path. `efAutoScale = false` pins the raw
-    * knob; `efSearch <= 0` (full beam, rank-exact) passes through
-    * unscaled; a legacy counts-less manifest leaves the law inert (raw
-    * knob) until the next append/build/reshard heals it.
+    * path. `efAutoScale = false` pins the raw knob; `efSearch <= 0`
+    * (the full beam, each shard's node count) passes through unscaled;
+    * a legacy counts-less manifest leaves the law inert (raw knob) until
+    * the next append/build/reshard heals it.
     *
     * A thin wrapper: it opens `dir` and runs [[probe]].
     */
@@ -954,7 +939,7 @@ object HnswIndex {
   }
 
   /** [[search]]/[[staleness]]'s "use the persisted serving beam"
-    * sentinel — distinct from the <= 0 full-beam (rank-exact) sentinel,
+    * sentinel — distinct from the <= 0 full-beam sentinel,
     * which remains an explicit caller choice and passes through.
     */
   val UseIndexDefault: Int = Int.MinValue
@@ -965,16 +950,11 @@ object HnswIndex {
     * must never under-state the corpus and silently under- or
     * over-beam — the law goes inert, raw knob, instead of guessing).
     *
-    * Keyed on [[BeamLaw.equivalentKeys]] — the per-shard-coverage
-    * corpus under the law's 32-shard calibration geometry — not raw
-    * total N: on the auto-shard path per-shard graphs saturate at
-    * [[TargetShardNodes]], where total-N keying kept doubling the beam
-    * with no per-shard coverage need (measured at 5·10⁶ keys /
-    * 160 shards: the per-shard-keyed beam serves 0.9953 clustered /
-    * 0.9856 spread — at or above the 10⁶/32-shard anchors' 0.9949 /
-    * 0.9578 — while the total-N law'd second doubling buys ≤ 0.01
-    * recall for 2× beam compute —
-    * SCALE_r21_beamlaw_{clustered,spread}).
+    * The law keys on [[BeamLaw.equivalentKeys]], the corpus whose
+    * per-shard coverage under the law's 32-shard calibration matches
+    * this index's, not on raw total N: auto-sized shards saturate at
+    * [[TargetShardNodes]], and past that a total-N law widens the beam
+    * with no per-shard need (SCALE_r21_beamlaw_{clustered,spread}).
     */
   private[graft] def effectiveEf(efSearch: Int, efAutoScale: Boolean,
       shardGens: Map[Int, Int], counts: Map[Int, Long]): Int =

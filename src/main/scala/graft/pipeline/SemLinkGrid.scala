@@ -25,125 +25,38 @@ import graft.sources.Lake
   */
 object SemLinkGrid {
 
-  /** The flagship gate's default escalation threshold: a catalog past
-    * this many keys routes the grid's single kNN pass through IVF
-    * (auto-√N lists) instead of exact blocked self-kNN. Exact self-kNN
-    * is O(N²·d) no matter how it is blocked — SCALE_r13 measured the
-    * exact path growing 5.05× for 10× data while the auto IVF path grew
-    * 3.14× (and 37.98× vs 66.09× at the 100× tier) — so an UNTUNED
-    * caller must not default onto the one plan in the engine that
-    * cannot survive a large catalog. 10⁵ keys ≈ the single-broadcast
-    * block size: below it the exact path is one broadcast pass and
-    * cheap; above it the exact path starts paying quadratic distance
-    * work AND multi-block orchestration, while IVF at the default
-    * nProbe keeps recall high on clustered catalogs. Escalation is
-    * logged loudly; pass `annAbove = Long.MaxValue` to force exact at
-    * any size (the oracle paths pin exactness explicitly instead).
+  /** The grid's first escalation threshold: a catalog past this many
+    * keys leaves exact blocked self-kNN, which is O(N²·d) however it is
+    * blocked (SCALE_r13: exact grew 5.05× per 10× data, auto-√N IVF
+    * 3.14×). 10⁵ keys is the single-broadcast block size, so below it
+    * the exact path is one broadcast pass. Escalation is logged;
+    * `annAbove = Long.MaxValue` forces exact at any size.
     */
   val DefaultAnnAbove: Long = 100000L
 
-  /** The SECOND escalation tier: a catalog past this many keys routes
-    * the grid kNN through the sharded HNSW graph family
-    * ([[graft.knn.ApproxKnn.hnswBlockKnn]] — built once into a scratch
-    * [[graft.knn.HnswIndex]], query side streamed in bounded blocks)
-    * instead of IVF. Auto-√N IVF is Θ(N^1.5) by construction (per-query
-    * probe work grows as √N, and every probed candidate pair
-    * materializes through a shuffle join): SCALE_r14_default_gate
-    * measured the escalated IVF grid at 174.9 s for 200k keys vs 1.4 s
-    * at 2k. The sharded HNSW beam is `shards·ef·log(N/shards)` per
-    * query — N·log N overall — and emits only top-k rows from
-    * `mapPartitions`, no pair-row shuffle; SCALE_r16_default_gate
-    * MEASURES the untuned 200k-key grid on this tier at 76.9 s
-    * (forced-HNSW row: 72.5 s) vs the IVF tier's 174.9 s on the
-    * identical catalog (SCALE_r14_default_gate), growing 62.8× per
-    * 100× data where IVF grew 124× — the log N vs √N per-query gap,
-    * widening with N. At the 10⁶-key tier the RAW beam (ef 64,
-    * SCALE_r16_1m) measures 688.9 s — per-key cost 0.38 → 0.69 ms
-    * across 5× more keys (1.8× per key: between pure log-N's 1.2× and
-    * √N's 2.2×, far below exact's 5×); the untuned default NOW runs
-    * the beam law there (ef 128) at a measured 914.9 s
-    * (SCALE_r17_1m_auto — the ~2× beam cost lands on the search leg
-    * only; build dominates the rest), still far under IVF's Θ(N^1.5)
-    * projection of ~1950 s from its own 200k measurement; the
-    * crossover in HNSW's favor is already behind the gate at 10⁵ and
-    * only widens.
-    * RECALL at the tiers where this gate fires is measured, not
-    * extrapolated (the `gridrecall` probe scores the untuned default's
-    * own output against brute-force truth on ~500 sampled queries):
-    * recall@10 = 1.0000 at the 200k tier (SCALE_r17_recall_200k) and
-    * 0.9680 at the 10⁶ tier (SCALE_r17_recall_1m) at a FIXED
-    * efSearch = 64 — the expected mild log-N beam decay as per-shard
-    * graphs grow; both clear the drift-mix floor (0.8) with margin.
-    * The ef knob is measured, not guessed
-    * (SCALE_r17_recall_{200k_ef32,1m_ef128}): at 200k, HALVING the
-    * beam (ef 32) still scores 0.9996 — the down-tuning room near the
-    * gate; at 10⁶, DOUBLING it (ef 128) restores 0.9949 at ~2× beam
-    * cost. Since round 17 the gate APPLIES that measured trade instead
-    * of documenting it as an operational rule: [[autoEfSearch]] holds
-    * the base beam to [[EfHoldKeys]] = 5·10⁵ keys and doubles it once
-    * per [[EfDoublePerKeys]] = 5× keys past that, so the untuned
-    * default's recall stays at build level across tiers ON THE
-    * CLUSTERED SHAPE instead of decaying one beam-decay step per
-    * catalog decade (measured under the law: recall@10 = 0.9949 at
-    * 10⁶ keys, SCALE_r17_1m_auto, vs 0.9680 fixed; the adversarial
-    * spread shape's measured ladder is below). `efAutoScale = false` pins the raw knob
-    * (the ef-sensitivity artifacts above are raw runs); efSearch <= 0
-    * remains the rank-exact full beam, never scaled.
-    * The default equals [[DefaultAnnAbove]]: every
-    * untuned escalation goes straight to the N·log N plan, and the IVF
-    * tier remains the EXPLICIT middle choice (`hnswAbove =
-    * Long.MaxValue`, or tuned nList/nProbe — its full-probe sentinel is
-    * the grid's rank-exact oracle form, q93/q94). That ordering now has
-    * a measured QUALITY argument on top of the runtime one: the full
-    * shape × engine matrix at the 200k tier, identical defaults
-    * (SCALE_r17_recall_200k{,_ivf,_spread,_spread_ef128,_spread_ivf})
-    * — HNSW 1.0000 clustered / 0.9186 fully-spread (0.9736 at one
-    * beam doubling); IVF 1.0000 clustered / 0.2886 fully-spread
-    * (nProbe 16 of ~448 auto lists = 3.6% probed, and with no
-    * cluster structure the probed fraction IS roughly the recall;
-    * 0.7614 already on the 2k-key spread catalog probing 16 of 45).
-    * The cluster-pruned engine COLLAPSES on the shape an untuned
-    * caller cannot rule out, while the graph degrades gracefully and
-    * answers to the beam knob. The spread shape (uniform components,
-    * no cluster structure) is the adversarial extreme — distance
-    * concentration makes it the hardest regime for any ANN — so its
-    * rows are worst-case floors, not typical expectations: real
-    * embedding catalogs cluster, and both clustered tiers measure
-    * ≥0.99 under the beam law. The spread shape is measured at BOTH
-    * gate tiers (round 18 closed the last extrapolated cell): under
-    * the law it decays ~0.03 per 5× step instead of holding — 0.9186
-    * at 2·10⁵/ef 64 → 0.8916 at 10⁶/law'd ef 128
-    * (SCALE_r18_recall_1m_spread; floor-clear, not build-level) — and
-    * the measured fix is a DOUBLED base efSearch = 128: 0.9736 at
-    * 2·10⁵, resolved by the law to ef 256 at 10⁶ where it measures
-    * 0.9578 (SCALE_r18_recall_1m_spread_ef256; the ladder's measured
-    * endpoint is ef 512 → 0.9888, SCALE_r19_recall_1m_spread_ef512 —
-    * decelerating gains, so strict build-level on this shape still
-    * means the full-beam sentinel). Base ≥ 128 or the full-beam
-    * sentinel is therefore the knowingly-spread-catalog setting — and
-    * since r19 the UNTUNED gate applies it itself (the same
-    * measured-rule-to-default-on maturation the beam law took in
-    * r17): [[graft.knn.ShapeStats.relativeContrastStats]] measures
-    * WHICH regime a catalog is in (one pass; tier-stable anchors:
-    * clustered median ≈ 6.3 / q25 ≈ 6.05, spread 1.52–1.56 / q25
-    * 1.50–1.53 — SCALE_r19_shape_* supersede the r18 anchors under
-    * the exact-median fix), and [[resolveShapeBase]] raises an
-    * untuned base whose q25 sits at or below 2 to the measured spread
-    * fix before the size law runs (the QUARTILE, not the median: a
-    * bimodal mixture's median snaps to a mode — see
-    * relativeContrastStats) — measured end-to-end on the DEFAULT
-    * path: recall@10 0.9578 at the spread 10⁶ tier with NO knob set
-    * (SCALE_r19_recall_1m_spread_default), 0.9939 on the half/half
-    * mixed 2·10⁵ catalog (SCALE_r19_recall_200k_mixed_default), the
-    * clustered tiers unchanged by construction (q25 ≈ 6 keeps the
-    * default base: 0.9949 re-measured at 10⁶,
-    * SCALE_r19_recall_1m_clustered_default).
-    * The probe runs ONLY on the untuned HNSW escalation (a catalog
-    * past this gate pays an index build, so the one 256-query rc pass
-    * is noise against it; smaller catalogs never pay it);
-    * `shapeAutoScale = false` opts out of just the probe,
-    * `efAutoScale = false` pins the raw knob entirely. Like
-    * `annAbove`, `Long.MaxValue` opts out of the whole tier.
+  /** The second escalation tier: a catalog past this many keys runs the
+    * grid kNN through sharded HNSW ([[graft.knn.ApproxKnn.hnswBlockKnn]]:
+    * built once into a scratch [[graft.knn.HnswIndex]], queries streamed
+    * in bounded blocks) instead of IVF. The beam is N·log N overall and
+    * emits only top-k rows, where auto-√N IVF is Θ(N^1.5) and shuffles
+    * every probed pair (SCALE_r14_default_gate, SCALE_r16_default_gate,
+    * SCALE_r16_1m, SCALE_r17_1m_auto). It equals [[DefaultAnnAbove]], so
+    * an untuned escalation goes straight to HNSW. IVF stays the explicit
+    * middle choice (`hnswAbove = Long.MaxValue`): on spread catalogs its
+    * recall collapses where the graph's degrades gracefully
+    * (SCALE_r17_recall_200k{,_ivf,_spread,_spread_ivf}).
+    *
+    * The beam: on the untuned path only (`efSearch` left at
+    * [[DefaultEfSearch]], both auto-scale knobs on), one 256-query
+    * contrast pass raises a spread catalog's base to
+    * [[graft.knn.BeamLaw.SpreadBaseEf]] ([[resolveShapeBase]];
+    * SCALE_r19_shape_*, SCALE_r19_recall_*_default). A catalog this
+    * size pays an index build, so that pass is noise against it. Then
+    * [[autoEfSearch]] widens the base with catalog size
+    * (SCALE_r17_recall_1m_ef128, SCALE_r18_recall_1m_spread_ef256).
+    * `shapeAutoScale = false` skips the contrast pass, `efAutoScale =
+    * false` pins the raw knob, and `efSearch <= 0` is the full beam,
+    * never scaled. `Long.MaxValue` opts out of the tier.
     */
   val DefaultHnswAbove: Long = DefaultAnnAbove
 
@@ -172,8 +85,8 @@ object SemLinkGrid {
     * [[EfDoublePerKeys]]× keys (ceil — the quality-first side of the
     * measured rule, so 10⁶ keys already gets the doubling that
     * SCALE_r17_recall_1m_ef128 measured restoring 0.9949 from the fixed
-    * beam's 0.9680). `base <= 0` (the rank-exact full-beam sentinel) is
-    * returned untouched — exactness needs no scaling.
+    * beam's 0.9680). `base <= 0` (the full-beam sentinel) is
+    * returned untouched — the full beam needs no scaling.
     */
   private[graft] def autoEfSearch(base: Int, n: Long): Int =
     graft.knn.BeamLaw.autoEf(base, n)
@@ -416,51 +329,25 @@ object SemLinkGrid {
       cells.flatMap(_.metrics.collect()).asJava, first.schema)
   }
 
-  /** The grid's single kNN pass on the broadcast + partial-top-k scale
-    * path — the same shape as `SemLink.knnPairs`: string column keys are
-    * mapped to deterministic `xxhash64` longs, searched as longs, and
-    * mapped back via two broadcast joins. The former windowKnn shape
-    * (cross join + ranking window partitioned by STRING keys) pushed N²
-    * rows through a shuffle — fine at 10⁴ columns, fatal at a 10⁶-column
-    * catalog. Output: (query_id, neighbor_id, dist, rank) on string keys.
+  /** The grid's single kNN pass: string column keys are mapped to
+    * deterministic `xxhash64` longs, searched as longs, and mapped back
+    * through two broadcast joins. Output: (query_id, neighbor_id, dist,
+    * rank) on string keys.
     *
-    * Driver-memory gate: the self-kNN's query side IS the whole catalog,
-    * so an unconditional broadcastKnn would `collect()` every vector to
-    * the driver — fine at 10⁴ columns, a scale-killer at a 10⁶-column
-    * lake. [[graft.knn.ApproxKnn.blockKnn]] bounds what the driver ever
-    * holds to `blockSize` query rows per block (quantile-cut id ranges,
-    * exact union of per-block top-k), and collapses to the single
-    * broadcast pass when the catalog fits one block — so the metadata-
-    * sized case pays nothing for the gate.
+    * The engine is chosen by catalog size. Up to `annAbove` keys it is
+    * exact [[graft.knn.ApproxKnn.blockKnn]], which holds at most
+    * `blockSize` query rows on the driver and is one broadcast pass
+    * when the catalog fits one block. Past `annAbove` it is
+    * [[graft.knn.ApproxKnn.ivfKnn]], and past `hnswAbove` the sharded
+    * HNSW tier ([[DefaultAnnAbove]], [[DefaultHnswAbove]]), each
+    * announced with a WARN log line. `annAbove = Long.MaxValue` forces
+    * exact at any size.
     *
-    * Compute gate (`annAbove`): exact self-kNN is O(N²·d) distance work
-    * no matter how it is blocked — the right ENGINE for a catalog past
-    * ~annAbove keys is IVF ([[graft.knn.ApproxKnn.ivfKnn]]: cluster-
-    * pruned candidate generation, same output contract), trading exact
-    * recall for cluster-bounded work exactly as the reference's FAISS
-    * switch from IndexFlatL2 to an IVF index would
-    * (join_discoverer.py:209 trains a flat index — the reference never
-    * met a catalog big enough to need this; at nProbe = nList the IVF
-    * path degenerates to exhaustive search and reproduces the exact
-    * ranking, which is how the spec pins it). Default =
-    * [[DefaultAnnAbove]] (10⁵ keys): an untuned caller GATES — below
-    * the threshold the plan is exact (every bench/oracle catalog sits
-    * far below it), above it the default plan is the measured-survivable
-    * IVF path, announced with a WARN log line. `Long.MaxValue` opts out
-    * (exact at any size, the caller's explicit choice).
-    *
-    * Auto sizing (`nList <= 0`): a FIXED nList keeps the probed
-    * fraction nProbe/nList constant, so per-query candidate work stays
-    * O(N) and the escalation only shaves a constant off the N² grid.
-    * The sentinel sizes nList ∝ √N (each inverted list holds ~√N
-    * vectors), so constant-nProbe per-query work is O(nProbe·√N) and
-    * the whole grid is O(N^1.5) — the standard IVF sizing rule.
-    * The sentinel IS the default: a caller who escalates without
-    * tuning gets O(N^1.5), not a constant-factor shave off N²
-    * (SCALE_r12 measured fixed nList=64 growing 4.83× at 10× data vs
-    * 3.21× for the auto rule). Explicit positive nList still wins.
-    * `nProbe <= 0` means full probe (nProbe = resolved nList):
-    * exhaustive, rank-exact — the oracle form of the auto path.
+    * IVF sizing: `nList <= 0` (the default) sizes nList ∝ √N, so
+    * per-query work at a fixed nProbe is O(nProbe·√N) and the grid
+    * O(N^1.5) (SCALE_r12: fixed nList 64 grew 4.83× per 10× data, the
+    * auto rule 3.21×). `nProbe <= 0` is the full probe, exhaustive and
+    * exact: the oracle form of the IVF tier (q93/q94).
     */
   private[graft] def gridKnn(embedded: DataFrame, kMax: Int,
       blockSize: Int = 100000,
@@ -533,9 +420,7 @@ object SemLinkGrid {
     val gated = annAbove != Long.MaxValue
     val n = embedded.queryExecution.toRdd.count()
     if (gated && n > annAbove && hnswAbove != Long.MaxValue && n > hnswAbove) {
-      // the SHAPE probe (the r19 maturation of the ShapeStats operating
-      // rule from a documented diagnostic into gate behavior, the same
-      // step the beam law took in r17): on the fully-UNTUNED escalation
+      // the SHAPE probe: on the fully-UNTUNED escalation
       // path only — efSearch left at the default base (an explicit
       // base, wider or narrower, is a caller decision the gate never
       // overrides) and both auto-scale knobs on. A catalog this size
@@ -578,7 +463,7 @@ object SemLinkGrid {
           "knob" else "") +
         "): N·log N beam work, no pair-row shuffle. Pass " +
         "annAbove=Long.MaxValue to force exact, hnswAbove=Long.MaxValue " +
-        "for the IVF tier, or efSearch<=0 for full-beam (rank-exact) " +
+        "for the IVF tier, or efSearch<=0 for full-beam " +
         "HNSW.")
       (graft.knn.ApproxKnn.hnswBlockKnn(withId, withId, "id", "vec", kMax,
         metric = KnnJoin.MetricL2Sq, efSearch = ef,

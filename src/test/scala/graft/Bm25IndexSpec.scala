@@ -162,47 +162,6 @@ class Bm25IndexSpec extends SparkSpec {
       == rows(Bm25.scoreTopK(docs, "doc_id", "text", queries, "qid", "text")))
   }
 
-  test("crashed BUILD commit rolls forward at the next writer entry; " +
-    "pre-marker debris rolls back") {
-    val dir = tempDir("buildcrash")
-    Bm25Index.build(docs, "doc_id", "text", dir, nBuckets = 4)
-    graft.streaming.IngestWatermark.write(spark, dir, 42L)
-    // fabricate the mid-commit state of a rebuild over a smaller corpus
-    // with a DIFFERENT bucket count: all three tables staged, marker on
-    val corpus2 = docs.limit(30)
-    val stage = tempDir("buildstage")
-    Bm25Index.build(corpus2, "doc_id", "text", stage, nBuckets = 8)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    Seq("params", "postings", "doclens").foreach { t =>
-      require(fs.rename(new org.apache.hadoop.fs.Path(s"$stage/$t"),
-        new org.apache.hadoop.fs.Path(s"$dir/$t.tmp")))
-    }
-    fs.create(new org.apache.hadoop.fs.Path(s"$dir/_build_commit"), false)
-      .close()
-    // vacuum's entry recovery must finish the BUILD: new params live
-    // (not new params over old postings), watermark cleared
-    Bm25Index.vacuum(spark, dir)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_build_commit")))
-    assert(graft.streaming.IngestWatermark.read(spark, dir) == Long.MinValue,
-      "previous corpus's watermark survived the rolled-forward build")
-    val got = rows(Bm25Index.searchTopK(spark, dir, queries, "qid", "text",
-      topK = 10))
-    val want = rows(Bm25.scoreTopK(corpus2, "doc_id", "text", queries,
-      "qid", "text", topK = 10))
-    assert(got == want, "recovered index does not score as the new corpus")
-
-    // pre-marker crash: staged debris only → rollback, live index intact
-    graft.streaming.IngestWatermark.write(spark, dir, 77L)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/params.tmp"))
-    Bm25Index.vacuum(spark, dir)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/params.tmp")))
-    assert(graft.streaming.IngestWatermark.read(spark, dir) == 77L,
-      "rollback cleared the live corpus's watermark")
-    assert(rows(Bm25Index.searchTopK(spark, dir, queries, "qid", "text",
-      topK = 10)) == want)
-  }
-
   test("no-term queries yield an empty, correctly-shaped frame") {
     val dir = tempDir("empty")
     Bm25Index.build(docs, "doc_id", "text", dir)

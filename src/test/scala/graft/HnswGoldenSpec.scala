@@ -80,15 +80,18 @@ class HnswGoldenSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("hnsw_golden").toString)
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
     val queries = emb.filter(col("vec_id") < 440).orderBy("vec_id").limit(40)
-    def digest(): String = {
-      val d = new Digest
+    // the image bytes and each search case are digested apart, so a
+    // change to the beam shows up in the search digests alone
+    def digest(): (String, Seq[String]) = {
+      val img = new Digest
       HnswIndex.readManifest(spark, dir)._2.toSeq.sorted.foreach { case (s, g) =>
         val in = fs.open(new Path(s"$dir/nodes/g=$g/shard=$s/${HnswImage.FileName}"))
-        d.long(s.toLong)
-        try d.bytes(in.readAllBytes()) finally in.close()
+        img.long(s.toLong)
+        try img.bytes(in.readAllBytes()) finally in.close()
       }
       val n = HnswIndex.readIds(spark, dir).count().toInt
-      for ((ef, auto) <- Seq((16, false), (0, true), (n, false))) {
+      val searches = for ((ef, auto) <- Seq((16, false), (0, true), (n, false))) yield {
+        val d = new Digest
         val rows = HnswIndex.search(spark, dir, queries, "vec_id", "embedding",
             k = 5, efSearch = ef, efAutoScale = auto)
           .select("query_id", "neighbor_id", "dist", "rank").collect()
@@ -97,8 +100,9 @@ class HnswGoldenSpec extends SparkSpec {
         d.long(rows.length.toLong)
         rows.foreach { case (q, nid, dist, rank) =>
           d.long(q); d.long(nid); d.dist(dist); d.long(rank.toLong) }
+        d.hex
       }
-      d.hex
+      (img.hex, searches)
     }
     HnswIndex.build(emb.filter(col("vec_id") < 300), "vec_id", "embedding",
       dir, shards = 4)
@@ -124,8 +128,8 @@ class HnswGoldenSpec extends SparkSpec {
         .foreach { case (q, nid, dist) => d.long(q); d.long(nid); d.dist(dist) }
       d.hex
     }
-    assert((built, appended, resharded) ==
-      (GoldenBuilt, GoldenAppended, GoldenResharded))
+    assert(Seq(built, appended, resharded).map(_._1) == GoldenImages)
+    assert(Seq(built, appended, resharded).map(_._2) == GoldenSearches)
     assert(rowsDigest(cosRows) == GoldenCosineIndex)
     assert(rowsDigest(inMem) == GoldenHnswKnn)
   }
@@ -136,14 +140,24 @@ class HnswGoldenSpec extends SparkSpec {
     "0f658d09410bf4127b8999828b29aa645effb132de7622ffb4ab65d85cdfa2b5"
   private val GoldenSearchCosine =
     "79dc0389d42013009ba986cc9ebe1453fa3a99c6b68e4d22d9148362dec3a08b"
-  private val GoldenBuilt =
-    "90e555bdc01c46e155a36ab23c1f91c9d29c657d555d28dd6e898b5a2249372c"
-  private val GoldenAppended =
-    "c29ee59f0417beae0eab701f1413b1ff138b157de947898c24dd3a23d0dee23f"
-  private val GoldenResharded =
-    "befcf4705ea451c907461d16427b5ba5af7f8010b20f67753553e72f3db43158"
+  // the `_graph.bin` bytes after build, append and reshard
+  private val GoldenImages = Seq(
+    "7ee732febe9252ab9eff437a2ca546c18786a0dc23aedd5a808303113ce867be",
+    "48d6492b4d81478cb86b3122ea322ba4e619e8ee944cb406c1e43c621ed53486",
+    "5d644c607470a93e1b056df3a2659101ebd00b144449cc4e5676a8dbc2979eb8")
+  // per stage: the search rows at ef 16, the ef = 0 sentinel and ef = n
+  private val GoldenSearches = Seq(
+    Seq("b1e676d84f1b0bcbc37e2149abd37696f2dcfbb371f67be95d029c2643abc747",
+      "b1e676d84f1b0bcbc37e2149abd37696f2dcfbb371f67be95d029c2643abc747",
+      "b1e676d84f1b0bcbc37e2149abd37696f2dcfbb371f67be95d029c2643abc747"),
+    Seq("17ddcc434d7de34d2c79db54ab81664347b0d14663fcc7b57a0322af2a7f50d7",
+      "17ddcc434d7de34d2c79db54ab81664347b0d14663fcc7b57a0322af2a7f50d7",
+      "17ddcc434d7de34d2c79db54ab81664347b0d14663fcc7b57a0322af2a7f50d7"),
+    Seq("17ddcc434d7de34d2c79db54ab81664347b0d14663fcc7b57a0322af2a7f50d7",
+      "17ddcc434d7de34d2c79db54ab81664347b0d14663fcc7b57a0322af2a7f50d7",
+      "17ddcc434d7de34d2c79db54ab81664347b0d14663fcc7b57a0322af2a7f50d7"))
   private val GoldenCosineIndex =
     "2997732566e7ce4b6b43ef8d58f63003a331ca463d4133378dcba8e85993131d"
   private val GoldenHnswKnn =
-    "e8bc8cffe6b1cb8a5576bbcff5c87b9679b71d8167aa74f26c2d77b3de0f6791"
+    "0be4ddfd1c5abaa95b2d7e01b425632a166ae64ee4794a9c7d2b02f39e23f2ba"
 }

@@ -419,15 +419,6 @@ class HnswIndexSpec extends SparkSpec {
       "rebuild must clear the previous corpus's watermark")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/nodes/g=0")),
       "superseded generation not retired after the commit")
-
-    // roll-FORWARD of a committed build marker replays the ingest clear
-    graft.streaming.IngestWatermark.write(spark, dir, 99L)
-    val out2 = fs.create(marker, false)
-    out2.write("build:1".getBytes("UTF-8")); out2.close()
-    HnswIndex.vacuum(spark, dir)
-    assert(graft.streaming.IngestWatermark.read(spark, dir) == Long.MinValue,
-      "roll-forward of a committed build must clear ingest state")
-    assert(probeIds() == after)
   }
 
   test("build clears stale reshard debris; later writers keep the fresh params") {
@@ -1011,7 +1002,7 @@ class HnswIndexSpec extends SparkSpec {
     val rOver = HnswIndex.staleness(spark, dir, baseEf = 32).collect()(0)
     assert(rOver.getInt(5) == 32 && rOver.getInt(6) == 32)
     // an UNTUNED search runs the declared beam: ef 96 >= corpus size
-    // here, so it must match the full-beam (rank-exact) top-k exactly,
+    // here, so it must match the full-beam top-k exactly,
     // while a deliberately narrow explicit beam is allowed to differ
     // (and an explicit efSearch still overrides — same knob as before)
     val q = corpus.limit(8)
@@ -1226,5 +1217,32 @@ class HnswIndexSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("duplicate label") ||
       Option(e2.getCause).exists(_.getMessage.contains("duplicate label")))
+  }
+
+  test("efSearch <= 0 runs the full shard beam: the rows of ef = shard " +
+      "size through HnswIndex.search, hnswKnn and hnswBlockKnn") {
+    // a sparse graph (m 4, efConstruction 8) on which the narrowest beam
+    // (k + 1) misses neighbours that the full beam finds
+    val n = emb.count().toInt
+    val q = emb.filter(col("vec_id") % 3 === 0)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "dist", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    val dir = tempDir("fullbeam")
+    HnswIndex.build(emb, "vec_id", "embedding", dir, m = 4,
+      efConstruction = 8, shards = 2)
+    def search(ef: Int, auto: Boolean) = rows(HnswIndex.search(spark, dir, q,
+      "vec_id", "embedding", k = 10, efSearch = ef, efAutoScale = auto))
+    val indexFull = search(n, auto = false)
+    assert(search(0, auto = true) == indexFull, "HnswIndex.search ef = 0")
+    assert(search(-3, auto = false) == indexFull, "HnswIndex.search ef = -3")
+    def inMem(ef: Int) = rows(graft.knn.ApproxKnn.hnswKnn(q, emb.repartition(2),
+      "vec_id", "embedding", k = 10, m = 4, efConstruction = 8, efSearch = ef))
+    assert(inMem(0) == inMem(n), "ApproxKnn.hnswKnn ef = 0")
+    // two query blocks, so the per-block search is the one under test
+    def blocked(ef: Int) = rows(graft.knn.ApproxKnn.hnswBlockKnn(q, emb,
+      "vec_id", "embedding", k = 10, m = 4, efConstruction = 8,
+      efSearch = ef, shards = 2, queryBlockSize = 100))
+    assert(blocked(0) == blocked(n), "ApproxKnn.hnswBlockKnn ef = 0")
   }
 }

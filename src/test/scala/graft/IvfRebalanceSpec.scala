@@ -151,36 +151,6 @@ class IvfRebalanceSpec extends SparkSpec {
     assert(fullProbe(reb2, emb, 8) == before)
   }
 
-  test("crashed BUILD commit rolls forward: staged tables live, stale pq " +
-    "cleared, ingest state reset") {
-    val dir = tempDir("buildcrash")
-    IvfIndex.build(emb, "vec_id", "embedding", dir, nList = 4, pqM = 4)
-    graft.streaming.IngestWatermark.write(spark, dir, 12345L)
-    // fabricate the mid-commit state of a PQ-less rebuild over `drifted`:
-    // its three tables staged, the BUILD marker written, no swap started
-    val stage = tempDir("buildstage")
-    IvfIndex.build(drifted, "vec_id", "embedding", stage, nList = 8)
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    Seq("centroids", "params", "assignments").foreach { t =>
-      require(fs.rename(new Path(s"$stage/$t"), new Path(s"$dir/$t.tmp")))
-    }
-    val out = fs.create(new Path(s"$dir/_rebalance_commit"), false)
-    out.write("build_clear_pq".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    // the next writer entry's recovery must finish the BUILD: staged
-    // tables live, the old index's pq codebooks gone (the new build has
-    // none), and the previous corpus's watermark cleared
-    IvfIndex.append(spark, dir, drifted.limit(0), "vec_id", "embedding")
-    assert(!fs.exists(new Path(s"$dir/pq")), "stale pq survived recovery")
-    assert(!fs.exists(new Path(s"$dir/_rebalance_commit")))
-    assert(graft.streaming.IngestWatermark.read(spark, dir) == Long.MinValue,
-      "previous corpus's watermark survived the rolled-forward build")
-    val (nLists, _, _) = occupancyStats(dir)
-    assert(nLists == 8, "staged index not live after recovery")
-    // the recovered index is the drifted corpus, searchable end to end
-    assert(fullProbe(dir, drifted, 8).nonEmpty)
-  }
-
   test("interrupted BUILD before its marker rolls back: previous index, " +
     "pq and watermark all intact") {
     val dir = tempDir("buildroll")

@@ -221,53 +221,6 @@ class LshDedupIndexSpec extends SparkSpec {
     }
   }
 
-  test("crashed BUILD commit rolls forward at the next writer entry; " +
-    "pre-marker debris rolls back") {
-    val dir = tempDir("buildcrash")
-    LshDedupIndex.build(docs, "doc_id", "text", dir)
-    graft.streaming.IngestWatermark.write(spark, dir, 42L)
-    // fabricate the mid-commit state of a rebuild over a smaller corpus
-    // under DIFFERENT banding params: all three tables staged, marker on.
-    // (The crash window this protects: new params over old signatures —
-    // probes would sign under parameters the persisted signatures were
-    // never computed with.)
-    val corpus2 = docs.limit(30)
-    val stage = tempDir("buildstage")
-    LshDedupIndex.build(corpus2, "doc_id", "text", stage,
-      shingleSize = 3, bands = 8, rowsPerBand = 2)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    Seq("params", "bands", "signatures").foreach { t =>
-      require(fs.rename(new org.apache.hadoop.fs.Path(s"$stage/$t"),
-        new org.apache.hadoop.fs.Path(s"$dir/$t.tmp")))
-    }
-    fs.create(new org.apache.hadoop.fs.Path(s"$dir/_build_commit"), false)
-      .close()
-    // vacuum's entry recovery must finish the BUILD
-    LshDedupIndex.vacuum(spark, dir)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_build_commit")))
-    assert(LshDedupIndex.open(spark, dir).meta == LshDedupIndex.Params(3, 8, 2),
-      "staged params not live after recovery")
-    assert(graft.streaming.IngestWatermark.read(spark, dir) == Long.MinValue,
-      "previous corpus's watermark survived the rolled-forward build")
-    // exact copies of the NEW corpus are found under the NEW params
-    val probe = corpus2.withColumn("doc_id", col("doc_id") + 2000000)
-    val cands = LshDedupIndex
-      .candidatesAgainst(spark, dir, probe, "doc_id", "text")
-      .filter(col("new_id") === col("indexed_id") + 2000000)
-    assert(cands.count() == corpus2.count(),
-      "recovered index does not probe as the new corpus")
-
-    // pre-marker crash: staged debris only → rollback, live index intact
-    graft.streaming.IngestWatermark.write(spark, dir, 77L)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/params.tmp"))
-    LshDedupIndex.vacuum(spark, dir)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/params.tmp")))
-    assert(graft.streaming.IngestWatermark.read(spark, dir) == 77L,
-      "rollback cleared the live corpus's watermark")
-    assert(LshDedupIndex.open(spark, dir).meta == LshDedupIndex.Params(3, 8, 2))
-  }
-
   test("vacuum recovers a crashed swap on entry") {
     val dir = tempDir("vacrec")
     LshDedupIndex.build(docs.limit(100), "doc_id", "text", dir)
