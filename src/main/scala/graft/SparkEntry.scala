@@ -1523,13 +1523,7 @@ object SparkEntry {
           transform(col("embedding"), x => (x + lit(4.0f)).cast("float"))
             .as("embedding"))
       graft.knn.IvfIndex.build(base, "vec_id", "embedding", idxDir, nList = 16)
-      // checkPresence = false: the guard's two validation joins re-prove
-      // what this fixture holds by construction (base = even vec_ids,
-      // drift = odd — disjoint, each unique) — the streaming fast-path
-      // convention (the caller owns a property it just established);
-      // output is unchanged, the guard stays default-on for the public API
-      graft.knn.IvfIndex.append(s, idxDir, drift, "vec_id", "embedding",
-        checkPresence = false)
+      graft.knn.IvfIndex.append(s, idxDir, drift, "vec_id", "embedding")
       graft.knn.IvfIndex.rebalance(s, idxDir)
       val queries = base.unionByName(drift).filter(col("vec_id") < 500)
       graft.knn.IvfIndex.search(s, idxDir, queries, "vec_id", "embedding",

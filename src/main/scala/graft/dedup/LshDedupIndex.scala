@@ -1,6 +1,5 @@
 package graft.dedup
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
@@ -44,19 +43,18 @@ object LshDedupIndex {
       org.apache.spark.sql.types.StructField("est_jaccard",
         org.apache.spark.sql.types.DoubleType)))
 
-  /** On-disk schemas, explicit on every read (the [[graft.text.Bm25Index]]
-    * convention): an index built over an EMPTY seed corpus writes no part
-    * files, and a schema-less read of it would throw instead of returning
-    * no rows — empty-seed streaming ingest must work.
+  /** `bands/` partitioned by band, `signatures/` the commit table,
+    * joined on id.
     */
-  private val signaturesSchema: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("sig", ArrayType(IntegerType, containsNull = false))))
-
-  private val bandsSchema: StructType = StructType(Seq(
-    StructField("band_hash", LongType),
-    StructField("id", LongType),
-    StructField("band", IntegerType)))
+  private val layout = new graft.util.PartitionedTables("LshDedupIndex",
+    "bands", "band", "signatures", Seq("id"),
+    StructType(Seq(
+      StructField("band_hash", LongType),
+      StructField("id", LongType),
+      StructField("band", IntegerType))),
+    StructType(Seq(
+      StructField("id", LongType),
+      StructField("sig", ArrayType(IntegerType, containsNull = false)))))
 
   /** The committed-membership table: (id, sig), one row per indexed
     * document. Exposed (package-private) so per-batch callers — the
@@ -65,10 +63,7 @@ object LshDedupIndex {
     * re-scanning per consumer.
     */
   private[graft] def readSignatures(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(signaturesSchema).parquet(s"$dir/signatures")
-
-  private def readBands(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(bandsSchema).parquet(s"$dir/bands")
+    layout.readCommitted(spark, dir)
 
   /** Sign the corpus and persist the index layout. Returns the indexed
     * document count. Rebuild-in-place overwrites all three tables.
@@ -98,105 +93,39 @@ object LshDedupIndex {
         .toDF("shingle_size", "bands", "rows_per_band")
         .repartition(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/params.tmp")
-      val n = writeState(spark, docs, idCol, textCol, dir, shingleSize,
-        bands, rowsPerBand, SaveMode.Overwrite, tableSuffix = ".tmp")
-      // fresh corpus → fresh ingest state (graft.util.IngestState
-      // contract); inside the marker window so a crash here replays the
-      // clear on recovery, and a crash BEFORE the marker rolls back to
-      // the previous index with its watermark intact
-      val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-      graft.util.StagedTables.commit(fs, dir, BuildMarker, BuildOp,
-        CommitTables)(_ => graft.util.IngestState.clear(spark, dir))
+      // one MinHash pass; its signatures (~300 B/doc) feed the band
+      // write, the signature write and the count
+      val signed = Dedup.minhashSigned(docs, idCol, textCol, shingleSize,
+        bands * rowsPerBand).localCheckpoint(eager = false)
+      val n = writeSigned(signed, dir, bands, rowsPerBand, micro = false,
+        build = true)
+      layout.commitBuild(spark, dir)
       n
     }
   }
 
-  /** Sign + write shared by [[build]] and [[append]]. ONE MinHash kernel
-    * pass over the documents: the signed frame is localCheckpoint-ed
-    * (signatures are ~300 B/doc — orders of magnitude smaller than the
-    * text they summarize) and feeds the signature write, the band write,
-    * and the returned count; the blocks are released by the
-    * ContextCleaner when the frame goes out of scope. An executor loss
-    * mid-build fails the (idempotent, restartable) build rather than
-    * recomputing — acceptable for an offline index write; pass smaller
-    * batches if re-running the kernel is cheaper than holding signatures.
-    *
-    * Write ORDER is the append crash-safety protocol: bands stage FIRST,
-    * the signatures write is the commit point. An id is "in the index"
-    * iff its signature row exists — [[append]]'s already-present check
-    * reads signatures, and [[candidatesAgainst]]'s final inner join on
-    * the signature fetch makes orphaned band rows (a crash between the
-    * two writes) invisible to probes. Retrying the crashed append then
-    * passes the id check and re-stages the batch's band rows — the
-    * duplicates collapse in the probe's pair-level dropDuplicates, and
-    * the commit completes. The reverse order would strand the batch:
-    * present by id, invisible to probes, and unretryable.
+  /** Write a signed (id, sig) frame: bands stage first, the signatures
+    * write is the commit point ([[graft.util.PartitionedTables.write]]).
+    * An id is "in the index" iff its signature row exists — the append
+    * guard reads signatures, and [[probe]]'s final inner join on the
+    * signature fetch makes orphaned band rows (a crash between the two
+    * writes) invisible. Retrying the crashed append then passes the id
+    * guard and re-stages the batch's band rows; the duplicates collapse
+    * in the probe's pair-level dropDuplicates. The reverse order would
+    * strand the batch: present by id, invisible to probes, and
+    * unretryable. Band rows are (band, band_hash, id), partitioned by
+    * band so a reduced-band probe prunes directories. Returns the signed
+    * row count, or -1 for a `micro` batch.
     */
-  private def writeState(
-      spark: SparkSession,
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      dir: String,
-      shingleSize: Int,
-      bands: Int,
-      rowsPerBand: Int,
-      mode: SaveMode,
-      tableSuffix: String = ""): Long = {
-    val numHashes = bands * rowsPerBand
-    val signed = Dedup.minhashSigned(docs, idCol, textCol, shingleSize, numHashes)
-      .localCheckpoint(eager = false)
-    writeSigned(signed, dir, bands, rowsPerBand, mode, needCount = true,
-      tableSuffix = tableSuffix)
-  }
-
-  /** The write half of [[writeState]], callable with a caller-shared
-    * `signed` frame (one [[Dedup.minhashSigned]] kernel pass,
-    * localCheckpoint-ed) — a streaming micro-batch signs its batch ONCE
-    * and both its [[probe]] and its append reuse the materialized
-    * signatures, instead of running the
-    * MinHash kernel over the text twice. Write order is the append
-    * crash-safety protocol (bands stage first, the signatures write is
-    * the commit point). `needCount = false` skips the count job for
-    * callers that ignore the return value and returns -1.
-    */
-  private[graft] def writeSigned(
-      signed: DataFrame,
-      dir: String,
-      bands: Int,
-      rowsPerBand: Int,
-      mode: SaveMode,
-      needCount: Boolean,
-      repartitionByBand: Boolean = true,
-      tableSuffix: String = ""): Long = {
-    // band rows are (band, band_hash, id) — 20 bytes of data per row, the
-    // whole bucket structure; partitioned by band so a reduced-band probe
-    // prunes directories at file-listing level
-    val banded = signed
-      .select(col("id"),
-        explode(Dedup.bandStructs(col("sig"), bands, rowsPerBand)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.band_hash").as("band_hash"),
-        col("id"))
-    // repartitionByBand = false (the per-MICRO-BATCH append path):
-    // coalesce to ONE task instead of paying the clustering exchange.
-    // The batch's rows sit scattered across the freshness join's cached
-    // partitions — writing partitionBy(band) from ~32 tasks fans every
-    // task into every band it touches (hundreds of sliver files per
-    // append, and every later probe re-lists them; measured as a ~25%
-    // q92 regression when this path briefly skipped BOTH the exchange
-    // and the coalesce). One task × ≤bands files matches what the
-    // exchange produced, narrowly. Micro-batches are single-staged-file
-    // sized by contract; full builds keep the exchange.
-    (if (repartitionByBand) banded.repartition(col("band"))
-     else banded.coalesce(1))
-      .write.mode(mode)
-      .partitionBy("band")
-      .parquet(s"$dir/bands$tableSuffix")
-    // commit point (see the write-order doc above); a staging build
-    // (`tableSuffix = ".tmp"`) commits via the marker swap instead
-    signed.write.mode(mode).parquet(s"$dir/signatures$tableSuffix")
-    if (needCount) signed.count() else -1L
-  }
+  private def writeSigned(signed: DataFrame, dir: String, bands: Int,
+      rowsPerBand: Int, micro: Boolean, build: Boolean = false): Long =
+    layout.write(
+      signed
+        .select(col("id"),
+          explode(Dedup.bandStructs(col("sig"), bands, rowsPerBand)).as("bk"))
+        .select(col("bk.band").as("band"), col("bk.band_hash").as("band_hash"),
+          col("id")),
+      signed, dir, micro, build)
 
   /** The signature scheme the index was built under: the `params/` row. */
   private[graft] final case class Params(shingleSize: Int, bands: Int,
@@ -206,7 +135,7 @@ object LshDedupIndex {
 
   private val memo = new graft.util.MetaMemo[Params](Seq("params"))
 
-  /** The snapshot [[probe]] and [[appendSigned]] consume: the params
+  /** The snapshot [[probe]] and [[writer]] consume: the params
     * come from a generation-keyed [[graft.util.MetaMemo]] (one one-row
     * collect on a miss, none on a hit; a build commit is a miss).
     */
@@ -220,15 +149,10 @@ object LshDedupIndex {
 
   /** Sign a batch under the index's params — the one MinHash kernel
     * pass a streaming micro-batch shares between its [[probe]] and its
-    * append ([[appendSigned]]); localCheckpoint-ed EAGERLY on
-    * purpose: the first consumer is the probe plan, which references
-    * the signed frame TWICE (band explode + signature fetch), and a
-    * not-yet-materialized lazy checkpoint referenced twice inside one
-    * job computes the kernel twice — measured as a ~25% q92 regression
-    * when this briefly went lazy. Eager pays one small upfront job and
-    * every later reference reads blocks. (Lazy remains right when the
-    * first consumer references the frame once — the build path, the
-    * BM25 tokenRows path.)
+    * write ([[writer]]). localCheckpoint-ed EAGERLY: the probe plan
+    * references the signed frame twice (band explode + signature
+    * fetch), and a lazy checkpoint referenced twice inside one job
+    * computes the kernel twice.
     */
   private[graft] def signBatch(docs: DataFrame, idCol: String,
       textCol: String, params: Params): DataFrame =
@@ -237,10 +161,10 @@ object LshDedupIndex {
 
   /** Add a new batch WITHOUT touching existing state: one signature pass
     * over the batch, parquet-appended into `signatures/` and the band
-    * partitions. Ids must be unique corpus-wide (a duplicate would make
-    * the same document surface as its own near-duplicate) — both the
-    * within-batch and the against-index check are narrow id-only joins.
-    * Returns the appended row count.
+    * partitions, through the guarded [[graft.util.IndexWriter.append]]:
+    * ids must be unique corpus-wide (a duplicate would make the same
+    * document surface as its own near-duplicate). Returns the appended
+    * row count.
     */
   def append(
       spark: SparkSession,
@@ -248,29 +172,20 @@ object LshDedupIndex {
       newDocs: DataFrame,
       idCol: String,
       textCol: String): Long =
-    graft.util.IndexLock.withLock(spark, dir, "LshDedupIndex.append") {
-      recover(spark, dir)
-      val Params(shingleSize, bands, rowsPerBand) = open(spark, dir).meta
-      val ids = newDocs.select(col(idCol).cast("long").as("id"))
-      require(ids.groupBy("id").count().filter(col("count") > 1).isEmpty,
-        "LshDedupIndex.append: duplicate ids within the appended batch")
-      require(readSignatures(spark, dir).select("id")
-        .join(ids, "id").isEmpty,
-        "LshDedupIndex.append: id already present in the index")
-      writeState(spark, newDocs, idCol, textCol, dir, shingleSize, bands,
-        rowsPerBand, SaveMode.Append)
-    }
+    graft.util.IndexWriter.append(spark, dir, newDocs, idCol,
+      writer(idCol, textCol))
 
-  /** Streaming-batch append over a caller-shared signed frame
-    * ([[signBatch]] under the snapshot's params): the per-batch fast
-    * path — no re-sign, no params read, no count job. The caller holds
-    * the writer lock and owns the guards [[append]] runs (the ingest
-    * driver's freshness and one-row-per-id gate).
+  /** The writer half of this index ([[graft.util.IndexWriter]]): the
+    * batch is prepared as its signatures ([[signBatch]]), which a
+    * streaming micro-batch's probe reuses.
     */
-  private[graft] def appendSigned(snap: Snapshot, signed: DataFrame): Unit = {
-    writeSigned(signed, snap.dir, snap.meta.bands, snap.meta.rowsPerBand,
-      SaveMode.Append, needCount = false, repartitionByBand = false); ()
-  }
+  private[graft] def writer(idCol: String, textCol: String)
+      : graft.util.IndexWriter[Snapshot] =
+    graft.util.IndexWriter[Snapshot]("LshDedupIndex", recover, readSignatures,
+      open,
+      prepare = (_, snap, docs) => signBatch(docs, idCol, textCol, snap.meta),
+      write = (_, snap, signed, micro) => writeSigned(signed, snap.dir,
+        snap.meta.bands, snap.meta.rowsPerBand, micro))
 
   /** Near-duplicate candidates of `newDocs` AGAINST THE INDEXED CORPUS:
     * (new_id, indexed_id, est_jaccard), one row per (batch doc, corpus
@@ -308,8 +223,8 @@ object LshDedupIndex {
   /** [[candidatesAgainst]]'s body over an opened snapshot. `signed` is
     * the probe side's (id, sig) frame ([[signBatch]] under the snapshot's
     * params), referenced by both the band explode and the signature
-    * fetch — a streaming micro-batch signs once and its index append
-    * ([[appendSigned]]) reuses the same materialized signatures. `sigs`
+    * fetch — a streaming micro-batch signs once and its index write
+    * ([[writer]]) reuses the same materialized signatures. `sigs`
     * is the committed (id, sig) frame ([[readSignatures]]) for the
     * candidate signature fetch, so a batch that already read it for its
     * freshness join scans the corpus table once.
@@ -330,7 +245,7 @@ object LshDedupIndex {
         explode(Dedup.bandStructs(col("sig"), nProbe, rowsPerBand)).as("bk"))
       .select(col("new_id"), col("bk.band").as("band"),
         col("bk.band_hash").as("band_hash"))
-    val idx = readBands(spark, snap.dir)
+    val idx = layout.readPartitioned(spark, snap.dir)
       .filter(col("band") < nProbe) // static partition filter (no-op at full probe)
       .select(col("band"), col("band_hash"), col("id").as("indexed_id"))
     val pairs = newBanded
@@ -357,94 +272,27 @@ object LshDedupIndex {
     * corpus (shingle size too small, bands too coarse).
     */
   def stats(spark: SparkSession, dir: String): DataFrame =
-    readBands(spark, dir)
+    layout.readPartitioned(spark, dir)
       .groupBy("band", "band_hash").agg(count(lit(1)).as("__b"))
       .groupBy("band")
       .agg(sum("__b").cast("long").as("n_rows"),
         count(lit(1)).as("n_buckets"),
         max("__b").cast("long").as("max_bucket"))
 
-  /** Maintenance: reclaim orphaned band rows and compact small files —
-    * the [[graft.knn.HnswIndex.vacuum]] counterpart for the dedup index.
-    *
-    * Orphans are the debris of an append that crashed between the bands
-    * stage and the signatures commit: band rows whose id has no signature
-    * row. The commit protocol keeps them INVISIBLE to probes (the final
-    * signature inner join), so they are a correctness no-op — but they
-    * are never reclaimed, and every parquet append also adds new small
-    * files to `signatures/` and each band partition forever. At
-    * daily-append scale a band partition becomes thousands of sliver
-    * files and file listing, not data, starts to dominate probe latency.
-    *
-    * Rewrite-then-swap: the orphan-free bands table and the compacted
-    * signatures table are written BESIDE the live ones (`<table>.tmp`),
-    * then swapped in via rename — the same single-writer maintenance
-    * contract as [[append]], both now enforced by [[graft.util.IndexLock]]
-    * (a concurrent append during the two-rename swap window would land
-    * files in `<table>.old` and lose them; with the lock it fails fast).
-    * A crash between the two renames leaves
-    * `<table>.old` intact; this method performs that recovery on entry
-    * (rename back if the live table is missing, clear completed-swap /
-    * stale-tmp debris otherwise). Probe results are unchanged by
-    * construction: orphans were already invisible, compaction only
-    * re-files identical rows.
-    *
-    * `signatureFiles` is the compacted signature file count (0 = the
-    * session's default parallelism); band partitions compact to one file
-    * per band per shuffle task, the [[build]] write shape. Returns the
-    * number of orphaned band rows reclaimed.
+  /** Maintenance: reclaim orphaned band rows (the debris of an append
+    * that crashed between the bands stage and the signatures commit) and
+    * the duplicate band rows of retried appends, and compact the small
+    * files every append adds ([[graft.util.PartitionedTables.vacuum]]).
+    * Orphans are invisible to probes (the final signature inner join)
+    * but are never reclaimed otherwise, and at daily-append scale file
+    * listing, not data, starts to dominate probe latency. Probe results
+    * are unchanged. Returns the number of band rows reclaimed.
     */
-  def vacuum(spark: SparkSession, dir: String, signatureFiles: Int = 0): Long =
-    graft.util.IndexLock.withLock(spark, dir, "LshDedupIndex.vacuum") {
-      vacuumImpl(spark, dir, signatureFiles)
-    }
+  def vacuum(spark: SparkSession, dir: String): Long = layout.vacuum(spark, dir)
 
-  private val CommitTables = Seq("params", "bands", "signatures")
-  private val BuildMarker = "_build_commit"
-  // the build marker's historic empty content: build is its only op
-  private val BuildOp = ""
-
-  /** Crash recovery for [[build]]'s marker-protected swap AND for
-    * markerless `.tmp`/`.old` debris (a crashed [[vacuum]] swap) — run
-    * at every writer entry and by the streaming ingest driver under its
-    * writer lock.
+  /** Crash recovery for [[build]]'s marker-protected swap and for a
+    * crashed [[vacuum]] swap, run at every writer entry.
     */
-  private[graft] def recover(spark: SparkSession, dir: String): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    graft.util.StagedTables.recover(fs, dir, BuildMarker, CommitTables)(
-      _ => graft.util.IngestState.clear(spark, dir))
-  }
-
-  private def vacuumImpl(spark: SparkSession, dir: String, signatureFiles: Int): Long = {
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    recover(spark, dir)
-
-    val sigs = readSignatures(spark, dir)
-    val bands = readBands(spark, dir)
-      .select("band", "band_hash", "id")
-    val liveBands = bands.join(sigs.select("id"), Seq("id"), "left_semi")
-      // a retried crashed append re-stages its batch's band rows
-      // (writeState contract), leaving IDENTICAL (band, band_hash, id)
-      // copies that a semi-join alone would rewrite forever — each copy
-      // inflating that batch's bucket membership in every probe's band
-      // join (Bm25Index.vacuum collapses its analogous retry duplicates
-      // the same way)
-      .dropDuplicates("band", "band_hash", "id")
-    val orphans = bands.count() - liveBands.count()
-
-    liveBands
-      .select("band", "band_hash", "id")
-      .repartition(col("band"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("band")
-      .parquet(s"$dir/bands.tmp")
-    val nSigFiles =
-      if (signatureFiles > 0) signatureFiles
-      else spark.sparkContext.defaultParallelism
-    sigs.repartition(nSigFiles)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/signatures.tmp")
-
-    graft.util.StagedTables.swapStaged(fs, dir, Seq("bands", "signatures"))
-    orphans
-  }
+  private[graft] def recover(spark: SparkSession, dir: String): Unit =
+    layout.recover(spark, dir)
 }

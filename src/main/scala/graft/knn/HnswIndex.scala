@@ -671,12 +671,15 @@ object HnswIndex {
     * generation are cleared before the retry stages its own. Superseded
     * generation directories are deleted best-effort AFTER the commit.
     *
-    * Hyperparameters come from `params/`. Duplicate labels are rejected
-    * (hnswlib `add_items` parity): a batch that repeats an id, or carries
-    * one the index already holds, is refused — a silent double-insert
-    * would persist two nodes with one external id and search would
-    * return that neighbor twice within top-k. Returns the appended row
-    * count.
+    * Hyperparameters come from `params/`, read after recovery: a
+    * reshard that died after its params swap but before the manifest
+    * commit would otherwise route ids by the uncommitted shard count.
+    * Duplicate labels are rejected (hnswlib `add_items` parity) by the
+    * guarded [[graft.util.IndexWriter.append]]: a batch that repeats an
+    * id, or carries one the index already holds, is refused — a silent
+    * double-insert would persist two nodes with one external id and
+    * search would return that neighbor twice within top-k. Returns the
+    * appended row count.
     */
   def append(
       spark: SparkSession,
@@ -684,25 +687,18 @@ object HnswIndex {
       newVectors: DataFrame,
       idCol: String,
       vecCol: String): Long =
-    graft.util.IndexLock.withLock(spark, dir, "HnswIndex.append") {
-      // heal a crashed commit BEFORE reading params ([[IvfIndex]] runs
-      // its recovery at every writer entry for the same reason): a
-      // reshard that died after its params swap but before the manifest
-      // commit leaves params describing a shard count the live manifest
-      // does not — ids would route by the uncommitted count, silently
-      // admitting duplicate nodes
-      recover(spark, dir)
-      // pin the batch: the guards and the append must see the SAME rows
-      val batch = newVectors
-        .select(col(idCol).cast("long").as("id"),
-          col(vecCol).cast("array<float>").as("vec"))
-        .localCheckpoint(eager = false)
-      require(batch.groupBy("id").count().filter(col("count") > 1).isEmpty,
-        "HnswIndex.append: duplicate ids within the appended batch")
-      require(readIds(spark, dir).join(batch.select("id"), "id").isEmpty,
-        "HnswIndex.append: id already present in the index")
-      appendPrepared(spark, open(spark, dir), batch, "id", "vec")
-    }
+    graft.util.IndexWriter.append(spark, dir, newVectors, idCol,
+      writer(idCol, vecCol))
+
+  /** The writer half of this index ([[graft.util.IndexWriter]]): the
+    * batch is inserted as it is ([[appendPrepared]]).
+    */
+  private[graft] def writer(idCol: String, vecCol: String)
+      : graft.util.IndexWriter[Snapshot] =
+    graft.util.IndexWriter[Snapshot]("HnswIndex", recover, readIds, open,
+      prepare = (_, _, batch) => batch,
+      write = (sp, snap, batch, _) =>
+        appendPrepared(sp, snap, batch, idCol, vecCol))
 
   /** The committed id set (one `id` column over the live generations),
     * read from each live image's header and id block only — no vector
@@ -716,15 +712,11 @@ object HnswIndex {
       .flatMap(_._2).toDF("id")
   }
 
-  /** [[append]]'s body against an opened snapshot — for per-batch
-    * callers (the streaming HNSW ingester) that share one snapshot
-    * between their [[probe]] and their append, the
-    * [[IvfIndex.appendPrepared]] contract. The caller holds the writer
-    * lock, opened the snapshot after its own [[recover]], and owns the guards
-    * [[append]] runs (the ingest driver's freshness and one-row-per-id
-    * gate); a duplicate label that slips past them still fails loudly in
-    * the shard insert kernel ([[HnswGraph.insert]]). Returns the appended
-    * row count.
+  /** [[append]]'s body against an opened snapshot. The caller holds the
+    * writer lock, opened the snapshot after [[recover]] and owns the id
+    * guards ([[writer]]); a duplicate label that slips past them still
+    * fails loudly in the shard insert kernel ([[HnswGraph.insert]]).
+    * Returns the appended row count.
     */
   private[graft] def appendPrepared(
       spark: SparkSession,

@@ -375,60 +375,38 @@ object IvfIndex {
     * [[graft.util.IndexLock]]: append and rebalance take the per-index
     * `_writer.lock` and fail fast on contention.
     *
-    * Duplicate ids are rejected by default (`checkPresence`), matching
-    * [[HnswIndex.append]] / the other index families: a retried crashed
-    * append that re-submits an already-committed batch would otherwise
-    * land every id twice in its cid partition, and search would return
-    * that neighbor twice within top-k. The check is one column-pruned id
-    * scan + join; the streaming ingester skips it because its watermark
-    * gate already anti-joins each batch against the committed ids.
+    * Ids must be unique corpus-wide, as in every index family: the
+    * guarded [[graft.util.IndexWriter.append]] refuses a batch that
+    * repeats an id or carries one the index already holds (a retried
+    * crashed append re-submitting a committed batch would otherwise land
+    * every id twice in its cid partition, and search would return that
+    * neighbor twice within top-k).
     */
   def append(
       spark: SparkSession,
       dir: String,
       newVectors: DataFrame,
       idCol: String,
-      vecCol: String,
-      checkPresence: Boolean = true): Long =
-    graft.util.IndexLock.withLock(spark, dir, "IvfIndex.append") {
-      appendImpl(spark, dir, newVectors, idCol, vecCol, checkPresence)
-    }
+      vecCol: String): Long =
+    graft.util.IndexWriter.append(spark, dir, newVectors, idCol,
+      writer(idCol, vecCol))
 
-  private def appendImpl(
-      spark: SparkSession,
-      dir: String,
-      newVectors: DataFrame,
-      idCol: String,
-      vecCol: String,
-      checkPresence: Boolean): Long = {
-    // a crashed rebalance left either staged debris or a half-committed
-    // swap; resolve it BEFORE appending — files landed in a table that a
-    // later roll-forward replaces would be lost silently
-    recover(spark, dir)
-    // pin the batch before counting: count and write must see the SAME
-    // rows (a non-deterministic source re-evaluated per action would
-    // otherwise return a count that differs from what landed), and the
-    // pin also spares the source a second full scan
-    val batch = newVectors
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<float>").as("vec"))
-      .localCheckpoint(eager = false)
-    val n = batch.count()
-    if (checkPresence) {
-      require(batch.groupBy("id").count().filter(col("count") > 1).isEmpty,
-        "IvfIndex.append: duplicate ids within the appended batch")
-      require(readIds(spark, dir).join(batch.select("id"), "id").isEmpty,
-        "IvfIndex.append: id already present in the index")
-    }
-    appendPrepared(spark, open(spark, dir), batch, "id", "vec")
-    n
-  }
+  /** The writer half of this index ([[graft.util.IndexWriter]]): the
+    * batch is written as it is ([[appendPrepared]]); a public append
+    * counts the pinned batch.
+    */
+  private[graft] def writer(idCol: String, vecCol: String)
+      : graft.util.IndexWriter[Snapshot] =
+    graft.util.IndexWriter[Snapshot]("IvfIndex", recover, readIds, open,
+      prepare = (_, _, batch) => batch,
+      write = { (sp, snap, batch, micro) =>
+        appendPrepared(sp, snap, batch, idCol, vecCol)
+        if (micro) -1L else batch.count()
+      })
 
-  /** [[append]]'s assign-and-write body against an opened snapshot —
-    * for per-batch callers (the streaming ANN ingester) that share one
-    * snapshot between their [[probe]] and their append. The caller must
-    * already hold the writer lock and have run [[recover]] before
-    * opening (both are part of the gated-batch critical section).
+  /** [[append]]'s assign-and-write body against an opened snapshot. The
+    * caller holds the writer lock and opened the snapshot after
+    * [[recover]] ([[writer]]).
     */
   private[graft] def appendPrepared(
       spark: SparkSession,
@@ -460,7 +438,7 @@ object IvfIndex {
   // `assignments/` stays out of the key: appends grow it every batch
   private val memo = new graft.util.MetaMemo[Meta](Seq("centroids", "params", "pq"))
 
-  /** The snapshot [[probe]] and [[appendPrepared]] consume: centroids
+  /** The snapshot [[probe]] and [[writer]] consume: centroids
     * and metric come from a generation-keyed [[graft.util.MetaMemo]]
     * (two collects on a miss, none on a hit; a [[build]] or
     * [[rebalance]] commit is a miss).
@@ -488,7 +466,7 @@ object IvfIndex {
       .groupBy("cid").agg(count(lit(1)).as("n_vectors"))
 
   /** Rebuild-cadence signal — the operational answer to "when is rebuild
-    * due?" that the IVF-PQ drift harness ([[IvfPqDrift]]) measures
+    * due?" that the IVF-PQ drift harness (IvfPqDrift) measures
     * offline. One row:
     *
     *  - `n_rows` — current corpus size (column-pruned id scan);
@@ -722,7 +700,7 @@ object IvfIndex {
     * (p32 0.236) and a recall-RECOVERED post-rebalance state at 1.94×
     * (p32 0.728 — above its own build's 0.607). `rebuild_due` answers
     * "are the codebooks due a retrain?"; the serving-quality question
-    * under drift belongs to the rerank path and the [[IvfPqDrift]]
+    * under drift belongs to the rerank path and the IvfPqDrift
     * harness.
     */
   val AdcDisplacementAlarmRatio: Double = 1.25

@@ -71,29 +71,6 @@ object KnnJoin {
       k)
   }
 
-  // min-clamped like every other distance kernel in the engine (codegen
-  // SquaredL2/DotProduct, KnnJoinExec, HnswGraph, PQ zero-padding): a
-  // short vector compares on the shared prefix instead of crashing the
-  // task with an index error
-  private def l2sq(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
-    s
-  }
-
-  private def dot(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
-  }
-
-  private def norm(a: Array[Float]): Double = math.sqrt(dot(a, a))
-
-  // bounded per-query top-k accumulator — shared with the plan-node exec
-  private type TopK = org.apache.spark.sql.graft.TopKBuf
-
   /** Scalable exact kNN: broadcast queries, partial top-k per candidate
     * partition, window merge. Same contract as [[windowKnn]].
     */
@@ -119,36 +96,11 @@ object KnnJoin {
       candidates.select(col(idCol).cast("long"), col(vecCol).cast("array<float>")))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
-        val q = bc.value
-        val n = q.length
-        val qIds = new Array[Long](n)
-        val qVecs = new Array[Array[Float]](n)
-        val qNorms = new Array[Double](n)
-        var i = 0
-        while (i < n) {
-          qIds(i) = q(i)._1; qVecs(i) = q(i)._2
-          if (cosine) qNorms(i) = norm(qVecs(i))
-          i += 1
-        }
-        val heaps = Array.fill(n)(new TopK(k))
-        it.foreach { case (cid, cvec) =>
-          val cNorm = if (cosine) norm(cvec) else 0.0
-          var j = 0
-          while (j < n) {
-            if (!(excludeSelf && qIds(j) == cid)) {
-              val d =
-                if (cosine) {
-                  val den = qNorms(j) * cNorm
-                  if (den > 0) 1.0 - dot(qVecs(j), cvec) / den else 1.0
-                } else l2sq(qVecs(j), cvec)
-              heaps(j).offer(d, cid)
-            }
-            j += 1
+        org.apache.spark.sql.graft.TopKBuf.partials(bc.value, k, cosine,
+            excludeSelf, it)
+          .flatMap { case (qid, h) =>
+            (0 until h.size).iterator.map(r => (qid, h.ids(r), h.dists(r)))
           }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          (0 until h.size).iterator.map(r => (qIds(qi), h.ids(r), h.dists(r)))
-        }
       }
       .toDF("query_id", "neighbor_id", "dist")
 

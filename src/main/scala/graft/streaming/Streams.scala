@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.util.IndexWriter
+
 /** Structured Streaming operators over the `events` table (added scope —
   * the reference is purely batch, SURVEY.md §2.9). Each operator has a
   * batch twin with identical semantics so correctness is DuckDB-checkable;
@@ -341,7 +343,8 @@ object Streams {
   /** One micro-batch of persistent-index ingest: the ONE body behind
     * every ingest entry point ([[lexIngestOnce]], [[dedupIngestOnce]],
     * the four `*IngestWatermarked`, the three `*ReingestLate`). The
-    * family value supplies only the index calls ([[IngestFamily]]).
+    * family value supplies only the index calls ([[IngestFamily]]: the
+    * family's [[IndexWriter]] and its probe).
     *
     * Contract — the whole batch runs under the index's writer lock, as
     * one maintenance op:
@@ -404,17 +407,19 @@ object Streams {
     // LAZY val, first forced by the gate thunk INSIDE the writer lock and
     // after recovery: a frame constructed (and its file listing pinned)
     // pre-lock could read tables a crashed commit was mid-rename on
-    lazy val committed = fam.committed(sp, indexDir)
+    val w = fam.writer
+    lazy val committed = w.committed(sp, indexDir)
       .localCheckpoint(eager = false)
     watermarkGatedBatch(sp, indexDir, outDir, batchId, b,
-        { fam.recover(sp, indexDir); committed }, idCol, gate) { fresh =>
-      val snap = fam.open(sp, indexDir)
+        { w.recover(sp, indexDir); committed }, idCol, gate) { fresh =>
+      val snap = w.open(sp, indexDir)
       sp.sparkContext.setJobDescription("graft ingest: probe")
-      val (found, prepared) = fam.probe(sp, snap, fresh, committed)
-      found.write.mode(SaveMode.Overwrite)
+      val prepared = w.prepare(sp, snap, fresh)
+      fam.probe(sp, snap, fresh, prepared, committed)
+        .write.mode(SaveMode.Overwrite)
         .parquet(s"${channelDir(fam, outDir, gate)}/batch=$batchId")
       sp.sparkContext.setJobDescription("graft ingest: append")
-      fam.append(sp, snap, prepared)
+      w.write(sp, snap, prepared, /* micro = */ true)
     }
   }
 
@@ -451,11 +456,9 @@ object Streams {
     graft.util.IndexLock.withLock(sp, indexDir, "ingest-batch") { try {
       val wm = gate.map(_ => IngestWatermark.read(sp, indexDir))
       val id = col(idCol).cast("long")
-      val marked = b
-        .join(committedIds.select(col("id").cast("long").as("__cid")),
-          id === col("__cid"), "left")
+      val marked = IndexWriter.markCommitted(b, id, committedIds)
         .localCheckpoint(eager = false)
-      val isFresh = col("__cid").isNull
+      val isFresh = col(IndexWriter.CommittedId).isNull
       val ts = gate.fold(lit(null).cast("long"))(g => col(g.tsCol).cast("long"))
       // NULL event time is unclassifiable — late, never admitted; a bare
       // `ts < wm` / `ts >= wm` filter pair would drop it from BOTH sides
@@ -486,12 +489,12 @@ object Streams {
         // first time too — there is no stale partition to overwrite
         if (stats.getLong(3) > 0) {
           sp.sparkContext.setJobDescription("graft ingest: late audit")
-          marked.filter(late).drop("__cid")
+          marked.filter(late).drop(IndexWriter.CommittedId)
             .write.mode(SaveMode.Overwrite)
             .parquet(s"$outDir/late/batch=$batchId")
         }
         if (stats.getLong(2) > 0)
-          admit(marked.filter(admitted).drop("__cid")
+          admit(marked.filter(admitted).drop(IndexWriter.CommittedId)
             .localCheckpoint(eager = false))
         // an all-null-ts batch advances nothing
         for (g <- gate; w <- wm if !stats.isNullAt(1))

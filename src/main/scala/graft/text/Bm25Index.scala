@@ -1,6 +1,5 @@
 package graft.text
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
@@ -52,22 +51,21 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
   */
 object Bm25Index {
 
-  /** On-disk postings schema (explicit on every read: an EMPTY index —
-    * e.g. freshly built over zero documents, the streaming-ingest seed —
-    * writes no part files under the partitioned `postings/`, and a
-    * schema-less read of it would throw instead of returning no rows).
+  /** `postings/` partitioned by bucket, `doclens/` the commit table,
+    * joined on the (id, th) epoch.
     */
-  private val postingsSchema: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("th", LongType),
-    StructField("term", StringType),
-    StructField("tf", LongType),
-    StructField("bucket", LongType)))
-
-  private val doclensSchema: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("th", LongType),
-    StructField("dl", LongType)))
+  private val layout = new graft.util.PartitionedTables("Bm25Index",
+    "postings", "bucket", "doclens", Seq("id", "th"),
+    StructType(Seq(
+      StructField("id", LongType),
+      StructField("th", LongType),
+      StructField("term", StringType),
+      StructField("tf", LongType),
+      StructField("bucket", LongType))),
+    StructType(Seq(
+      StructField("id", LongType),
+      StructField("th", LongType),
+      StructField("dl", LongType))))
 
   /** The output schema of [[searchTopK]] — the empty-probe constant, the
     * [[graft.knn.IvfIndex.searchSchema]] convention.
@@ -104,17 +102,12 @@ object Bm25Index {
       // below is the atomicity point) — the tiny params write overlaps
       // the corpus-sized tokenize + postings/doclens writes (guide §2.6)
       val (n, _) = graft.util.Overlap.par2(
-        writeState(docs, idCol, textCol, dir, nBuckets,
-          SaveMode.Overwrite, tableSuffix = ".tmp"),
+        writeRows(tokenRows(docs, idCol, textCol).localCheckpoint(eager = false),
+          dir, nBuckets, micro = false, build = true),
         Seq(Tuple1(nBuckets)).toDF("n_buckets")
           .repartition(1)
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/params.tmp"))
-      // fresh corpus → fresh ingest state, inside the marker window so
-      // a crash here replays the clear on recovery and a crash BEFORE
-      // the marker rolls back to the previous index with its watermark
-      val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-      graft.util.StagedTables.commit(fs, dir, BuildMarker, BuildOp,
-        CommitTables)(_ => graft.util.IngestState.clear(spark, dir))
+      layout.commitBuild(spark, dir)
       n
     }
   }
@@ -125,9 +118,9 @@ object Bm25Index {
     * any corpus size). The ONE text scan whose output feeds every
     * index-state consumer: the postings write ([[tfFromRows]] explode),
     * the doclens write ([[dlFromRows]] array sum — no shuffle either),
-    * and the probe's query-term set ([[probe]]'s `queryTerms`). A streaming
-    * micro-batch computes this once, lazy-localCheckpoint-ed, and both
-    * its probe and its append reuse it.
+    * and the probe's query-term set ([[probe]]'s `queryTerms`). A writer
+    * computes this once, lazy-localCheckpoint-ed ([[writer]]'s `prepare`),
+    * and a streaming micro-batch's probe reuses it.
     */
   private[graft] def tokenRows(docs: DataFrame, idCol: String,
       textCol: String): DataFrame =
@@ -151,62 +144,17 @@ object Bm25Index {
         aggregate(col("tfs"), lit(0L), (a, x) => a + x.getField("tf")).as("dl"))
       .filter(col("dl") > 0)
 
-  /** Tokenize + write shared by [[build]] and [[append]]: ONE per-row
-    * tokenize pass over the batch (lazy-localCheckpoint-ed — it feeds
-    * the postings write, the doclens write, and the returned count),
-    * then the two writes in commit order.
+  /** Write a [[tokenRows]] frame: postings stage first, the doclens
+    * write is the commit point ([[graft.util.PartitionedTables.write]]).
+    * Returns the indexed (token-bearing) document count, or -1 for a
+    * `micro` batch.
     */
-  private def writeState(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      dir: String,
-      nBuckets: Int,
-      mode: SaveMode,
-      tableSuffix: String = ""): Long = {
-    val rows = tokenRows(docs, idCol, textCol).localCheckpoint(eager = false)
-    writeTf(tfFromRows(rows), dlFromRows(rows), dir, nBuckets, mode,
-      needCount = true, tableSuffix = tableSuffix)
-  }
-
-  /** The write half of [[writeState]], callable with caller-shared
-    * `tf`/`dl` frames (from ONE [[tokenRows]] pass, ideally lazy-
-    * localCheckpoint-ed). Write order is the crash-safety protocol
-    * (postings stage first, the doclens write is the commit point).
-    * `needCount = false` skips the final count job for callers that
-    * ignore the return value (the streaming ingesters — one fewer
-    * scheduler round-trip per batch) and returns -1.
-    */
-  private[graft] def writeTf(
-      tf: DataFrame,
-      dl: DataFrame,
-      dir: String,
-      nBuckets: Int,
-      mode: SaveMode,
-      needCount: Boolean,
-      repartitionByBucket: Boolean = true,
-      tableSuffix: String = ""): Long = {
-    val bucketed = tf.withColumn("bucket",
-      pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
-    // repartitionByBucket = false (the per-MICRO-BATCH append path):
-    // coalesce to ONE task instead of paying the clustering exchange —
-    // partitionBy from the freshness join's many cached partitions
-    // would fan each task into every bucket it touches (sliver-file
-    // explosion; see LshDedupIndex.writeSigned). One task × ≤buckets
-    // files, narrow. Micro-batches are single-staged-file sized by
-    // contract; full builds keep the exchange.
-    (if (repartitionByBucket) bucketed.repartition(col("bucket"))
-     else bucketed.coalesce(1))
-      .write.mode(mode)
-      .partitionBy("bucket")
-      .parquet(s"$dir/postings$tableSuffix")
-    // commit point (see the write-order doc above); a staging build
-    // (`tableSuffix = ".tmp"`) commits via the marker swap instead. The
-    // micro-batch path coalesces for the same sliver-file reason
-    (if (repartitionByBucket) dl else dl.coalesce(1))
-      .write.mode(mode).parquet(s"$dir/doclens$tableSuffix")
-    if (needCount) dl.count() else -1L
-  }
+  private def writeRows(rows: DataFrame, dir: String, nBuckets: Int,
+      micro: Boolean, build: Boolean = false): Long =
+    layout.write(
+      tfFromRows(rows).withColumn("bucket",
+        pmod(xxhash64(col("term")), lit(nBuckets.toLong))),
+      dlFromRows(rows), dir, micro, build)
 
   /** The index's partitioning scheme: the `params/` row. */
   private[graft] final case class Params(nBuckets: Int)
@@ -215,7 +163,7 @@ object Bm25Index {
 
   private val memo = new graft.util.MetaMemo[Params](Seq("params"))
 
-  /** The snapshot [[probe]] and [[appendRows]] consume: the params come
+  /** The snapshot [[probe]] and [[writer]] consume: the params come
     * from a generation-keyed [[graft.util.MetaMemo]] (one one-row
     * collect on a miss, none on a hit; a build commit is a miss).
     */
@@ -226,9 +174,6 @@ object Bm25Index {
       Params(rows.head.getInt(0))
     }
 
-  private def readPostings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(postingsSchema).parquet(s"$dir/postings")
-
   /** The committed-membership table: (id, th, dl). Exposed
     * (package-private) so per-batch callers — the streaming ingester's
     * freshness anti-join — can read it ONCE, lazy-localCheckpoint it, and
@@ -236,12 +181,13 @@ object Bm25Index {
     * table per consumer.
     */
   private[graft] def readDoclens(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(doclensSchema).parquet(s"$dir/doclens")
+    layout.readCommitted(spark, dir)
 
   /** Add a new batch WITHOUT touching existing state: one tokenize pass,
-    * parquet-appended into the bucket partitions and `doclens/`. Ids must
-    * be unique corpus-wide: a batch that repeats an id, or carries one the
-    * index already holds, is refused. Blank documents index nothing (the
+    * parquet-appended into the bucket partitions and `doclens/`, through
+    * the guarded [[graft.util.IndexWriter.append]]: ids must be unique
+    * corpus-wide, so a batch that repeats an id, or carries one the index
+    * already holds, is refused. Blank documents index nothing (the
     * [[Bm25.scoreTopK]] convention — they can never match a term) and do
     * not count toward the returned appended-row count.
     */
@@ -251,27 +197,20 @@ object Bm25Index {
       newDocs: DataFrame,
       idCol: String,
       textCol: String): Long =
-    graft.util.IndexLock.withLock(spark, dir, "Bm25Index.append") {
-      recover(spark, dir)
-      val nBuckets = open(spark, dir).meta.nBuckets
-      val ids = newDocs.select(col(idCol).cast("long").as("id"))
-      require(ids.groupBy("id").count().filter(col("count") > 1).isEmpty,
-        "Bm25Index.append: duplicate ids within the appended batch")
-      require(readDoclens(spark, dir).select("id").join(ids, "id").isEmpty,
-        "Bm25Index.append: id already present in the index")
-      writeState(newDocs, idCol, textCol, dir, nBuckets, SaveMode.Append)
-    }
+    graft.util.IndexWriter.append(spark, dir, newDocs, idCol,
+      writer(idCol, textCol))
 
-  /** Streaming-batch append over a caller-shared [[tokenRows]] frame
-    * and an opened snapshot: the per-batch fast path — no re-tokenize,
-    * no params read, no count job, no clustering exchange. The caller
-    * holds the writer lock and owns the guards [[append]] runs (the
-    * ingest driver's freshness and one-row-per-id gate).
+  /** The writer half of this index ([[graft.util.IndexWriter]]): the
+    * batch is prepared as its [[tokenRows]], lazy-localCheckpoint-ed, so
+    * a streaming micro-batch's probe and its write share one tokenize.
     */
-  private[graft] def appendRows(snap: Snapshot, rows: DataFrame): Unit = {
-    writeTf(tfFromRows(rows), dlFromRows(rows), snap.dir, snap.meta.nBuckets,
-      SaveMode.Append, needCount = false, repartitionByBucket = false); ()
-  }
+  private[graft] def writer(idCol: String, textCol: String)
+      : graft.util.IndexWriter[Snapshot] =
+    graft.util.IndexWriter[Snapshot]("Bm25Index", recover, readDoclens, open,
+      prepare = (_, _, docs) =>
+        tokenRows(docs, idCol, textCol).localCheckpoint(eager = false),
+      write = (_, snap, rows, micro) =>
+        writeRows(rows, snap.dir, snap.meta.nBuckets, micro))
 
   /** BM25 top-k retrieval AGAINST THE INDEXED CORPUS — exactly
     * [[Bm25.scoreTopK]]'s contract and output (query_id, id, score, rnk),
@@ -363,17 +302,10 @@ object Bm25Index {
       else maxDriverQueryTerms + 1
     // corpus stats (N, avgdl: one tiny agg over the caller-checkpointed
     // doclens frame) run as their OWN collect, CONCURRENT with the
-    // query-term probe (guide §2.6 — independent actions overlap from a
-    // driver thread; job descriptions/groups are thread-local, so the
-    // helper thread is labeled independently). The r20 shape fused the
-    // two into one action by union-encoding the stats as a null-padded
-    // trailer row, but the union demotes the probe's CollectLimit
-    // (executeTake — incremental, often partition-local) to a
-    // GlobalLimit + single-partition exchange executed as a full AQE
-    // stage chain — measured at +2 jobs and +0.4 s per probe at sf0.1,
-    // which q98 pays per micro-batch (the r20 verdict's q98 +20%
-    // regression). Two overlapped actions keep the executeTake shape
-    // and hide the stats round-trip behind it.
+    // query-term probe, so the stats round-trip hides behind it. Fusing
+    // the two into one action (a union) would demote the probe's
+    // incremental CollectLimit to a full single-partition exchange
+    // (+2 jobs per probe; OPTIMIZATION_r21.md).
     val statsFut = java.util.concurrent.CompletableFuture.supplyAsync { () =>
       dl.agg(count(lit(1)).cast("double").as("__n_docs"),
         avg("dl").as("__avgdl")).collect().head
@@ -420,7 +352,7 @@ object Bm25Index {
         }
         val termSet = qtCollected.map(_.getString(
           queryTerms.schema.fieldIndex("term"))).toSet
-        (readPostings(spark, dir)
+        (layout.readPartitioned(spark, dir)
           .filter(col("bucket").isin(buckets.toSeq: _*))
           .filter(col("term").isInCollection(termSet)), q, true)
       } else {
@@ -431,7 +363,7 @@ object Bm25Index {
         val buckets = qtWithBucket.select("__bucket").distinct()
           .collect().map(_.getLong(0))
         val qtermsLazy = qtWithBucket.drop("__bucket")
-        (readPostings(spark, dir)
+        (layout.readPartitioned(spark, dir)
           .filter(col("bucket").isin(buckets.toSeq: _*))
           .join(qtermsLazy.select("term").distinct(), Seq("term"), "left_semi"),
           qtermsLazy, false)
@@ -463,7 +395,7 @@ object Bm25Index {
     * stopword-dominated corpus (raise nBuckets, or stoplist upstream).
     */
   def stats(spark: SparkSession, dir: String): DataFrame =
-    readPostings(spark, dir)
+    layout.readPartitioned(spark, dir)
       .groupBy("bucket", "term").agg(count(lit(1)).as("__t"))
       .groupBy("bucket")
       .agg(sum("__t").cast("long").as("n_rows"),
@@ -474,64 +406,15 @@ object Bm25Index {
     * appends (no doclens row for their (id, th) epoch, including the
     * stale epoch of an id that was later re-appended with different
     * text) and the duplicate rows of retried appends — and compact small
-    * files. Rewrite-then-swap with on-entry crash recovery — the
-    * [[graft.dedup.LshDedupIndex.vacuum]] contract verbatim. Probe
-    * results are unchanged by construction: everything reclaimed was
-    * already invisible through the (id, th) join. Single-writer enforced:
-    * vacuum and [[append]] both hold the [[graft.util.IndexLock]] writer
-    * lock, so an append cannot land inside the swap window. Returns the
-    * number of postings rows reclaimed.
+    * files ([[graft.util.PartitionedTables.vacuum]]). Probe results are
+    * unchanged: everything reclaimed was already invisible through the
+    * (id, th) join. Returns the number of postings rows reclaimed.
     */
-  def vacuum(spark: SparkSession, dir: String, doclenFiles: Int = 0): Long =
-    graft.util.IndexLock.withLock(spark, dir, "Bm25Index.vacuum") {
-      vacuumImpl(spark, dir, doclenFiles)
-    }
+  def vacuum(spark: SparkSession, dir: String): Long = layout.vacuum(spark, dir)
 
-  private val CommitTables = Seq("params", "postings", "doclens")
-  private val BuildMarker = "_build_commit"
-  // the build marker's historic empty content: build is its only op
-  private val BuildOp = ""
-
-  /** Crash recovery for [[build]]'s marker-protected swap AND for
-    * markerless `.tmp`/`.old` debris (a crashed [[vacuum]] swap) — run
-    * at every writer entry and by the streaming ingest driver under its
-    * writer lock.
+  /** Crash recovery for [[build]]'s marker-protected swap and for a
+    * crashed [[vacuum]] swap, run at every writer entry.
     */
-  private[graft] def recover(spark: SparkSession, dir: String): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    graft.util.StagedTables.recover(fs, dir, BuildMarker, CommitTables)(
-      _ => graft.util.IngestState.clear(spark, dir))
-  }
-
-  private def vacuumImpl(spark: SparkSession, dir: String, doclenFiles: Int): Long = {
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    recover(spark, dir)
-    val nBuckets = open(spark, dir).meta.nBuckets
-
-    val dl = readDoclens(spark, dir)
-    val postings = readPostings(spark, dir)
-      .select("term", "id", "th", "tf")
-    val live = postings
-      .join(dl.select("id", "th"), Seq("id", "th"), "left_semi")
-      // duplicates from a retried append are IDENTICAL rows (same batch,
-      // same tokenize, same epoch) — max collapses them to the original
-      // tf; sum would double-count
-      .groupBy("id", "th", "term").agg(max("tf").as("tf"))
-    val reclaimed = postings.count() - live.count()
-
-    live
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
-      .repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"$dir/postings.tmp")
-    val nDlFiles =
-      if (doclenFiles > 0) doclenFiles
-      else spark.sparkContext.defaultParallelism
-    dl.repartition(nDlFiles)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/doclens.tmp")
-
-    graft.util.StagedTables.swapStaged(fs, dir, Seq("postings", "doclens"))
-    reclaimed
-  }
+  private[graft] def recover(spark: SparkSession, dir: String): Unit =
+    layout.recover(spark, dir)
 }

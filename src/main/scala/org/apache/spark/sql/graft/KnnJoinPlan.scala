@@ -90,6 +90,68 @@ final class TopKBuf(val k: Int) extends Serializable {
   }
 }
 
+object TopKBuf {
+
+  /** The exact kNN kernel of one candidate partition, shared by
+    * graft.knn.KnnJoin.broadcastKnn and [[KnnJoinExec]]: a bounded top-k
+    * per query over `candidates`, under squared L2 or cosine distance
+    * (1 − cos, and 1.0 when either vector is zero). With `excludeSelf` a
+    * query skips the candidate carrying its own id. Returns one
+    * (query id, top-k) per query, in query order.
+    */
+  def partials(
+      queries: Array[(Long, Array[Float])],
+      k: Int,
+      cosine: Boolean,
+      excludeSelf: Boolean,
+      candidates: Iterator[(Long, Array[Float])]): Iterator[(Long, TopKBuf)] = {
+    val n = queries.length
+    val qIds = new Array[Long](n)
+    val qVecs = new Array[Array[Float]](n)
+    val qNorms = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      qIds(i) = queries(i)._1; qVecs(i) = queries(i)._2
+      if (cosine) qNorms(i) = math.sqrt(dot(qVecs(i), qVecs(i)))
+      i += 1
+    }
+    val heaps = Array.fill(n)(new TopKBuf(k))
+    candidates.foreach { case (cid, cvec) =>
+      val cNorm = if (cosine) math.sqrt(dot(cvec, cvec)) else 0.0
+      var j = 0
+      while (j < n) {
+        if (!(excludeSelf && qIds(j) == cid)) {
+          val d =
+            if (cosine) {
+              val den = qNorms(j) * cNorm
+              if (den > 0) 1.0 - dot(qVecs(j), cvec) / den else 1.0
+            } else l2sq(qVecs(j), cvec)
+          heaps(j).offer(d, cid)
+        }
+        j += 1
+      }
+    }
+    qIds.iterator.zip(heaps.iterator)
+  }
+
+  // min-clamped like every other distance kernel in the engine (codegen
+  // SquaredL2/DotProduct, HnswGraph, PQ zero-padding): a short vector
+  // compares on the shared prefix instead of crashing the task
+  private def l2sq(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
+    s
+  }
+
+  private def dot(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    s
+  }
+}
+
 case class KnnJoinExec(
     output: Seq[Attribute],
     left: SparkPlan,
@@ -109,30 +171,9 @@ case class KnnJoinExec(
     val bc = sparkContext.broadcast(queryRows)
 
     val partials: RDD[(Long, TopKBuf)] = right.execute().mapPartitions { it =>
-      val q = bc.value
-      val n = q.length
-      val norms = if (cosine) q.map(p => math.sqrt(dot(p._2, p._2))) else null
-      val heaps = Array.fill(n)(new TopKBuf(kLocal))
-      it.foreach { row =>
-        val cid = row.getLong(0)
-        val cvec = row.getArray(1).toFloatArray()
-        val cNorm = if (cosine) math.sqrt(dot(cvec, cvec)) else 0.0
-        var j = 0
-        while (j < n) {
-          if (!(exclude && q(j)._1 == cid)) {
-            val d =
-              if (cosine) {
-                val den = norms(j) * cNorm
-                if (den > 0) 1.0 - dot(q(j)._2, cvec) / den else 1.0
-              } else l2sq(q(j)._2, cvec)
-            heaps(j).offer(d, cid)
-          }
-          j += 1
-        }
-      }
-      heaps.iterator.zipWithIndex
-        .filter(_._1.size > 0)
-        .map { case (h, qi) => (q(qi)._1, h) }
+      TopKBuf.partials(bc.value, kLocal, cosine, exclude,
+        it.map(row => (row.getLong(0), row.getArray(1).toFloatArray())))
+        .filter(_._2.size > 0)
     }
 
     partials.reduceByKey(_.merge(_)).mapPartitions { it =>
@@ -148,20 +189,6 @@ case class KnnJoinExec(
         }
       }
     }
-  }
-
-  private def l2sq(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
-    s
-  }
-
-  private def dot(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
   }
 
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =

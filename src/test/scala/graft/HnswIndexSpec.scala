@@ -536,7 +536,7 @@ class HnswIndexSpec extends SparkSpec {
     val batch5 = emb.orderBy("vec_id").limit(5)
       .select((col("vec_id") + 1000000).as("vec_id"), col("embedding"))
       .cache()
-    // direct append, NO explicit recovery call — appendImpl must heal
+    // direct append, NO explicit recovery call — the append must heal
     val appended = HnswIndex.append(spark, dir, batch5,
       "vec_id", "embedding")
     assert(appended == 5L)
@@ -627,12 +627,6 @@ class HnswIndexSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.length == extra.count())
     got.foreach { case (q, nbr, d) => assert(q == nbr && d == 0.0) }
-    // duplicate labels rejected, matching hnswlib add_items
-    intercept[IllegalArgumentException](
-      HnswIndex.append(spark, dir, extra.limit(1), "vec_id", "embedding"))
-    intercept[IllegalArgumentException](
-      HnswIndex.append(spark, dir,
-        extra.limit(1).union(extra.limit(1)), "vec_id", "embedding"))
     // recall floor over the union
     val all = emb.filter(col("vec_id") < 400)
     val exact = KnnJoin.broadcastKnn(all, all, "vec_id", "embedding", 5)

@@ -82,31 +82,6 @@ class IvfIndexSpec extends SparkSpec {
     assert(cidInc == cidOf)
   }
 
-  test("append rejects duplicate ids; checkPresence=false defers to the caller") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_dup").toString
-    IvfIndex.build(emb, "vec_id", "embedding", dir, nList = 4)
-    val fresh = emb.limit(10)
-      .select((col("vec_id") + 500000L).as("vec_id"), col("embedding"))
-    // within-batch duplicates: a silent double-insert would land the id
-    // twice in its cid partition and search would return it twice in top-k
-    val e1 = intercept[IllegalArgumentException] {
-      IvfIndex.append(spark, dir, fresh.unionAll(fresh), "vec_id", "embedding")
-    }
-    assert(e1.getMessage.contains("duplicate ids within"))
-    // already-committed ids: the retried-crashed-append shape
-    val e2 = intercept[IllegalArgumentException] {
-      IvfIndex.append(spark, dir, emb.limit(5), "vec_id", "embedding")
-    }
-    assert(e2.getMessage.contains("already present"))
-    // neither rejection wrote anything
-    assert(IvfIndex.readIds(spark, dir).count() == emb.count())
-    // the streaming gate anti-joins against committed ids itself and
-    // skips the redundant check
-    assert(IvfIndex.append(spark, dir, fresh, "vec_id", "embedding",
-      checkPresence = false) == 10L)
-    assert(IvfIndex.readIds(spark, dir).count() == emb.count() + 10)
-  }
-
   test("cosine index: metric rides the index, search equals brute-force cosine") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_cos").toString
     val nUsed = IvfIndex.build(emb, "vec_id", "embedding", dir, nList = 8,

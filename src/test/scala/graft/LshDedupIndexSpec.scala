@@ -68,17 +68,6 @@ class LshDedupIndexSpec extends SparkSpec {
     assert(fromIndex == oneShot)
   }
 
-  test("duplicate ids are rejected on append") {
-    val dir = tempDir("dupid")
-    LshDedupIndex.build(docs.filter(col("doc_id") < 100), "doc_id", "text", dir)
-    intercept[IllegalArgumentException](
-      LshDedupIndex.append(spark, dir,
-        docs.filter(col("doc_id") < 10), "doc_id", "text"))
-    val fresh = docs.filter(col("doc_id") >= 100 && col("doc_id") < 110)
-    intercept[IllegalArgumentException](
-      LshDedupIndex.append(spark, dir, fresh.union(fresh), "doc_id", "text"))
-  }
-
   test("probeBands prunes band partitions; full probe when 0") {
     val dir = tempDir("probe")
     LshDedupIndex.build(docs, "doc_id", "text", dir)
@@ -199,7 +188,7 @@ class LshDedupIndexSpec extends SparkSpec {
       .candidatesAgainst(spark, dir, probe, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val filesBefore = bandFiles(dir)
-    assert(LshDedupIndex.vacuum(spark, dir, signatureFiles = 2) == 0L)
+    assert(LshDedupIndex.vacuum(spark, dir) == 0L)
     val filesAfter = bandFiles(dir)
     assert(filesAfter < filesBefore,
       s"compaction did not reduce band files: $filesBefore -> $filesAfter")

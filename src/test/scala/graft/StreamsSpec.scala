@@ -567,8 +567,8 @@ class StreamsSpec extends SparkSpec {
 
   /** The family with an append that dies after the channel write. */
   private def crashBeforeAppend[S](f: IngestFamily[S]): IngestFamily[S] =
-    f.copy(append = (_, _, _) =>
-      throw new RuntimeException("crash before append"))
+    f.copy(writer = f.writer.copy(write = (_, _, _, _) =>
+      throw new RuntimeException("crash before append")))
 
   familyCases.foreach { c =>
     test(s"ingest driver [${c.name}]: crash replay, full-commit replay, " +
@@ -589,7 +589,7 @@ class StreamsSpec extends SparkSpec {
           b: org.apache.spark.sql.DataFrame): Unit =
         Streams.ingestBatch(spark, fam, idx, out, batchId, b, c.idCol, gate)
       val channel = s"$out/${c.family.channel}"
-      def newIds() = c.family.committed(spark, idx).select("id").collect()
+      def newIds() = c.family.writer.committed(spark, idx).select("id").collect()
         .map(_.getLong(0)).filter(_ >= 1000000).sorted.toSeq
       def exists(p: String) = new java.io.File(p).exists()
 
