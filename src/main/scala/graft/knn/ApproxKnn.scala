@@ -778,22 +778,16 @@ object ApproxKnn {
       scratchDir: Option[String] = None): DataFrame = {
     val spark = candidates.sparkSession
     // an owned (caller-unspecified) scratch dir is deleted as soon as the
-    // result is materialized below — a long-lived driver calling the HNSW
-    // grid tier repeatedly must not accumulate one on-disk graph copy per
-    // call until JVM exit (TempDirs stays registered as the crash
-    // backstop). A caller-provided scratchDir is caller-owned: left in
-    // place, results returned lazy over it. NOTE the default is a
-    // DRIVER-LOCAL temp path — fine in local mode; on a real cluster pass
-    // a shared-FS scratchDir (the graphs are written and re-read through
-    // the Hadoop FS API, so any hdfs:/s3a: path works) — the guard below
-    // REFUSES the default off local masters rather than letting executors
-    // silently write graphs to a path only the driver can see. The owned
-    // path also makes the result EAGER via localCheckpoint (see finish):
-    // the checkpointed blocks are unreplicated executor state, so on a
-    // non-local deployment a lost executor makes the returned frame
-    // unrecoverable — a second reason the owned default is scoped to
-    // local mode, and a caller-provided shared-FS scratchDir keeps the
-    // result lazily recomputable instead.
+    // last block is answered — a long-lived driver calling the HNSW grid
+    // tier repeatedly must not accumulate one on-disk graph copy per call
+    // until JVM exit (TempDirs stays registered as the crash backstop).
+    // A caller-provided scratchDir is caller-owned and left in place.
+    // NOTE the default is a DRIVER-LOCAL temp path — fine in local mode;
+    // on a real cluster pass a shared-FS scratchDir (the graphs are
+    // written and re-read through the Hadoop FS API, so any hdfs:/s3a:
+    // path works) — the guard below REFUSES the default off local masters
+    // rather than letting executors silently write graphs to a path only
+    // the driver can see.
     val owned = scratchDir.isEmpty
     requireLocalScratch(spark.sparkContext.master, owned)
     val dir = scratchDir.getOrElse {
@@ -802,19 +796,6 @@ object ApproxKnn {
       graft.util.TempDirs.register(d)
       d
     }
-    // eager localCheckpoint when we own the scratch dir: every beam runs
-    // NOW (the result is N·k top-k rows — bounded, and the grid caller
-    // materializes it anyway), after which the graph files are dead
-    // weight and can be deleted
-    def finish(df: DataFrame): DataFrame =
-      if (!owned) df
-      else {
-        val out = df.localCheckpoint()
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true)
-        out
-      }
     // efSearch is pinned (to the raw default — never served: every
     // search below passes the caller's resolved beam explicitly with
     // efAutoScale = false) so the scratch build SKIPS HnswIndex's
@@ -827,29 +808,48 @@ object ApproxKnn {
       seed = seed, efSearch = HnswIndex.DefaultServeEf)
     // null-id queries are dropped once, up front — the blockKnn contract
     val qs = queries.filter(col(idCol).isNotNull)
+    val blocks = queryBlocks(qs, qs.count(), idCol, queryBlockSize,
+      "hnswBlockKnn")
     // efAutoScale = false: this is a RAW primitive — `efSearch` is the
     // caller's knob verbatim (the grid gate applies graft.knn.BeamLaw
     // BEFORE calling here; letting the scratch index's search scale it
-    // again would double-apply the law)
-    finish(unionChunked(
-      queryBlocks(qs, qs.count(), idCol, queryBlockSize, "hnswBlockKnn").map(
-        HnswIndex.search(spark, dir, _, idCol, vecCol, k, efSearch,
-          excludeSelf, efAutoScale = false))))
+    // again would double-apply the law). Each search returns its block's
+    // rows as a local frame; with several blocks each is checkpointed
+    // before the next runs, so the driver holds one block's rows at a time
+    val out = unionChunked(blocks.map { b =>
+      val rows = HnswIndex.search(spark, dir, b, idCol, vecCol, k, efSearch,
+        excludeSelf, efAutoScale = false)
+      if (blocks.size > 1) rows.localCheckpoint() else rows
+    })
+    if (owned) {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(p, true)
+      // local mode (requireLocalScratch): the executors' resident graphs
+      // live in this JVM
+      HnswIndex.resident.evict(fs.makeQualified(p).toString)
+    }
+    out
   }
 
   /** Graph-based ANN: sharded HNSW (the reference's hnswlib contract,
     * DeepJoin/annIndex.py:12–40, distributed the standard way). Each
     * candidate PARTITION builds an independent [[HnswGraph]] in one
-    * `mapPartitions` pass — graphs are memory-bounded by partition size
-    * and never serialized or shuffled — the broadcast query set beams
-    * through every shard (`efSearch`), and the per-shard top-k partials
-    * merge in one ranking window, exactly the broadcastKnn shuffle shape.
-    * Per-shard search is sublinear in partition size, so total query work
-    * scales with `partitions · ef · log n_p` instead of N. `efSearch <= 0`
-    * is the full beam of each partition's graph.
+    * task — graphs are memory-bounded by partition size and never
+    * serialized or shuffled — the broadcast query set beams through
+    * every shard (`efSearch`; `<= 0` is the full beam of each
+    * partition's graph), and each task returns its per-query top-k as
+    * primitive arrays, which [[HnswSearch.mergeTopK]] folds on the
+    * driver. Per-shard search is sublinear in partition size, so total
+    * query work scales with `partitions · ef · log n_p` instead of N.
     *
-    * Deterministic (seeded levels, index-tie-broken heaps, same contract
-    * as the other strategies): (query_id, neighbor_id, dist, rank).
+    * Contract: (query_id, neighbor_id, dist, rank), rank by (dist,
+    * neighbor_id) ascending as every kNN strategy ranks; deterministic
+    * (seeded levels, index-tie-broken heaps). The result is a local
+    * frame, computed when this returns: two Spark jobs (the query
+    * collect and the build-and-beam fold), no exchange, and driver
+    * memory of |queries|·k rows. `HnswGoldenSpec`'s `GoldenHnswKnn`
+    * digest pins the rows.
     */
   def hnswKnn(
       queries: DataFrame,
@@ -873,15 +873,14 @@ object ApproxKnn {
     val partials = graft.util.Par.balance(
       candidates.select(col(idCol).cast("long"), col(vecCol).cast("array<float>")))
       .as[(Long, Array[Float])]
+      .rdd
       .mapPartitions { it =>
         val g = new HnswGraph(mL, efC, cosine, seed)
         it.foreach { case (id, v) => g.insert(id, v) }
-        if (g.size == 0) Iterator.empty
-        else HnswSearch.beamAll(g, bc.value, kL, efS, ex)
+        Iterator(HnswSearch.beamAll(g, bc.value, kL, efS, ex))
       }
-      .toDF("query_id", "neighbor_id", "dist")
 
-    HnswSearch.topKMerge(partials, k)
+    HnswSearch.mergeTopK(spark, partials, k)
   }
 }
 
@@ -898,6 +897,9 @@ private[knn] object HnswSearch {
     case other => throw new IllegalArgumentException(s"unknown metric: $other")
   }
 
+  /** The query side on the driver, ordered by id (the order
+    * [[beamAll]]'s partials and [[mergeTopK]]'s result follow).
+    */
   def collectQueries(queries: DataFrame, idCol: String, vecCol: String,
       what: String): Array[(Long, Array[Float])] = {
     import queries.sparkSession.implicits._
@@ -905,39 +907,174 @@ private[knn] object HnswSearch {
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
       .as[(Long, Array[Float])].collect()
     require(qRows.nonEmpty, s"$what: empty query side")
-    qRows
+    qRows.sortBy(_._1)
+  }
+
+  /** Per-query top-k partials as parallel primitive arrays, one entry
+    * per (query_id, neighbor_id, dist) row. Ordered: query ids ascend,
+    * and each query's run holds at most k entries ascending by
+    * [[before]]. The one value a shard task returns to the driver.
+    */
+  final class Partials(val qids: Array[Long], val nids: Array[Long],
+      val dists: Array[Double]) extends Serializable {
+    def size: Int = qids.length
+  }
+
+  object Partials {
+    val empty = new Partials(Array.emptyLongArray, Array.emptyLongArray,
+      Array.emptyDoubleArray)
+
+    /** The first `n` entries of the arrays. */
+    def of(qids: Array[Long], nids: Array[Long], dists: Array[Double],
+        n: Int): Partials =
+      if (n == qids.length) new Partials(qids, nids, dists)
+      else new Partials(java.util.Arrays.copyOf(qids, n),
+        java.util.Arrays.copyOf(nids, n), java.util.Arrays.copyOf(dists, n))
+
+    /** The first `n` rows of the arrays, grouped by ascending query id,
+      * as [[Partials]]: each query's run sorted by [[before]] and cut to
+      * `k`, in place. An insertion sort, because the kernel's rows
+      * arrive in (dist, id) order already ([[HnswGraph.searchInto]]), so
+      * only −0.0/NaN ties and a repeated query id move a row.
+      */
+    def ranked(qs: Array[Long], ns: Array[Long], ds: Array[Double], n: Int,
+        k: Int): Partials = {
+      var o = 0
+      var run = 0
+      while (run < n) {
+        var end = run + 1
+        while (end < n && qs(end) == qs(run)) {
+          val nid = ns(end)
+          val d = ds(end)
+          var j = end
+          while (j > run && before(d, nid, ds(j - 1), ns(j - 1))) {
+            ns(j) = ns(j - 1); ds(j) = ds(j - 1); j -= 1
+          }
+          ns(j) = nid; ds(j) = d
+          end += 1
+        }
+        val keep = math.min(k, end - run)
+        System.arraycopy(qs, run, qs, o, keep)
+        System.arraycopy(ns, run, ns, o, keep)
+        System.arraycopy(ds, run, ds, o, keep)
+        o += keep
+        run = end
+      }
+      of(qs, ns, ds, o)
+    }
+  }
+
+  /** The ranking window's order on (dist, neighbor_id), ascending.
+    * Distances compare as Spark's sort compares doubles
+    * (`SQLOrderingUtil.compareDoubles`): −0.0 equals 0.0, and NaN equals
+    * NaN and follows every other value. `java.lang.Double.compare`
+    * differs on both, so [[mergeTopK]] would then rank rows unlike
+    * [[topKMerge]].
+    */
+  def before(d1: Double, n1: Long, d2: Double, n2: Long): Boolean = {
+    val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+      .compareDoubles(d1, d2)
+    c < 0 || (c == 0 && n1 < n2)
   }
 
   /** Beam every query through one shard's graph: per-query top-k partials
-    * with self-exclusion (search k+1, drop self, keep k), emitted from
+    * with self-exclusion (search k+1, drop self, keep k), copied out of
     * the kernel's ranked result arrays, which the next query reuses.
     * The beam is `max(efSearch, k + 1)`; `efSearch <= 0` is the full
     * beam, the shard's node count. This is the one place every HNSW
-    * caller's beam is resolved.
+    * caller's beam is resolved. `queries` are ordered by id
+    * ([[collectQueries]]); a repeated id's hits join one run.
     */
   def beamAll(g: HnswGraph, queries: Array[(Long, Array[Float])], k: Int,
-      efSearch: Int, excludeSelf: Boolean): Iterator[(Long, Long, Double)] = {
+      efSearch: Int, excludeSelf: Boolean): Partials = {
     val want = k + (if (excludeSelf) 1 else 0)
     val ef = math.max(if (efSearch > 0) efSearch else g.size, k + 1)
     val ids = new Array[Long](math.max(0, math.min(want, g.size)))
     val dists = new Array[Double](ids.length)
-    queries.iterator.flatMap { case (qid, qv) =>
-      val r = g.searchInto(qv, want, ef, ids, dists)
+    val cap = queries.length.toLong * math.max(0, math.min(k, g.size))
+    require(cap <= Int.MaxValue, s"HnswSearch: $cap partial rows exceed " +
+      "one array; split the query side into blocks")
+    val qs = new Array[Long](cap.toInt)
+    val ns = new Array[Long](cap.toInt)
+    val ds = new Array[Double](cap.toInt)
+    var n = 0
+    queries.foreach { case (qid, qv) =>
+      val r = if (ids.isEmpty) 0 else g.searchInto(qv, want, ef, ids, dists)
       var kept = 0
       var i = 0
       while (i < r && kept < k) {
         if (!(excludeSelf && ids(i) == qid)) {
-          ids(kept) = ids(i); dists(kept) = dists(i); kept += 1
+          qs(n) = qid; ns(n) = ids(i); ds(n) = dists(i); n += 1; kept += 1
         }
         i += 1
       }
-      Iterator.tabulate(kept)(j => (qid, ids(j), dists(j)))
     }
+    Partials.ranked(qs, ns, ds, n, k)
   }
 
-  /** Merge per-shard/per-block partials into the global per-query top-k:
+  /** Two [[Partials]] into one: per query id, the first k entries of the
+    * union by [[before]]. Linear in the two sizes.
+    */
+  def merge(a: Partials, b: Partials, k: Int): Partials = {
+    if (a.size == 0) return b
+    if (b.size == 0) return a
+    val n = a.size + b.size
+    val qs = new Array[Long](n)
+    val ns = new Array[Long](n)
+    val ds = new Array[Double](n)
+    var i = 0
+    var j = 0
+    var o = 0
+    while (i < a.size || j < b.size) {
+      val q =
+        if (j == b.size || (i < a.size && a.qids(i) <= b.qids(j))) a.qids(i)
+        else b.qids(j)
+      var kept = 0
+      while ((i < a.size && a.qids(i) == q) || (j < b.size && b.qids(j) == q)) {
+        val inA = i < a.size && a.qids(i) == q
+        val inB = j < b.size && b.qids(j) == q
+        val fromA = !inB ||
+          (inA && !before(b.dists(j), b.nids(j), a.dists(i), a.nids(i)))
+        if (kept < k) {
+          qs(o) = q
+          if (fromA) { ns(o) = a.nids(i); ds(o) = a.dists(i) }
+          else { ns(o) = b.nids(j); ds(o) = b.dists(j) }
+          o += 1; kept += 1
+        }
+        if (fromA) i += 1 else j += 1
+      }
+    }
+    Partials.of(qs, ns, ds, o)
+  }
+
+  /** The per-query top-k of every shard's [[Partials]]: one fold of
+    * the shard results on the driver ([[merge]]), then `rank` by
+    * position, as a local frame of [[IvfIndex.searchSchema]] ordered by
+    * (query_id, rank). Row for row what [[topKMerge]] returns for the
+    * same partials (`HnswSearchMergeSpec`), without its exchange: the
+    * driver holds |queries|·k rows at most, and a caller that blocks
+    * its queries ([[ApproxKnn.hnswBlockKnn]]) bounds that per block.
+    */
+  def mergeTopK(spark: org.apache.spark.sql.SparkSession,
+      shards: org.apache.spark.rdd.RDD[Partials], k: Int): DataFrame = {
+    val all = shards.fold(Partials.empty)(merge(_, _, k))
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](all.size)
+    var rank = 0
+    var i = 0
+    while (i < all.size) {
+      rank = if (i > 0 && all.qids(i - 1) == all.qids(i)) rank + 1 else 1
+      rows.add(org.apache.spark.sql.Row(all.qids(i), all.nids(i),
+        all.dists(i), rank))
+      i += 1
+    }
+    spark.createDataFrame(rows, IvfIndex.searchSchema)
+  }
+
+  /** Merge per-block partial frames into the global per-query top-k:
     * (query_id, neighbor_id, dist, rank), rank 1-based ascending by
-    * (dist, neighbor_id) — every kNN strategy's one merge.
+    * (dist, neighbor_id) — the merge of the distributed strategies
+    * ([[KnnJoin]]'s, LSH, IVF and the exact re-rank), whose partials
+    * stay frames.
     *
     * A ranking window, not a bounded top-k aggregate: every partial is
     * already top-k-bounded per query, so the window's codegen'd sort

@@ -425,6 +425,17 @@ final class HnswGraph(
       (ids(i), v, ls: Seq[Seq[Int]])
     }
 
+  /** The heap bytes of the graph's arrays (array headers left out): the
+    * size the resident shard cache ([[HnswIndex]]) charges for it.
+    */
+  private[graft] def residentBytes: Long = {
+    var b = 8L * ids.length + 8L * vecs.length + 8L * norms.length +
+      4L * levels.length + 4L * link0.length + 8L * upper.length
+    var i = 0
+    while (i < n) { if (upper(i) != null) b += 4L * upper(i).length; i += 1 }
+    b
+  }
+
   // the graph's arrays, as [[HnswImage.encode]] writes them
   private[knn] def dimension: Int = math.max(dim, 0)
   private[knn] def id(i: Int): Long = ids(i)

@@ -46,13 +46,15 @@ import org.apache.spark.sql.functions._
   * [[HnswSearch]] broadcast-query beam as [[ApproxKnn.hnswKnn]], so a
   * restored index answers identically to the index that was saved.
   *
-  * Serving contract: [[search]] runs one task per live shard, and each
-  * task reads only that shard's graph image, so a request moves the
-  * broadcast queries in and the k·|Q|·S partial rows out, never the
-  * index. A live shard whose image is missing, unreadable or disagrees
-  * with the manifest count fails every reader with a named
-  * `IllegalStateException`: the image is the shard's only stored form,
-  * so the repair is a [[build]] from the source corpus.
+  * Serving contract: [[search]] runs one task per live shard, each on
+  * that shard's graph alone — restored from its image, or taken from
+  * the executor's [[ResidentShards]] cache when the image is unchanged
+  * — so a request moves the broadcast queries in and k·|Q| partials
+  * per shard out, never the index. A live shard whose image is
+  * missing, unreadable or disagrees with the manifest count fails every
+  * reader with a named `IllegalStateException`: the image is the
+  * shard's only stored form, so the repair is a [[build]] from the
+  * source corpus.
   */
 object HnswIndex {
 
@@ -816,16 +818,27 @@ object HnswIndex {
       .toDF("shard", "n")
   }
 
-  /** Probe the persisted index: one task per live shard reads that
-    * shard's graph image, restores the graph exactly (no re-insertion),
-    * beams the broadcast query set through it, and only the per-shard
-    * top-k partials reach the one ranking-window merge — the
-    * [[ApproxKnn.hnswKnn]] execution over restored state. The index is
-    * never shuffled. `m` and the metric come from the persisted
-    * `params/`, never from the caller. A live shard without a readable
-    * image, or whose image disagrees with the manifest count, fails the
-    * search with an `IllegalStateException` naming the shard and the
-    * repair ([[readImage]]).
+  /** Probe the persisted index: one task per live shard beams the
+    * broadcast query set through that shard's graph and returns its
+    * per-query top-k as primitive arrays; [[HnswSearch.mergeTopK]] folds
+    * them on the driver into the ranked result — the
+    * [[ApproxKnn.hnswKnn]] execution over restored state. `m` and the
+    * metric come from the persisted `params/`, never from the caller.
+    *
+    * Contract: the result is a local frame of [[IvfIndex.searchSchema]],
+    * ranked by (dist, neighbor_id) ascending exactly as the ranking
+    * window of [[HnswSearch.topKMerge]] would rank the same partials,
+    * computed when this returns: two Spark jobs (the query collect and
+    * the shard fold), no exchange, driver memory |queries|·k rows. A
+    * shard's graph is restored from its image ([[readImage]]) or taken
+    * from the executor's [[ResidentShards]], which keys it by directory,
+    * params generation, generation and shard and checks the image's
+    * length and mtime on every lookup; either way a live shard without a
+    * readable image, or whose graph disagrees with the manifest count,
+    * fails the search with an `IllegalStateException` naming the shard
+    * and the repair. `HnswGoldenSpec` pins the rows, `HnswIndexSpec` the
+    * cache's safety; the traced `ann_serve` run reads
+    * `knn.search_jobs` 2 and `knn.search_shuffle_bytes` 0.
     *
     * Beam law: a positive `efSearch` is the beam at gate-tier scale —
     * past [[BeamLaw.HoldKeys]] EQUIVALENT keys it is widened by the
@@ -868,7 +881,6 @@ object HnswIndex {
       efSearch: Int = UseIndexDefault,
       excludeSelf: Boolean = true,
       efAutoScale: Boolean = true): DataFrame = {
-    import spark.implicits._
     val (dir, params) = (snap.dir, snap.meta)
     val (m, metric, efDefault) = (params.m, params.metric, params.efSearch)
     val cosine = HnswSearch.isCosine(metric)
@@ -891,33 +903,85 @@ object HnswIndex {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         IvfIndex.searchSchema)
-    // one task per live shard, each reading only its own image
-    val partials = eachImage(spark, dir, shardGens, counts)(HnswImage.read)(_.size)
-      .flatMap { case (_, img) =>
-        HnswSearch.beamAll(HnswGraph.fromImage(m, cosine, img), bc.value,
-          kL, efS, ex)
+    val conf = hadoopConf(spark)
+    val qdir = qualified(spark, dir)
+    val paramsGen = snap.gen
+    val shards = shardGens.toSeq.sorted
+      .map { case (shard, gen) => (shard, gen, counts.get(shard)) }
+    // one task per live shard, each on its own graph
+    val partials = spark.sparkContext.parallelize(shards, shards.size)
+      .map { case (shard, gen, want) =>
+        val g = residentGraph(conf.value.value, qdir, paramsGen, shard, gen,
+          want, m, cosine)
+        HnswSearch.beamAll(g, bc.value, kL, efS, ex)
       }
-      .toDF("query_id", "neighbor_id", "dist")
-
-    HnswSearch.topKMerge(partials, k)
+    HnswSearch.mergeTopK(spark, partials, k)
   }
+
+  /** `dir` as the filesystem qualifies it: the directory part of a
+    * [[ResidentShards]] key.
+    */
+  private def qualified(spark: SparkSession, dir: String): String = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p)
+      .toString
+  }
+
+  /** The restored graphs of live shards, per JVM ([[ResidentShards]]). */
+  private[graft] val resident = new ResidentShards(
+    Runtime.getRuntime.maxMemory / ResidentShards.HeapShare)
+
+  /** One live shard's graph for [[probe]]: the [[resident]] graph when
+    * its image's length and mtime (one `getFileStatus`, no read) still
+    * match the ones it was restored from, else a restore through
+    * [[readImage]], kept resident. Hit or miss, the graph must hold the
+    * manifest's count, and a missing image fails as [[readImage]] does.
+    */
+  private def residentGraph(conf: org.apache.hadoop.conf.Configuration,
+      dir: String, paramsGen: Long, shard: Int, gen: Int, want: Option[Long],
+      m: Int, cosine: Boolean): HnswGraph = {
+    val file = imageFile(dir, shard, gen)
+    val st =
+      try file.getFileSystem(conf).getFileStatus(file)
+      catch { case _: java.io.FileNotFoundException =>
+        shardFailure(dir, shard, gen, s"has no graph image $file") }
+    val key = ResidentShards.Key(dir, paramsGen, gen, shard)
+    val g = resident.get(key, st.getLen, st.getModificationTime).getOrElse {
+      val restored = HnswGraph.fromImage(m, cosine,
+        readImage(conf, dir, shard, gen, want)(HnswImage.read)(_.size))
+      resident.put(key, st.getLen, st.getModificationTime, restored)
+      restored
+    }
+    want.filter(_ != g.size).foreach(w => shardFailure(dir, shard, gen,
+      s"has a graph image of ${g.size} nodes, but the manifest counts $w"))
+    g
+  }
+
+  private def imageFile(dir: String, shard: Int, gen: Int): Path =
+    new Path(s"$dir/nodes/g=$gen/shard=$shard/${HnswImage.FileName}")
+
+  /** The named error of a live shard that cannot serve: the image is the
+    * shard's only stored form, so the repair is a [[build]].
+    */
+  private def shardFailure(dir: String, shard: Int, gen: Int,
+      problem: String): Nothing =
+    throw new IllegalStateException(
+      s"HnswIndex: live shard $shard (g=$gen) of $dir $problem; a shard " +
+        "is stored only as its graph image — rebuild the index from its " +
+        "source with HnswIndex.build")
 
   /** One live shard's image, read by `read` (the whole image, or its
     * ids alone): the image must exist, decode, and hold the manifest's
     * count for the shard (`want`, absent on a legacy counts-less
     * manifest). Anything else is an `IllegalStateException` that names
-    * the shard and the repair: the image is the shard's only stored
-    * form, so the index is rebuilt from its source with [[build]].
+    * the shard and the repair ([[shardFailure]]).
     */
   private def readImage[T](conf: org.apache.hadoop.conf.Configuration,
       dir: String, shard: Int, gen: Int, want: Option[Long])(
       read: (org.apache.hadoop.conf.Configuration, Path) => T)(size: T => Int)
       : T = {
-    val file = new Path(s"$dir/nodes/g=$gen/shard=$shard/${HnswImage.FileName}")
-    def fail(problem: String) = throw new IllegalStateException(
-      s"HnswIndex: live shard $shard (g=$gen) of $dir $problem; a shard " +
-        "is stored only as its graph image — rebuild the index from its " +
-        "source with HnswIndex.build")
+    val file = imageFile(dir, shard, gen)
+    def fail(problem: String) = shardFailure(dir, shard, gen, problem)
     val nodes =
       try read(conf, file)
       catch {

@@ -214,6 +214,122 @@ class HnswIndexSpec extends SparkSpec {
     assert(probe().length == 15)
   }
 
+  private def qualified(dir: String): String =
+    fsOf(dir).makeQualified(new Path(dir)).toString
+
+  /** (query_id, neighbor_id, dist bits, rank), sorted. */
+  private def searchRows(dir: String, queries: org.apache.spark.sql.DataFrame)
+      : Seq[(Long, Long, Long, Int)] =
+    HnswIndex.search(spark, dir, queries, "vec_id", "embedding", k = 5)
+      .collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
+      .sorted
+
+  test("resident shards: a warm search reads no image, and after an append, " +
+    "an in-place rebuild over another corpus and a reshard a warm search " +
+    "equals a cold one") {
+    val dir = tempDir("resident")
+    val queries = emb.filter(col("vec_id") < 440).orderBy("vec_id").limit(40)
+    // a cold search: this directory's graphs forgotten first
+    def cold() = { HnswIndex.resident.evict(qualified(dir)); searchRows(dir, queries) }
+    HnswIndex.build(emb.filter(col("vec_id") < 300), "vec_id", "embedding",
+      dir, shards = 4)
+    val built = cold()
+    val read0 = HnswIndex.resident.imageBytesRead
+    assert(searchRows(dir, queries) == built)
+    assert(HnswIndex.resident.imageBytesRead == read0,
+      "a repeated search re-read shard images")
+    var previous = built
+    def warmEqualsCold(stage: String): Unit = {
+      val warm = searchRows(dir, queries)
+      assert(warm == cold(), s"$stage: warm search differs from a cold one")
+      assert(warm != previous, s"$stage: the operation left the answers " +
+        "unchanged, so the comparison shows nothing")
+      previous = warm
+    }
+    HnswIndex.append(spark, dir,
+      emb.filter(col("vec_id") >= 300 && col("vec_id") < 440),
+      "vec_id", "embedding")
+    warmEqualsCold("append")
+    HnswIndex.build(emb.filter(col("vec_id") >= 150), "vec_id", "embedding",
+      dir, shards = 4)
+    warmEqualsCold("rebuild")
+    HnswIndex.reshard(spark, dir, 3)
+    val resharded = searchRows(dir, queries)
+    assert(resharded == cold(), "reshard: warm search differs from a cold one")
+  }
+
+  test("resident shards: after a warm search, an overwritten, truncated or " +
+    "deleted live image still fails the search with its named error") {
+    val dir = tempDir("resident_bad")
+    HnswIndex.build(emb, "vec_id", "embedding", dir, shards = 4)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = fsOf(dir)
+    val (_, shardGens, counts) = HnswIndex.readManifest(spark, dir)
+    val (s, g) = shardGens.min
+    val image = imagePath(dir, s, g)
+    def probe() = HnswIndex.search(spark, dir, emb.limit(5), "vec_id",
+      "embedding", k = 3).collect()
+    def searchError(): String = {
+      val e = intercept[Exception](probe())
+      val named = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case ise: IllegalStateException => ise.getMessage }
+        .getOrElse(fail(s"expected a named IllegalStateException, got $e"))
+      assert(named.contains(s"live shard $s (g=$g)") &&
+        named.contains("HnswIndex.build"), named)
+      named
+    }
+    def overwrite(bytes: Array[Byte]): Unit = {
+      val out = fs.create(image, true)
+      try out.write(bytes) finally out.close()
+    }
+    val bytes = imageBytes(dir, s, g)
+    val img = HnswImage.read(conf, image)
+    val short = new HnswGraph()
+    (0 until img.size - 1).foreach(i => short.insert(img.ids(i), img.vector(i)))
+    def warm(): Unit = { overwrite(bytes); assert(probe().length == 15) }
+    warm()
+    overwrite(HnswImage.encode(short))
+    assert(searchError().contains(
+      s"image of ${img.size - 1} nodes, but the manifest counts ${counts(s)}"))
+    warm()
+    overwrite(bytes.take(bytes.length / 2))
+    assert(searchError().contains("truncated"))
+    warm()
+    fs.delete(image, false)
+    assert(searchError().contains("has no graph image"))
+  }
+
+  test("resident shards: the byte bound holds, least recently used out") {
+    val rnd = new scala.util.Random(3)
+    def graph(n: Int) = {
+      val g = new HnswGraph(m = 4, efConstruction = 8)
+      (0 until n).foreach(i => g.insert(i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
+      g
+    }
+    val graphs = (0 until 12).map(_ => graph(50))
+    val one = graphs.head.residentBytes
+    val cache = new graft.knn.ResidentShards(4 * one + one / 2)
+    def key(i: Int) = graft.knn.ResidentShards.Key("file:/idx", 1L, 0, i)
+    graphs.indices.foreach { i =>
+      cache.put(key(i), 100L + i, 7L, graphs(i))
+      assert(cache.residentBytes <= cache.boundBytes, s"after graph $i")
+      // graph 0 is read on every round, so it stays; the rest age out
+      assert(cache.get(key(0), 100L, 7L).contains(graphs(0)))
+    }
+    assert(cache.residentBytes == 4 * one)
+    assert((8 until 12).map(i => cache.get(key(i), 100L + i, 7L)).count(_.nonEmpty) == 3)
+    assert(cache.get(key(1), 101L, 7L).isEmpty)
+    // a changed length or mtime is a miss
+    assert(cache.get(key(11), 111L, 8L).isEmpty && cache.get(key(11), 112L, 7L).isEmpty)
+    // a graph above the bound is not kept
+    cache.put(key(99), 1L, 1L, graph(400))
+    assert(cache.get(key(99), 1L, 1L).isEmpty && cache.residentBytes <= cache.boundBytes)
+    cache.evict("file:/idx")
+    assert(cache.residentBytes == 0)
+  }
+
   test("persisted index: well-formed search, recall floor, repeat-search identity") {
     val dir = tempDir("e2e")
     val n = HnswIndex.build(emb, "vec_id", "embedding", dir, shards = 8)

@@ -192,7 +192,9 @@ object MakeScale {
   * PERSISTENT family's default path: an untuned [[graft.knn.HnswIndex]]
   * build shape-resolves its serving beam past ShapeProbeAbove — the
   * probe records what the index declared and the recall an untuned
-  * search serves), or "none".
+  * search serves), "servecache" (cold and warm 16-query requests
+  * against an untuned [[graft.knn.HnswIndex]]: image bytes read, CPU
+  * and wall — the resident shard cache at the tier's scale), or "none".
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -211,7 +213,7 @@ object ScaleProbe {
         "q95_stream_ann_ingest", "q96_stream_hnsw_late")
     val knownProbes = Set("block", "grid", "reshard", "griddefault",
       "gridhnsw", "drift", "ivfpqdrift", "gridrecall", "shape",
-      "indexshape", "none")
+      "indexshape", "servecache", "none")
     val probes: Set[String] =
       if (args.length > 4) args(4).split(',').toSet else Set("block", "grid")
     // fail LOUDLY on a typo'd probe token — a silently skipped probe
@@ -624,6 +626,54 @@ object ScaleProbe {
         f""""hnsw_index_shape":{"small":{"n":$smN,"n_queries":$smQ,"shards":$smShards,"base_ef":$smB,"effective_ef":$smE,"rc_q25":$smRc,"shape":$smSh,"recall_at_10":$smR%.4f},"big":{"n":$bgN,"n_queries":$bgQ,"shards":$bgShards,"base_ef":$bgB,"effective_ef":$bgE,"rc_q25":$bgRc,"shape":$bgSh,"recall_at_10":$bgR%.4f},"floor":$floor,"within_floor":${smR >= floor && bgR >= floor}}""")
     }
 
+    // The resident shard cache (graft.knn.ResidentShards) at serving
+    // scale: an untuned HnswIndex over the tier's embeddings, then 16-query
+    // requests against it — cold (the index's graphs not resident), warm
+    // (right after), and the pair again after evicting the graphs, which
+    // repeats cold on a JIT-warm JVM. Per request: the image bytes the
+    // shard tasks read, the CPU of every JVM thread and the wall.
+    def serveCacheProbe(dir: String): String = {
+      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+        .select(col("vec_id").cast("long").as("id"),
+          col("embedding").cast("array<float>").as("vec"))
+      val idx = graft.util.TempDirs.register(
+        s"/tmp/graft_scaleprobe_servecache_${ProcessHandle.current().pid()}")
+      val path = new org.apache.hadoop.fs.Path(idx)
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(path, true)
+      val tb = System.nanoTime()
+      graft.knn.HnswIndex.build(emb, "id", "vec", idx)
+      val buildS = (System.nanoTime() - tb) / 1e9
+      val n = emb.count()
+      val queries = emb
+        .filter(pmod(xxhash64(col("id"), lit(29)), lit(math.max(1L, n / 64))) === 0)
+        .orderBy("id").limit(16).localCheckpoint()
+      val (_, shardGens, _) = graft.knn.HnswIndex.readManifest(spark, idx)
+      val imageBytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(s"$idx/nodes")).getLength
+      val resident = graft.knn.HnswIndex.resident
+      val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      def cpuNs(): Long = mx.getAllThreadIds.map(mx.getThreadCpuTime).filter(_ > 0).sum
+      def request(): String = {
+        val (b0, c0, t0) = (resident.imageBytesRead, cpuNs(), System.nanoTime())
+        val rows = graft.knn.HnswIndex.search(spark, idx, queries, "id", "vec", k = 10)
+          .collect().length
+        val (b1, c1, t1) = (resident.imageBytesRead, cpuNs(), System.nanoTime())
+        require(rows == 16 * 10, s"servecache: $rows rows for 16 queries")
+        f"""{"image_bytes_read":${b1 - b0},"cpu_ms":${(c1 - c0) / 1e6}%.1f,"wall_ms":${(t1 - t0) / 1e6}%.1f}"""
+      }
+      val cold = request()
+      val warm = request()
+      resident.evict(fs.makeQualified(path).toString)
+      val recold = request()
+      val rewarm = request()
+      val out = f"""{"n":$n,"shards":${shardGens.size},"build_s":$buildS%.1f,"image_bytes":$imageBytes,"resident_bytes":${resident.residentBytes},"bound_bytes":${resident.boundBytes},"cold":$cold,"warm":$warm,"cold_after_evict":$recold,"warm_after_evict":$rewarm}"""
+      fs.delete(path, true)
+      resident.evict(fs.makeQualified(path).toString)
+      out
+    }
+    val serveCacheRows = if (!probes("servecache")) Seq.empty else
+      Seq(s""""hnsw_serve_cache":{"small":${serveCacheProbe(small)},"big":${serveCacheProbe(big)}}""")
+
     // IVF-PQ ADC recall under DRIFTING appends (the PQ family's named
     // LIMIT in COVERAGE.md — "ADC error under drift; the answer is
     // rebuild cadence"): centroids and codebooks train on the base
@@ -747,7 +797,7 @@ object ScaleProbe {
       f""""$n":{"small_s":$s%.3f,"big_s":$b%.3f,"growth":$g%.2f}"""
     } ++ blockRows ++ gridRows ++ reshardRows ++ gridDefaultRows ++
       gridHnswRows ++ gridRecallRows ++ indexShapeRows ++ driftRows ++
-      ivfPqDriftRows ++ shapeRows).mkString(
+      ivfPqDriftRows ++ shapeRows ++ serveCacheRows).mkString(
       s"""{"small":"$small","big":"$big","block_hash_equal":$blockHash,"queries":{""",
       ",", "}}")
     println(json)
