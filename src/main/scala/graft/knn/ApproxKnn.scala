@@ -760,6 +760,15 @@ object ApproxKnn {
     * node reachable in a shard's graph is explored — the q97 convention.
     * A node that an insert left unreachable is still missed, so even the
     * full beam is not guaranteed to equal brute force.
+    *
+    * Result: with the default (owned) scratch dir every block is
+    * computed and `localCheckpoint`ed before this returns, and the dir is
+    * deleted — unreplicated executor state, so a lost executor makes the
+    * frame unrecoverable, a second reason the default is local-mode only.
+    * With a caller-provided `scratchDir` each block comes back as
+    * [[HnswIndex.search]] returns it: a local frame when its partials fit
+    * [[HnswSearch.driverMerges]], else a window merge computed lazily
+    * over the dir, recomputable while the caller keeps it.
     */
   def hnswBlockKnn(
       queries: DataFrame,
@@ -780,8 +789,9 @@ object ApproxKnn {
     // an owned (caller-unspecified) scratch dir is deleted as soon as the
     // last block is answered — a long-lived driver calling the HNSW grid
     // tier repeatedly must not accumulate one on-disk graph copy per call
-    // until JVM exit (TempDirs stays registered as the crash backstop).
-    // A caller-provided scratchDir is caller-owned and left in place.
+    // until JVM exit (TempDirs stays registered as the crash backstop),
+    // which makes the owned path's result eager (see the scaladoc). A
+    // caller-provided scratchDir is caller-owned and left in place.
     // NOTE the default is a DRIVER-LOCAL temp path — fine in local mode;
     // on a real cluster pass a shared-FS scratchDir (the graphs are
     // written and re-read through the Hadoop FS API, so any hdfs:/s3a:
@@ -813,13 +823,11 @@ object ApproxKnn {
     // efAutoScale = false: this is a RAW primitive — `efSearch` is the
     // caller's knob verbatim (the grid gate applies graft.knn.BeamLaw
     // BEFORE calling here; letting the scratch index's search scale it
-    // again would double-apply the law). Each search returns its block's
-    // rows as a local frame; with several blocks each is checkpointed
-    // before the next runs, so the driver holds one block's rows at a time
+    // again would double-apply the law)
     val out = unionChunked(blocks.map { b =>
       val rows = HnswIndex.search(spark, dir, b, idCol, vecCol, k, efSearch,
         excludeSelf, efAutoScale = false)
-      if (blocks.size > 1) rows.localCheckpoint() else rows
+      if (owned) rows.localCheckpoint() else rows
     })
     if (owned) {
       val p = new org.apache.hadoop.fs.Path(dir)
@@ -839,17 +847,18 @@ object ApproxKnn {
     * serialized or shuffled — the broadcast query set beams through
     * every shard (`efSearch`; `<= 0` is the full beam of each
     * partition's graph), and each task returns its per-query top-k as
-    * primitive arrays, which [[HnswSearch.mergeTopK]] folds on the
-    * driver. Per-shard search is sublinear in partition size, so total
-    * query work scales with `partitions · ef · log n_p` instead of N.
+    * primitive arrays, which [[HnswSearch.mergeTopK]] merges. Per-shard
+    * search is sublinear in partition size, so total query work scales
+    * with `partitions · ef · log n_p` instead of N.
     *
     * Contract: (query_id, neighbor_id, dist, rank), rank by (dist,
     * neighbor_id) ascending as every kNN strategy ranks; deterministic
-    * (seeded levels, index-tie-broken heaps). The result is a local
-    * frame, computed when this returns: two Spark jobs (the query
-    * collect and the build-and-beam fold), no exchange, and driver
-    * memory of |queries|·k rows. `HnswGoldenSpec`'s `GoldenHnswKnn`
-    * digest pins the rows.
+    * (seeded levels, index-tie-broken heaps). When the partials fit
+    * [[HnswSearch.driverMerges]] the result is a local frame, computed
+    * when this returns: two Spark jobs (the query collect and the
+    * build-and-beam fold) and no exchange; larger ones merge in the
+    * ranking window ([[HnswSearch.mergeTopK]]). `HnswGoldenSpec`'s
+    * `GoldenHnswKnn` digest pins the rows.
     */
   def hnswKnn(
       queries: DataFrame,
@@ -880,7 +889,7 @@ object ApproxKnn {
         Iterator(HnswSearch.beamAll(g, bc.value, kL, efS, ex))
       }
 
-    HnswSearch.mergeTopK(spark, partials, k)
+    HnswSearch.mergeTopK(spark, partials, bc.value.length, k)
   }
 }
 
@@ -1047,16 +1056,46 @@ private[knn] object HnswSearch {
     Partials.of(qs, ns, ds, o)
   }
 
-  /** The per-query top-k of every shard's [[Partials]]: one fold of
-    * the shard results on the driver ([[merge]]), then `rank` by
-    * position, as a local frame of [[IvfIndex.searchSchema]] ordered by
-    * (query_id, rank). Row for row what [[topKMerge]] returns for the
-    * same partials (`HnswSearchMergeSpec`), without its exchange: the
-    * driver holds |queries|·k rows at most, and a caller that blocks
-    * its queries ([[ApproxKnn.hnswBlockKnn]]) bounds that per block.
+  /** The most partial entries (shards · queries · k) one merge takes in
+    * on the driver: 2^20, 24 MiB of task results. A serving request is
+    * far below it (`ann_serve`'s bulk request: 16 shards · 1024 queries
+    * · k 10 = 163,840); a grid block is far above it (32 shards ·
+    * 100,000 queries · k 25 = 8·10^7).
+    */
+  val DriverMergeEntries: Long = 1L << 20
+
+  /** Whether `entries` partials fold on the driver: at most
+    * [[DriverMergeEntries]], and at most half of
+    * `spark.driver.maxResultSize` at 24 bytes an entry — the bound Spark
+    * puts on the task results of one job (0: no bound).
+    */
+  def driverMerges(conf: org.apache.spark.SparkConf, entries: Long): Boolean = {
+    val max = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    entries <= DriverMergeEntries && (max <= 0 || entries * 24 <= max / 2)
+  }
+
+  /** The per-query top-k of every shard's [[Partials]] (`shards`, one
+    * per partition, over `queries` query vectors), row for row what
+    * [[topKMerge]] returns for the same partials (`HnswSearchMergeSpec`),
+    * as a frame of [[IvfIndex.searchSchema]].
+    *
+    * When the partials fit [[driverMerges]], one fold of the shard
+    * results on the driver ([[merge]]) ranks them by position: a local
+    * frame ordered by (query_id, rank), computed when this returns, with
+    * one job and no exchange. Larger partials merge in [[topKMerge]]'s
+    * window, a distributed frame computed lazily, so neither the driver
+    * nor `spark.driver.maxResultSize` sees them.
     */
   def mergeTopK(spark: org.apache.spark.sql.SparkSession,
-      shards: org.apache.spark.rdd.RDD[Partials], k: Int): DataFrame = {
+      shards: org.apache.spark.rdd.RDD[Partials], queries: Int,
+      k: Int): DataFrame = {
+    if (!driverMerges(spark.sparkContext.getConf,
+        shards.getNumPartitions.toLong * queries * k)) {
+      val rows = shards.flatMap(p => Iterator.tabulate(p.size)(i =>
+        org.apache.spark.sql.Row(p.qids(i), p.nids(i), p.dists(i))))
+      return topKMerge(spark.createDataFrame(rows,
+        org.apache.spark.sql.types.StructType(IvfIndex.searchSchema.take(3))), k)
+    }
     val all = shards.fold(Partials.empty)(merge(_, _, k))
     val rows = new java.util.ArrayList[org.apache.spark.sql.Row](all.size)
     var rank = 0

@@ -820,18 +820,21 @@ object HnswIndex {
 
   /** Probe the persisted index: one task per live shard beams the
     * broadcast query set through that shard's graph and returns its
-    * per-query top-k as primitive arrays; [[HnswSearch.mergeTopK]] folds
-    * them on the driver into the ranked result — the
-    * [[ApproxKnn.hnswKnn]] execution over restored state. `m` and the
-    * metric come from the persisted `params/`, never from the caller.
+    * per-query top-k as primitive arrays; [[HnswSearch.mergeTopK]] merges
+    * them into the ranked result — the [[ApproxKnn.hnswKnn]] execution
+    * over restored state. `m` and the metric come from the persisted
+    * `params/`, never from the caller.
     *
-    * Contract: the result is a local frame of [[IvfIndex.searchSchema]],
-    * ranked by (dist, neighbor_id) ascending exactly as the ranking
-    * window of [[HnswSearch.topKMerge]] would rank the same partials,
-    * computed when this returns: two Spark jobs (the query collect and
-    * the shard fold), no exchange, driver memory |queries|·k rows. A
-    * shard's graph is restored from its image ([[readImage]]) or taken
-    * from the executor's [[ResidentShards]], which keys it by directory,
+    * Contract: a frame of [[IvfIndex.searchSchema]], ranked by (dist,
+    * neighbor_id) ascending exactly as the ranking window of
+    * [[HnswSearch.topKMerge]] would rank the same partials. A request
+    * whose partials (shards · |queries| · k) fit
+    * [[HnswSearch.driverMerges]] — every serving request — is merged on
+    * the driver into a local frame, computed when this returns: two
+    * Spark jobs (the query collect and the shard fold) and no exchange.
+    * A larger one merges in the window, lazily. A shard's graph is
+    * restored from its image ([[readImage]]) or taken from the
+    * executor's [[ResidentShards]], which keys it by directory,
     * params generation, generation and shard and checks the image's
     * length and mtime on every lookup; either way a live shard without a
     * readable image, or whose graph disagrees with the manifest count,
@@ -915,7 +918,7 @@ object HnswIndex {
           want, m, cosine)
         HnswSearch.beamAll(g, bc.value, kL, efS, ex)
       }
-    HnswSearch.mergeTopK(spark, partials, k)
+    HnswSearch.mergeTopK(spark, partials, bc.value.length, k)
   }
 
   /** `dir` as the filesystem qualifies it: the directory part of a
@@ -940,16 +943,13 @@ object HnswIndex {
   private def residentGraph(conf: org.apache.hadoop.conf.Configuration,
       dir: String, paramsGen: Long, shard: Int, gen: Int, want: Option[Long],
       m: Int, cosine: Boolean): HnswGraph = {
-    val file = imageFile(dir, shard, gen)
-    val st =
-      try file.getFileSystem(conf).getFileStatus(file)
-      catch { case _: java.io.FileNotFoundException =>
-        shardFailure(dir, shard, gen, s"has no graph image $file") }
     val key = ResidentShards.Key(dir, paramsGen, gen, shard)
-    val g = resident.get(key, st.getLen, st.getModificationTime).getOrElse {
+    val (len, mtime) = imageStatus(conf, key).getOrElse(shardFailure(dir,
+      shard, gen, s"has no graph image ${imageFile(dir, shard, gen)}"))
+    val g = resident.get(key, len, mtime).getOrElse {
       val restored = HnswGraph.fromImage(m, cosine,
         readImage(conf, dir, shard, gen, want)(HnswImage.read)(_.size))
-      resident.put(key, st.getLen, st.getModificationTime, restored)
+      resident.put(key, len, mtime, restored)(imageStatus(conf, _))
       restored
     }
     want.filter(_ != g.size).foreach(w => shardFailure(dir, shard, gen,
@@ -959,6 +959,18 @@ object HnswIndex {
 
   private def imageFile(dir: String, shard: Int, gen: Int): Path =
     new Path(s"$dir/nodes/g=$gen/shard=$shard/${HnswImage.FileName}")
+
+  /** The length and mtime of the image a [[ResidentShards]] key names,
+    * if it exists.
+    */
+  private def imageStatus(conf: org.apache.hadoop.conf.Configuration,
+      key: ResidentShards.Key): Option[(Long, Long)] = {
+    val file = imageFile(key.dir, key.shard, key.gen)
+    try {
+      val st = file.getFileSystem(conf).getFileStatus(file)
+      Some((st.getLen, st.getModificationTime))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** The named error of a live shard that cannot serve: the image is the
     * shard's only stored form, so the repair is a [[build]].

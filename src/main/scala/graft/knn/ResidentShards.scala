@@ -18,6 +18,12 @@ package graft.knn
   *  - Bound: `boundBytes` of graph arrays ([[HnswGraph.residentBytes]]),
   *    least recently used first out; a graph larger than the bound is
   *    not kept.
+  *  - Dead graphs: every miss first forgets the graphs no search can hit
+  *    again — those of its own index under another params generation (a
+  *    rebuild or reshard superseded them) or of its own shard under
+  *    another generation (an append did), and those of other indexes
+  *    whose image is gone or changed. So a long-lived JVM does not keep
+  *    a deleted or rebuilt index's graphs until they age out.
   *
   * Cached graphs are only searched, never inserted into, and concurrent
   * searches of one graph are safe ([[HnswGraph]]).
@@ -41,12 +47,32 @@ private[graft] final class ResidentShards(val boundBytes: Long) {
   }
 
   /** Keep `g`, restored from an image of `len` bytes and `mtime`, and
-    * count those bytes as read.
+    * count those bytes as read. The dead graphs go first: those
+    * `key` supersedes, and those of other indexes whose image `status`
+    * (length, mtime) no longer finds as it was — one call per such
+    * graph, made outside the lock.
     */
-  def put(key: Key, len: Long, mtime: Long, g: HnswGraph): Unit = {
+  def put(key: Key, len: Long, mtime: Long, g: HnswGraph)(
+      status: Key => Option[(Long, Long)]): Unit = {
     read.addAndGet(len)
+    val others = synchronized {
+      val out = Seq.newBuilder[(Key, Long, Long)]
+      entries.forEach((k, e) => if (k.dir != key.dir) out += ((k, e.len, e.mtime)))
+      out.result()
+    }
+    val gone = others.collect {
+      case (k, l, t) if !status(k).contains((l, t)) => k
+    }.toSet
     synchronized {
-      drop(entries.remove(key))
+      val it = entries.entrySet.iterator
+      while (it.hasNext) {
+        val e = it.next()
+        val k = e.getKey
+        if (gone(k) || (k.dir == key.dir &&
+            (k.paramsGen != key.paramsGen || k.shard == key.shard))) {
+          drop(e.getValue); it.remove()
+        }
+      }
       val b = g.residentBytes
       if (b <= boundBytes) {
         entries.put(key, new Entry(len, mtime, g, b))
@@ -67,6 +93,9 @@ private[graft] final class ResidentShards(val boundBytes: Long) {
       if (e.getKey.dir == dir) { drop(e.getValue); it.remove() }
     }
   }
+
+  /** The keys of the graphs kept now. */
+  def keys: Seq[Key] = synchronized(entries.keySet.toArray(new Array[Key](0)).toSeq)
 
   /** The bytes of the graphs kept now. */
   def residentBytes: Long = synchronized(bytes)

@@ -313,7 +313,7 @@ class HnswIndexSpec extends SparkSpec {
     val cache = new graft.knn.ResidentShards(4 * one + one / 2)
     def key(i: Int) = graft.knn.ResidentShards.Key("file:/idx", 1L, 0, i)
     graphs.indices.foreach { i =>
-      cache.put(key(i), 100L + i, 7L, graphs(i))
+      cache.put(key(i), 100L + i, 7L, graphs(i))(_ => None)
       assert(cache.residentBytes <= cache.boundBytes, s"after graph $i")
       // graph 0 is read on every round, so it stays; the rest age out
       assert(cache.get(key(0), 100L, 7L).contains(graphs(0)))
@@ -324,10 +324,44 @@ class HnswIndexSpec extends SparkSpec {
     // a changed length or mtime is a miss
     assert(cache.get(key(11), 111L, 8L).isEmpty && cache.get(key(11), 112L, 7L).isEmpty)
     // a graph above the bound is not kept
-    cache.put(key(99), 1L, 1L, graph(400))
+    cache.put(key(99), 1L, 1L, graph(400))(_ => None)
     assert(cache.get(key(99), 1L, 1L).isEmpty && cache.residentBytes <= cache.boundBytes)
     cache.evict("file:/idx")
     assert(cache.residentBytes == 0)
+  }
+
+  test("resident shards: a miss forgets the graphs of superseded " +
+    "generations and of indexes whose images are gone") {
+    val (a, b) = (tempDir("resident_a"), tempDir("resident_b"))
+    val queries = emb.filter(col("vec_id") < 40)
+    // (shard, g) of the graphs kept for `dir`, and of its live shards
+    def kept(dir: String) = HnswIndex.resident.keys.filter(_.dir == qualified(dir))
+      .map(k => (k.shard, k.gen)).sorted
+    def live(dir: String) = HnswIndex.readManifest(spark, dir)._2.toSeq.sorted
+    HnswIndex.build(emb.filter(col("vec_id") < 300), "vec_id", "embedding",
+      a, shards = 4)
+    searchRows(a, queries)
+    assert(kept(a) == live(a) && live(a).size == 4)
+    val before = live(a)
+    HnswIndex.append(spark, a,
+      emb.filter(col("vec_id") >= 300 && col("vec_id") < 440),
+      "vec_id", "embedding")
+    searchRows(a, queries)
+    assert(live(a) != before, "the append left every generation as it was")
+    assert(kept(a) == live(a), "an appended shard's old generation stayed")
+    HnswIndex.reshard(spark, a, 3)
+    searchRows(a, queries)
+    assert(kept(a) == live(a) && live(a).size == 3,
+      "the graphs of the pre-reshard layout stayed")
+    val paramsGens = HnswIndex.resident.keys.filter(_.dir == qualified(a))
+      .map(_.paramsGen).distinct
+    assert(paramsGens.size == 1)
+    // a deleted index's graphs leave at the next miss of another index
+    fsOf(a).delete(new Path(a), true)
+    HnswIndex.build(emb.filter(col("vec_id") < 200), "vec_id", "embedding",
+      b, shards = 2)
+    searchRows(b, queries)
+    assert(kept(a).isEmpty && kept(b) == live(b))
   }
 
   test("persisted index: well-formed search, recall floor, repeat-search identity") {

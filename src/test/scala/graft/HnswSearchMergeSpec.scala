@@ -22,12 +22,22 @@ class HnswSearchMergeSpec extends SparkSpec {
       .sortBy(r => (r._1, r._4))
   }
 
-  private def driver(shards: Seq[Partials], k: Int): Seq[Ranked] = {
+  /** [[HnswSearch.mergeTopK]] over `shards`, as a request of `queries`
+    * query vectors: the distinct query ids by default, which the driver
+    * merges; a request above [[HnswSearch.DriverMergeEntries]] merges in
+    * the window.
+    */
+  private def driver(shards: Seq[Partials], k: Int,
+      queries: Option[Int] = None): Seq[Ranked] = {
+    val q = queries.getOrElse(shards.flatMap(_.qids).distinct.size)
     val out = HnswSearch.mergeTopK(spark,
-      spark.sparkContext.parallelize(shards, shards.size), k)
-    assert(out.schema == IvfIndex.searchSchema)
+      spark.sparkContext.parallelize(shards, shards.size), q, k)
+    assert(out.isLocal == queries.isEmpty)
+    assert(out.schema.map(f => (f.name, f.dataType)) ==
+      IvfIndex.searchSchema.map(f => (f.name, f.dataType)))
     out.collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), bits(r.getDouble(2)), r.getInt(3)))
+      .sortBy(r => (r._1, r._4))
   }
 
   /** A shard's rows as its task hands them to [[Partials.ranked]]:
@@ -68,6 +78,9 @@ class HnswSearchMergeSpec extends SparkSpec {
       Seq.empty)
     val want = window(shards, k)
     assert(driver(shards.map(shardPartials(_, k)), k) == want)
+    // the same partials as a request above the driver bound
+    val above = (HnswSearch.DriverMergeEntries / shards.size / k + 1).toInt
+    assert(driver(shards.map(shardPartials(_, k)), k, Some(above)) == want)
     // one shard alone, and k above every query's row count
     assert(driver(Seq(shardPartials(shards.flatten, 10)), 10) == window(shards, 10))
     // the data tells the orders apart: ranking each query's rows by
@@ -105,5 +118,52 @@ class HnswSearchMergeSpec extends SparkSpec {
       assert(driver(partials, k) == window(rows, k), s"excludeSelf=$excludeSelf k=$k ef=$ef")
       if (excludeSelf) assert(!rows.flatten.exists(r => r._1 == r._2))
     }
+  }
+
+  test("driverMerges: the fixed entry bound, and half of " +
+    "spark.driver.maxResultSize at 24 bytes an entry") {
+    val conf = new org.apache.spark.SparkConf(false)
+    val bound = HnswSearch.DriverMergeEntries
+    // ann_serve's bulk request: 16 shards, 1024 queries, k 10
+    assert(HnswSearch.driverMerges(conf, 16L * 1024 * 10))
+    assert(HnswSearch.driverMerges(conf, bound) && !HnswSearch.driverMerges(conf, bound + 1))
+    // a grid block at 10^6 keys: 32 shards, 100,000 queries, k 25
+    assert(!HnswSearch.driverMerges(conf, 32L * 100000 * 25))
+    conf.set("spark.driver.maxResultSize", "1m")
+    assert(HnswSearch.driverMerges(conf, (1L << 19) / 24))
+    assert(!HnswSearch.driverMerges(conf, (1L << 19) / 24 + 1))
+    conf.set("spark.driver.maxResultSize", "0")
+    assert(HnswSearch.driverMerges(conf, bound) && !HnswSearch.driverMerges(conf, bound + 1))
+  }
+
+  test("a request whose partials exceed spark.driver.maxResultSize merges " +
+    "in the window and answers what the driver merge answers, for both " +
+    "HNSW paths") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val n = 3000
+    val k = 10
+    val vecs = (0 until n)
+      .map(i => (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding").repartition(4).localCheckpoint()
+    val dir = java.nio.file.Files.createTempDirectory("graft_merge_bound").toString
+    graft.util.TempDirs.register(dir)
+    HnswIndex.build(vecs, "vec_id", "embedding", dir, shards = 4)
+    def both() = Seq(
+      ApproxKnn.hnswKnn(vecs, vecs, "vec_id", "embedding", k),
+      HnswIndex.search(spark, dir, vecs, "vec_id", "embedding", k))
+    // at least 4 shards each: 4 · 3000 · 10 = 120,000 partials, about
+    // 2.9 MB of task results, which the driver merges by default
+    val driverMerged = both()
+    assert(driverMerged.forall(_.isLocal))
+    org.apache.spark.SparkInternals.withConf(spark.sparkContext,
+        "spark.driver.maxResultSize", "1m") {
+      assert(!HnswSearch.driverMerges(spark.sparkContext.getConf, 4L * n * k))
+      both().zip(driverMerged).foreach { case (windowed, local) =>
+        assert(!windowed.isLocal)
+        assert(windowed.exceptAll(local).isEmpty && local.exceptAll(windowed).isEmpty)
+      }
+    }
+    assert(driverMerged.forall(_.count() == n.toLong * k))
   }
 }

@@ -194,7 +194,10 @@ object MakeScale {
   * probe records what the index declared and the recall an untuned
   * search serves), "servecache" (cold and warm 16-query requests
   * against an untuned [[graft.knn.HnswIndex]]: image bytes read, CPU
-  * and wall — the resident shard cache at the tier's scale), or "none".
+  * and wall — the resident shard cache at the tier's scale),
+  * "gridmerge" (the default grid at kMax 25, once per tier: wall, rows
+  * and the largest task-result total of one job, against
+  * spark.driver.maxResultSize), or "none".
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -213,7 +216,7 @@ object ScaleProbe {
         "q95_stream_ann_ingest", "q96_stream_hnsw_late")
     val knownProbes = Set("block", "grid", "reshard", "griddefault",
       "gridhnsw", "drift", "ivfpqdrift", "gridrecall", "shape",
-      "indexshape", "servecache", "none")
+      "indexshape", "servecache", "gridmerge", "none")
     val probes: Set[String] =
       if (args.length > 4) args(4).split(',').toSet else Set("block", "grid")
     // fail LOUDLY on a typo'd probe token — a silently skipped probe
@@ -674,6 +677,46 @@ object ScaleProbe {
     val serveCacheRows = if (!probes("servecache")) Seq.empty else
       Seq(s""""hnsw_serve_cache":{"small":${serveCacheProbe(small)},"big":${serveCacheProbe(big)}}""")
 
+    // The default grid at the flagship's kMax (25, of ks 5/10/25), run
+    // once per tier: past DefaultHnswAbove keys hnswBlockKnn answers
+    // 100,000-query blocks against 32 shards, whose per-block partials
+    // (32 · 10^5 · 25 entries, about 1.9 GB) must merge in the window,
+    // not on the driver, under the default spark.driver.maxResultSize.
+    // Records the wall, the rows (every key has kMax neighbours) and the
+    // largest total of task results any one job sent the driver — the
+    // figure spark.driver.maxResultSize bounds.
+    def gridMergeProbe(dir: String): String = {
+      val cat = spark.read.parquet(s"$dir/embeddings.parquet")
+        .select(col("vec_id").cast("string").as("key"),
+          col("embedding").as("vec"))
+      val n = cat.count()
+      val kMax = 25
+      val jobOf = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+      val resultBytes = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          e.stageIds.foreach(st => jobOf.put(st, e.jobId))
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null)
+            resultBytes.merge(jobOf.getOrDefault(e.stageId, -1),
+              e.taskMetrics.resultSize, (a: Long, b: Long) => a + b)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val t0 = System.nanoTime()
+      val (core, _, eng) = graft.pipeline.SemLinkGrid.gridKnnIds(cat, kMax)
+      val rows = core.count()
+      val wallS = (System.nanoTime() - t0) / 1e9
+      org.apache.spark.SparkInternals.drainListeners(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+      val maxJobResult = resultBytes.values.toArray
+        .foldLeft(0L)((m, b) => math.max(m, b.asInstanceOf[Long]))
+      val maxResultSize = spark.sparkContext.getConf
+        .getSizeAsBytes("spark.driver.maxResultSize", "1g")
+      f"""{"n":$n,"k_max":$kMax,"engine":"${eng.engine}","ef":${eng.efUsed},"wall_s":$wallS%.1f,"rows":$rows,"rows_expected":${n * kMax},"max_job_result_bytes":$maxJobResult,"max_result_size":$maxResultSize}"""
+    }
+    val gridMergeRows = if (!probes("gridmerge")) Seq.empty else
+      Seq(s""""gridknn_merge":{"small":${gridMergeProbe(small)},"big":${gridMergeProbe(big)}}""")
+
     // IVF-PQ ADC recall under DRIFTING appends (the PQ family's named
     // LIMIT in COVERAGE.md — "ADC error under drift; the answer is
     // rebuild cadence"): centroids and codebooks train on the base
@@ -797,7 +840,7 @@ object ScaleProbe {
       f""""$n":{"small_s":$s%.3f,"big_s":$b%.3f,"growth":$g%.2f}"""
     } ++ blockRows ++ gridRows ++ reshardRows ++ gridDefaultRows ++
       gridHnswRows ++ gridRecallRows ++ indexShapeRows ++ driftRows ++
-      ivfPqDriftRows ++ shapeRows ++ serveCacheRows).mkString(
+      ivfPqDriftRows ++ shapeRows ++ serveCacheRows ++ gridMergeRows).mkString(
       s"""{"small":"$small","big":"$big","block_hash_equal":$blockHash,"queries":{""",
       ",", "}}")
     println(json)
