@@ -368,40 +368,22 @@ object Dedup {
       "semanticNearDups: probeLevel tracking requires blockCap <= 0")
     val spark = df.sparkSession
     import spark.implicits._
-    val unit = graft.knn.ApproxKnn.unitNormalized(
-      df, idCol, vecCol, "id", "__vec", "__zero")
-    // keep zero vectors out of the k-means sample (they would pull
-    // spherical centroids off the unit sphere); they still flow through
+    val unit = graft.knn.KMeans.prepare(
+      df, idCol, vecCol, spherical = true, "id", "__vec", "__zero")
+    // only the non-zero vectors train the blocks, so an all-zero corpus is
+    // refused rather than trained on; zero vectors still flow through
     // assignment and are rejected by the distance-1.0 convention below.
     // `distributedTrain` trains on ALL non-zero vectors via
     // [[graft.knn.KMeans.train]] — the SemDeDup operating point at 100 TB
     // wants ~10⁵ clusters, beyond any driver-side sample cap.
-    val nonZero = unit.filter(!col("__zero"))
-    val centroids =
-      if (distributedTrain)
-        graft.knn.KMeans.train(nonZero.select(col("__vec")), "__vec",
-          nClusters, kmeansIters, seed, "semanticNearDups")
-      else {
-        // seeded hash-ordered take (the ShapeStats sampling rule) — a
-        // bare limit() reads a storage prefix, which on a time-ordered
-        // drifting corpus trains the cluster blocks on one regime (see
-        // IvfIndex.collectSample for the full argument)
-        val sample = nonZero
-          .orderBy(xxhash64(col("id"), lit(seed)), col("id"))
-          .limit(sampleCap)
-          .select(col("__vec").cast("array<float>"))
-          .as[Array[Float]].collect()
-        require(sample.nonEmpty, "semanticNearDups: no non-zero vectors")
-        graft.knn.ApproxKnn.kmeans(
-          sample, math.min(nClusters, sample.length), kmeansIters, seed)
-      }
+    val centroids = new graft.knn.KMeans.TrainingSet(unit.filter(!col("__zero")),
+      "id", "__vec", "__zero", sampleCap, seed, "semanticNearDups")
+      .coarse(nClusters, kmeansIters, distributedTrain)
     // twoLevelAssign: sublinear per-row cluster assignment for the
     // 10⁴–10⁵-cluster SemDeDup operating point (see KMeans.twoLevelIndex)
-    val kernel: org.apache.spark.sql.graft.CentroidIndex =
-      if (twoLevelAssign) graft.knn.KMeans.twoLevelIndex(spark, centroids,
-        twoLevelProbes, seed = seed)
-      else new org.apache.spark.sql.graft.CentroidKernel(
-        spark.sparkContext.broadcast(centroids))
+    val kernel = graft.knn.KMeans.assignKernel(
+      spark.sparkContext.broadcast(centroids), twoLevelAssign, twoLevelProbes,
+      seed)
     // both sides of the block self-join reference the assignment frame;
     // materializing it ONCE (localCheckpoint — ContextCleaner-released,
     // not CacheManager-pinned, the setJaccardPairs rationale) halves the
@@ -469,7 +451,7 @@ object Dedup {
           else split
         }
       }
-    // unit vectors: cosine distance = squared-L2 / 2 (see unitNormalized)
+    // unit vectors: cosine distance = squared-L2 / 2 (see KMeans.unitVectors)
     val l2 = graft.functions.VectorExpressions.squaredL2(
       col("a.__vec"), col("b.__vec"))
     val cosDist = when(col("a.__zero") || col("b.__zero"), lit(1.0))

@@ -11,22 +11,33 @@ import org.apache.spark.sql.functions._
   * the approximation CONTRACT (recall@k), not the algorithm, which is
   * single-machine graph state).
   *
-  * Two pruning strategies, same output contract as [[KnnJoin]]
-  * ((query_id, neighbor_id, dist, rank), ties by id):
+  * Every strategy keeps the [[KnnJoin]] output contract ((query_id,
+  * neighbor_id, dist, rank), ties by id):
   *
   *  - [[lshKnn]]: random-hyperplane signatures, `tables` independent hash
   *    tables of `bits` bits. Only same-bucket pairs are scored — the join
   *    is a bucket equi-join, so work scales with bucket occupancy, never
   *    N². Good for cosine-like geometry.
   *
-  *  - [[ivfKnn]]: inverted-file index. Coarse centroids are learned with
-  *    k-means on a bounded driver-side sample (the only driver
-  *    materialization, capped); every vector is assigned to its nearest
-  *    centroid (distributed), queries probe the `nProbe` nearest centroid
-  *    lists. Work scales with N·nProbe/nList.
+  *  - [[ivfKnn]]: inverted-file index. Coarse centroids come from the one
+  *    spherical quantizer trainer ([[KMeans.TrainingSet]]: a bounded,
+  *    seeded driver sample or the distributed trainer); every vector is
+  *    assigned to its nearest centroid (distributed), queries probe the
+  *    `nProbe` nearest centroid lists. Work scales with N·nProbe/nList.
   *
-  * Both are deterministic (seeded) and verified against the exact kNN by
-  * recall tests.
+  *  - [[pqKnn]] / [[pqBlockKnn]]: product-quantized candidates scored by
+  *    ADC over one code scan, with an exact rerank of the short list.
+  *
+  *  - [[truncatedKnn]]: exact kNN on a dimension prefix, reranked in full
+  *    dimension.
+  *
+  *  - [[hnswKnn]] / [[hnswBlockKnn]]: per-partition or sharded HNSW
+  *    graphs, merged per query.
+  *
+  *  - [[blockKnn]]: exact kNN with the query side cut into bounded blocks.
+  *
+  * All are deterministic (seeded); the approximate ones are verified
+  * against the exact kNN by recall tests.
   */
 object ApproxKnn {
 
@@ -163,29 +174,6 @@ object ApproxKnn {
     centroids
   }
 
-  /** Unit-normalize a (id, vec) projection — the cosine→L2 reduction:
-    * for unit vectors, cosine distance = squared L2 / 2 (exactly, up to
-    * float rounding), with identical ranking. The norm is materialized as
-    * its own column BEFORE the division lambda (codegen CSE skips lambda
-    * bodies — an inline norm would recompute the dot product per
-    * element). Zero vectors pass through unnormalized and keep a
-    * `zeroAlias` flag: the engine-wide convention (cosineDistance,
-    * HnswGraph) scores any pair involving a zero vector at distance 1.0,
-    * which the normalized-L2 form cannot express (it would yield 0.5).
-    */
-  private[graft] def unitNormalized(df: DataFrame, idCol: String, vecCol: String,
-      idAlias: String, vecAlias: String, zeroAlias: String): DataFrame =
-    df.select(col(idCol).cast("long").as(idAlias),
-        col(vecCol).cast("array<float>").as(vecAlias))
-      .withColumn("__norm", sqrt(
-        graft.functions.VectorExpressions.dotProduct(col(vecAlias), col(vecAlias))))
-      .withColumn(zeroAlias, !(col("__norm") > 0))
-      .withColumn(vecAlias,
-        when(!col(zeroAlias),
-          transform(col(vecAlias), x => (x / col("__norm")).cast("float")))
-          .otherwise(col(vecAlias)))
-      .drop("__norm")
-
   /** IVF kNN: centroid training on a sampled subset, distributed assign +
     * probe. `sampleCap` bounds the driver materialization. Cosine runs as
     * spherical IVF — both sides unit-normalized, centroids trained on the
@@ -212,51 +200,16 @@ object ApproxKnn {
       excludeSelf: Boolean = true,
       distributedTrain: Boolean = false): DataFrame = {
     val spark = candidates.sparkSession
-    import spark.implicits._
     require(nProbe > 0, s"ivfKnn: nProbe must be positive, got $nProbe")
     val cosine = HnswSearch.isCosine(metric)
 
-    val cand =
-      if (cosine) unitNormalized(candidates, idCol, vecCol,
-        "neighbor_id", "__neighbor_vec", "__neighbor_zero")
-      else candidates.select(col(idCol).cast("long").as("neighbor_id"),
-        col(vecCol).as("__neighbor_vec"))
-    val qry =
-      if (cosine) unitNormalized(queries, idCol, vecCol,
-        "query_id", "__query_vec", "__query_zero")
-      else queries.select(col(idCol).cast("long").as("query_id"),
-        col(vecCol).as("__query_vec"))
-
-    // cosine: zero vectors pass through unitNormalized UNnormalized (the
-    // distance-1.0 convention handles them) — keep them out of the kmeans
-    // sample, or raw zeros pull spherical centroids off the unit sphere
-    // and zero-vector queries probe arbitrary lists
-    val sampleSrc = if (cosine) cand.filter(!col("__neighbor_zero")) else cand
-    val centroids =
-      if (distributedTrain) {
-        val nz = sampleSrc.select(col("__neighbor_vec"))
-        // all-zero candidate side under cosine: every distance is 1.0
-        // anyway — train on the zeros rather than fail
-        val src = if (cosine && nz.isEmpty) cand.select(col("__neighbor_vec")) else nz
-        KMeans.train(src, "__neighbor_vec", nList, kmeansIters, seed, "ivfKnn")
-      } else {
-        // seeded hash-ordered take (the ShapeStats sampling rule) — a
-        // bare limit() reads a storage prefix, which under distribution
-        // drift trains the quantizer on one regime (see
-        // IvfIndex.collectSample for the full argument)
-        def draw(df: DataFrame): Array[Array[Float]] = df
-          .orderBy(xxhash64(col("neighbor_id"), lit(seed)),
-            col("neighbor_id"))
-          .limit(sampleCap)
-          .select(col("__neighbor_vec").cast("array<float>"))
-          .as[Array[Float]].collect()
-        val sample0 = draw(sampleSrc)
-        // all-zero candidate side: every distance is 1.0 anyway — train on
-        // the zeros rather than fail
-        val sample = if (sample0.nonEmpty) sample0 else draw(cand)
-        require(sample.nonEmpty, "ivfKnn: empty candidate side")
-        kmeans(sample, math.min(nList, sample.length), kmeansIters, seed)
-      }
+    val cand = KMeans.prepare(candidates, idCol, vecCol, cosine,
+      "neighbor_id", "__neighbor_vec", "__neighbor_zero")
+    val qry = KMeans.prepare(queries, idCol, vecCol, cosine,
+      "query_id", "__query_vec", "__query_zero")
+    val centroids = new KMeans.TrainingSet(cand, "neighbor_id",
+      "__neighbor_vec", "__neighbor_zero", sampleCap, seed, "ivfKnn")
+      .coarse(nList, kmeansIters, distributedTrain)
     // assign/probe run the native codegen nearest-centroid expressions over
     // the broadcast codebook — the assign touches EVERY candidate row, so
     // the former Scala UDF (boxed Seq[Float], interpreted, codegen barrier)
@@ -278,7 +231,7 @@ object ApproxKnn {
        else joined)
     val l2 = graft.functions.VectorExpressions.squaredL2(
       col("__query_vec"), col("__neighbor_vec"))
-    val cosDist = // zero-vector convention: distance 1.0 (see unitNormalized)
+    val cosDist = // zero-vector convention: distance 1.0 (see KMeans.unitVectors)
       when(col("__query_zero") || col("__neighbor_zero"), lit(1.0))
         .otherwise(l2 / 2.0)
     HnswSearch.topKMerge(
@@ -498,28 +451,12 @@ object ApproxKnn {
         org.apache.spark.broadcast.Broadcast[PqCodebooks],
         org.apache.spark.sql.graft.PqKernel) = {
     val spark = candidates.sparkSession
-    import spark.implicits._
-    val cand =
-      if (cosine) unitNormalized(candidates, idCol, vecCol,
-        "neighbor_id", "__neighbor_vec", "__neighbor_zero")
-      else candidates.select(col(idCol).cast("long").as("neighbor_id"),
-        col(vecCol).as("__neighbor_vec"), lit(false).as("__neighbor_zero"))
-    val qry =
-      if (cosine) unitNormalized(queries, idCol, vecCol,
-        "query_id", "__query_vec", "__query_zero")
-      else queries.select(col(idCol).cast("long").as("query_id"),
-        col(vecCol).as("__query_vec"), lit(false).as("__query_zero"))
-    // seeded hash-ordered take (the ShapeStats sampling rule) — a bare
-    // limit() reads a storage prefix, which under distribution drift
-    // trains the codebooks on one regime (see IvfIndex.collectSample)
-    def draw(df: DataFrame): Array[Array[Float]] = df
-      .orderBy(xxhash64(col("neighbor_id"), lit(seed)), col("neighbor_id"))
-      .limit(sampleCap)
-      .select(col("__neighbor_vec").cast("array<float>"))
-      .as[Array[Float]].collect()
-    val sample0 = draw(cand.filter(!col("__neighbor_zero")))
-    val sample = if (sample0.nonEmpty) sample0 else draw(cand)
-    require(sample.nonEmpty, s"$what: empty candidate side")
+    val cand = KMeans.prepare(candidates, idCol, vecCol, cosine,
+      "neighbor_id", "__neighbor_vec", "__neighbor_zero")
+    val qry = KMeans.prepare(queries, idCol, vecCol, cosine,
+      "query_id", "__query_vec", "__query_zero")
+    val sample = new KMeans.TrainingSet(cand, "neighbor_id", "__neighbor_vec",
+      "__neighbor_zero", sampleCap, seed, what).sample
     val books = Pq.train(sample, m, ksub, kmeansIters, seed)
     val bcBooks = spark.sparkContext.broadcast(books)
     (cand, qry, bcBooks, new org.apache.spark.sql.graft.PqKernel(bcBooks))
@@ -653,12 +590,6 @@ object ApproxKnn {
     }.toDF("query_id", "neighbor_id", "dist")
   }
 
-  /** Exact refinement of an ADC short list: narrow (q, c) pair rows join
-    * back to the vector tables. The candidate join is a plain shuffle
-    * join on 8-byte ids; `broadcastQueries` hints the query-vector side
-    * only on the single-broadcast path — the block path (query side too
-    * large to broadcast by definition) shuffles both.
-    */
   /** Truncated-dimension kNN — the Matryoshka/prefix-search shape
     * (Kusupati et al., NeurIPS 2022: MRL embeddings front-load
     * information into the leading components; OpenAI's `dimensions`
@@ -695,6 +626,12 @@ object ApproxKnn {
       cosine, broadcastQueries = true)
   }
 
+  /** Exact refinement of a short list (ADC or truncated-dimension):
+    * narrow (q, c) pair rows join back to the vector tables. The
+    * candidate join is a plain shuffle join on 8-byte ids; `broadcastQueries` hints the query-vector side
+    * only on the single-broadcast path — the block path (query side too
+    * large to broadcast by definition) shuffles both.
+    */
   private def pqExactRerank(
       shortList: DataFrame,
       queries: DataFrame,

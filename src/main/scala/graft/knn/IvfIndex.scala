@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persistent IVF index (SURVEY.md S11, re-expressed Spark-native — the
@@ -125,52 +124,14 @@ object IvfIndex {
     // the fresh index at the next writer entry)
     recover(spark, dir)
     val cosine = HnswSearch.isCosine(metric)
-    // spherical kmeans trains on unit vectors, excluding raw zeros (a raw
-    // zero would pull a centroid off the sphere; the distance-1.0
-    // convention makes zero vectors list-agnostic anyway)
-    val sampleSrc =
-      if (cosine) ApproxKnn.unitNormalized(candidates, idCol, vecCol,
-        "__id", "__vec", "__zero").filter(!col("__zero"))
-        .select(col("__id"), col("__vec"))
-      else candidates.select(col(idCol).cast("long").as("__id"),
-        col(vecCol).cast("array<float>").as("__vec"))
-    def collectSample(): Array[Array[Float]] = {
-      // seeded hash-ordered take (the ShapeStats sampling rule:
-      // TakeOrderedAndProject, uniform across the catalog, deterministic
-      // across layouts) — the former bare limit() was a storage-prefix
-      // read, which on a time-ordered corpus under distribution drift
-      // trains the quantizer on the OLDEST regime only, the sampling
-      // twin of the HNSW id-ordered-insertion hazard
-      def draw(df: DataFrame): Array[Array[Float]] = df
-        .orderBy(xxhash64(col("__id"), lit(seed)), col("__id"))
-        .limit(sampleCap)
-        .select(col("__vec")).as[Array[Float]].collect()
-      val sample0 = draw(sampleSrc)
-      // all-zero candidate side under cosine: every distance is 1.0 anyway —
-      // train on the zeros rather than fail
-      val sample = if (sample0.nonEmpty) sample0
-        else draw(candidates.select(col(idCol).cast("long").as("__id"),
-          col(vecCol).cast("array<float>").as("__vec")))
-      require(sample.nonEmpty, "IvfIndex.build: empty candidate side")
-      sample
-    }
-    // `distributedTrain` lifts the coarse quantizer onto [[KMeans.train]]
-    // over the full candidate side — nList beyond the sample cap (the
-    // 10⁴–10⁵-list operating point) with only the k centroids ever on the
-    // driver. PQ codebooks (ksub ≤ 256 by the byte-code format) stay on
-    // the bounded sample either way.
-    val driverSample: Option[Array[Array[Float]]] =
-      if (distributedTrain && pqM <= 0) None else Some(collectSample())
-    val centroids =
-      if (distributedTrain) {
-        val src = if (cosine && sampleSrc.isEmpty)
-          candidates.select(col(vecCol).cast("array<float>").as("__vec"))
-        else sampleSrc
-        KMeans.train(src, "__vec", nList, kmeansIters, seed, "IvfIndex.build")
-      } else {
-        val sample = driverSample.get
-        ApproxKnn.kmeans(sample, math.min(nList, sample.length), kmeansIters, seed)
-      }
+    // the quantizer trains in assign space (unit vectors under cosine);
+    // `distributedTrain` lifts it onto [[KMeans.train]] over the full
+    // candidate side. PQ codebooks (ksub ≤ 256 by the byte-code format)
+    // train on the bounded sample either way.
+    val training = new KMeans.TrainingSet(
+      KMeans.prepare(candidates, idCol, vecCol, cosine, "__id", "__vec", "__zero"),
+      "__id", "__vec", "__zero", sampleCap, seed, "IvfIndex.build")
+    val centroids = training.coarse(nList, kmeansIters, distributedTrain)
 
     // ONE broadcast of the coarse codebook per build: shared by the
     // residual-sample probe below and writeAssignments' kernels — each
@@ -196,7 +157,7 @@ object IvfIndex {
       // n_at_train: the corpus size the quantizer (and codebooks, if any)
       // trained on — the denominator-anchor [[staleness]] reports drift
       // against. A fresh build trains everything, so it IS the corpus size.
-      Seq((centroids.length, metric, seed, Some(nAtTrain): Option[Long]))
+      Seq((centroids.length, metric, seed, nAtTrain))
         .toDF("n_list", "metric", "seed", "n_at_train")
         .repartition(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/params.tmp")
@@ -214,7 +175,7 @@ object IvfIndex {
         // (one source of truth for the assignment rule — a private
         // re-implementation could drift and silently degrade codebooks)
         val probe = new org.apache.spark.sql.graft.CentroidKernel(bcCentroids)
-        val sample = driverSample.get
+        val sample = training.sample
         val trainSample =
           if (!pqByResidual) sample
           else sample.map { v =>
@@ -247,10 +208,8 @@ object IvfIndex {
     // at cell boundaries; list membership shifts, search stays exact
     // within probed lists. Append keeps the exact assign (a mode mismatch
     // only perturbs list balance, but defaults should round-trip).
-    val assignKernel: org.apache.spark.sql.graft.CentroidIndex =
-      if (twoLevelAssign) KMeans.twoLevelIndex(spark, centroids,
-        twoLevelProbes, seed = seed)
-      else new org.apache.spark.sql.graft.CentroidKernel(bcCentroids)
+    val assignKernel =
+      KMeans.assignKernel(bcCentroids, twoLevelAssign, twoLevelProbes, seed)
     writeAssignments(candidates, idCol, vecCol, dir, bcCentroids, cosine, pq,
       SaveMode.Overwrite, assignKernel, table = "assignments.tmp")
     pq
@@ -273,7 +232,7 @@ object IvfIndex {
       // the build holds every piece of metadata the probe needs — no
       // re-reads of the tables it just wrote (and no memo: gen unused)
       val snap = graft.util.Snapshot(dir, 0L,
-        new Meta(centroids, metric, dir, Some(Some(p))))
+        new Meta(centroids, metric, nAtTrain, dir, Some(Some(p))))
       measureAdcDisplacement(spark, snap, nAtTrain,
         AnchorProbeQueries, AnchorK, AnchorNProbe, AnchorRerank, AnchorSeed)
         .foreach(d => writeAnchor(spark, fs, dir, d))
@@ -303,20 +262,16 @@ object IvfIndex {
     val base = graft.util.Par.balance(
       vectors.select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<float>").as("vec")))
-    val assignVec =
-      if (!cosine) col("vec")
-      else {
-        val norm = sqrt(graft.functions.VectorExpressions
-          .dotProduct(col("vec"), col("vec")))
-        when(norm > 0, transform(col("vec"), x => (x / norm).cast("float")))
-          .otherwise(col("vec"))
-      }
-    val withCid = base.withColumn("cid",
+    // under cosine the assign sees the unit copy of each vector
+    val (assignable, assignVec) =
+      if (cosine) (KMeans.unitVectors(base, "vec", "__unit", "__zero"), col("__unit"))
+      else (base, col("vec"))
+    val withCid = assignable.withColumn("cid",
       graft.functions.VectorExpressions.nearestCentroid(assignVec, kernel))
     // the PQ code quantizes the ASSIGN-space vector (normalized under
     // cosine) — the same vector ADC distances are measured against; in
     // residual mode the code quantizes its offset from the list centroid
-    val withCode = pq match {
+    val withCode = (pq match {
       case None => withCid
       case Some((cb, residual)) =>
         val pqKernel = new org.apache.spark.sql.graft.PqKernel(
@@ -328,7 +283,7 @@ object IvfIndex {
               assignVec, col("cid"), pqKernel)
           else
             graft.functions.VectorExpressions.pqEncode(assignVec, pqKernel))
-    }
+    }).drop("__unit", "__zero")
     // cluster by list before writing: without this every task writes a
     // sliver into every cid directory (tasks × nList small files — slow
     // to commit here, slow to list/read at scale). One shuffle buys one
@@ -420,12 +375,13 @@ object IvfIndex {
       new org.apache.spark.sql.graft.CentroidKernel(bc))
   }
 
-  /** The quantizer of `dir`: centroids and metric, read when the
-    * snapshot opens, and the PQ codebooks (`Some(None)`: none), read on
-    * first use — a plain probe pays no codebook collect.
+  /** The quantizer of `dir`: centroids, metric and training-time corpus
+    * size, read when the snapshot opens, and the PQ codebooks
+    * (`Some(None)`: none), read on first use — a plain probe pays no
+    * codebook collect.
     */
   private[graft] final class Meta(val centroids: Array[Array[Float]],
-      val metric: String, dir: String,
+      val metric: String, val nAtTrain: Long, dir: String,
       private var pqRead: Option[Option[(PqCodebooks, Boolean)]]) {
     def pq(spark: SparkSession): Option[(PqCodebooks, Boolean)] = synchronized {
       if (pqRead.isEmpty) pqRead = Some(loadPq(spark, dir))
@@ -444,8 +400,10 @@ object IvfIndex {
     * [[rebalance]] commit is a miss).
     */
   private[graft] def open(spark: SparkSession, dir: String): Snapshot =
-    memo.open(spark, dir)(
-      new Meta(loadCentroids(spark, dir), loadMetric(spark, dir), dir, None))
+    memo.open(spark, dir) {
+      val (metric, nAtTrain) = loadParams(spark, dir)
+      new Meta(loadCentroids(spark, dir), metric, nAtTrain, dir, None)
+    }
 
   /** The committed id set (one `id` column, column-pruned scan — no
     * vector I/O). Package-private for the streaming ingester's freshness
@@ -471,7 +429,7 @@ object IvfIndex {
     *
     *  - `n_rows` — current corpus size (column-pruned id scan);
     *  - `n_at_train` — corpus size when the quantizer/codebooks last
-    *    trained (null for pre-column legacy indexes: unknown, not fresh);
+    *    trained;
     *  - `frac_appended_since_train` — (n_rows − n_at_train)/n_rows, the
     *    CHEAP proxy: appends are the only way corpus and training drift
     *    apart (builds and vectors-only rebalances reset the anchor;
@@ -548,16 +506,17 @@ object IvfIndex {
       seed: Int = 42): DataFrame = {
     import spark.implicits._
     val nRows = readIds(spark, dir).count()
-    val nAtTrain = loadNAtTrain(spark, dir)
-    val frac = nAtTrain.map(t =>
-      if (nRows == 0) 0.0 else math.max(0.0, (nRows - t).toDouble / nRows))
+    val snap = open(spark, dir)
+    val nAtTrain = snap.meta.nAtTrain
+    val frac =
+      if (nRows == 0) 0.0 else math.max(0.0, (nRows - nAtTrain).toDouble / nRows)
     val hasPq = {
       val p = new Path(s"$dir/pq")
       p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
     }
     val disp: Option[Double] =
       if (!hasPq || nRows == 0) None
-      else measureAdcDisplacement(spark, open(spark, dir), nRows,
+      else measureAdcDisplacement(spark, snap, nRows,
         probeQueries, k, nProbe, rerank, seed)
     // the persisted post-build anchor ([[buildLocked]]'s final step):
     // ratio/alarm only when the live probe ran the SAME protocol the
@@ -716,24 +675,6 @@ object IvfIndex {
       currentDisplacement: Double): Boolean =
     currentDisplacement >= AdcDisplacementAlarmRatio * buildDisplacement
 
-  /** The persisted training-time corpus size, if this index (or its last
-    * vectors-only rebalance) recorded one — None for legacy layouts.
-    */
-  private def loadNAtTrain(spark: SparkSession, dir: String): Option[Long] = {
-    val p = new Path(s"$dir/params")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val df = spark.read.parquet(s"$dir/params")
-      if (!df.columns.contains("n_at_train")) None
-      else {
-        val r = df.select("n_at_train").collect()
-        if (r.length != 1 || r.head.isNullAt(0)) None
-        else Some(r.head.getLong(0))
-      }
-    }
-  }
-
   /** Re-train the coarse quantizer IN PLACE on the current corpus and
     * re-file every vector — the answer to append drift that [[stats]]
     * diagnoses. [[append]] keeps the quantizer fixed (FAISS `IndexIVF.add`
@@ -843,37 +784,15 @@ object IvfIndex {
       else corpus.filter(
         pmod(xxhash64(col("id"), lit(seed)), lit(nRows)) < lit(sampleCap * 2L))
 
-    // train exactly like build: spherical (unit-normalized, zero-free)
-    // vectors under cosine, raw vectors under L2
-    val sampleSrc =
-      if (cosine) ApproxKnn.unitNormalized(trainRows, "id", "vec",
-        "__id", "__vec", "__zero").filter(!col("__zero"))
-        .select(col("__id"), col("__vec"))
-      else trainRows.select(col("id").as("__id"), col("vec").as("__vec"))
+    // train exactly like build; the driver trainer then levels hot lists
+    // on its sample
+    val training = new KMeans.TrainingSet(
+      KMeans.prepare(trainRows, "id", "vec", cosine, "__id", "__vec", "__zero"),
+      "__id", "__vec", "__zero", sampleCap, seed, "IvfIndex.rebalance")
+    val trained = training.coarse(k, kmeansIters, distributedTrain)
     val centroids =
-      if (distributedTrain)
-        KMeans.train(
-          if (cosine && sampleSrc.isEmpty) trainRows.select(col("vec").as("__vec"))
-          else sampleSrc,
-          "__vec", k, kmeansIters, seed, "IvfIndex.rebalance")
-      else {
-        // hash-ordered draw from the (already hash-uniform) 2×cap
-        // superset: the former bare limit() took whichever of those
-        // rows answered first — deterministic across layouts now, same
-        // rule as build's collectSample
-        def draw(df: DataFrame): Array[Array[Float]] = df
-          .orderBy(xxhash64(col("__id"), lit(seed)), col("__id"))
-          .limit(sampleCap)
-          .select(col("__vec")).as[Array[Float]].collect()
-        val sample0 = draw(sampleSrc)
-        val sample = if (sample0.nonEmpty) sample0
-          else draw(trainRows.select(col("id").as("__id"),
-            col("vec").as("__vec")))
-        require(sample.nonEmpty, s"IvfIndex.rebalance: empty index under $dir")
-        val trained = ApproxKnn.kmeans(sample, math.min(k, sample.length),
-          kmeansIters, seed)
-        splitHotLists(sample, trained, kmeansIters, seed)
-      }
+      if (distributedTrain) trained
+      else splitHotLists(training.sample, trained, kmeansIters)
     val bcCentroids = spark.sparkContext.broadcast(centroids)
 
     // stage all three tables beside the live ones — the staged writes
@@ -892,12 +811,9 @@ object IvfIndex {
         // n_at_train across rebalance: a PQ index KEEPS its codebooks (the
         // stat tracks exactly the drift rebalance cannot fix — see the
         // IvfPqDrift two-regime result), so the training anchor is
-        // preserved (legacy indexes without the column stay unknown rather
-        // than claiming false freshness); a vectors-only index has its
-        // whole quantizer retrained here, so the anchor resets to the
-        // current corpus
-        val nAtTrain: Option[Long] =
-          if (pq.isDefined) loadNAtTrain(spark, dir) else Some(nRows)
+        // preserved; a vectors-only index has its whole quantizer
+        // retrained here, so the anchor resets to the current corpus
+        val nAtTrain = if (pq.isDefined) snap.meta.nAtTrain else nRows
         Seq((centroids.length, metric, seed, nAtTrain))
           .toDF("n_list", "metric", "seed", "n_at_train")
           .repartition(1)
@@ -926,16 +842,15 @@ object IvfIndex {
     * mean-centroid keeps everything else. The perturbation direction is
     * center → farthest member — radial for isotropic clusters, toward
     * the dominant sub-mode for bimodal ones. Repeats while the hottest
-    * list holds > `splitFactor`× the mean; a handful of rounds on the
-    * driver-side sample, never data-sized work.
+    * list holds > 2× the mean, for at most 8 rounds on the driver-side
+    * sample, never data-sized work.
     */
-  private[knn] def splitHotLists(
+  private def splitHotLists(
       sample: Array[Array[Float]],
       trained: Array[Array[Float]],
-      iters: Int,
-      seed: Int,
-      splitFactor: Double = 2.0,
-      maxRounds: Int = 8): Array[Array[Float]] = {
+      iters: Int): Array[Array[Float]] = {
+    val splitFactor = 2.0
+    val maxRounds = 8
     var centroids = trained
     val k = centroids.length
     if (k < 2) return centroids
@@ -1033,9 +948,8 @@ object IvfIndex {
 
   /** The persisted PQ codebooks (and their residual flag), if this index
     * was built with `pqM > 0`. Presence of `pq/` IS the marker —
-    * m/ksub/dsub reconstruct from the (s, c, vec) rows, no params
-    * round-trip to drift against; a pre-residual layout without the flag
-    * column reads as raw (absolute-position) codes.
+    * m/ksub/dsub reconstruct from the (s, c, vec, residual) rows, no
+    * params round-trip to drift against.
     */
   private def loadPq(spark: SparkSession, dir: String): Option[(PqCodebooks, Boolean)] = {
     import spark.implicits._
@@ -1044,10 +958,8 @@ object IvfIndex {
     if (!fs.exists(p)) None
     else {
       val raw = spark.read.parquet(s"$dir/pq")
-      val withFlag =
-        if (raw.columns.contains("residual")) raw
-        else raw.withColumn("residual", lit(false))
-      val rows = withFlag
+      if (!raw.columns.contains("residual")) throw olderLayout(dir, "pq/residual")
+      val rows = raw
         .select(col("s"), col("c"), col("vec").cast("array<float>"),
           col("residual"))
         .as[(Int, Int, Array[Float], Boolean)].collect()
@@ -1072,19 +984,26 @@ object IvfIndex {
     centroids
   }
 
-  /** The persisted metric; indexes written before `params/` existed are
-    * squared-L2 by construction — read them as such instead of failing.
-    */
-  private def loadMetric(spark: SparkSession, dir: String): String = {
+  /** The persisted metric and training-time corpus size (`params/`). */
+  private def loadParams(spark: SparkSession, dir: String): (String, Long) = {
     val p = new Path(s"$dir/params")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) KnnJoin.MetricL2Sq // legacy pre-params layout
-    else {
-      val rows = spark.read.parquet(s"$dir/params").select("metric").collect()
-      require(rows.length == 1, s"IvfIndex: malformed params under $dir")
-      rows.head.getString(0)
-    }
+    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
+      throw olderLayout(dir, "params/")
+    val params = spark.read.parquet(s"$dir/params")
+    if (!params.columns.contains("n_at_train"))
+      throw olderLayout(dir, "params/n_at_train")
+    val rows = params.select("metric", "n_at_train").collect()
+    require(rows.length == 1, s"IvfIndex: malformed params under $dir")
+    (rows.head.getString(0), rows.head.getLong(1))
   }
+
+  /** An index directory written before `params/` carried the metric and
+    * `n_at_train` and `pq/` the residual flag: it has no defaults to fall
+    * back on, so the repair is a rebuild.
+    */
+  private def olderLayout(dir: String, missing: String): IllegalStateException =
+    new IllegalStateException(s"IvfIndex: $dir has an older on-disk layout " +
+      s"(no $missing); rebuild it with IvfIndex.build")
 
   /** Probe the persisted index: for each query, the `nProbe` nearest
     * centroids are computed against the (tiny, collected) centroid table,
@@ -1139,18 +1058,15 @@ object IvfIndex {
     val qBase = graft.util.Par.balance(
       queries.select(col(idCol).cast("long").as("query_id"),
         col(vecCol).cast("array<float>").as("__query_vec")))
-    val probeVec =
-      if (!cosine) col("__query_vec")
-      else {
-        val norm = sqrt(graft.functions.VectorExpressions
-          .dotProduct(col("__query_vec"), col("__query_vec")))
-        when(norm > 0,
-          transform(col("__query_vec"), x => (x / norm).cast("float")))
-          .otherwise(col("__query_vec"))
-      }
-    val probed = qBase
+    // probe and ADC vectors live in the space the quantizer and the codes
+    // do: unit-normalized under cosine, raw under L2
+    val qSpace =
+      if (cosine) KMeans.unitVectors(qBase, "__query_vec", "__adc_vec", "__zero")
+        .drop("__zero")
+      else qBase.withColumn("__adc_vec", col("__query_vec"))
+    val probed = qSpace
       .withColumn("cid", explode(graft.functions.VectorExpressions
-        .nearestCentroids(probeVec, kernel, nProbe)))
+        .nearestCentroids(col("__adc_vec"), kernel, nProbe)))
 
     // static IN-filter on the partition column: the probed cid UNION is at
     // most nList values (collect is bounded by the centroid count, never
@@ -1166,15 +1082,13 @@ object IvfIndex {
         val probedCids = probed.select("cid").distinct().as[Int].collect()
         col("cid").isin(probedCids.map(Integer.valueOf).toSeq: _*)
       }
-    val w = Window.partitionBy("query_id").orderBy(asc("dist"), asc("neighbor_id"))
-
     if (!usePq) {
       val lists = spark.read.parquet(s"$dir/assignments")
         .filter(listFilter)
         .select(col("cid"), col("id").as("neighbor_id"),
           col("vec").as("__neighbor_vec"))
 
-      val joined = probed.join(lists, Seq("cid"))
+      val joined = probed.drop("__adc_vec").join(lists, Seq("cid"))
       val pairs =
         if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
         else joined
@@ -1183,11 +1097,9 @@ object IvfIndex {
           col("__query_vec"), col("__neighbor_vec"))
         else graft.functions.VectorExpressions.squaredL2(
           col("__query_vec"), col("__neighbor_vec"))
-      pairs
-        .withColumn("dist", dist)
-        .select("query_id", "neighbor_id", "dist")
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+      HnswSearch.topKMerge(
+        pairs.withColumn("dist", dist).select("query_id", "neighbor_id", "dist"),
+        k)
     } else {
       // PQ path: the probed-list scan reads (cid, id, m-byte code) —
       // parquet column pruning keeps the vector column's pages on disk,
@@ -1203,21 +1115,10 @@ object IvfIndex {
       val pqKernel = new org.apache.spark.sql.graft.PqKernel(
         spark.sparkContext.broadcast(pq),
         if (residual) bcCentroids else null)
-      // ADC queries must live in the space the codes quantize: unit-
-      // normalized under cosine, raw under L2
-      val adcProbed = probed.withColumn("__adc_vec",
-        if (!cosine) col("__query_vec")
-        else {
-          val norm = sqrt(graft.functions.VectorExpressions
-            .dotProduct(col("__query_vec"), col("__query_vec")))
-          when(norm > 0,
-            transform(col("__query_vec"), x => (x / norm).cast("float")))
-            .otherwise(col("__query_vec"))
-        })
       val codeLists = spark.read.parquet(s"$dir/assignments")
         .filter(listFilter)
         .select(col("cid"), col("id").as("neighbor_id"), col("code"))
-      val joined = adcProbed.join(codeLists, Seq("cid"))
+      val joined = probed.join(codeLists, Seq("cid"))
       val pairs =
         if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
         else joined
@@ -1227,11 +1128,11 @@ object IvfIndex {
         else graft.functions.VectorExpressions.pqAdc(
           col("__adc_vec"), col("code"), pqKernel)
       val keep = if (rerank > 0) k * rerank else k
-      val shortList = pairs
-        .withColumn("dist", if (cosine) adc / 2.0 else adc)
-        .select("query_id", "neighbor_id", "dist", "__query_vec")
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= keep)
+      val shortList = HnswSearch.topKMerge(
+        pairs
+          .withColumn("dist", if (cosine) adc / 2.0 else adc)
+          .select("query_id", "neighbor_id", "dist", "__query_vec"),
+        keep)
       if (rerank <= 0) shortList.select("query_id", "neighbor_id", "dist", "rank")
       else {
         val vecs = spark.read.parquet(s"$dir/assignments")
@@ -1247,14 +1148,14 @@ object IvfIndex {
         // ([[measureAdcDisplacement]]) reads both orderings from ONE
         // search instead of paying the probe+scan+ADC+window subtree
         // twice (the r19 q58 regression: two searches per anchor)
-        val reranked = shortList
-          .select(Seq(col("query_id"), col("neighbor_id"),
-            col("__query_vec")) ++
-            (if (keepAdcRank) Seq(col("rank").as("__adc_rank")) else Nil): _*)
-          .join(vecs, "neighbor_id")
-          .withColumn("dist", exact)
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
+        val reranked = HnswSearch.topKMerge(
+          shortList
+            .select(Seq(col("query_id"), col("neighbor_id"),
+              col("__query_vec")) ++
+              (if (keepAdcRank) Seq(col("rank").as("__adc_rank")) else Nil): _*)
+            .join(vecs, "neighbor_id")
+            .withColumn("dist", exact),
+          k)
         if (keepAdcRank)
           reranked.select("query_id", "neighbor_id", "dist", "rank",
             "__adc_rank")

@@ -1,5 +1,6 @@
 package graft.knn
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -27,6 +28,13 @@ import org.apache.spark.storage.StorageLevel
   * `(xxhash64(vec, seed), vec)` — a TakeOrdered, not a global sort — and
   * iterations are order-insensitive up to float-summation rounding.
   * Empty clusters keep their previous centroid (the driver-path rule).
+  *
+  * This object is also the one place that decides how a spherical coarse
+  * quantizer (IVF lists, PQ codebooks' sample, SemDeDup blocks) is
+  * trained and applied: [[prepare]] and [[unitVectors]] (the one
+  * unit-normalizer), [[TrainingSet]] (the one seeded training sample and
+  * the driver-or-distributed trainer choice) and [[assignKernel]] (exact
+  * or two-level assign).
   */
 object KMeans {
 
@@ -48,12 +56,8 @@ object KMeans {
       seed: Int,
       what: String = "KMeans.train",
       twoLevelAssign: Boolean = false,
-      twoLevelProbes: Int = 4,
-      miniBatchFraction: Double = 1.0): Array[Array[Float]] = {
+      twoLevelProbes: Int = 4): Array[Array[Float]] = {
     require(k > 0, s"$what: k must be positive, got $k")
-    require(miniBatchFraction > 0 && miniBatchFraction <= 1.0,
-      s"$what: miniBatchFraction must be in (0,1], got $miniBatchFraction")
-    val spark = vecs.sparkSession
     val cached = graft.util.Par.balance(
       vecs.select(col(vecCol).cast("array<float>").as("__v"))
         .filter(col("__v").isNotNull))
@@ -70,11 +74,7 @@ object KMeans {
         .collect()
         .map(rowVec)
       require(init.nonEmpty, s"$what: no input vectors")
-      val kernelFor: Array[Array[Float]] => org.apache.spark.sql.graft.CentroidIndex =
-        if (twoLevelAssign) cs => twoLevelIndex(spark, cs, twoLevelProbes, seed = seed)
-        else cs => new org.apache.spark.sql.graft.CentroidKernel(
-          spark.sparkContext.broadcast(cs))
-      lloyd(cached, init, iters, kernelFor, miniBatchFraction, seed)
+      lloyd(cached, init, iters, twoLevelAssign, twoLevelProbes, seed)
     } finally { cached.unpersist(blocking = false); () }
   }
 
@@ -83,42 +83,22 @@ object KMeans {
     * (codegen kernel, ties to the lowest index), same double-accumulated
     * float sums, differing from the driver only in summation ORDER (float
     * rounding). `cached` must be a single-`__v`-column frame the caller
-    * has persisted (each iteration re-scans it).
-    */
-  private[graft] def lloyd(
-      cached: DataFrame,
-      init: Array[Array[Float]],
-      iters: Int): Array[Array[Float]] = {
-    val spark = cached.sparkSession
-    lloyd(cached, init, iters,
-      cs => new org.apache.spark.sql.graft.CentroidKernel(
-        spark.sparkContext.broadcast(cs)))
-  }
-
-  /** `miniBatchFraction < 1` runs each iteration over a deterministic
-    * per-iteration hash sample of the training frame (stochastic Lloyd —
-    * fresh coin per iteration, so the union of batches covers the corpus
-    * across iterations): the per-iteration cost knob when even ONE full
-    * pass per iteration is too much. Deterministic: the sample is a pure
-    * function of (vector, seed, iteration). Empty clusters — more common
-    * under sampling — keep their previous centroid, as in the full pass.
+    * has persisted (each iteration re-scans it). Empty clusters keep
+    * their previous centroid.
     */
   private[graft] def lloyd(
       cached: DataFrame,
       init: Array[Array[Float]],
       iters: Int,
-      kernelFor: Array[Array[Float]] => org.apache.spark.sql.graft.CentroidIndex,
-      miniBatchFraction: Double = 1.0,
+      twoLevelAssign: Boolean = false,
+      twoLevelProbes: Int = 4,
       seed: Int = 42): Array[Array[Float]] = {
+    val sc = cached.sparkSession.sparkContext
     var centroids = init
-    for (iter <- 1 to iters) {
-      val kernel = kernelFor(centroids)
-      val src =
-        if (miniBatchFraction >= 1.0) cached
-        else cached.filter(
-          pmod(xxhash64(col("__v"), lit(seed), lit(iter)), lit(10000L)) <
-            lit((miniBatchFraction * 10000).round))
-      val rows = src
+    for (_ <- 1 to iters) {
+      val kernel = assignKernel(sc.broadcast(centroids), twoLevelAssign,
+        twoLevelProbes, seed)
+      val rows = cached
         .groupBy(graft.functions.VectorExpressions
           .nearestCentroid(col("__v"), kernel).as("cid"))
         .agg(graft.functions.AggExpressions.vectorSum(col("__v")).as("s"),
@@ -146,28 +126,39 @@ object KMeans {
     centroids
   }
 
-  /** Build a [[org.apache.spark.sql.graft.TwoLevelCentroidKernel]] over a
-    * trained codebook: coarse cells = driver Lloyd over the k centroids
-    * (codebook-sized work, never data-sized), member lists = exact
-    * assignment of each fine centroid to its cell. `coarseCells` 0 →
-    * ~√k cells (the arithmetic optimum when probe cost ≈ member cost).
+  /** The assign kernel over a broadcast codebook: the exact
+    * [[org.apache.spark.sql.graft.CentroidKernel]], or under `twoLevel`
+    * a [[twoLevelIndex]] that probes `probes` coarse cells. Releasing the
+    * kernel destroys `centroids` too.
     */
-  def twoLevelIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      centroids: Array[Array[Float]],
+  private[graft] def assignKernel(
+      centroids: Broadcast[Array[Array[Float]]],
+      twoLevel: Boolean,
+      probes: Int,
+      seed: Int): org.apache.spark.sql.graft.CentroidIndex =
+    if (twoLevel) twoLevelIndex(centroids, probes, seed)
+    else new org.apache.spark.sql.graft.CentroidKernel(centroids)
+
+  /** Build a [[org.apache.spark.sql.graft.TwoLevelCentroidKernel]] over a
+    * trained codebook: ~√k coarse cells (the arithmetic optimum when probe
+    * cost ≈ member cost) = driver Lloyd over the k centroids
+    * (codebook-sized work, never data-sized), member lists = exact
+    * assignment of each fine centroid to its cell.
+    */
+  private[graft] def twoLevelIndex(
+      centroids: Broadcast[Array[Array[Float]]],
       probes: Int = 4,
-      coarseCells: Int = 0,
       seed: Int = 42): org.apache.spark.sql.graft.TwoLevelCentroidKernel = {
-    require(centroids.nonEmpty, "twoLevelIndex: empty codebook")
-    val k = centroids.length
-    val kc = if (coarseCells > 0) math.min(coarseCells, k)
-      else math.max(1, math.round(math.sqrt(k.toDouble)).toInt)
-    val coarse = ApproxKnn.kmeans(centroids, kc, iters = 5, seed)
+    val fine = centroids.value
+    require(fine.nonEmpty, "twoLevelIndex: empty codebook")
+    val k = fine.length
+    val kc = math.max(1, math.round(math.sqrt(k.toDouble)).toInt)
+    val coarse = ApproxKnn.kmeans(fine, kc, iters = 5, seed)
     val members = Array.fill(coarse.length)(
       scala.collection.mutable.ArrayBuffer.empty[Int])
     var fi = 0
     while (fi < k) {
-      val c = centroids(fi)
+      val c = fine(fi)
       var best = 0
       var bestD = Double.MaxValue
       var ci = 0
@@ -183,11 +174,98 @@ object KMeans {
       members(best) += fi
       fi += 1
     }
-    new org.apache.spark.sql.graft.TwoLevelCentroidKernel(
-      spark.sparkContext.broadcast(centroids),
-      spark.sparkContext.broadcast(coarse),
-      spark.sparkContext.broadcast(members.map(_.toArray)),
+    val sc = org.apache.spark.SparkContext.getOrCreate()
+    new org.apache.spark.sql.graft.TwoLevelCentroidKernel(centroids,
+      sc.broadcast(coarse), sc.broadcast(members.map(_.toArray)),
       math.max(1, probes))
+  }
+
+  /** The preparation of an (id, vec) frame for a quantizer: the id as a
+    * long under `idAlias`, the vector as array<float> under `vecAlias`
+    * and a zero flag under `zeroAlias`. Under `spherical` (cosine) the
+    * vector is unit-normalized by [[unitVectors]]; otherwise it is kept
+    * and the flag is false.
+    */
+  private[graft] def prepare(df: DataFrame, idCol: String, vecCol: String,
+      spherical: Boolean, idAlias: String, vecAlias: String,
+      zeroAlias: String): DataFrame = {
+    val base = df.select(col(idCol).cast("long").as(idAlias),
+      col(vecCol).cast("array<float>").as(vecAlias))
+    if (spherical) unitVectors(base, vecAlias, vecAlias, zeroAlias)
+    else base.withColumn(zeroAlias, lit(false))
+  }
+
+  /** Adds the unit-normalized copy of `vecCol` (array<float>) as
+    * `unitAlias` (which may be `vecCol` itself) and its zero flag as
+    * `zeroAlias` — the cosine→L2 reduction: for unit vectors, cosine
+    * distance = squared L2 / 2 (exactly, up to float rounding), with
+    * identical ranking. The norm is materialized as its own column BEFORE
+    * the division lambda (`transform` is not codegen'd and codegen CSE
+    * skips lambda bodies — an inline norm would recompute the dot product
+    * per element). Zero vectors pass through unnormalized and keep the
+    * flag: the engine-wide convention (cosineDistance, HnswGraph) scores
+    * any pair involving a zero vector at distance 1.0, which the
+    * normalized-L2 form cannot express (it would yield 0.5).
+    */
+  private[graft] def unitVectors(df: DataFrame, vecCol: String,
+      unitAlias: String, zeroAlias: String): DataFrame =
+    df.withColumn("__norm", sqrt(
+        graft.functions.VectorExpressions.dotProduct(col(vecCol), col(vecCol))))
+      .withColumn(zeroAlias, !(col("__norm") > 0))
+      .withColumn(unitAlias,
+        when(!col(zeroAlias),
+          transform(col(vecCol), x => (x / col("__norm")).cast("float")))
+          .otherwise(col(vecCol)))
+      .drop("__norm")
+
+  /** The training side of one coarse quantizer: a [[prepare]]d frame
+    * with its id, vector and zero-flag columns. `what` names the caller
+    * in errors.
+    *
+    * Zero vectors stay out of training (under cosine a raw zero would
+    * pull a centroid off the sphere, and the distance-1.0 convention
+    * makes zero vectors list-agnostic anyway) unless no row is non-zero:
+    * then every distance is 1.0 and the quantizer trains on the zeros
+    * rather than fail. A caller that must refuse such a corpus passes
+    * only its non-zero rows.
+    */
+  private[graft] final class TrainingSet(frame: DataFrame, id: String,
+      vec: String, zero: String, sampleCap: Int, seed: Int, what: String) {
+
+    private def nonZero: DataFrame = frame.filter(!col(zero))
+
+    /** The bounded driver-side sample: the first `sampleCap` rows by
+      * `(xxhash64(id, seed), id)` — a TakeOrderedAndProject, uniform
+      * across the catalog and deterministic across layouts (the
+      * ShapeStats sampling rule). A bare limit() would read a storage
+      * prefix: on a time-ordered corpus under distribution drift that
+      * trains the quantizer on the OLDEST regime only, and on an IVF
+      * index's lists it reads whichever lists list first.
+      */
+    lazy val sample: Array[Array[Float]] = {
+      import frame.sparkSession.implicits._
+      def draw(df: DataFrame): Array[Array[Float]] = df
+        .orderBy(xxhash64(col(id), lit(seed)), col(id))
+        .limit(sampleCap)
+        .select(col(vec).cast("array<float>"))
+        .as[Array[Float]].collect()
+      val nz = draw(nonZero)
+      val s = if (nz.nonEmpty) nz else draw(frame)
+      require(s.nonEmpty, s"$what: no vectors to train on")
+      s
+    }
+
+    /** k coarse centroids: driver Lloyd ([[ApproxKnn.kmeans]]) on
+      * [[sample]], which caps k at the sample size; or, under
+      * `distributed`, [[train]] over the whole frame — the 10⁴–10⁵-list
+      * operating point, with only the k centroids ever on the driver.
+      */
+    def coarse(k: Int, iters: Int, distributed: Boolean): Array[Array[Float]] =
+      if (!distributed) ApproxKnn.kmeans(sample, math.min(k, sample.length), iters, seed)
+      else {
+        val nz = nonZero
+        train(if (nz.isEmpty) frame else nz, vec, k, iters, seed, what)
+      }
   }
 
   /** Mean squared distance to the nearest centroid — the quantization
@@ -204,11 +282,8 @@ object KMeans {
       twoLevelProbes: Int = 4,
       seed: Int = 42): Double = {
     require(centroids.nonEmpty, "KMeans.cost: empty codebook")
-    val spark = vecs.sparkSession
-    val kernel: org.apache.spark.sql.graft.CentroidIndex =
-      if (twoLevelAssign) twoLevelIndex(spark, centroids, twoLevelProbes, seed = seed)
-      else new org.apache.spark.sql.graft.CentroidKernel(
-        spark.sparkContext.broadcast(centroids))
+    val kernel = assignKernel(vecs.sparkSession.sparkContext.broadcast(centroids),
+      twoLevelAssign, twoLevelProbes, seed)
     try {
       val rows = vecs
         .select(col(vecCol).cast("array<float>").as("__v"))

@@ -123,20 +123,34 @@ class IvfIndexSpec extends SparkSpec {
     assert(got == exactCos)
   }
 
-  test("legacy pre-params index reads as squared-L2") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_legacy").toString
-    IvfIndex.build(emb, "vec_id", "embedding", dir, nList = 8)
-    // simulate an index persisted before params/ existed
-    val deleted = new java.io.File(s"$dir/params")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+  test("an older on-disk layout is refused, naming the rebuild") {
+    val dir = graft.util.TempDirs.register(
+      java.nio.file.Files.createTempDirectory("ivf_older").toString)
+    def search(usePq: Boolean) = IvfIndex
+      .search(spark, dir, emb.limit(5), "vec_id", "embedding", k = 3,
+        nProbe = 8, usePq = usePq).collect()
+    def older(missing: String)(run: => Any): Unit = {
+      val e = intercept[IllegalStateException](run)
+      assert(e.getMessage.contains(s"older on-disk layout (no $missing)") &&
+        e.getMessage.contains("IvfIndex.build"), e.getMessage)
     }
-    rm(deleted)
-    val got = IvfIndex
-      .search(spark, dir, emb, "vec_id", "embedding", k = 5, nProbe = 8)
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == exactTop5)
+    // rewrite a table without one of its columns, as older writers did
+    def dropColumn(table: String, column: String): Unit = {
+      val old = spark.read.parquet(s"$dir/$table").drop(column)
+      spark.createDataFrame(java.util.Arrays.asList(old.collect(): _*), old.schema)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$dir/$table")
+    }
+    IvfIndex.build(emb, "vec_id", "embedding", dir, nList = 8, pqM = 8)
+    dropColumn("pq", "residual")
+    search(usePq = false)
+    older("pq/residual")(search(usePq = true))
+    dropColumn("params", "n_at_train")
+    older("params/n_at_train")(search(usePq = false))
+    older("params/n_at_train")(IvfIndex.staleness(spark, dir))
+    new java.io.File(s"$dir/params").listFiles().foreach(_.delete())
+    new java.io.File(s"$dir/params").delete()
+    older("params/")(search(usePq = false))
   }
 
   test("index survives a fresh read: search works from paths alone") {
