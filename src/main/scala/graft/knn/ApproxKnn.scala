@@ -3,7 +3,6 @@ package graft.knn
 import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Approximate kNN — the scale path beyond brute force (SURVEY.md §7.3.3;
@@ -96,7 +95,7 @@ object ApproxKnn {
     // score INSIDE the bucket join projection, then dedupe the multi-table /
     // multi-probe collisions on scalars only — the dedup shuffle carries
     // (q, c, dist), never the vectors (they'd dominate shuffle bytes)
-    HnswSearch.topKMerge(
+    TopK.topKMerge(
       filtered
         .withColumn("dist", dist)
         .groupBy("query_id", "neighbor_id").agg(min("dist").as("dist")),
@@ -234,7 +233,7 @@ object ApproxKnn {
     val cosDist = // zero-vector convention: distance 1.0 (see KMeans.unitVectors)
       when(col("__query_zero") || col("__neighbor_zero"), lit(1.0))
         .otherwise(l2 / 2.0)
-    HnswSearch.topKMerge(
+    TopK.topKMerge(
       pairs
         .withColumn("dist", if (cosine) cosDist else l2)
         .select("query_id", "neighbor_id", "dist"),
@@ -380,8 +379,8 @@ object ApproxKnn {
     * query side stays un-quantized, and distances come from ADC — a
     * per-query `m × ksub` lookup table built once per partition, then `m`
     * byte-indexed reads per candidate. One `mapPartitions` pass over the
-    * codes keeps bounded per-query top-(rerank·k) partials (the
-    * broadcastKnn shuffle shape: no N² rows ever move).
+    * codes keeps bounded per-query top-(rerank·k) [[TopK.Partials]],
+    * merged in [[TopK.mergeTopK]] (no N² rows ever move).
     *
     * `rerank > 0` re-scores the top `rerank·k` ADC survivors per query
     * with EXACT distances against the original vectors (narrow pair rows
@@ -419,8 +418,9 @@ object ApproxKnn {
     val codes = pqCodes(cand, kernel)
 
     val keep = k * math.max(1, rerank)
-    val shortList = HnswSearch.topKMerge(
-      pqAdcPartials(codes, bcBooks, qRows, keep, excludeSelf, cosine), keep)
+    val shortList = TopK.mergeTopK(qry.sparkSession,
+      pqAdcPartials(codes, bcBooks, qRows, keep, excludeSelf, cosine),
+      qRows.map(_._1), keep)
     if (rerank <= 0) shortList.filter(col("rank") <= k)
     else pqExactRerank(shortList, queries, candidates, idCol, vecCol, k,
       cosine, broadcastQueries = true)
@@ -498,33 +498,35 @@ object ApproxKnn {
     val (cand, qry, bcBooks, kernel) = pqPrepare(queries, candidates,
       idCol, vecCol, cosine, m, ksub, kmeansIters, sampleCap, seed,
       "pqBlockKnn")
-    // one code scan shared by every block: lazy materialization (the
-    // setJaccardPairs rationale — constructing the plan must not run a
-    // job), first block's job writes the checkpoint blocks, later blocks
+    // one code scan shared by every block: lazy materialization, so the
+    // first block's scan writes the checkpoint blocks and later blocks
     // read them
     val codes = pqCodes(cand, kernel).localCheckpoint(eager = false)
 
     val keep = k * math.max(1, rerank)
-    val partials = idBlockBounds(qry, "query_id", nBlocks).flatMap { case (lo, hi) =>
+    // the blocks' query ids are disjoint, so each merges on its own
+    val merged = idBlockBounds(qry, "query_id", nBlocks).flatMap { case (lo, hi) =>
       val qRows = collectPqQueries(idBlock(qry, "query_id", lo, hi))
       if (qRows.isEmpty) None
-      else Some(pqAdcPartials(codes, bcBooks, qRows, keep, excludeSelf, cosine))
+      else Some(TopK.mergeTopK(qry.sparkSession,
+        pqAdcPartials(codes, bcBooks, qRows, keep, excludeSelf, cosine),
+        qRows.map(_._1), keep))
     }
-    require(partials.nonEmpty, "pqBlockKnn: empty query side")
-    val shortList = HnswSearch.topKMerge(unionChunked(partials), keep)
+    require(merged.nonEmpty, "pqBlockKnn: empty query side")
+    val shortList = unionChunked(merged)
     if (rerank <= 0) shortList.filter(col("rank") <= k)
     else pqExactRerank(shortList, queries, candidates, idCol, vecCol, k,
       cosine, broadcastQueries = false)
   }
 
-  /** Collect one (bounded) query block for the PQ broadcast: the caller
-    * guarantees the block size envelope.
+  /** Collect one (bounded) query block for the PQ broadcast, ordered by
+    * id: the caller guarantees the block size envelope.
     */
   private def collectPqQueries(qry: DataFrame): Array[(Long, Array[Float], Boolean)] = {
     import qry.sparkSession.implicits._
     qry.select(col("query_id"), col("__query_vec").cast("array<float>"),
         col("__query_zero"))
-      .as[(Long, Array[Float], Boolean)].collect()
+      .as[(Long, Array[Float], Boolean)].collect().sortBy(_._1)
   }
 
   /** The (id, m-byte code, zero flag) projection of a normalized
@@ -542,9 +544,9 @@ object ApproxKnn {
       .as[(Long, Array[Byte], Boolean)]
   }
 
-  /** One ADC pass of a broadcast query block over the code scan: per-query
-    * LUT built once per partition, bounded per-partition top-`keep`
-    * partials (the broadcastKnn shuffle shape — no N² rows ever move).
+  /** One ADC pass of a broadcast query block (ordered by id) over the
+    * code scan: per-query LUT built once per partition, bounded
+    * per-partition top-`keep` [[TopK.Partials]].
     */
   private def pqAdcPartials(
       codes: org.apache.spark.sql.Dataset[(Long, Array[Byte], Boolean)],
@@ -552,42 +554,22 @@ object ApproxKnn {
       qRows: Array[(Long, Array[Float], Boolean)],
       keep: Int,
       excludeSelf: Boolean,
-      cosine: Boolean): DataFrame = {
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val bcQ = spark.sparkContext.broadcast(qRows)
+      cosine: Boolean): org.apache.spark.rdd.RDD[TopK.Partials] = {
+    val bcQ = codes.sparkSession.sparkContext.broadcast(qRows)
     val (kL, ex, cos) = (keep, excludeSelf, cosine)
-    codes.mapPartitions { it =>
+    codes.rdd.mapPartitions { it =>
       val cb = bcBooks.value
       val q = bcQ.value
-      val n = q.length
-      val qIds = new Array[Long](n)
-      val qZero = new Array[Boolean](n)
-      val luts = new Array[Array[Float]](n)
-      var i = 0
-      while (i < n) {
-        qIds(i) = q(i)._1; qZero(i) = q(i)._3
-        luts(i) = cb.adcTable(q(i)._2)
-        i += 1
-      }
-      val heaps = Array.fill(n)(new org.apache.spark.sql.graft.TopKBuf(kL))
-      it.foreach { case (cid, code, czero) =>
-        var j = 0
-        while (j < n) {
-          if (!(ex && qIds(j) == cid)) {
-            val d =
-              if (cos && (qZero(j) || czero)) 1.0
-              else if (cos) cb.adcDist(code, luts(j)) / 2.0
-              else cb.adcDist(code, luts(j))
-            heaps(j).offer(d, cid)
-          }
-          j += 1
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        (0 until h.size).iterator.map(r => (qIds(qi), h.ids(r), h.dists(r)))
-      }
-    }.toDF("query_id", "neighbor_id", "dist")
+      val qZero = q.map(_._3)
+      val luts = q.map(r => cb.adcTable(r._2))
+      Iterator(TopK.scan(q.map(_._1), kL, ex,
+          it.map { case (cid, code, czero) => (cid, (code, czero)) }) {
+        case (code, czero) => j =>
+          if (cos && (qZero(j) || czero)) 1.0
+          else if (cos) cb.adcDist(code, luts(j)) / 2.0
+          else cb.adcDist(code, luts(j))
+      })
+    }
   }
 
   /** Truncated-dimension kNN — the Matryoshka/prefix-search shape
@@ -653,7 +635,7 @@ object ApproxKnn {
         if (cosine) graft.functions.VectorExpressions.cosineDistance(col("__qv"), col("__cv"))
         else graft.functions.VectorExpressions.squaredL2(col("__qv"), col("__cv")))
       .select("query_id", "neighbor_id", "dist")
-    HnswSearch.topKMerge(exact, k)
+    TopK.topKMerge(exact, k)
   }
 
   /** [[hnswBlockKnn]]'s scratch-dir placement guard, factored out so the
@@ -704,8 +686,8 @@ object ApproxKnn {
     * frame unrecoverable, a second reason the default is local-mode only.
     * With a caller-provided `scratchDir` each block comes back as
     * [[HnswIndex.search]] returns it: a local frame when its partials fit
-    * [[HnswSearch.driverMerges]], else a window merge computed lazily
-    * over the dir, recomputable while the caller keeps it.
+    * [[TopK.driverMerges]], else a range reduce computed lazily over the
+    * dir, recomputable while the caller keeps it.
     */
   def hnswBlockKnn(
       queries: DataFrame,
@@ -784,18 +766,18 @@ object ApproxKnn {
     * serialized or shuffled — the broadcast query set beams through
     * every shard (`efSearch`; `<= 0` is the full beam of each
     * partition's graph), and each task returns its per-query top-k as
-    * primitive arrays, which [[HnswSearch.mergeTopK]] merges. Per-shard
+    * [[TopK.Partials]], which [[TopK.mergeTopK]] merges. Per-shard
     * search is sublinear in partition size, so total query work scales
     * with `partitions · ef · log n_p` instead of N.
     *
     * Contract: (query_id, neighbor_id, dist, rank), rank by (dist,
     * neighbor_id) ascending as every kNN strategy ranks; deterministic
     * (seeded levels, index-tie-broken heaps). When the partials fit
-    * [[HnswSearch.driverMerges]] the result is a local frame, computed
-    * when this returns: two Spark jobs (the query collect and the
-    * build-and-beam fold) and no exchange; larger ones merge in the
-    * ranking window ([[HnswSearch.mergeTopK]]). `HnswGoldenSpec`'s
-    * `GoldenHnswKnn` digest pins the rows.
+    * [[TopK.driverMerges]] the result is a local frame, computed when
+    * this returns: two Spark jobs (the query collect and the
+    * build-and-beam fold) and no exchange; larger ones merge in a range
+    * reduce ([[TopK.rangeMerge]]). `HnswGoldenSpec`'s `GoldenHnswKnn`
+    * digest pins the rows.
     */
   def hnswKnn(
       queries: DataFrame,
@@ -813,7 +795,7 @@ object ApproxKnn {
     import spark.implicits._
     val cosine = HnswSearch.isCosine(metric)
     val bc = spark.sparkContext.broadcast(
-      HnswSearch.collectQueries(queries, idCol, vecCol, "hnswKnn"))
+      TopK.collectQueries(queries, idCol, vecCol, "hnswKnn"))
     val (mL, efC, efS, kL, ex) = (m, efConstruction, efSearch, k, excludeSelf)
 
     val partials = graft.util.Par.balance(
@@ -826,14 +808,14 @@ object ApproxKnn {
         Iterator(HnswSearch.beamAll(g, bc.value, kL, efS, ex))
       }
 
-    HnswSearch.mergeTopK(spark, partials, bc.value.length, k)
+    TopK.mergeTopK(spark, partials, bc.value.map(_._1), k)
   }
 }
 
 /** Shared query-side machinery for the in-memory ([[ApproxKnn.hnswKnn]])
   * and persisted ([[HnswIndex.search]]) HNSW paths — one implementation
-  * of the beam body, the query broadcast, and the partial merge, so the
-  * two paths cannot drift.
+  * of the beam body, so the two paths cannot drift. Both merge their
+  * per-shard [[TopK.Partials]] in [[TopK.mergeTopK]].
   */
 private[knn] object HnswSearch {
 
@@ -843,96 +825,16 @@ private[knn] object HnswSearch {
     case other => throw new IllegalArgumentException(s"unknown metric: $other")
   }
 
-  /** The query side on the driver, ordered by id (the order
-    * [[beamAll]]'s partials and [[mergeTopK]]'s result follow).
-    */
-  def collectQueries(queries: DataFrame, idCol: String, vecCol: String,
-      what: String): Array[(Long, Array[Float])] = {
-    import queries.sparkSession.implicits._
-    val qRows = queries
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect()
-    require(qRows.nonEmpty, s"$what: empty query side")
-    qRows.sortBy(_._1)
-  }
-
-  /** Per-query top-k partials as parallel primitive arrays, one entry
-    * per (query_id, neighbor_id, dist) row. Ordered: query ids ascend,
-    * and each query's run holds at most k entries ascending by
-    * [[before]]. The one value a shard task returns to the driver.
-    */
-  final class Partials(val qids: Array[Long], val nids: Array[Long],
-      val dists: Array[Double]) extends Serializable {
-    def size: Int = qids.length
-  }
-
-  object Partials {
-    val empty = new Partials(Array.emptyLongArray, Array.emptyLongArray,
-      Array.emptyDoubleArray)
-
-    /** The first `n` entries of the arrays. */
-    def of(qids: Array[Long], nids: Array[Long], dists: Array[Double],
-        n: Int): Partials =
-      if (n == qids.length) new Partials(qids, nids, dists)
-      else new Partials(java.util.Arrays.copyOf(qids, n),
-        java.util.Arrays.copyOf(nids, n), java.util.Arrays.copyOf(dists, n))
-
-    /** The first `n` rows of the arrays, grouped by ascending query id,
-      * as [[Partials]]: each query's run sorted by [[before]] and cut to
-      * `k`, in place. An insertion sort, because the kernel's rows
-      * arrive in (dist, id) order already ([[HnswGraph.searchInto]]), so
-      * only −0.0/NaN ties and a repeated query id move a row.
-      */
-    def ranked(qs: Array[Long], ns: Array[Long], ds: Array[Double], n: Int,
-        k: Int): Partials = {
-      var o = 0
-      var run = 0
-      while (run < n) {
-        var end = run + 1
-        while (end < n && qs(end) == qs(run)) {
-          val nid = ns(end)
-          val d = ds(end)
-          var j = end
-          while (j > run && before(d, nid, ds(j - 1), ns(j - 1))) {
-            ns(j) = ns(j - 1); ds(j) = ds(j - 1); j -= 1
-          }
-          ns(j) = nid; ds(j) = d
-          end += 1
-        }
-        val keep = math.min(k, end - run)
-        System.arraycopy(qs, run, qs, o, keep)
-        System.arraycopy(ns, run, ns, o, keep)
-        System.arraycopy(ds, run, ds, o, keep)
-        o += keep
-        run = end
-      }
-      of(qs, ns, ds, o)
-    }
-  }
-
-  /** The ranking window's order on (dist, neighbor_id), ascending.
-    * Distances compare as Spark's sort compares doubles
-    * (`SQLOrderingUtil.compareDoubles`): −0.0 equals 0.0, and NaN equals
-    * NaN and follows every other value. `java.lang.Double.compare`
-    * differs on both, so [[mergeTopK]] would then rank rows unlike
-    * [[topKMerge]].
-    */
-  def before(d1: Double, n1: Long, d2: Double, n2: Long): Boolean = {
-    val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-      .compareDoubles(d1, d2)
-    c < 0 || (c == 0 && n1 < n2)
-  }
-
   /** Beam every query through one shard's graph: per-query top-k partials
     * with self-exclusion (search k+1, drop self, keep k), copied out of
     * the kernel's ranked result arrays, which the next query reuses.
     * The beam is `max(efSearch, k + 1)`; `efSearch <= 0` is the full
     * beam, the shard's node count. This is the one place every HNSW
     * caller's beam is resolved. `queries` are ordered by id
-    * ([[collectQueries]]); a repeated id's hits join one run.
+    * ([[TopK.collectQueries]]); a repeated id's hits join one run.
     */
   def beamAll(g: HnswGraph, queries: Array[(Long, Array[Float])], k: Int,
-      efSearch: Int, excludeSelf: Boolean): Partials = {
+      efSearch: Int, excludeSelf: Boolean): TopK.Partials = {
     val want = k + (if (excludeSelf) 1 else 0)
     val ef = math.max(if (efSearch > 0) efSearch else g.size, k + 1)
     val ids = new Array[Long](math.max(0, math.min(want, g.size)))
@@ -955,114 +857,6 @@ private[knn] object HnswSearch {
         i += 1
       }
     }
-    Partials.ranked(qs, ns, ds, n, k)
-  }
-
-  /** Two [[Partials]] into one: per query id, the first k entries of the
-    * union by [[before]]. Linear in the two sizes.
-    */
-  def merge(a: Partials, b: Partials, k: Int): Partials = {
-    if (a.size == 0) return b
-    if (b.size == 0) return a
-    val n = a.size + b.size
-    val qs = new Array[Long](n)
-    val ns = new Array[Long](n)
-    val ds = new Array[Double](n)
-    var i = 0
-    var j = 0
-    var o = 0
-    while (i < a.size || j < b.size) {
-      val q =
-        if (j == b.size || (i < a.size && a.qids(i) <= b.qids(j))) a.qids(i)
-        else b.qids(j)
-      var kept = 0
-      while ((i < a.size && a.qids(i) == q) || (j < b.size && b.qids(j) == q)) {
-        val inA = i < a.size && a.qids(i) == q
-        val inB = j < b.size && b.qids(j) == q
-        val fromA = !inB ||
-          (inA && !before(b.dists(j), b.nids(j), a.dists(i), a.nids(i)))
-        if (kept < k) {
-          qs(o) = q
-          if (fromA) { ns(o) = a.nids(i); ds(o) = a.dists(i) }
-          else { ns(o) = b.nids(j); ds(o) = b.dists(j) }
-          o += 1; kept += 1
-        }
-        if (fromA) i += 1 else j += 1
-      }
-    }
-    Partials.of(qs, ns, ds, o)
-  }
-
-  /** The most partial entries (shards · queries · k) one merge takes in
-    * on the driver: 2^20, 24 MiB of task results. A serving request is
-    * far below it (`ann_serve`'s bulk request: 16 shards · 1024 queries
-    * · k 10 = 163,840); a grid block is far above it (32 shards ·
-    * 100,000 queries · k 25 = 8·10^7).
-    */
-  val DriverMergeEntries: Long = 1L << 20
-
-  /** Whether `entries` partials fold on the driver: at most
-    * [[DriverMergeEntries]], and at most half of
-    * `spark.driver.maxResultSize` at 24 bytes an entry — the bound Spark
-    * puts on the task results of one job (0: no bound).
-    */
-  def driverMerges(conf: org.apache.spark.SparkConf, entries: Long): Boolean = {
-    val max = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    entries <= DriverMergeEntries && (max <= 0 || entries * 24 <= max / 2)
-  }
-
-  /** The per-query top-k of every shard's [[Partials]] (`shards`, one
-    * per partition, over `queries` query vectors), row for row what
-    * [[topKMerge]] returns for the same partials (`HnswSearchMergeSpec`),
-    * as a frame of [[IvfIndex.searchSchema]].
-    *
-    * When the partials fit [[driverMerges]], one fold of the shard
-    * results on the driver ([[merge]]) ranks them by position: a local
-    * frame ordered by (query_id, rank), computed when this returns, with
-    * one job and no exchange. Larger partials merge in [[topKMerge]]'s
-    * window, a distributed frame computed lazily, so neither the driver
-    * nor `spark.driver.maxResultSize` sees them.
-    */
-  def mergeTopK(spark: org.apache.spark.sql.SparkSession,
-      shards: org.apache.spark.rdd.RDD[Partials], queries: Int,
-      k: Int): DataFrame = {
-    if (!driverMerges(spark.sparkContext.getConf,
-        shards.getNumPartitions.toLong * queries * k)) {
-      val rows = shards.flatMap(p => Iterator.tabulate(p.size)(i =>
-        org.apache.spark.sql.Row(p.qids(i), p.nids(i), p.dists(i))))
-      return topKMerge(spark.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType(IvfIndex.searchSchema.take(3))), k)
-    }
-    val all = shards.fold(Partials.empty)(merge(_, _, k))
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](all.size)
-    var rank = 0
-    var i = 0
-    while (i < all.size) {
-      rank = if (i > 0 && all.qids(i - 1) == all.qids(i)) rank + 1 else 1
-      rows.add(org.apache.spark.sql.Row(all.qids(i), all.nids(i),
-        all.dists(i), rank))
-      i += 1
-    }
-    spark.createDataFrame(rows, IvfIndex.searchSchema)
-  }
-
-  /** Merge per-block partial frames into the global per-query top-k:
-    * (query_id, neighbor_id, dist, rank), rank 1-based ascending by
-    * (dist, neighbor_id) — the merge of the distributed strategies
-    * ([[KnnJoin]]'s, LSH, IVF and the exact re-rank), whose partials
-    * stay frames.
-    *
-    * A ranking window, not a bounded top-k aggregate: every partial is
-    * already top-k-bounded per query, so the window's codegen'd sort
-    * beats an object aggregate's per-row buffers: the aggregate ran
-    * 1.42–1.56× slower on the 200k-key grid tier, whose window plan
-    * SCALE_r16_default_gate records. A bounded aggregate wins only when
-    * per-group row counts are unbounded.
-    */
-  def topKMerge(partials: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(asc("dist"), asc("neighbor_id"))
-    partials
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    TopK.Partials.ranked(qs, ns, ds, n, k)
   }
 }

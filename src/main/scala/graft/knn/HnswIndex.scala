@@ -820,19 +820,19 @@ object HnswIndex {
 
   /** Probe the persisted index: one task per live shard beams the
     * broadcast query set through that shard's graph and returns its
-    * per-query top-k as primitive arrays; [[HnswSearch.mergeTopK]] merges
+    * per-query top-k as [[TopK.Partials]]; [[TopK.mergeTopK]] merges
     * them into the ranked result — the [[ApproxKnn.hnswKnn]] execution
     * over restored state. `m` and the metric come from the persisted
     * `params/`, never from the caller.
     *
     * Contract: a frame of [[IvfIndex.searchSchema]], ranked by (dist,
     * neighbor_id) ascending exactly as the ranking window of
-    * [[HnswSearch.topKMerge]] would rank the same partials. A request
+    * [[TopK.topKMerge]] would rank the same partials. A request
     * whose partials (shards · |queries| · k) fit
-    * [[HnswSearch.driverMerges]] — every serving request — is merged on
+    * [[TopK.driverMerges]] — every serving request — is merged on
     * the driver into a local frame, computed when this returns: two
     * Spark jobs (the query collect and the shard fold) and no exchange.
-    * A larger one merges in the window, lazily. A shard's graph is
+    * A larger one merges in a range reduce, lazily. A shard's graph is
     * restored from its image ([[readImage]]) or taken from the
     * executor's [[ResidentShards]], which keys it by directory,
     * params generation, generation and shard and checks the image's
@@ -888,7 +888,7 @@ object HnswIndex {
     val (m, metric, efDefault) = (params.m, params.metric, params.efSearch)
     val cosine = HnswSearch.isCosine(metric)
     val bc = spark.sparkContext.broadcast(
-      HnswSearch.collectQueries(queries, idCol, vecCol, "HnswIndex.search"))
+      TopK.collectQueries(queries, idCol, vecCol, "HnswIndex.search"))
 
     // the UNTUNED call serves the beam the index declares for itself
     // (params' ef_search — 64 on every index built before the column
@@ -918,7 +918,7 @@ object HnswIndex {
           want, m, cosine)
         HnswSearch.beamAll(g, bc.value, kL, efS, ex)
       }
-    HnswSearch.mergeTopK(spark, partials, bc.value.length, k)
+    TopK.mergeTopK(spark, partials, bc.value.map(_._1), k)
   }
 
   /** `dir` as the filesystem qualifies it: the directory part of a

@@ -1097,7 +1097,7 @@ object IvfIndex {
           col("__query_vec"), col("__neighbor_vec"))
         else graft.functions.VectorExpressions.squaredL2(
           col("__query_vec"), col("__neighbor_vec"))
-      HnswSearch.topKMerge(
+      TopK.topKMerge(
         pairs.withColumn("dist", dist).select("query_id", "neighbor_id", "dist"),
         k)
     } else {
@@ -1128,7 +1128,7 @@ object IvfIndex {
         else graft.functions.VectorExpressions.pqAdc(
           col("__adc_vec"), col("code"), pqKernel)
       val keep = if (rerank > 0) k * rerank else k
-      val shortList = HnswSearch.topKMerge(
+      val shortList = TopK.topKMerge(
         pairs
           .withColumn("dist", if (cosine) adc / 2.0 else adc)
           .select("query_id", "neighbor_id", "dist", "__query_vec"),
@@ -1148,7 +1148,7 @@ object IvfIndex {
         // ([[measureAdcDisplacement]]) reads both orderings from ONE
         // search instead of paying the probe+scan+ADC+window subtree
         // twice (the r19 q58 regression: two searches per anchor)
-        val reranked = HnswSearch.topKMerge(
+        val reranked = TopK.topKMerge(
           shortList
             .select(Seq(col("query_id"), col("neighbor_id"),
               col("__query_vec")) ++

@@ -17,12 +17,11 @@ import graft.functions.Dist
   *    correctness oracle for the fast path.
   *  - [[broadcastKnn]]: broadcast the query side as primitive float arrays;
   *    one `mapPartitions` pass over candidates keeps a bounded per-query
-  *    top-k (partial top-k per partition), then a final ranking window over
-  *    only |partitions|·|Q|·k rows merges partials. No N² rows ever hit a
-  *    shuffle — this is the 100 TB path for |Q| up to ~10⁶ (a 64-d float
-  *    query set of 10⁶ rows broadcasts at ~256 MB). Beyond that: block the
-  *    query side and union per-block results (same operator, outer loop),
-  *    or switch to LSH/IVF pruning (planned round 2+).
+  *    top-k per partition ([[TopK.Partials]]), and [[TopK.mergeTopK]]
+  *    merges only |partitions|·|Q|·k entries. No N² rows ever hit a
+  *    shuffle — this is the path for |Q| up to ~10⁶ (a 64-d float query
+  *    set of 10⁶ rows broadcasts at ~256 MB). Beyond that: block the
+  *    query side ([[ApproxKnn.blockKnn]]) or prune with LSH/IVF/HNSW.
   *
   * Distances: squared L2 (stored squared, FAISS convention) or cosine
   * distance. Ties broken by neighbor id ascending — deterministic output.
@@ -64,7 +63,7 @@ object KnnJoin {
     val joined = q.crossJoin(c)
     val filtered =
       if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id")) else joined
-    HnswSearch.topKMerge(
+    TopK.topKMerge(
       filtered
         .withColumn("dist", distExpr(metric, col("__qv"), col("__cv")))
         .select("query_id", "neighbor_id", "dist"),
@@ -72,7 +71,9 @@ object KnnJoin {
   }
 
   /** Scalable exact kNN: broadcast queries, partial top-k per candidate
-    * partition, window merge. Same contract as [[windowKnn]].
+    * partition, merged by [[TopK.mergeTopK]] (a local frame, computed
+    * when this returns, whenever the partials fit [[TopK.driverMerges]]).
+    * Same contract as [[windowKnn]].
     */
   def broadcastKnn(
       queries: DataFrame,
@@ -85,25 +86,16 @@ object KnnJoin {
     val spark = candidates.sparkSession
     import spark.implicits._
 
-    val qRows: Array[(Long, Array[Float])] = queries
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect()
-    require(qRows.nonEmpty, "broadcastKnn: empty query side")
+    val qRows = TopK.collectQueries(queries, idCol, vecCol, "broadcastKnn")
     val cosine = HnswSearch.isCosine(metric)
     val bc = spark.sparkContext.broadcast(qRows)
 
     val partials = graft.util.Par.balance(
       candidates.select(col(idCol).cast("long"), col(vecCol).cast("array<float>")))
       .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        org.apache.spark.sql.graft.TopKBuf.partials(bc.value, k, cosine,
-            excludeSelf, it)
-          .flatMap { case (qid, h) =>
-            (0 until h.size).iterator.map(r => (qid, h.ids(r), h.dists(r)))
-          }
-      }
-      .toDF("query_id", "neighbor_id", "dist")
+      .rdd
+      .mapPartitions(it => Iterator(TopK.exact(bc.value, k, cosine, excludeSelf, it)))
 
-    HnswSearch.topKMerge(partials, k)
+    TopK.mergeTopK(spark, partials, qRows.map(_._1), k)
   }
 }

@@ -194,10 +194,11 @@ object SemLinkGrid {
     * (tp/fp/fn, P/R/F1 through [[Eval.prfColumns]]) and every k's NDCG
     * (the [[Eval.ndcgAtK]] semantics through the shared [[Eval.idcg]]),
     * collected once. On an exact catalog of one broadcast block the call
-    * runs the same seven Spark jobs whatever the number of cells: the
-    * catalog count, the broadcast kNN's query collect, the kNN merge's
-    * exchange, the truth's exchange and broadcast, and the aggregate's
-    * exchange and result.
+    * runs the same Spark jobs whatever the number of cells: the catalog
+    * count, the broadcast kNN's query collect and its scan, whose
+    * partials fold on the driver ([[graft.knn.TopK.mergeTopK]]), the
+    * truth's exchange and broadcast, and the aggregate's exchange and
+    * result.
     */
   def gridCellsFromCatalog(
       catalog: DataFrame, // (key, vec) + anything else, pruned here

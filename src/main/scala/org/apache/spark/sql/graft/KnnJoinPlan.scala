@@ -7,12 +7,14 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+
+import _root_.graft.knn.TopK
 
 /** Whole-operator kNN join as a first-class plan node (SURVEY.md §7.3.3
   * phase 3): `KnnJoinPlan(queries, candidates, k, metric)` produces, for
@@ -21,11 +23,13 @@ import org.apache.spark.sql.types._
   * Child contract (enforced by the [[KnnJoinOp]] API wrapper): each child
   * outputs exactly (id: bigint, vec: array<float>).
   *
-  * The physical operator broadcasts the query side, keeps bounded
-  * per-query top-k accumulators per candidate partition, then merges
-  * partials with ONE reduceByKey shuffle of k-sized buffers — the same
-  * no-N²-shuffle execution as graft.knn.KnnJoin.broadcastKnn, but planned
-  * by Catalyst so the operator composes inside larger plans.
+  * The physical operator runs graft.knn.KnnJoin.broadcastKnn's
+  * execution, planned by Catalyst so the operator composes inside larger
+  * plans: it broadcasts the query side, scans each candidate partition
+  * into per-query top-k partials (graft.knn.TopK.exact), and merges them
+  * with graft.knn.TopK.mergeTopK — on the driver when they fit its
+  * bound, else in a reduce by query-id range. No N² rows ever hit a
+  * shuffle.
   */
 case class KnnJoinPlan(
     left: LogicalPlan,
@@ -66,92 +70,6 @@ object KnnJoinPlan {
     AttributeReference("rank", IntegerType, nullable = false)())
 }
 
-/** Serializable bounded top-k accumulator (sorted ascending by (dist, id)). */
-final class TopKBuf(val k: Int) extends Serializable {
-  val dists = new Array[Double](k)
-  val ids = new Array[Long](k)
-  var size = 0
-  def offer(d: Double, id: Long): Unit = {
-    if (size < k || d < dists(size - 1) ||
-      (d == dists(size - 1) && id < ids(size - 1))) {
-      var pos = if (size < k) size else size - 1
-      while (pos > 0 && (dists(pos - 1) > d ||
-        (dists(pos - 1) == d && ids(pos - 1) > id))) {
-        dists(pos) = dists(pos - 1); ids(pos) = ids(pos - 1); pos -= 1
-      }
-      dists(pos) = d; ids(pos) = id
-      if (size < k) size += 1
-    }
-  }
-  def merge(o: TopKBuf): TopKBuf = {
-    var i = 0
-    while (i < o.size) { offer(o.dists(i), o.ids(i)); i += 1 }
-    this
-  }
-}
-
-object TopKBuf {
-
-  /** The exact kNN kernel of one candidate partition, shared by
-    * graft.knn.KnnJoin.broadcastKnn and [[KnnJoinExec]]: a bounded top-k
-    * per query over `candidates`, under squared L2 or cosine distance
-    * (1 − cos, and 1.0 when either vector is zero). With `excludeSelf` a
-    * query skips the candidate carrying its own id. Returns one
-    * (query id, top-k) per query, in query order.
-    */
-  def partials(
-      queries: Array[(Long, Array[Float])],
-      k: Int,
-      cosine: Boolean,
-      excludeSelf: Boolean,
-      candidates: Iterator[(Long, Array[Float])]): Iterator[(Long, TopKBuf)] = {
-    val n = queries.length
-    val qIds = new Array[Long](n)
-    val qVecs = new Array[Array[Float]](n)
-    val qNorms = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      qIds(i) = queries(i)._1; qVecs(i) = queries(i)._2
-      if (cosine) qNorms(i) = math.sqrt(dot(qVecs(i), qVecs(i)))
-      i += 1
-    }
-    val heaps = Array.fill(n)(new TopKBuf(k))
-    candidates.foreach { case (cid, cvec) =>
-      val cNorm = if (cosine) math.sqrt(dot(cvec, cvec)) else 0.0
-      var j = 0
-      while (j < n) {
-        if (!(excludeSelf && qIds(j) == cid)) {
-          val d =
-            if (cosine) {
-              val den = qNorms(j) * cNorm
-              if (den > 0) 1.0 - dot(qVecs(j), cvec) / den else 1.0
-            } else l2sq(qVecs(j), cvec)
-          heaps(j).offer(d, cid)
-        }
-        j += 1
-      }
-    }
-    qIds.iterator.zip(heaps.iterator)
-  }
-
-  // min-clamped like every other distance kernel in the engine (codegen
-  // SquaredL2/DotProduct, HnswGraph, PQ zero-padding): a short vector
-  // compares on the shared prefix instead of crashing the task
-  private def l2sq(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
-    s
-  }
-
-  private def dot(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
-  }
-}
-
 case class KnnJoinExec(
     output: Seq[Attribute],
     left: SparkPlan,
@@ -161,34 +79,18 @@ case class KnnJoinExec(
     excludeSelf: Boolean) extends BinaryExecNode {
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val cosine = metric == "cosine"
-    val kLocal = k
-    val exclude = excludeSelf
+    val (cosine, kLocal, exclude) = (metric == "cosine", k, excludeSelf)
 
     val queryRows: Array[(Long, Array[Float])] = left.executeCollect().map { r =>
       (r.getLong(0), r.getArray(1).toFloatArray())
-    }
+    }.sortBy(_._1)
     val bc = sparkContext.broadcast(queryRows)
 
-    val partials: RDD[(Long, TopKBuf)] = right.execute().mapPartitions { it =>
-      TopKBuf.partials(bc.value, kLocal, cosine, exclude,
-        it.map(row => (row.getLong(0), row.getArray(1).toFloatArray())))
-        .filter(_._2.size > 0)
+    val partials = right.execute().mapPartitions { it =>
+      Iterator(TopK.exact(bc.value, kLocal, cosine, exclude,
+        it.map(row => (row.getLong(0), row.getArray(1).toFloatArray()))))
     }
-
-    partials.reduceByKey(_.merge(_)).mapPartitions { it =>
-      val proj = UnsafeProjection.create(output.map(_.dataType).toArray)
-      val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(4)
-      it.flatMap { case (qid, h) =>
-        (0 until h.size).iterator.map { r =>
-          row.update(0, qid)
-          row.update(1, h.ids(r))
-          row.update(2, h.dists(r))
-          row.update(3, r + 1)
-          proj(row).copy().asInstanceOf[InternalRow]
-        }
-      }
-    }
+    TopK.mergeTopK(session, partials, queryRows.map(_._1), k).queryExecution.toRdd
   }
 
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =

@@ -67,6 +67,44 @@ class KnnJoinSpec extends SparkSpec {
     assert(decreasing.count() == 0)
   }
 
+  /** One query at the origin against [id 7 with a NaN component, id 3
+    * finite], in that order: the window ranks the NaN distance last, so
+    * at k = 1 the finite candidate must displace it from a full buffer.
+    */
+  private def nanCase = {
+    import spark.implicits._
+    val queries = Seq((1L, Array(0f, 0f))).toDF("vec_id", "embedding")
+    val cands = Seq((7L, Array(Float.NaN, 0f)), (3L, Array(1f, 1f)))
+    val oneSlice = spark.createDataFrame(spark.sparkContext.parallelize(cands, 1))
+      .toDF("vec_id", "embedding")
+    val want = KnnJoin.windowKnn(queries, oneSlice, "vec_id", "embedding", 1)
+      .select("query_id", "neighbor_id", "dist", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
+    assert(want == Seq((1L, 3L, 2.0, 1)))
+    (cands, oneSlice, want)
+  }
+
+  test("the exact partition scan ranks a NaN distance last, as the window does") {
+    val (cands, _, want) = nanCase
+    val p = graft.knn.TopK.exact(Array((1L, Array(0f, 0f))), 1, cosine = false,
+      excludeSelf = true, cands.iterator)
+    assert(graft.knn.TopK.rows(p)
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq == want)
+  }
+
+  test("knn_join over one candidate partition ranks a NaN distance last, " +
+    "as the window does") {
+    import org.apache.spark.sql.graft.KnnJoinOp
+    GraftFunctions.register(spark)
+    val (_, oneSlice, want) = nanCase
+    val queries = spark.createDataFrame(Seq((1L, Array(0f, 0f))))
+      .toDF("vec_id", "embedding")
+    val got = KnnJoinOp.knnJoin(queries, oneSlice, "vec_id", "embedding", 1)
+      .select("query_id", "neighbor_id", "dist", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
+    assert(got == want)
+  }
+
   test("distance symmetry: dist(a,b) == dist(b,a)") {
     import graft.functions.Dist
     val pairs = emb.limit(20).as("a").crossJoin(emb.limit(20).as("b"))

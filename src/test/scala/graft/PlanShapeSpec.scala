@@ -134,11 +134,13 @@ class PlanShapeSpec extends SparkSpec {
     knn.collect()
     val plan = knn.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
-    // the scale path: broadcast queries + mapPartitions partial top-k;
-    // the only window is the |parts|·|Q|·k partial merge, never an N² join
+    // the scale path: broadcast queries + a per-partition top-k scan
+    // whose |parts|·|Q|·k partials fold on the driver, so the kNN enters
+    // the plan as a local relation; never an N² join
     assert(!plan.contains("CartesianProduct"))
     assert(!plan.contains("BroadcastNestedLoopJoin"))
-    assert(plan.contains("MapPartitions"))
+    assert(plan.contains("LocalTableScan"))
+    assert(graft.pipeline.SemLinkGrid.gridKnnIds(embedded, 5)._1.isLocal)
   }
 
   test("kNN queries never plan a cartesian/nested-loop join") {
