@@ -60,9 +60,25 @@ class IvfGoldenSpec extends SparkSpec {
     (0L until 24L).map(i => (i, new Array[Float](8))).toDF("vec_id", "embedding")
   }
 
-  private def tempDir(tag: String): String =
-    graft.util.TempDirs.register(
+  private val dirs = scala.collection.mutable.Map[String, String]()
+
+  private def tempDir(tag: String): String = {
+    val d = graft.util.TempDirs.register(
       java.nio.file.Files.createTempDirectory(s"ivf_golden_$tag").toString)
+    dirs(tag) = d
+    d
+  }
+
+  /** The raw bits of the post-build `adc_anchor` displacement of the
+    * index [[built]] under `tag`, in hex.
+    */
+  private def anchor(tag: String): String = {
+    val r = spark.read.parquet(s"${dirs(tag)}/adc_anchor")
+      .select("disp_at_train").collect()
+    assert(r.length == 1)
+    java.lang.Long.toHexString(
+      java.lang.Double.doubleToRawLongBits(r.head.getDouble(0)))
+  }
 
   /** (query_id, neighbor_id, dist, rank) rows in (query, rank) order. */
   private def rows(df: DataFrame): String = {
@@ -166,7 +182,9 @@ class IvfGoldenSpec extends SparkSpec {
         pqM = 8, pqByResidual = false),
       "build two-level" -> built("two", twoLevelAssign = true),
       "build cosine pq distributed" -> built("dist",
-        metric = KnnJoin.MetricCosine, pqM = 8, distributedTrain = true)),
+        metric = KnnJoin.MetricCosine, pqM = 8, distributedTrain = true),
+      "adc anchor: pq residual, cosine pq raw" ->
+        Seq(anchor("pqres"), anchor("pqraw"))),
       Golden)
   }
 
@@ -219,7 +237,10 @@ class IvfGoldenSpec extends SparkSpec {
     check(Seq(
       "zeros build" -> (index(dir) :+ rows(IvfIndex.search(spark, dir, q,
         "vec_id", "embedding", k = 3, nProbe = 1))),
-      "zeros ivfKnn" -> Seq(rows(ApproxKnn.ivfKnn(q, zeros, "vec_id",
+      // the post-build ADC anchors, computed at commit f4ddc78
+    "adc anchor: pq residual, cosine pq raw" -> Seq(
+      "401bd4cccccccccd", "4018c1999999999a"),
+    "zeros ivfKnn" -> Seq(rows(ApproxKnn.ivfKnn(q, zeros, "vec_id",
         "embedding", k = 3, nList = 4, nProbe = 1,
         metric = KnnJoin.MetricCosine))),
       "zeros ivfKnn distributed" -> Seq(rows(ApproxKnn.ivfKnn(q, zeros,
@@ -299,6 +320,9 @@ class IvfGoldenSpec extends SparkSpec {
       "e3b0c44298fc1c149afbf4c8996fb92427ae41e4649b934ca495991b7852b855",
       "c3f42ceb9e4d9e1d9d3d9209e3ac9009af7326addab3c8bca0c4520d0a9feccf",
       "a9e3c5a89d114c9b948330e8ce994fe618585bda583de62ebf00664a7bfcab45"),
+    // the post-build ADC anchors, computed at commit f4ddc78
+    "adc anchor: pq residual, cosine pq raw" -> Seq(
+      "401bd4cccccccccd", "4018c1999999999a"),
     "zeros ivfKnn" -> Seq(
       "a9e3c5a89d114c9b948330e8ce994fe618585bda583de62ebf00664a7bfcab45"),
     "zeros ivfKnn distributed" -> Seq(

@@ -153,6 +153,21 @@ class IvfIndexSpec extends SparkSpec {
     older("params/")(search(usePq = false))
   }
 
+  test("an empty query frame returns an empty frame of searchSchema") {
+    val dir = graft.util.TempDirs.register(
+      java.nio.file.Files.createTempDirectory("ivf_noq").toString)
+    IvfIndex.build(emb, "vec_id", "embedding", dir, nList = 4, pqM = 8)
+    for (usePq <- Seq(false, true); rerank <- Seq(0, 4)) {
+      val none = IvfIndex.search(spark, dir, emb.filter(col("vec_id") < 0),
+        "vec_id", "embedding", k = 3, nProbe = 2, usePq = usePq,
+        rerank = rerank)
+      assert(none.schema.map(f => (f.name, f.dataType)) ==
+        IvfIndex.searchSchema.map(f => (f.name, f.dataType)),
+        s"usePq=$usePq rerank=$rerank")
+      assert(none.collect().isEmpty, s"usePq=$usePq rerank=$rerank")
+    }
+  }
+
   test("index survives a fresh read: search works from paths alone") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_idx3").toString
     IvfIndex.build(emb, "vec_id", "embedding", dir, nList = 4)
