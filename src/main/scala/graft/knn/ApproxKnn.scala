@@ -85,13 +85,8 @@ object ApproxKnn {
       if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
       else joined
 
-    val dist = metric match {
-      case KnnJoin.MetricL2Sq =>
-        graft.functions.VectorExpressions.squaredL2(col("__query_vec"), col("__neighbor_vec"))
-      case KnnJoin.MetricCosine =>
-        graft.functions.VectorExpressions.cosineDistance(col("__query_vec"), col("__neighbor_vec"))
-      case m => throw new IllegalArgumentException(s"unknown metric: $m")
-    }
+    val dist = KnnJoin.distExpr(KnnJoin.isCosine(metric), col("__query_vec"),
+      col("__neighbor_vec"))
     // score INSIDE the bucket join projection, then dedupe the multi-table /
     // multi-probe collisions on scalars only — the dedup shuffle carries
     // (q, c, dist), never the vectors (they'd dominate shuffle bytes)
@@ -200,7 +195,7 @@ object ApproxKnn {
       distributedTrain: Boolean = false): DataFrame = {
     val spark = candidates.sparkSession
     require(nProbe > 0, s"ivfKnn: nProbe must be positive, got $nProbe")
-    val cosine = HnswSearch.isCosine(metric)
+    val cosine = KnnJoin.isCosine(metric)
 
     val cand = KMeans.prepare(candidates, idCol, vecCol, cosine,
       "neighbor_id", "__neighbor_vec", "__neighbor_zero")
@@ -406,7 +401,7 @@ object ApproxKnn {
       sampleCap: Int = 20000,
       seed: Int = 42,
       excludeSelf: Boolean = true): DataFrame = {
-    val cosine = HnswSearch.isCosine(metric)
+    val cosine = KnnJoin.isCosine(metric)
     val (cand, qry, bcBooks, kernel) = pqPrepare(queries, candidates,
       idCol, vecCol, cosine, m, ksub, kmeansIters, sampleCap, seed, "pqKnn")
 
@@ -488,7 +483,7 @@ object ApproxKnn {
       seed: Int = 42,
       excludeSelf: Boolean = true,
       blockSize: Int = 100000): DataFrame = {
-    val cosine = HnswSearch.isCosine(metric)
+    val cosine = KnnJoin.isCosine(metric)
     val n = queries.count()
     val nBlocks = math.max(1L, (n + blockSize - 1) / blockSize).toInt
     if (nBlocks == 1)
@@ -562,8 +557,8 @@ object ApproxKnn {
       val q = bcQ.value
       val qZero = q.map(_._3)
       val luts = q.map(r => cb.adcTable(r._2))
-      Iterator(TopK.scan(q.map(_._1), kL, ex,
-          it.map { case (cid, code, czero) => (cid, (code, czero)) }) {
+      Iterator(TopK.scan(q.map(_._1), kL, ex, TopK.everyQuery(q.length,
+          it.map { case (cid, code, czero) => (cid, (code, czero)) })) {
         case (code, czero) => j =>
           if (cos && (qZero(j) || czero)) 1.0
           else if (cos) cb.adcDist(code, luts(j)) / 2.0
@@ -598,7 +593,7 @@ object ApproxKnn {
       rerank: Int = 4,
       excludeSelf: Boolean = true): DataFrame = {
     require(truncDim > 0, s"truncatedKnn: truncDim must be positive, got $truncDim")
-    val cosine = HnswSearch.isCosine(metric)
+    val cosine = KnnJoin.isCosine(metric)
     def trunc(df: DataFrame) = df.select(col(idCol),
       slice(col(vecCol), 1, truncDim).as(vecCol))
     val keep = k * math.max(1, rerank)
@@ -608,13 +603,15 @@ object ApproxKnn {
       cosine, broadcastQueries = true)
   }
 
-  /** Exact refinement of a short list (ADC or truncated-dimension):
-    * narrow (q, c) pair rows join back to the vector tables. The
-    * candidate join is a plain shuffle join on 8-byte ids; `broadcastQueries` hints the query-vector side
-    * only on the single-broadcast path — the block path (query side too
-    * large to broadcast by definition) shuffles both.
+  /** Exact refinement of a short list (ADC or truncated-dimension, and
+    * [[IvfIndex]]'s PQ search): narrow (q, c) pair rows join back to the
+    * vector tables, and the ranking window keeps k per query. The
+    * candidate join is a plain shuffle join on 8-byte ids;
+    * `broadcastQueries` hints the query-vector side only on the
+    * single-broadcast paths — the block path (query side too large to
+    * broadcast by definition) shuffles both.
     */
-  private def pqExactRerank(
+  private[knn] def pqExactRerank(
       shortList: DataFrame,
       queries: DataFrame,
       candidates: DataFrame,
@@ -631,9 +628,7 @@ object ApproxKnn {
     val exact = shortList.select("query_id", "neighbor_id")
       .join(qv, "query_id")
       .join(cv, "neighbor_id")
-      .withColumn("dist",
-        if (cosine) graft.functions.VectorExpressions.cosineDistance(col("__qv"), col("__cv"))
-        else graft.functions.VectorExpressions.squaredL2(col("__qv"), col("__cv")))
+      .withColumn("dist", KnnJoin.distExpr(cosine, col("__qv"), col("__cv")))
       .select("query_id", "neighbor_id", "dist")
     TopK.topKMerge(exact, k)
   }
@@ -793,7 +788,7 @@ object ApproxKnn {
       excludeSelf: Boolean = true): DataFrame = {
     val spark = candidates.sparkSession
     import spark.implicits._
-    val cosine = HnswSearch.isCosine(metric)
+    val cosine = KnnJoin.isCosine(metric)
     val bc = spark.sparkContext.broadcast(
       TopK.collectQueries(queries, idCol, vecCol, "hnswKnn"))
     val (mL, efC, efS, kL, ex) = (m, efConstruction, efSearch, k, excludeSelf)
@@ -818,12 +813,6 @@ object ApproxKnn {
   * per-shard [[TopK.Partials]] in [[TopK.mergeTopK]].
   */
 private[knn] object HnswSearch {
-
-  def isCosine(metric: String): Boolean = metric match {
-    case KnnJoin.MetricCosine => true
-    case KnnJoin.MetricL2Sq   => false
-    case other => throw new IllegalArgumentException(s"unknown metric: $other")
-  }
 
   /** Beam every query through one shard's graph: per-query top-k partials
     * with self-exclusion (search k+1, drop self, keep k), copied out of

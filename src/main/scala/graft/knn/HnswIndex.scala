@@ -242,7 +242,7 @@ object HnswIndex {
     // debris instead of this corpus's graph
     fs.delete(new Path(s"$dir/nodes/g=$next"), true)
     val counts = shardGraphFrame(corpus, p.m, p.efConstruction,
-        HnswSearch.isCosine(p.metric), p.seed, p.shards, dir, next)
+        KnnJoin.isCosine(p.metric), p.seed, p.shards, dir, next)
       .as[(Int, Long)].collect().toMap
     val staged = counts.map { case (s, _) => s -> next }
     val n = counts.values.sum
@@ -793,7 +793,7 @@ object HnswIndex {
     import spark.implicits._
     val conf = hadoopConf(spark)
     val Params(m, metric, _, efConstruction, seed, _, _, _) = p
-    val cosine = HnswSearch.isCosine(metric)
+    val cosine = KnnJoin.isCosine(metric)
     val genDir = s"$dir/nodes/g=$next"
     fresh
       .withColumn("__ins", insertOrderCol(col("id")))
@@ -886,7 +886,7 @@ object HnswIndex {
       efAutoScale: Boolean = true): DataFrame = {
     val (dir, params) = (snap.dir, snap.meta)
     val (m, metric, efDefault) = (params.m, params.metric, params.efSearch)
-    val cosine = HnswSearch.isCosine(metric)
+    val cosine = KnnJoin.isCosine(metric)
     val bc = spark.sparkContext.broadcast(
       TopK.collectQueries(queries, idCol, vecCol, "HnswIndex.search"))
 

@@ -1,7 +1,7 @@
 package graft.knn
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persistent IVF index (SURVEY.md S11, re-expressed Spark-native — the
@@ -22,10 +22,9 @@ import org.apache.spark.sql.functions._
   * Cosine runs as spherical IVF: the quantizer is trained on unit-
   * normalized vectors and both assign and probe normalize on the fly, but
   * the assignments store the ORIGINAL vectors — search emits true cosine
-  * distance (dot/norms in double, [[graft.functions.VectorExpressions
-  * .cosineDistance]]), bit-compatible with [[KnnJoin.broadcastKnn]]'s
-  * cosine output. Zero vectors keep the engine-wide distance-1.0
-  * convention through that expression.
+  * distance (dot/norms in double, [[TopK.exact]]), bit-compatible with
+  * [[KnnJoin.broadcastKnn]]'s cosine output. Zero vectors keep the
+  * engine-wide distance-1.0 convention.
   *
   * Build once, search many times from any session — the same contract as
   * the reference's save/load, with the probe pruning enforced by the
@@ -123,7 +122,7 @@ object IvfIndex {
     // build's staging (a stale assignments.tmp would roll "forward" over
     // the fresh index at the next writer entry)
     recover(spark, dir)
-    val cosine = HnswSearch.isCosine(metric)
+    val cosine = KnnJoin.isCosine(metric)
     // the quantizer trains in assign space (unit vectors under cosine);
     // `distributedTrain` lifts it onto [[KMeans.train]] over the full
     // candidate side. PQ codebooks (ksub ≤ 256 by the byte-code format)
@@ -371,7 +370,7 @@ object IvfIndex {
       vecCol: String): Unit = {
     val bc = spark.sparkContext.broadcast(snap.meta.centroids)
     writeAssignments(newVectors, idCol, vecCol, snap.dir, bc,
-      HnswSearch.isCosine(snap.meta.metric), snap.meta.pq(spark), SaveMode.Append,
+      KnnJoin.isCosine(snap.meta.metric), snap.meta.pq(spark), SaveMode.Append,
       new org.apache.spark.sql.graft.CentroidKernel(bc))
   }
 
@@ -492,9 +491,9 @@ object IvfIndex {
     * runs the rerank path, a rebalance alone can restore recall while
     * the alarm stays up.
     *
-    * Cost: one id-count + (PQ only) ONE `probeQueries`-sized probe at
-    * `nProbe` (the rerank search carries both the ADC and the exact
-    * ordering) — index-size-independent beyond the probed lists' scan.
+    * Cost: one id-count + (PQ only) ONE `probeQueries`-sized search at
+    * `nProbe` (its ADC short list and its re-ranked rows give both
+    * orderings) — index-size-independent beyond the probed lists' scan.
     */
   def staleness(
       spark: SparkSession,
@@ -539,11 +538,11 @@ object IvfIndex {
   }
 
   /** Mean |ADC rank − exact rank| of the exact top-k within the
-    * k·rerank ADC shortlist, over a seeded member sample — the direct
+    * k·rerank ADC short list, over a seeded member sample — the direct
     * codebook-quality probe [[staleness]] reports and [[buildLocked]]
-    * anchors. ONE probe of the live index (the rerank search carries
-    * the shortlist's ADC rank alongside the exact rank — `keepAdcRank`);
-    * None on an empty result (a degenerate corpus).
+    * anchors. One search: its ADC short list (a local frame of the
+    * sample's queries) joined to its re-ranked rows on (query_id,
+    * neighbor_id). None on an empty sample (a degenerate corpus).
     */
   private def measureAdcDisplacement(
       spark: SparkSession,
@@ -562,20 +561,16 @@ object IvfIndex {
       .filter(pmod(xxhash64(col("id"), lit(seed)), lit(math.max(1L, nRows)))
         < lit(math.min(nRows, probeQueries * 2L)))
       .limit(probeQueries)
-      .localCheckpoint(eager = false)
-    // ONE search carries both orderings (keepAdcRank): the rerank path
-    // already ranks the k·rerank ADC shortlist before the exact rerank,
-    // so the exact top-k rows come back WITH their shortlist ADC rank —
-    // equal row-for-row to the former two-search join (same queries,
-    // same nProbe → identical shortlist and windows), at half the
-    // probe/scan/ADC compute and one fewer probed-cid collect
-    val both = probe(spark, snap, sample, "id", "vec",
-      k = k, nProbe = nProbe, usePq = true, rerank = math.max(1, rerank),
-      keepAdcRank = true)
-    val joined = both
-      .agg(avg(abs(col("__adc_rank") - col("rank"))).as("d"))
+    val lists = new ListScan(spark, snap, sample, "id", "vec", nProbe)
+    if (lists.ids.isEmpty) return None
+    val shortList = lists.adc(codebooks(spark, snap), k * math.max(1, rerank),
+      excludeSelf = true)
+    val d = lists.rerank(shortList, k)
+      .join(shortList.select(col("query_id"), col("neighbor_id"),
+        col("rank").as("adc_rank")), Seq("query_id", "neighbor_id"))
+      .agg(avg(abs(col("adc_rank") - col("rank"))))
       .collect()(0)
-    if (joined.isNullAt(0)) None else Some(joined.getDouble(0))
+    if (d.isNullAt(0)) None else Some(d.getDouble(0))
   }
 
   /** The displacement anchor's measurement protocol — [[staleness]]'s
@@ -756,7 +751,7 @@ object IvfIndex {
 
     val snap = open(spark, dir)
     val metric = snap.meta.metric
-    val cosine = HnswSearch.isCosine(metric)
+    val cosine = KnnJoin.isCosine(metric)
     val pq = snap.meta.pq(spark)
     val k0 = snap.meta.centroids.length
 
@@ -1005,13 +1000,19 @@ object IvfIndex {
     new IllegalStateException(s"IvfIndex: $dir has an older on-disk layout " +
       s"(no $missing); rebuild it with IvfIndex.build")
 
-  /** Probe the persisted index: for each query, the `nProbe` nearest
-    * centroids are computed against the (tiny, collected) centroid table,
-    * and the scan of `assignments/` carries a `cid IN (...)` partition
-    * filter — only the probed lists' files are read. The metric comes
-    * from the persisted `params/`, never from the caller. Output contract
-    * matches [[KnnJoin]]: (query_id, neighbor_id, dist, rank). A thin
-    * wrapper: it opens `dir` and runs [[probe]].
+  /** Probe the persisted index, FAISS `IndexIVF` search over the list
+    * layout: the queries are collected in one job, each with its `nProbe`
+    * nearest lists; the scan reads only the probed `assignments/cid=`
+    * directories, scores each row against the queries that probe its
+    * list into per-query top-k [[TopK.Partials]], and [[TopK.mergeTopK]]
+    * merges them. Flat lists score exactly ([[TopK.exact]]); with
+    * `usePq` the lists' codes score by ADC (halved under cosine), and
+    * `rerank > 0` re-ranks each query's k·`rerank` ADC short list exactly
+    * ([[ApproxKnn.pqExactRerank]]). The metric comes from the persisted
+    * `params/`, never from the caller. Output contract matches
+    * [[KnnJoin]]: (query_id, neighbor_id, dist, rank); an empty query
+    * side gives an empty frame. A thin wrapper: it opens `dir` and runs
+    * [[probe]].
     */
   def search(
       spark: SparkSession,
@@ -1027,10 +1028,7 @@ object IvfIndex {
     probe(spark, open(spark, dir), queries, idCol, vecCol, k, nProbe,
       excludeSelf, usePq, rerank)
 
-  /** [[search]]'s body over an opened snapshot. `keepAdcRank` carries
-    * the PQ shortlist's ADC rank as `__adc_rank` beside the exact rank
-    * ([[measureAdcDisplacement]]).
-    */
+  /** [[search]]'s body over an opened snapshot. */
   private[graft] def probe(
       spark: SparkSession,
       snap: Snapshot,
@@ -1041,126 +1039,118 @@ object IvfIndex {
       nProbe: Int = 4,
       excludeSelf: Boolean = true,
       usePq: Boolean = false,
-      rerank: Int = 4,
-      keepAdcRank: Boolean = false): DataFrame = {
-    import spark.implicits._
+      rerank: Int = 4): DataFrame = {
     require(nProbe > 0, s"IvfIndex.search: nProbe must be positive, got $nProbe")
-    require(!keepAdcRank || rerank > 0,
-      "IvfIndex.search: keepAdcRank needs the PQ rerank path (rerank > 0)")
-    val (dir, centroids, metric) =
-      (snap.dir, snap.meta.centroids, snap.meta.metric)
-    val cosine = HnswSearch.isCosine(metric)
-    // probe-cid selection via the native codegen expression (broadcast
-    // codebook, no boxed Seq[Float] per query row)
-    val bcCentroids = spark.sparkContext.broadcast(centroids)
-    val kernel = new org.apache.spark.sql.graft.CentroidKernel(bcCentroids)
-
-    val qBase = graft.util.Par.balance(
-      queries.select(col(idCol).cast("long").as("query_id"),
-        col(vecCol).cast("array<float>").as("__query_vec")))
-    // probe and ADC vectors live in the space the quantizer and the codes
-    // do: unit-normalized under cosine, raw under L2
-    val qSpace =
-      if (cosine) KMeans.unitVectors(qBase, "__query_vec", "__adc_vec", "__zero")
-        .drop("__zero")
-      else qBase.withColumn("__adc_vec", col("__query_vec"))
-    val probed = qSpace
-      .withColumn("cid", explode(graft.functions.VectorExpressions
-        .nearestCentroids(col("__adc_vec"), kernel, nProbe)))
-
-    // static IN-filter on the partition column: the probed cid UNION is at
-    // most nList values (collect is bounded by the centroid count, never
-    // the data), and the filter prunes unprobed list directories at the
-    // file-listing level — guaranteed, not dependent on dynamic pruning.
-    // At FULL probe (nProbe >= nList) every query probes every list, so
-    // the filter is a tautology — skip its collect (one scheduler
-    // round-trip per search; exhaustive probes are the exact-equivalence
-    // oracle form AND the streaming serving default at small nList)
-    val listFilter =
-      if (nProbe >= centroids.length) lit(true)
-      else {
-        val probedCids = probed.select("cid").distinct().as[Int].collect()
-        col("cid").isin(probedCids.map(Integer.valueOf).toSeq: _*)
-      }
-    if (!usePq) {
-      val lists = spark.read.parquet(s"$dir/assignments")
-        .filter(listFilter)
-        .select(col("cid"), col("id").as("neighbor_id"),
-          col("vec").as("__neighbor_vec"))
-
-      val joined = probed.drop("__adc_vec").join(lists, Seq("cid"))
-      val pairs =
-        if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
-        else joined
-      val dist =
-        if (cosine) graft.functions.VectorExpressions.cosineDistance(
-          col("__query_vec"), col("__neighbor_vec"))
-        else graft.functions.VectorExpressions.squaredL2(
-          col("__query_vec"), col("__neighbor_vec"))
-      TopK.topKMerge(
-        pairs.withColumn("dist", dist).select("query_id", "neighbor_id", "dist"),
-        k)
-    } else {
-      // PQ path: the probed-list scan reads (cid, id, m-byte code) —
-      // parquet column pruning keeps the vector column's pages on disk,
-      // so probe I/O shrinks ~dim·4/m× (32× at 64-d, m=8). ADC scores the
-      // codes row-wise; `rerank > 0` re-reads ONLY the short-listed
-      // neighbors' vectors for exact distances (narrow id join against
-      // the probed lists), which also restores the zero-vector-queries-
-      // score-1.0 cosine convention that raw ADC cannot express.
-      val (pq, residual) = snap.meta.pq(spark).getOrElse(
-        throw new IllegalArgumentException(
-          s"IvfIndex.search(usePq = true): no pq/ codebooks under $dir — " +
-            "build the index with pqM > 0"))
-      val pqKernel = new org.apache.spark.sql.graft.PqKernel(
-        spark.sparkContext.broadcast(pq),
-        if (residual) bcCentroids else null)
-      val codeLists = spark.read.parquet(s"$dir/assignments")
-        .filter(listFilter)
-        .select(col("cid"), col("id").as("neighbor_id"), col("code"))
-      val joined = probed.join(codeLists, Seq("cid"))
-      val pairs =
-        if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
-        else joined
-      val adc =
-        if (residual) graft.functions.VectorExpressions.pqAdcResidual(
-          col("__adc_vec"), col("cid"), col("code"), pqKernel)
-        else graft.functions.VectorExpressions.pqAdc(
-          col("__adc_vec"), col("code"), pqKernel)
-      val keep = if (rerank > 0) k * rerank else k
-      val shortList = TopK.topKMerge(
-        pairs
-          .withColumn("dist", if (cosine) adc / 2.0 else adc)
-          .select("query_id", "neighbor_id", "dist", "__query_vec"),
-        keep)
-      if (rerank <= 0) shortList.select("query_id", "neighbor_id", "dist", "rank")
-      else {
-        val vecs = spark.read.parquet(s"$dir/assignments")
-          .filter(listFilter)
-          .select(col("id").as("neighbor_id"), col("vec").as("__neighbor_vec"))
-        val exact =
-          if (cosine) graft.functions.VectorExpressions.cosineDistance(
-            col("__query_vec"), col("__neighbor_vec"))
-          else graft.functions.VectorExpressions.squaredL2(
-            col("__query_vec"), col("__neighbor_vec"))
-        // keepAdcRank: carry the shortlist's ADC rank through the rerank
-        // join as `__adc_rank` — the staleness/anchor probe
-        // ([[measureAdcDisplacement]]) reads both orderings from ONE
-        // search instead of paying the probe+scan+ADC+window subtree
-        // twice (the r19 q58 regression: two searches per anchor)
-        val reranked = TopK.topKMerge(
-          shortList
-            .select(Seq(col("query_id"), col("neighbor_id"),
-              col("__query_vec")) ++
-              (if (keepAdcRank) Seq(col("rank").as("__adc_rank")) else Nil): _*)
-            .join(vecs, "neighbor_id")
-            .withColumn("dist", exact),
-          k)
-        if (keepAdcRank)
-          reranked.select("query_id", "neighbor_id", "dist", "rank",
-            "__adc_rank")
-        else reranked.select("query_id", "neighbor_id", "dist", "rank")
-      }
+    val pq = if (usePq) Some(codebooks(spark, snap)) else None
+    val lists = new ListScan(spark, snap, queries, idCol, vecCol, nProbe)
+    if (lists.ids.isEmpty)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](), searchSchema)
+    pq match {
+      case None => lists.exact(k, excludeSelf)
+      case Some(cb) =>
+        val shortList = lists.adc(cb, if (rerank > 0) k * rerank else k, excludeSelf)
+        if (rerank > 0) lists.rerank(shortList, k) else shortList
     }
+  }
+
+  /** The persisted PQ codebooks of `snap`, or the error naming the
+    * build option that writes them.
+    */
+  private def codebooks(spark: SparkSession, snap: Snapshot): (PqCodebooks, Boolean) =
+    snap.meta.pq(spark).getOrElse(throw new IllegalArgumentException(
+      s"IvfIndex.search(usePq = true): no pq/ codebooks under ${snap.dir} — " +
+        "build the index with pqM > 0"))
+
+  /** One search's queries and probed lists. The constructor runs the one
+    * query job: each (id, vector) row with the vector in the quantizer's
+    * space (unit under cosine, [[KMeans.unitVectors]]) and its `nProbe`
+    * nearest lists (the `nearestCentroids` expression), ordered by id.
+    * Rows with a null id or vector probe nothing. [[rows]] reads only the
+    * probed `cid=` directories.
+    */
+  private final class ListScan(spark: SparkSession, snap: Snapshot,
+      queries: DataFrame, idCol: String, vecCol: String, nProbe: Int) {
+    import spark.implicits._
+    val cosine: Boolean = KnnJoin.isCosine(snap.meta.metric)
+    private val bcCentroids = spark.sparkContext.broadcast(snap.meta.centroids)
+    private val collected = {
+      val base = queries.select(col(idCol).cast("long").as("id"),
+        col(vecCol).cast("array<float>").as("vec"))
+      val spaced =
+        if (cosine) KMeans.unitVectors(base, "vec", "space", "__zero")
+        else base.withColumn("space", col("vec"))
+      spaced
+        .select(col("id"), col("vec"), col("space"),
+          graft.functions.VectorExpressions.nearestCentroids(col("space"),
+            new org.apache.spark.sql.graft.CentroidKernel(bcCentroids), nProbe)
+            .as("lists"))
+        .filter(col("id").isNotNull && col("lists").isNotNull)
+        .as[(Long, Array[Float], Array[Float], Array[Int])]
+        .collect().sortBy(_._1)
+    }
+    val ids: Array[Long] = collected.map(_._1)
+    /** Per list, the positions of the queries that probe it. */
+    private val probers: Array[Array[Int]] = {
+      val by = Array.fill(snap.meta.centroids.length)(Array.newBuilder[Int])
+      collected.indices.foreach(j => collected(j)._4.foreach(c => by(c) += j))
+      by.map(_.result())
+    }
+
+    /** The probed lists' rows: only the `cid=` directories some query
+      * probes.
+      */
+    def rows: DataFrame = spark.read.parquet(s"${snap.dir}/assignments")
+      .filter(col("cid").isin(probers.indices.filter(probers(_).nonEmpty): _*))
+
+    /** The flat lists' exact top-k ([[TopK.exact]]). */
+    def exact(k: Int, excludeSelf: Boolean): DataFrame = {
+      val bc = spark.sparkContext.broadcast((collected.map(r => (r._1, r._2)), probers))
+      val cos = cosine
+      val parts = rows.select(col("cid"), col("id"), col("vec").cast("array<float>"))
+        .as[(Int, Long, Array[Float])].rdd
+        .mapPartitions { it =>
+          val (qs, by) = bc.value
+          Iterator(TopK.exact(qs, k, cos, excludeSelf,
+            it.map { case (cid, id, v) => (id, by(cid), v) }))
+        }
+      TopK.mergeTopK(spark, parts, ids, k)
+    }
+
+    /** The PQ lists' ADC short list: `keep` per query, scored per pair by
+      * the kernel the `PqAdc`/`PqAdcResidual` expressions call, on the
+      * query in the quantizer's space, halved under cosine. The scan reads
+      * the m-byte codes, never the vectors.
+      */
+    def adc(pq: (PqCodebooks, Boolean), keep: Int, excludeSelf: Boolean): DataFrame = {
+      val (cb, residual) = pq
+      val kernel = new org.apache.spark.sql.graft.PqKernel(
+        spark.sparkContext.broadcast(cb), if (residual) bcCentroids else null)
+      val bc = spark.sparkContext.broadcast((ids, collected.map(_._3), probers))
+      val cos = cosine
+      val parts = rows.select(col("cid"), col("id"), col("code"))
+        .as[(Int, Long, Array[Byte])].rdd
+        .mapPartitions { it =>
+          val (qIds, space, by) = bc.value
+          val qs = space.map(v =>
+            org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(v))
+          Iterator(TopK.scan(qIds, keep, excludeSelf,
+              it.map { case (cid, id, code) => (id, by(cid), (cid, code)) }) {
+            case (cid, code) => j =>
+              val d =
+                if (residual) kernel.adcResidual(qs(j), cid, code)
+                else kernel.adcDirect(qs(j), code)
+              if (cos) d / 2.0 else d
+          })
+        }
+      TopK.mergeTopK(spark, parts, ids, keep)
+    }
+
+    /** The exact top-k of `shortList` against the probed lists' vectors
+      * ([[ApproxKnn.pqExactRerank]]).
+      */
+    def rerank(shortList: DataFrame, k: Int): DataFrame =
+      ApproxKnn.pqExactRerank(shortList,
+        collected.map(r => (r._1, r._2)).distinctBy(_._1).toSeq.toDF("id", "vec"),
+        rows.select("id", "vec"), "id", "vec", k, cosine, broadcastQueries = true)
   }
 }

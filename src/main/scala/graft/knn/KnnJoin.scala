@@ -31,15 +31,24 @@ object KnnJoin {
   val MetricL2Sq = "l2sq"
   val MetricCosine = "cosine"
 
-  /** Distances use the native codegen expressions
-    * ([[graft.functions.VectorExpressions]]); [[graft.functions.Dist]]'s
-    * higher-order-function forms are the interpreted correctness oracle.
+  /** The one metric parser: whether `metric` names cosine distance
+    * ([[MetricCosine]]) rather than squared L2 ([[MetricL2Sq]]). Any other
+    * name raises `IllegalArgumentException`.
     */
-  private def distExpr(metric: String, a: Column, b: Column): Column = metric match {
-    case MetricL2Sq   => graft.functions.VectorExpressions.squaredL2(a, b)
-    case MetricCosine => graft.functions.VectorExpressions.cosineDistance(a, b)
-    case m            => throw new IllegalArgumentException(s"unknown metric: $m")
+  def isCosine(metric: String): Boolean = metric match {
+    case MetricCosine => true
+    case MetricL2Sq   => false
+    case other => throw new IllegalArgumentException(s"unknown metric: $other")
   }
+
+  /** The distance column of the frame-based strategies, from the native
+    * codegen expressions ([[graft.functions.VectorExpressions]]);
+    * [[graft.functions.Dist]]'s higher-order-function forms are the
+    * interpreted correctness oracle.
+    */
+  private[knn] def distExpr(cosine: Boolean, a: Column, b: Column): Column =
+    if (cosine) graft.functions.VectorExpressions.cosineDistance(a, b)
+    else graft.functions.VectorExpressions.squaredL2(a, b)
 
   /** Exact kNN via cross join + window. `queries`/`candidates`: two-column
     * frames (id, vec). Output: (query_id, neighbor_id, dist, rank), rank
@@ -65,7 +74,7 @@ object KnnJoin {
       if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id")) else joined
     TopK.topKMerge(
       filtered
-        .withColumn("dist", distExpr(metric, col("__qv"), col("__cv")))
+        .withColumn("dist", distExpr(isCosine(metric), col("__qv"), col("__cv")))
         .select("query_id", "neighbor_id", "dist"),
       k)
   }
@@ -87,14 +96,15 @@ object KnnJoin {
     import spark.implicits._
 
     val qRows = TopK.collectQueries(queries, idCol, vecCol, "broadcastKnn")
-    val cosine = HnswSearch.isCosine(metric)
+    val cosine = isCosine(metric)
     val bc = spark.sparkContext.broadcast(qRows)
 
     val partials = graft.util.Par.balance(
       candidates.select(col(idCol).cast("long"), col(vecCol).cast("array<float>")))
       .as[(Long, Array[Float])]
       .rdd
-      .mapPartitions(it => Iterator(TopK.exact(bc.value, k, cosine, excludeSelf, it)))
+      .mapPartitions(it => Iterator(TopK.exact(bc.value, k, cosine, excludeSelf,
+        TopK.everyQuery(bc.value.length, it))))
 
     TopK.mergeTopK(spark, partials, qRows.map(_._1), k)
   }

@@ -29,16 +29,17 @@ private[knn] final class TopKBuf(val k: Int) {
 /** The per-query top-k of every kNN strategy that broadcasts its query
   * side and scans candidate partitions: the exact scan
   * ([[KnnJoin.broadcastKnn]] and the `knn_join` plan node), the PQ ADC
-  * scan and the HNSW beams. Each partition's scan returns one
-  * [[TopK.Partials]], and [[TopK.merge]] is the one kernel that merges
-  * them, placed by [[TopK.mergeTopK]]: folded on the driver, or reduced
-  * by query-id range.
+  * scan, the HNSW beams and the [[IvfIndex]] list scan. Each partition's
+  * scan returns one [[TopK.Partials]], and [[TopK.merge]] is the one
+  * kernel that merges them, placed by [[TopK.mergeTopK]]: folded on the
+  * driver, or reduced by query-id range.
   *
   * The strategies whose candidates meet their queries in a join (LSH,
-  * IVF, the exact re-rank, [[KnnJoin.windowKnn]], [[IvfIndex.probe]])
-  * rank their frames in [[TopK.topKMerge]]'s window instead. Both give
-  * the same contract: per query, rank 1..k ascending by (dist,
-  * neighbor_id), doubles ordered as Spark's sort orders them.
+  * [[ApproxKnn.ivfKnn]], the exact short-list re-rank and
+  * [[KnnJoin.windowKnn]]) rank their frames in [[TopK.topKMerge]]'s
+  * window instead. Both give the same contract: per query, rank 1..k
+  * ascending by (dist, neighbor_id), doubles ordered as Spark's sort
+  * orders them.
   */
 object TopK extends Serializable { // task closures here call its methods
 
@@ -121,20 +122,22 @@ object TopK extends Serializable { // task closures here call its methods
     c < 0 || (c == 0 && n1 < n2)
   }
 
-  /** One candidate partition's scan: the query with id `qIds(j)`
-    * (ascending) keeps its top-k of `dist(c)(j)` over the candidates
-    * (id, c), skipping its own id under `excludeSelf`. `dist(c)` runs once
-    * per candidate, the function it returns once per query.
+  /** One candidate partition's scan. Each candidate (id, js, c) is scored
+    * against the queries at positions `js` of `qIds` (ascending ids): the
+    * query with id `qIds(j)` keeps its top-k of `dist(c)(j)`, skipping its
+    * own id under `excludeSelf`. `dist(c)` runs once per candidate, the
+    * function it returns once per scored query.
     */
   private[knn] def scan[C](qIds: Array[Long], k: Int, excludeSelf: Boolean,
-      candidates: Iterator[(Long, C)])(dist: C => Int => Double): Partials = {
+      candidates: Iterator[(Long, Array[Int], C)])(dist: C => Int => Double): Partials = {
     val heaps = Array.fill(qIds.length)(new TopKBuf(k))
-    candidates.foreach { case (cid, c) =>
+    candidates.foreach { case (cid, js, c) =>
       val d = dist(c)
-      var j = 0
-      while (j < qIds.length) {
+      var i = 0
+      while (i < js.length) {
+        val j = js(i)
         if (!(excludeSelf && qIds(j) == cid)) heaps(j).offer(d(j), cid)
-        j += 1
+        i += 1
       }
     }
     val n = heaps.iterator.map(_.size).sum
@@ -146,17 +149,28 @@ object TopK extends Serializable { // task closures here call its methods
     Partials.ranked(qs, ns, ds, n, k)
   }
 
+  /** The candidates of a scan that scores each one against all `n`
+    * queries.
+    */
+  def everyQuery[C](n: Int, candidates: Iterator[(Long, C)])
+      : Iterator[(Long, Array[Int], C)] = {
+    val all = Array.range(0, n)
+    candidates.map { case (id, c) => (id, all, c) }
+  }
+
   /** The exact kNN scan of one candidate partition, shared by
-    * [[KnnJoin.broadcastKnn]] and the `knn_join` plan node, under squared
-    * L2 or cosine distance (1 − cos, and 1.0 when either vector is zero).
-    * `queries` are ordered by id ([[collectQueries]]).
+    * [[KnnJoin.broadcastKnn]], the `knn_join` plan node and the flat
+    * [[IvfIndex]] list scan, under squared L2 or cosine distance (1 − cos,
+    * and 1.0 when either vector is zero). `queries` are ordered by id
+    * ([[collectQueries]]); each candidate carries the query positions it is
+    * scored against ([[scan]]).
     */
   def exact(
       queries: Array[(Long, Array[Float])],
       k: Int,
       cosine: Boolean,
       excludeSelf: Boolean,
-      candidates: Iterator[(Long, Array[Float])]): Partials = {
+      candidates: Iterator[(Long, Array[Int], Array[Float])]): Partials = {
     val qVecs = queries.map(_._2)
     val qNorms = if (cosine) qVecs.map(v => math.sqrt(dot(v, v))) else Array.emptyDoubleArray
     scan(queries.map(_._1), k, excludeSelf, candidates) { cvec =>
@@ -302,10 +316,10 @@ object TopK extends Serializable { // task closures here call its methods
     * 1-based ascending by (dist, neighbor_id), cut to k. The merge of
     * the strategies whose candidates meet their queries in a join, so
     * their partials stay frames: [[ApproxKnn.lshKnn]], [[ApproxKnn.ivfKnn]],
-    * the exact re-rank of the PQ and truncated short lists,
-    * [[KnnJoin.windowKnn]] and [[IvfIndex.probe]]. A window rather than
-    * a bounded top-k aggregate: the aggregate measured slower on the
-    * 200k-key grid tier (SCALE_r16_default_gate).
+    * the exact short-list re-rank ([[ApproxKnn.pqExactRerank]]) and
+    * [[KnnJoin.windowKnn]]. A window rather than a bounded top-k
+    * aggregate: the aggregate measured slower on the 200k-key grid tier
+    * (SCALE_r16_default_gate).
     */
   def topKMerge(partials: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(asc("dist"), asc("neighbor_id"))

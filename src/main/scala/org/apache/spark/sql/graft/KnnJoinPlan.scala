@@ -14,11 +14,13 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-import _root_.graft.knn.TopK
+import _root_.graft.knn.{KnnJoin, TopK}
 
 /** Whole-operator kNN join as a first-class plan node (SURVEY.md §7.3.3
-  * phase 3): `KnnJoinPlan(queries, candidates, k, metric)` produces, for
-  * every query row, its k nearest candidates with distance and rank.
+  * phase 3): `KnnJoinPlan(queries, candidates, k, cosine)` produces, for
+  * every query row, its k nearest candidates with distance and rank,
+  * under cosine distance or squared L2 (the metric parsed once, by
+  * graft.knn.KnnJoin.isCosine, where the node is built).
   *
   * Child contract (enforced by the [[KnnJoinOp]] API wrapper): each child
   * outputs exactly (id: bigint, vec: array<float>).
@@ -35,7 +37,7 @@ case class KnnJoinPlan(
     left: LogicalPlan,
     right: LogicalPlan,
     k: Int,
-    metric: String,
+    cosine: Boolean,
     excludeSelf: Boolean,
     // output attrs live in the constructor: a `val` would mint fresh
     // ExprIds on every transform copy and break downstream references
@@ -75,11 +77,11 @@ case class KnnJoinExec(
     left: SparkPlan,
     right: SparkPlan,
     k: Int,
-    metric: String,
+    cosine: Boolean,
     excludeSelf: Boolean) extends BinaryExecNode {
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val (cosine, kLocal, exclude) = (metric == "cosine", k, excludeSelf)
+    val (cos, kLocal, exclude) = (cosine, k, excludeSelf)
 
     val queryRows: Array[(Long, Array[Float])] = left.executeCollect().map { r =>
       (r.getLong(0), r.getArray(1).toFloatArray())
@@ -87,8 +89,9 @@ case class KnnJoinExec(
     val bc = sparkContext.broadcast(queryRows)
 
     val partials = right.execute().mapPartitions { it =>
-      Iterator(TopK.exact(bc.value, kLocal, cosine, exclude,
-        it.map(row => (row.getLong(0), row.getArray(1).toFloatArray()))))
+      Iterator(TopK.exact(bc.value, kLocal, cos, exclude,
+        TopK.everyQuery(bc.value.length,
+          it.map(row => (row.getLong(0), row.getArray(1).toFloatArray())))))
     }
     TopK.mergeTopK(session, partials, queryRows.map(_._1), k).queryExecution.toRdd
   }
@@ -112,7 +115,7 @@ object KnnJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: KnnJoinPlan =>
       KnnJoinExec(p.output, planLater(p.left), planLater(p.right),
-        p.k, p.metric, p.excludeSelf) :: Nil
+        p.k, p.cosine, p.excludeSelf) :: Nil
     case _ => Nil
   }
 }
@@ -180,7 +183,10 @@ object KnnJoinTvf {
     val idCol = asString(args(2), "id_col")
     val vecCol = asString(args(3), "vec_col")
     val k = asInt(args(4), "k")
-    val metric = if (args.length >= 6) asString(args(5), "metric") else "l2sq"
+    val metric = if (args.length >= 6) asString(args(5), "metric") else KnnJoin.MetricL2Sq
+    val cosine =
+      try KnnJoin.isCosine(metric)
+      catch { case e: IllegalArgumentException => fail(e.getMessage) }
     val excludeSelf =
       if (args.length >= 7) asBoolean(args(6), "exclude_self") else true
 
@@ -190,7 +196,7 @@ object KnnJoinTvf {
       UnresolvedRelation(asString(tableArg, what).split('.').toSeq))
 
     KnnJoinPlan(child(args(0), "queries"), child(args(1), "candidates"),
-      k, metric, excludeSelf)
+      k, cosine, excludeSelf)
   }
 }
 
@@ -199,7 +205,8 @@ object KnnJoinOp {
 
   /** Normalizes both sides to the (id, vec) child contract and plans a
     * [[KnnJoinPlan]]. The session must have [[KnnJoinStrategy]] registered
-    * (graft.GraftFunctions.register does this).
+    * (graft.GraftFunctions.register does this). An unknown `metric` raises
+    * `IllegalArgumentException`.
     */
   def knnJoin(
       queries: DataFrame,
@@ -207,8 +214,9 @@ object KnnJoinOp {
       idCol: String,
       vecCol: String,
       k: Int,
-      metric: String = "l2sq",
+      metric: String = KnnJoin.MetricL2Sq,
       excludeSelf: Boolean = true): DataFrame = {
+    val cosine = KnnJoin.isCosine(metric)
     def normalize(df: DataFrame) = df.select(
       col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<float>").as("vec"))
@@ -216,7 +224,7 @@ object KnnJoinOp {
     val plan = KnnJoinPlan(
       normalize(queries).queryExecution.analyzed,
       normalize(candidates).queryExecution.analyzed,
-      k, metric, excludeSelf)
+      k, cosine, excludeSelf)
     Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
   }
 }

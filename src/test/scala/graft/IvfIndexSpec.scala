@@ -25,24 +25,33 @@ class IvfIndexSpec extends SparkSpec {
     assert(got == exactTop5)
   }
 
+  /** `df`'s rows as a local frame: a query side whose scan reads no input. */
+  private def local(df: org.apache.spark.sql.DataFrame) =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   test("pruned probe reads only the probed list partitions, recall holds") {
+    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("ivf_idx2").toString
     IvfIndex.build(emb, "vec_id", "embedding", dir, nList = 8)
     // single-query search: few probes → few partitions
-    val oneQuery = emb.filter(col("vec_id") === 0)
-    val res = IvfIndex.search(spark, dir, oneQuery, "vec_id", "embedding",
-      k = 5, nProbe = 2)
-    val rows = res.collect()
+    val oneQuery = local(emb.filter(col("vec_id") === 0).select("vec_id", "embedding"))
+    // its two probed lists: the centroids nearest it by (squared L2, cid)
+    val q = oneQuery.head().getSeq[Float](1)
+    val probed = spark.read.parquet(s"$dir/centroids")
+      .select(col("cid"), col("vec").cast("array<float>")).as[(Int, Array[Float])]
+      .collect().sortBy { case (cid, c) =>
+        (q.zip(c).map { case (a, b) => (a.toDouble - b) * (a.toDouble - b) }.sum, cid)
+      }.take(2).map(_._1)
+    val sizes = IvfIndex.stats(spark, dir).as[(Int, Long)].collect().toMap
+    def search() = IvfIndex.search(spark, dir, oneQuery, "vec_id", "embedding",
+      k = 5, nProbe = 2).collect()
+    search() // opens the index: its metadata reads stay out of the count
+    val (rows, read) = taskTotals(search())
     assert(rows.length == 5)
-    // the assignments scan carries a static partition filter on cid —
-    // unprobed inverted lists are pruned at file-listing level
-    val plan = res.queryExecution.executedPlan.toString
-    val scanLine = plan.linesIterator
-      .find(l => l.contains("FileScan") && l.contains("assignments"))
-    assert(scanLine.isDefined)
-    assert(scanLine.get.contains("PartitionFilters: [cid#") ||
-      scanLine.get.contains("cid IN") || plan.contains("PartitionFilters"),
-      s"no partition filter on the assignments scan:\n$plan")
+    // the list scan reads exactly the probed lists' rows: the unprobed
+    // cid= directories are pruned at file-listing level
+    assert(read.recordsRead == probed.map(sizes).sum, s"probed ${probed.toSeq}")
+    assert(read.recordsRead < emb.count())
     // full-corpus pruned search keeps a sane recall floor
     val pruned = IvfIndex.search(spark, dir, emb, "vec_id", "embedding",
       k = 5, nProbe = 2)
@@ -187,19 +196,31 @@ class IvfIndexSpec extends SparkSpec {
     assert(lists.columns.contains("code"))
     assert(lists.select(length(col("code")).as("l"))
       .filter(col("l") =!= 16).count() == 0)
+    // the ADC scan reads the m-byte codes, not the vectors: fewer bytes
+    // than a flat search over the same lists (32× less probe I/O at 64-d
+    // is the whole point of storing codes). Measured on a 16× copy of the
+    // corpus, whose lists outgrow the reader's buffer, with parquet's
+    // vectored reads off: their bytes bypass the file-system statistics
+    // the input metrics read.
+    val bigDir = graft.util.TempDirs.register(
+      java.nio.file.Files.createTempDirectory("ivfpq_big").toString)
+    IvfIndex.build(emb.crossJoin(spark.range(16).toDF("r")).select(
+      (col("vec_id") + col("r") * 100000L).as("vec_id"), col("embedding")),
+      "vec_id", "embedding", bigDir, nList = 4, pqM = 16, pqKsub = 16)
+    val queries = local(emb.filter(col("vec_id") < 20).select("vec_id", "embedding"))
+    def bytesRead(usePq: Boolean): Long = {
+      def search() = IvfIndex.search(spark, bigDir, queries, "vec_id",
+        "embedding", k = 5, nProbe = 4, usePq = usePq, rerank = 0).collect()
+      search() // opens the index: its metadata reads stay out of the count
+      taskTotals(search())._2.bytesRead
+    }
+    spark.conf.set("parquet.hadoop.vectored.io.enabled", "false")
+    val (adcBytes, flatBytes) =
+      try (bytesRead(usePq = true), bytesRead(usePq = false))
+      finally spark.conf.unset("parquet.hadoop.vectored.io.enabled")
+    assert(adcBytes < flatBytes, s"ADC scan read $adcBytes B, flat $flatBytes B")
     val res = IvfIndex.search(spark, dir, emb, "vec_id", "embedding",
       k = 5, nProbe = 8, usePq = true, rerank = 4)
-    res.collect()
-    // the ADC stage's scan must NOT read the vec column — that pruning
-    // is the whole point of storing codes (32× less probe I/O at 64-d)
-    val plan = res.queryExecution.executedPlan.toString
-    val adcScan = plan.linesIterator.find(l =>
-      l.contains("FileScan") && l.contains("assignments") &&
-        l.contains("code"))
-    assert(adcScan.isDefined, s"no code-column scan in:\n$plan")
-    assert(!adcScan.get.replaceAll("__query_vec", "").contains("vec,") &&
-      !adcScan.get.matches(".*ReadSchema:.*\\bvec\\b.*"),
-      s"ADC scan still reads the vec column:\n${adcScan.get}")
     // reranked full-probe search tracks brute force closely
     val got = res.select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

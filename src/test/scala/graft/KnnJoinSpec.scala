@@ -87,7 +87,7 @@ class KnnJoinSpec extends SparkSpec {
   test("the exact partition scan ranks a NaN distance last, as the window does") {
     val (cands, _, want) = nanCase
     val p = graft.knn.TopK.exact(Array((1L, Array(0f, 0f))), 1, cosine = false,
-      excludeSelf = true, cands.iterator)
+      excludeSelf = true, graft.knn.TopK.everyQuery(1, cands.iterator))
     assert(graft.knn.TopK.rows(p)
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq == want)
   }

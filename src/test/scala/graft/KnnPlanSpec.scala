@@ -106,6 +106,21 @@ class KnnPlanSpec extends SparkSpec {
     assert(ok > 0)
   }
 
+  test("an unknown metric fails through SQL and through knnJoin, never runs as L2") {
+    GraftFunctions.register(spark)
+    emb.createOrReplaceTempView("emb_view")
+    val e = intercept[Exception](spark.sql("SELECT * FROM knn_join('emb_view', " +
+      "'emb_view', 'vec_id', 'embedding', 2, 'cosin')").collect())
+    val root = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).toSeq.last
+    val analysis = Seq(e, root).find(_.isInstanceOf[org.apache.spark.sql.AnalysisException])
+    assert(analysis.isDefined, s"got ${e.getClass}: ${e.getMessage}")
+    assert(analysis.get.getMessage.contains("knn_join") &&
+      analysis.get.getMessage.contains("unknown metric: cosin"), analysis.get.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      KnnJoinOp.knnJoin(emb, emb, "vec_id", "embedding", 2, "cosin"))
+    assert(e2.getMessage.contains("unknown metric: cosin"), e2.getMessage)
+  }
+
   test("SQL TVF: cosine metric argument is honored") {
     GraftFunctions.register(spark)
     emb.createOrReplaceTempView("emb_view")

@@ -151,6 +151,32 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("BroadcastNestedLoopJoin"))
   }
 
+  test("IvfIndex.search: no ranking window outside the PQ re-rank; a flat search shuffles nothing") {
+    import org.apache.spark.sql.functions._
+    import graft.knn.{IvfIndex, TopK}
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet").select("vec_id", "embedding")
+    val dir = graft.util.TempDirs.register(
+      java.nio.file.Files.createTempDirectory("plan_ivf").toString)
+    IvfIndex.build(emb, "vec_id", "embedding", dir, nList = 8, pqM = 8)
+    val queries = emb.filter(col("vec_id") < 40)
+    def search(usePq: Boolean) = IvfIndex.search(spark, dir, queries, "vec_id",
+      "embedding", k = 5, nProbe = 2, usePq = usePq, rerank = 4)
+    def windows(usePq: Boolean): Int = {
+      val df = search(usePq)
+      df.collect()
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+        .split("Window \\[", -1).length - 1
+    }
+    // the list scans merge in TopK.mergeTopK; the one window left is the
+    // exact re-rank's (ApproxKnn.pqExactRerank)
+    assert(windows(usePq = false) == 0)
+    assert(windows(usePq = true) == 1)
+    // 40 queries · k 5 over the scan's few partitions fold on the driver:
+    // the query collect and the list scan's fold, no exchange
+    assert(TopK.driverMerges(spark.sparkContext.getConf, 64L * 40 * 5))
+    assert(taskTotals(search(usePq = false).collect())._2.shuffleBytesWritten == 0)
+  }
+
   test("dedup signature paths carry no interpreted UDF: native expressions only") {
     // the round-4 ask: MinHash/SimHash signatures were the last per-row
     // Scala UDFs on an every-document path — pin their absence

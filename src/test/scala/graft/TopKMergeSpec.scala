@@ -139,7 +139,8 @@ class TopKMergeSpec extends SparkSpec {
       .sortBy(_._1).toArray
     val k = 4
     val shards = cands.grouped(13).toSeq.map(c =>
-      TopK.exact(queries, k, cosine = false, excludeSelf = true, c.iterator))
+      TopK.exact(queries, k, cosine = false, excludeSelf = true,
+        TopK.everyQuery(queries.length, c.iterator)))
     val qids = queries.map(_._1)
     val want = KnnJoin.windowKnn(queries.toSeq.toDF("vec_id", "embedding"),
         cands.toDF("vec_id", "embedding"), "vec_id", "embedding", k)
