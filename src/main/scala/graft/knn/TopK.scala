@@ -8,14 +8,20 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Bounded per-query top-k accumulator of a partition scan, sorted
-  * ascending by [[TopK.before]] on (dist, id).
+  * ascending by [[TopK.before]] on (dist, id). Its arrays grow with the
+  * entries it holds, so a k far above the candidate count (an "every
+  * neighbor" search) costs what it keeps, not k slots per query.
   */
 private[knn] final class TopKBuf(val k: Int) {
-  val dists = new Array[Double](k)
-  val ids = new Array[Long](k)
+  var dists = new Array[Double](math.min(k, 16))
+  var ids = new Array[Long](dists.length)
   var size = 0
   def offer(d: Double, id: Long): Unit = {
     if (size < k || TopK.before(d, id, dists(size - 1), ids(size - 1))) {
+      if (size == dists.length && size < k) {
+        val n = math.min(k.toLong, 2L * size).toInt
+        dists = java.util.Arrays.copyOf(dists, n); ids = java.util.Arrays.copyOf(ids, n)
+      }
       var pos = if (size < k) size else size - 1
       while (pos > 0 && TopK.before(d, id, dists(pos - 1), ids(pos - 1))) {
         dists(pos) = dists(pos - 1); ids(pos) = ids(pos - 1); pos -= 1

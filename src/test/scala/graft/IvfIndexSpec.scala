@@ -177,6 +177,19 @@ class IvfIndexSpec extends SparkSpec {
     }
   }
 
+  test("a k far above the corpus returns every probed neighbor") {
+    val dir = graft.util.TempDirs.register(
+      java.nio.file.Files.createTempDirectory("ivf_allk").toString)
+    val n = IvfIndex.build(emb, "vec_id", "embedding", dir, nList = 4)
+    // an "every neighbor" search: the scan's heaps hold what they keep,
+    // not k slots per query
+    val counts = IvfIndex.search(spark, dir, emb.filter(col("vec_id") < 20),
+      "vec_id", "embedding", k = 10000000, nProbe = n)
+      .groupBy("query_id").count().collect().map(_.getLong(1))
+    assert(counts.length == 20 && counts.forall(_ == emb.count() - 1),
+      counts.toSeq)
+  }
+
   test("index survives a fresh read: search works from paths alone") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_idx3").toString
     IvfIndex.build(emb, "vec_id", "embedding", dir, nList = 4)
