@@ -7,28 +7,56 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Bounded per-query top-k accumulator of a partition scan, sorted
-  * ascending by [[TopK.before]] on (dist, id). Its arrays grow with the
-  * entries it holds, so a k far above the candidate count (an "every
-  * neighbor" search) costs what it keeps, not k slots per query.
+/** Bounded per-query top-k accumulator of a partition scan: a max-heap
+  * on [[TopK.before]]'s (dist, id) order, O(log k) per kept entry, whose
+  * arrays grow with the entries it holds — an "every neighbor" search (k
+  * far above the candidate count) costs what it keeps. [[sorted]] leaves
+  * the entries ascending.
   */
 private[knn] final class TopKBuf(val k: Int) {
   var dists = new Array[Double](math.min(k, 16))
   var ids = new Array[Long](dists.length)
   var size = 0
-  def offer(d: Double, id: Long): Unit = {
-    if (size < k || TopK.before(d, id, dists(size - 1), ids(size - 1))) {
-      if (size == dists.length && size < k) {
+
+  def offer(d: Double, id: Long): Unit =
+    if (size < k) {
+      if (size == dists.length) {
         val n = math.min(k.toLong, 2L * size).toInt
         dists = java.util.Arrays.copyOf(dists, n); ids = java.util.Arrays.copyOf(ids, n)
       }
-      var pos = if (size < k) size else size - 1
-      while (pos > 0 && TopK.before(d, id, dists(pos - 1), ids(pos - 1))) {
-        dists(pos) = dists(pos - 1); ids(pos) = ids(pos - 1); pos -= 1
+      var i = size
+      size += 1
+      while (i > 0 && TopK.before(dists((i - 1) / 2), ids((i - 1) / 2), d, id)) {
+        val p = (i - 1) / 2
+        dists(i) = dists(p); ids(i) = ids(p); i = p
       }
-      dists(pos) = d; ids(pos) = id
-      if (size < k) size += 1
+      dists(i) = d; ids(i) = id
+    } else if (TopK.before(d, id, dists(0), ids(0))) siftDown(d, id, size)
+
+  /** (d, id) into the root's slot, sifted down within the first n entries. */
+  private def siftDown(d: Double, id: Long, n: Int): Unit = {
+    var i = 0
+    var c = 1
+    while (c < n) {
+      if (c + 1 < n && TopK.before(dists(c), ids(c), dists(c + 1), ids(c + 1))) c += 1
+      if (TopK.before(d, id, dists(c), ids(c))) {
+        dists(i) = dists(c); ids(i) = ids(c); i = c; c = 2 * i + 1
+      } else c = n
     }
+    dists(i) = d; ids(i) = id
+  }
+
+  /** The entries ascending by (dist, id), in place (heap sort). */
+  def sorted(): TopKBuf = {
+    var n = size
+    while (n > 1) {
+      n -= 1
+      val d = dists(n)
+      val id = ids(n)
+      dists(n) = dists(0); ids(n) = ids(0)
+      siftDown(d, id, n)
+    }
+    this
   }
 }
 
@@ -149,8 +177,8 @@ object TopK extends Serializable { // task closures here call its methods
     val n = heaps.iterator.map(_.size).sum
     val (qs, ns, ds) = (new Array[Long](n), new Array[Long](n), new Array[Double](n))
     var o = 0
-    for (j <- heaps.indices; r <- 0 until heaps(j).size) {
-      qs(o) = qIds(j); ns(o) = heaps(j).ids(r); ds(o) = heaps(j).dists(r); o += 1
+    for (j <- heaps.indices; h = heaps(j).sorted(); r <- 0 until h.size) {
+      qs(o) = qIds(j); ns(o) = h.ids(r); ds(o) = h.dists(r); o += 1
     }
     Partials.ranked(qs, ns, ds, n, k)
   }
