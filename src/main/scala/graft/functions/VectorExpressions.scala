@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graft.{CentroidIndex, DotProduct, NearestCentroidDist, Interop, LshBuckets, LshKernel, MinHashKernel, MinHashSig, NearestCentroid, NearestCentroids, PqAdc, PqAdcResidual, PqEncode, PqEncodeResidual, PqKernel, SimHash64, SimHashKernel, SquaredL2}
+import org.apache.spark.sql.graft.{CentroidIndex, DotProduct, NearestCentroidDist, Interop, LshBuckets, LshKernel, MinHashKernel, MinHashSig, NearestCentroid, NearestCentroids, PqEncode, PqEncodeResidual, PqKernel, SimHash64, SimHashKernel, SquaredL2}
 
 /** Column API over the native Catalyst vector expressions (implementation
   * in org.apache.spark.sql.graft — see the packaging note there). The
@@ -51,17 +51,8 @@ object VectorExpressions {
   def pqEncode(v: Column, kernel: PqKernel): Column =
     Interop.column(PqEncode(Interop.expression(v), kernel))
 
-  /** Row-wise ADC distance from an un-quantized query to a PQ code. */
-  def pqAdc(q: Column, code: Column, kernel: PqKernel): Column =
-    Interop.column(PqAdc(Interop.expression(q), Interop.expression(code), kernel))
-
   /** Residual-PQ code: quantizes `v − coarseCentroid(cid)` (IVF-PQ). */
   def pqEncodeResidual(v: Column, cid: Column, kernel: PqKernel): Column =
     Interop.column(PqEncodeResidual(Interop.expression(v),
       Interop.expression(cid), kernel))
-
-  /** Residual ADC distance (`q − coarseCentroid(cid)` to the code). */
-  def pqAdcResidual(q: Column, cid: Column, code: Column, kernel: PqKernel): Column =
-    Interop.column(PqAdcResidual(Interop.expression(q),
-      Interop.expression(cid), Interop.expression(code), kernel))
 }

@@ -108,10 +108,10 @@ final class PqCodebooks(val centroids: Array[Array[Array[Float]]])
     * reconstruction, accumulated per subspace — `m·dsub` multiplies, the
     * same arithmetic cost as an exact distance. The win is NOT compute,
     * it is that the scan feeding this reads m-byte codes instead of
-    * vectors; use [[adcTable]]/[[adcDist]] when one query scores many
-    * candidates in a tight loop (the broadcast-side shape), and this
-    * row-wise form inside relational joins. Matches
-    * `adcDist(code, adcTable(q))` to float-accumulation rounding.
+    * vectors; [[adcTable]]/[[adcDist]] serve [[ApproxKnn.pqKnn]]'s scan,
+    * this per-pair form the [[IvfIndex]] list scan (whose persisted
+    * digests pin its rounding). Matches `adcDist(code, adcTable(q))` to
+    * float-accumulation rounding.
     * With `base != null` the code reconstructs `base + centroid` (the
     * residual form: distance is measured from `q − base` to the
     * sub-centroid, same arithmetic cost).

@@ -5,7 +5,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, BinaryType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, BinaryType, DataType, FloatType}
 
 import graft.knn.PqCodebooks
 
@@ -14,7 +14,8 @@ import graft.knn.PqCodebooks
   * expression serializes as a handle; a large codebook tensor rides the
   * torrent protocol once per executor, not per task). Encoding touches
   * EVERY candidate row at build time, so it runs as a codegen expression
-  * reading primitives straight off `ArrayData`.
+  * reading primitives straight off `ArrayData`; the per-pair ADC methods
+  * score the `IvfIndex` PQ list scan.
   */
 final class PqKernel(
     bc: Broadcast[PqCodebooks],
@@ -64,33 +65,6 @@ case class PqEncode(child: Expression, kernel: PqKernel)
     copy(child = newChild)
 }
 
-/** Row-wise ADC distance: approximate squared L2 from an un-quantized
-  * query vector straight to a PQ code (see
-  * [[graft.knn.PqCodebooks.adcDirect]]) — the scoring expression for
-  * relational joins over code columns, where the scan reads m bytes per
-  * candidate instead of the vector.
-  */
-case class PqAdc(left: Expression, right: Expression, kernel: PqKernel)
-  extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(FloatType), BinaryType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "pq_adc"
-
-  override def nullSafeEval(q: Any, code: Any): Any =
-    kernel.adcDirect(q.asInstanceOf[ArrayData], code.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqKernel", kernel, classOf[PqKernel].getName)
-    nullSafeCodeGen(ctx, ev, (q, c) => s"${ev.value} = $ref.adcDirect($q, $c);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqAdc =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Residual-PQ encode: the code quantizes `v − coarseCentroid(cid)` —
   * the IVF-PQ by-residual form (kernel must carry the coarse codebook).
   */
@@ -114,32 +88,4 @@ case class PqEncodeResidual(left: Expression, right: Expression, kernel: PqKerne
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqEncodeResidual =
     copy(left = newLeft, right = newRight)
-}
-
-/** Residual ADC: distance from `q − coarseCentroid(cid)` to a residual
-  * PQ code — same m-byte scan contract as [[PqAdc]].
-  */
-case class PqAdcResidual(first: Expression, second: Expression,
-    third: Expression, kernel: PqKernel)
-  extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(FloatType), org.apache.spark.sql.types.IntegerType, BinaryType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "pq_adc_residual"
-
-  override def nullSafeEval(q: Any, cid: Any, code: Any): Any =
-    kernel.adcResidual(q.asInstanceOf[ArrayData], cid.asInstanceOf[Int],
-      code.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqKernel", kernel, classOf[PqKernel].getName)
-    nullSafeCodeGen(ctx, ev,
-      (q, cid, c) => s"${ev.value} = $ref.adcResidual($q, $cid, $c);")
-  }
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): PqAdcResidual =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }

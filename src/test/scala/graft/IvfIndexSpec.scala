@@ -342,13 +342,14 @@ class IvfIndexSpec extends SparkSpec {
       val kernel = new org.apache.spark.sql.graft.PqKernel(
         spark.sparkContext.broadcast(new graft.knn.PqCodebooks(books)),
         if (residual) spark.sparkContext.broadcast(coarse) else null)
-      val lists = spark.read.parquet(s"$dir/assignments")
-        .select(col("vec").cast("array<float>").as("v"), col("cid"), col("code"))
-      val selfD =
-        if (residual) graft.functions.VectorExpressions.pqAdcResidual(
-          col("v"), col("cid"), col("code"), kernel)
-        else graft.functions.VectorExpressions.pqAdc(col("v"), col("code"), kernel)
-      lists.select(avg(selfD)).collect().head.getDouble(0)
+      val selfD = spark.read.parquet(s"$dir/assignments")
+        .select(col("vec").cast("array<float>"), col("cid"), col("code"))
+        .as[(Array[Float], Int, Array[Byte])].collect().map { case (v, cid, code) =>
+          val q = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+            .fromPrimitiveArray(v)
+          if (residual) kernel.adcResidual(q, cid, code) else kernel.adcDirect(q, code)
+        }
+      selfD.sum / selfD.length
     }
     val errRes = meanSelfAdc(dirRes, residual = true)
     val errRaw = meanSelfAdc(dirRaw, residual = false)

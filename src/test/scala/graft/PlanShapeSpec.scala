@@ -209,7 +209,7 @@ class PlanShapeSpec extends SparkSpec {
       s"unexpected pre-sort above the top-k:\n$plan")
   }
 
-  test("PQ encode/ADC run as native expressions inside whole-stage codegen") {
+  test("PQ encode runs as a native expression inside whole-stage codegen") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorExpressions
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
@@ -219,26 +219,21 @@ class PlanShapeSpec extends SparkSpec {
     val books = graft.knn.Pq.train(sample, m = 8, ksub = 16)
     val kernel = new org.apache.spark.sql.graft.PqKernel(
       spark.sparkContext.broadcast(books))
-    // pqAdc's first arg is the query VECTOR — feeding the code is a type
+    // pqEncode's argument is a float VECTOR — feeding it a code is a type
     // error the expression must reject at analysis, not runtime
     val e = intercept[org.apache.spark.sql.AnalysisException] {
-      emb.select(
-        VectorExpressions.pqEncode(col("embedding"), kernel).as("code"))
-        .select(VectorExpressions.pqAdc(col("code"), col("code"), kernel).as("d"))
+      emb.select(VectorExpressions.pqEncode(col("embedding"), kernel).as("code"))
+        .select(VectorExpressions.pqEncode(col("code"), kernel).as("again"))
         .collect()
     }
-    assert(e.getMessage.toLowerCase.contains("pq_adc"))
+    assert(e.getMessage.toLowerCase.contains("pq_encode"))
     val enc = emb.select(
-      VectorExpressions.pqEncode(col("embedding"), kernel).as("code"),
-      col("embedding"))
-      .select(VectorExpressions.pqAdc(col("embedding"), col("code"), kernel)
-        .as("d"))
+      VectorExpressions.pqEncode(col("embedding"), kernel).as("code"))
     enc.collect()
     val plan = enc.queryExecution.executedPlan.toString
     assert(!plan.contains("ScalaUDF"), plan)
     assert(plan.linesIterator.exists(l =>
-      l.contains("Project") && l.contains("pq_adc") && l.contains("*(")),
-      s"pq_adc fell out of the codegen span:\n$plan")
-    assert(plan.contains("pq_encode"), plan)
+      l.contains("Project") && l.contains("pq_encode") && l.contains("*(")),
+      s"pq_encode fell out of the codegen span:\n$plan")
   }
 }
