@@ -73,11 +73,7 @@ object GraftFunctions {
         .createOrReplaceTempFunction(name, builder, "scala_udf")
     }
     // whole-operator kNN join plan node (org.apache.spark.sql.graft)
-    if (!spark.experimental.extraStrategies.contains(
-        org.apache.spark.sql.graft.KnnJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+
-          org.apache.spark.sql.graft.KnnJoinStrategy
+    org.apache.spark.sql.graft.KnnJoinStrategy.setup(spark)
     // SQL TVF surface: FROM knn_join('q_view', 'c_view', 'id', 'vec', k)
     spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
       "knn_join", org.apache.spark.sql.graft.KnnJoinTvf.builder, "scala_udf")

@@ -567,10 +567,9 @@ object SparkEntry {
     }),
 
     // Custom Catalyst operator: KnnJoinPlan logical node + KnnJoinStrategy
-    // + KnnJoinExec (broadcast + partial top-k + single buffer shuffle) —
-    // exact semantics, so it shares the brute-force oracle
+    // + KnnJoinExec (broadcast queries + partial top-k per partition +
+    // one merge) — exact semantics, so it shares the brute-force oracle
     "q36_knn_plan" -> ((s, d) => {
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       org.apache.spark.sql.graft.KnnJoinOp
         .knnJoin(emb, emb, "vec_id", "embedding", 5)

@@ -259,11 +259,9 @@ object ApproxKnn {
       metric: String = KnnJoin.MetricL2Sq,
       blockSize: Int = 100000,
       excludeSelf: Boolean = true): DataFrame = {
-    // null-id queries are dropped ONCE, up front, so every path agrees:
-    // the multi-block path's block filters would silently exclude them
-    // anyway, the single-block path would NPE decoding them, and an
-    // all-null frame now fails broadcastKnn's loud empty-query require
-    // instead of an opaque empty-union error
+    // null-id queries are dropped up front, so the count the blocks are
+    // cut by holds only the queries that take part (the kNN node drops
+    // them too), and an all-null frame fails the empty-query require
     val qs = queries.filter(col(idCol).isNotNull)
     blockKnnCounted(qs, qs.count(), candidates, idCol, vecCol, k, metric,
       blockSize, excludeSelf)
@@ -271,7 +269,8 @@ object ApproxKnn {
 
   /** [[blockKnn]] for a caller that already counted its queries: `qs`
     * holds no null id and `n` is its row count (the SemLink grid's
-    * escalation gate counts the same frame).
+    * escalation gate counts the same frame). `n == 0` raises
+    * `IllegalArgumentException` ("empty query side") before any job.
     */
   private[graft] def blockKnnCounted(
       qs: DataFrame,
@@ -282,10 +281,12 @@ object ApproxKnn {
       k: Int,
       metric: String,
       blockSize: Int,
-      excludeSelf: Boolean): DataFrame =
+      excludeSelf: Boolean): DataFrame = {
+    require(n > 0, "blockKnn: empty query side")
     unionChunked(queryBlocks(qs, n, idCol, blockSize, "blockKnn").map(
       KnnJoin.broadcastKnn(_, candidates, idCol, vecCol, k, metric,
         excludeSelf)))
+  }
 
   /** The non-empty id blocks of `qs` (no null id, `n` rows) at about
     * `blockSize` rows each, cut by [[idBlockBounds]]. One block is `qs`
@@ -298,11 +299,10 @@ object ApproxKnn {
     val bounds = idBlockBounds(qs, idCol, nBlocks)
     // Quantile rank error can leave an edge block with NO ids once it
     // approaches the block width (large n × coarse relErr) — and
-    // broadcastKnn and HnswIndex.search treat an empty query side as
-    // caller error. One scan finds which blocks actually hold ids (block
-    // index of an id = how many cuts are ≤ it); empty blocks are skipped,
-    // which is exact: an empty block contributes no queries, hence no
-    // result rows.
+    // HnswIndex.search treats an empty query side as caller error. One
+    // scan finds which blocks actually hold ids (block index of an id =
+    // how many cuts are ≤ it); empty blocks are skipped, which is exact:
+    // an empty block contributes no queries, hence no result rows.
     //
     // The presence predicate and idBlock's per-block filters MUST
     // evaluate the same comparison over the same RAW column: block index

@@ -1117,9 +1117,9 @@ object IvfIndex {
     }
 
     /** The PQ lists' ADC short list: `keep` per query, scored per pair by
-      * the kernel the `PqAdc`/`PqAdcResidual` expressions call, on the
-      * query in the quantizer's space, halved under cosine. The scan reads
-      * the m-byte codes, never the vectors.
+      * [[org.apache.spark.sql.graft.PqKernel]]'s `adcDirect`/`adcResidual`
+      * on the query in the quantizer's space, halved under cosine. The
+      * scan reads the m-byte codes, never the vectors.
       */
     def adc(pq: (PqCodebooks, Boolean), keep: Int, excludeSelf: Boolean): DataFrame = {
       val (cb, residual) = pq

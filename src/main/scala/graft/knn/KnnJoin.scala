@@ -3,8 +3,6 @@ package graft.knn
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Dist
-
 /** kNN join — the reference's flagship operator (FAISS `IndexFlatL2` build +
   * search, SemLink/join_discoverer.py:255–301; hnswlib variant,
   * DeepJoin/annIndex.py:12–40), re-expressed as a relational operator:
@@ -15,13 +13,18 @@ import graft.functions.Dist
   *  - [[windowKnn]]: cross join + distance expression + ranking window.
   *    Exact; fine for metadata-sized inputs (≤ ~10⁴ rows). Serves as the
   *    correctness oracle for the fast path.
-  *  - [[broadcastKnn]]: broadcast the query side as primitive float arrays;
-  *    one `mapPartitions` pass over candidates keeps a bounded per-query
-  *    top-k per partition ([[TopK.Partials]]), and [[TopK.mergeTopK]]
+  *  - [[broadcastKnn]]: the `knn_join` plan node
+  *    ([[org.apache.spark.sql.graft.KnnJoinOp.knnJoin]]), the one body of
+  *    the whole-partition exact scan: the query side is collected and
+  *    broadcast, each candidate partition keeps a bounded per-query top-k
+  *    ([[TopK.exact]] into [[TopK.Partials]]), and [[TopK.mergeTopK]]
   *    merges only |partitions|·|Q|·k entries. No N² rows ever hit a
-  *    shuffle — this is the path for |Q| up to ~10⁶ (a 64-d float query
-  *    set of 10⁶ rows broadcasts at ~256 MB). Beyond that: block the
-  *    query side ([[ApproxKnn.blockKnn]]) or prune with LSH/IVF/HNSW.
+  *    shuffle. Beyond a broadcastable query side: block it
+  *    ([[ApproxKnn.blockKnn]]) or prune with LSH/IVF/HNSW.
+  *
+  * In the plan node a row with a null id takes no part on either side
+  * (as in [[windowKnn]] with `excludeSelf`), and an empty query side
+  * gives an empty result.
   *
   * Distances: squared L2 (stored squared, FAISS convention) or cosine
   * distance. Ties broken by neighbor id ascending — deterministic output.
@@ -79,10 +82,9 @@ object KnnJoin {
       k)
   }
 
-  /** Scalable exact kNN: broadcast queries, partial top-k per candidate
-    * partition, merged by [[TopK.mergeTopK]] (a local frame, computed
-    * when this returns, whenever the partials fit [[TopK.driverMerges]]).
-    * Same contract as [[windowKnn]].
+  /** Scalable exact kNN: the `knn_join` plan node over these frames, so
+    * it runs when the result is executed. Same contract as [[windowKnn]]
+    * (with `excludeSelf`).
     */
   def broadcastKnn(
       queries: DataFrame,
@@ -91,21 +93,7 @@ object KnnJoin {
       vecCol: String,
       k: Int,
       metric: String = MetricL2Sq,
-      excludeSelf: Boolean = true): DataFrame = {
-    val spark = candidates.sparkSession
-    import spark.implicits._
-
-    val qRows = TopK.collectQueries(queries, idCol, vecCol, "broadcastKnn")
-    val cosine = isCosine(metric)
-    val bc = spark.sparkContext.broadcast(qRows)
-
-    val partials = graft.util.Par.balance(
-      candidates.select(col(idCol).cast("long"), col(vecCol).cast("array<float>")))
-      .as[(Long, Array[Float])]
-      .rdd
-      .mapPartitions(it => Iterator(TopK.exact(bc.value, k, cosine, excludeSelf,
-        TopK.everyQuery(bc.value.length, it))))
-
-    TopK.mergeTopK(spark, partials, qRows.map(_._1), k)
-  }
+      excludeSelf: Boolean = true): DataFrame =
+    org.apache.spark.sql.graft.KnnJoinOp.knnJoin(queries, candidates, idCol,
+      vecCol, k, metric, excludeSelf)
 }

@@ -61,10 +61,10 @@ private[knn] final class TopKBuf(val k: Int) {
 }
 
 /** The per-query top-k of every kNN strategy that broadcasts its query
-  * side and scans candidate partitions: the exact scan
-  * ([[KnnJoin.broadcastKnn]] and the `knn_join` plan node), the PQ ADC
-  * scan, the HNSW beams and the [[IvfIndex]] list scan. Each partition's
-  * scan returns one [[TopK.Partials]], and [[TopK.merge]] is the one
+  * side and scans candidate partitions: the exact scan (the `knn_join`
+  * plan node, behind [[KnnJoin.broadcastKnn]] too), the PQ ADC scan, the
+  * HNSW beams and the [[IvfIndex]] list scan. Each partition's scan
+  * returns one [[TopK.Partials]], and [[TopK.merge]] is the one
   * kernel that merges them, placed by [[TopK.mergeTopK]]: folded on the
   * driver, or reduced by query-id range.
   *
@@ -192,12 +192,11 @@ object TopK extends Serializable { // task closures here call its methods
     candidates.map { case (id, c) => (id, all, c) }
   }
 
-  /** The exact kNN scan of one candidate partition, shared by
-    * [[KnnJoin.broadcastKnn]], the `knn_join` plan node and the flat
-    * [[IvfIndex]] list scan, under squared L2 or cosine distance (1 − cos,
-    * and 1.0 when either vector is zero). `queries` are ordered by id
-    * ([[collectQueries]]); each candidate carries the query positions it is
-    * scored against ([[scan]]).
+  /** The exact kNN scan of one candidate partition, shared by the
+    * `knn_join` plan node (the exact scan) and the flat [[IvfIndex]] list
+    * scan, under squared L2 or cosine distance (1 − cos, and 1.0 when
+    * either vector is zero). `queries` are ordered by id; each candidate
+    * carries the query positions it is scored against ([[scan]]).
     */
   def exact(
       queries: Array[(Long, Array[Float])],

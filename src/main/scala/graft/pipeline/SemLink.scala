@@ -127,12 +127,12 @@ object SemLink {
       .select("id", "key", "vec")
       .localCheckpoint(eager = false)
     val keys = embedded.select("id", "key")
-    // blockKnn, not a bare broadcastKnn: the self-kNN's query side IS
-    // the catalog, and an unconditional broadcast collects every vector
-    // to the driver — fine at 10⁴ columns, a scale-killer at a
-    // 10⁶-column lake. blockKnn bounds driver memory to blockSize query
-    // rows per block and collapses to the identical single broadcast
-    // pass when the catalog fits one block (the gridKnn gate)
+    // blockKnn, not one exact-scan node over the whole catalog: the
+    // self-kNN's query side IS the catalog, and the node collects every
+    // query vector to the driver — fine at 10⁴ columns, a scale-killer
+    // at a 10⁶-column lake. blockKnn runs one node per block of
+    // blockSize query rows, and a single node when the catalog fits one
+    // block (the gridKnn gate)
     val knn = graft.knn.ApproxKnn.blockKnn(embedded, embedded, "id", "vec",
       k, KnnJoin.MetricL2Sq, excludeSelf = true)
       .join(broadcast(keys.withColumnRenamed("id", "query_id")

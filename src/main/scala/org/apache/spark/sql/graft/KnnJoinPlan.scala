@@ -8,7 +8,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.functions.col
@@ -25,13 +26,15 @@ import _root_.graft.knn.{KnnJoin, TopK}
   * Child contract (enforced by the [[KnnJoinOp]] API wrapper): each child
   * outputs exactly (id: bigint, vec: array<float>).
   *
-  * The physical operator runs graft.knn.KnnJoin.broadcastKnn's
-  * execution, planned by Catalyst so the operator composes inside larger
-  * plans: it broadcasts the query side, scans each candidate partition
+  * The physical operator is the one body of the whole-partition exact
+  * scan, behind both `knn_join` and graft.knn.KnnJoin.broadcastKnn,
+  * planned by Catalyst so the operator composes inside larger plans: it
+  * collects and broadcasts the query side, scans each candidate partition
   * into per-query top-k partials (graft.knn.TopK.exact), and merges them
   * with graft.knn.TopK.mergeTopK — on the driver when they fit its
   * bound, else in a reduce by query-id range. No N² rows ever hit a
-  * shuffle.
+  * shuffle. A row with a null id takes no part on either side, and an
+  * empty query side gives an empty result.
   */
 case class KnnJoinPlan(
     left: LogicalPlan,
@@ -59,6 +62,12 @@ case class KnnJoinPlan(
       org.apache.spark.sql.catalyst.expressions.AttributeSet(left.output ++ right.output)
     else org.apache.spark.sql.catalyst.expressions.AttributeSet.empty
 
+  // the result's size, |Q|·k rows (|Q| estimated from the query side's
+  // size), not the default product of the children's sizes, which keeps
+  // a downstream join from broadcasting the result
+  override def stats: Statistics = Statistics(left.stats.sizeInBytes * k *
+    EstimationUtils.getSizePerRow(output) / EstimationUtils.getSizePerRow(left.output))
+
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): KnnJoinPlan =
     copy(left = newLeft, right = newRight)
@@ -83,15 +92,17 @@ case class KnnJoinExec(
   override protected def doExecute(): RDD[InternalRow] = {
     val (cos, kLocal, exclude) = (cosine, k, excludeSelf)
 
-    val queryRows: Array[(Long, Array[Float])] = left.executeCollect().map { r =>
-      (r.getLong(0), r.getArray(1).toFloatArray())
+    val queryRows: Array[(Long, Array[Float])] = left.executeCollect().collect {
+      case r if !r.isNullAt(0) => (r.getLong(0), r.getArray(1).toFloatArray())
     }.sortBy(_._1)
+    if (queryRows.isEmpty) return sparkContext.emptyRDD[InternalRow]
     val bc = sparkContext.broadcast(queryRows)
 
     val partials = right.execute().mapPartitions { it =>
       Iterator(TopK.exact(bc.value, kLocal, cos, exclude,
-        TopK.everyQuery(bc.value.length,
-          it.map(row => (row.getLong(0), row.getArray(1).toFloatArray())))))
+        TopK.everyQuery(bc.value.length, it.collect {
+          case row if !row.isNullAt(0) => (row.getLong(0), row.getArray(1).toFloatArray())
+        })))
     }
     TopK.mergeTopK(session, partials, queryRows.map(_._1), k).queryExecution.toRdd
   }
@@ -108,8 +119,7 @@ case class KnnJoinExec(
 }
 
 /** Planner strategy mapping the logical node to the physical operator.
-  * Registered via graft.GraftExtensions or
-  * `spark.experimental.extraStrategies`.
+  * Registered via graft.GraftExtensions or [[setup]].
   */
 object KnnJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -118,6 +128,15 @@ object KnnJoinStrategy extends SparkStrategy {
         p.k, p.cosine, p.excludeSelf) :: Nil
     case _ => Nil
   }
+
+  /** Adds this strategy to `session`'s `experimental.extraStrategies`
+    * unless it is there already.
+    */
+  def setup(session: org.apache.spark.sql.SparkSession): Unit =
+    session.experimental.synchronized {
+      if (!session.experimental.extraStrategies.contains(this))
+        session.experimental.extraStrategies :+= this
+    }
 }
 
 /** SQL table-valued-function surface over the plan node:
@@ -203,9 +222,10 @@ object KnnJoinTvf {
 /** Dataset-level API over the plan node. */
 object KnnJoinOp {
 
-  /** Normalizes both sides to the (id, vec) child contract and plans a
-    * [[KnnJoinPlan]]. The session must have [[KnnJoinStrategy]] registered
-    * (graft.GraftFunctions.register does this). An unknown `metric` raises
+  /** Normalizes both sides to the (id, vec) child contract, spreads the
+    * candidates over the cluster's cores (graft.util.Par.balance) and
+    * plans a [[KnnJoinPlan]], installing [[KnnJoinStrategy]] on the
+    * session if it lacks it. An unknown `metric` raises
     * `IllegalArgumentException`.
     */
   def knnJoin(
@@ -221,9 +241,10 @@ object KnnJoinOp {
       col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<float>").as("vec"))
     val spark = candidates.sparkSession
+    KnnJoinStrategy.setup(spark)
     val plan = KnnJoinPlan(
       normalize(queries).queryExecution.analyzed,
-      normalize(candidates).queryExecution.analyzed,
+      _root_.graft.util.Par.balance(normalize(candidates)).queryExecution.analyzed,
       k, cosine, excludeSelf)
     Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
   }

@@ -105,6 +105,23 @@ class KnnJoinSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("a null id takes no part on either side: knn_join and broadcastKnn " +
+    "return windowKnn's rows") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    val vecs = Seq((Some(1L), Array(0f, 0f)), (Some(2L), Array(1f, 0f)),
+      (Some(3L), Array(5f, 5f)), (None, Array(0.1f, 0f))).toDF("vec_id", "embedding")
+    vecs.createOrReplaceTempView("null_id_vecs")
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select("query_id", "neighbor_id", "dist", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq.sorted
+    val want = rows(KnnJoin.windowKnn(vecs, vecs, "vec_id", "embedding", 2))
+    assert(want.map(_._1).distinct == Seq(1L, 2L, 3L))
+    assert(rows(spark.sql("SELECT * FROM knn_join('null_id_vecs', 'null_id_vecs', " +
+      "'vec_id', 'embedding', 2)")) == want)
+    assert(rows(KnnJoin.broadcastKnn(vecs, vecs, "vec_id", "embedding", 2)) == want)
+  }
+
   test("distance symmetry: dist(a,b) == dist(b,a)") {
     import graft.functions.Dist
     val pairs = emb.limit(20).as("a").crossJoin(emb.limit(20).as("b"))

@@ -10,31 +10,25 @@ class KnnPlanSpec extends SparkSpec {
 
   private lazy val emb = Lake.embeddings(spark, sf0001).cache()
 
-  test("KnnJoinPlan physical operator equals broadcastKnn exactly") {
-    GraftFunctions.register(spark)
+  /** (query_id, neighbor_id, dist, rank) rows, dist as its raw bits. */
+  private def ranked(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Int)] =
+    df.select("query_id", "neighbor_id", "dist", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3))).toSet
+
+  test("KnnJoinPlan physical operator equals windowKnn exactly") {
     val planned = KnnJoinOp.knnJoin(emb, emb, "vec_id", "embedding", 5)
-    val got = planned.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val expected = KnnJoin.broadcastKnn(emb, emb, "vec_id", "embedding", 5)
-      .select("query_id", "neighbor_id", "rank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(got == expected)
+    assert(ranked(planned) == ranked(KnnJoin.windowKnn(emb, emb, "vec_id", "embedding", 5)))
   }
 
   test("KnnJoinPlan cosine metric and downstream composition") {
-    GraftFunctions.register(spark)
     val planned = KnnJoinOp.knnJoin(emb, emb, "vec_id", "embedding", 3, "cosine")
     // the node composes inside a larger plan: filter + agg downstream
     val counts = planned.filter(col("rank") <= 3)
       .groupBy("query_id").count()
     assert(counts.filter(col("count") =!= 3).count() == 0)
-    val expected = KnnJoin.broadcastKnn(emb, emb, "vec_id", "embedding", 3,
-      KnnJoin.MetricCosine)
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = planned.select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == expected)
+    assert(ranked(planned) == ranked(KnnJoin.windowKnn(emb, emb, "vec_id", "embedding", 3,
+      KnnJoin.MetricCosine)))
   }
 
   test("SQL TVF: FROM knn_join(...) over temp views equals the Dataset operator") {
@@ -125,14 +119,9 @@ class KnnPlanSpec extends SparkSpec {
     GraftFunctions.register(spark)
     emb.createOrReplaceTempView("emb_view")
     val viaSql = spark.sql(
-      "SELECT query_id, neighbor_id FROM knn_join('emb_view', 'emb_view', " +
-        "'vec_id', 'embedding', 2, 'cosine')")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val expected = KnnJoin.broadcastKnn(emb, emb, "vec_id", "embedding", 2,
-        KnnJoin.MetricCosine)
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaSql == expected)
+      "SELECT * FROM knn_join('emb_view', 'emb_view', 'vec_id', 'embedding', 2, 'cosine')")
+    assert(ranked(viaSql) == ranked(KnnJoin.windowKnn(emb, emb, "vec_id", "embedding", 2,
+      KnnJoin.MetricCosine)))
   }
 
   test("physical plan contains the custom exec node, no cartesian product") {

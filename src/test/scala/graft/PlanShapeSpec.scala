@@ -134,13 +134,27 @@ class PlanShapeSpec extends SparkSpec {
     knn.collect()
     val plan = knn.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
-    // the scale path: broadcast queries + a per-partition top-k scan
-    // whose |parts|·|Q|·k partials fold on the driver, so the kNN enters
-    // the plan as a local relation; never an N² join
+    // the scale path: broadcast queries + a per-partition top-k scan,
+    // the exact scan's one plan node; never an N² join
     assert(!plan.contains("CartesianProduct"))
     assert(!plan.contains("BroadcastNestedLoopJoin"))
-    assert(plan.contains("LocalTableScan"))
-    assert(graft.pipeline.SemLinkGrid.gridKnnIds(embedded, 5)._1.isLocal)
+    assert(knnExecs(knn) == 1)
+  }
+
+  /** The `knn_join` exec nodes in `df`'s executed plan. */
+  private def knnExecs(df: org.apache.spark.sql.DataFrame): Int =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case e: org.apache.spark.sql.graft.KnnJoinExec => e
+      }.size
+
+  test("broadcastKnn plans through the knn_join node, on a session that " +
+    "never registered the graft functions") {
+    val fresh = spark.newSession()
+    val emb = fresh.read.parquet(s"$sf0001/embeddings.parquet").select("vec_id", "embedding")
+    val knn = graft.knn.KnnJoin.broadcastKnn(emb, emb, "vec_id", "embedding", 3)
+    assert(knn.count() == emb.count() * 3)
+    assert(knnExecs(knn) == 1)
   }
 
   test("kNN queries never plan a cartesian/nested-loop join") {

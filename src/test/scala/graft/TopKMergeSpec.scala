@@ -211,14 +211,14 @@ class TopKMergeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_merge_bound").toString
     graft.util.TempDirs.register(dir)
     HnswIndex.build(vecs, "vec_id", "embedding", dir, shards = 4)
-    // the merge's own results, then three built on it: blockKnn's blocks
-    // of broadcastKnn, PQ's rank cut and the knn_join plan node
+    // the merge's own results, then four built on it: the exact scan's
+    // plan node (broadcastKnn and knn_join), blockKnn's blocks of it and
+    // PQ's rank cut
     def merges() = Seq(
       ApproxKnn.hnswKnn(vecs, vecs, "vec_id", "embedding", k),
-      HnswIndex.search(spark, dir, vecs, "vec_id", "embedding", k),
-      KnnJoin.broadcastKnn(vecs, vecs, "vec_id", "embedding", k))
-    graft.GraftFunctions.register(spark)
+      HnswIndex.search(spark, dir, vecs, "vec_id", "embedding", k))
     def ranked() = Seq(
+      KnnJoin.broadcastKnn(vecs, vecs, "vec_id", "embedding", k),
       ApproxKnn.blockKnn(vecs, vecs, "vec_id", "embedding", k, blockSize = 2000),
       ApproxKnn.pqKnn(vecs, vecs, "vec_id", "embedding", k, ksub = 16, rerank = 0),
       org.apache.spark.sql.graft.KnnJoinOp.knnJoin(vecs, vecs, "vec_id", "embedding", k))
